@@ -949,6 +949,7 @@ def q_stream_near_dup(spark, sf_dir):
     survivors = documents minus every `id_b` of the batch LSH pair set —
     equal iff the continuous filter makes exactly the decisions the batch
     pair-finder would."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         minhash_dedup_stream,
     )
@@ -988,7 +989,7 @@ def q_stream_near_dup(spark, sf_dir):
     q.processAllAvailable()
     q.stop()
     return (
-        spark.read.parquet(f"{work}/kept")
+        TransactionalTable(f"{work}/kept").read(spark)
         .select("doc_id")
         .sortWithinPartitions("doc_id")
     )
@@ -1000,6 +1001,7 @@ def q_stream_embed_near_dup(spark, sf_dir):
     bucketed against the accumulating vector store and cosine-verified
     near-duplicates of any earlier vector are dropped.  Oracle: survivors =
     embeddings minus the batch LSH pair set's id_b side."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         embedding_dedup_stream,
     )
@@ -1038,7 +1040,7 @@ def q_stream_embed_near_dup(spark, sf_dir):
     q.processAllAvailable()
     q.stop()
     return (
-        spark.read.parquet(f"{work}/kept")
+        TransactionalTable(f"{work}/kept").read(spark)
         .select("vec_id")
         .sortWithinPartitions("vec_id")
     )
@@ -4920,6 +4922,7 @@ def q_stream_domain_cap(spark, sf_dir):
     domain_rank.  On the id-ordered feed this equals the batch operator
     exactly, so the oracle is domain_cap's lowest-ids-per-domain SQL
     verbatim."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         domain_cap_stream,
     )
@@ -4952,7 +4955,7 @@ def q_stream_domain_cap(spark, sf_dir):
     )
     q.processAllAvailable()
     q.stop()
-    return spark.read.parquet(f"{work}/kept").orderBy("doc_id")
+    return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 
 def q_stream_token_cap(spark, sf_dir):
@@ -4964,6 +4967,7 @@ def q_stream_token_cap(spark, sf_dir):
     cum_tokens.  On the id-ordered feed this equals the batch operator
     exactly, so the oracle is domain_token_cap's running-charge SQL
     verbatim."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         domain_token_cap_stream,
     )
@@ -4996,7 +5000,7 @@ def q_stream_token_cap(spark, sf_dir):
     )
     q.processAllAvailable()
     q.stop()
-    return spark.read.parquet(f"{work}/kept").orderBy("doc_id")
+    return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 
 def q_stream_url_dedup(spark, sf_dir):
@@ -5006,6 +5010,7 @@ def q_stream_url_dedup(spark, sf_dir):
     already in the accumulating shard-pruned store (first-arrival-wins).
     On the id-ordered feed this equals the batch operator exactly, so the
     oracle is url_dedup's min-id-per-canonical-URL SQL verbatim."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         url_dedup_stream,
     )
@@ -5037,7 +5042,7 @@ def q_stream_url_dedup(spark, sf_dir):
     )
     q.processAllAvailable()
     q.stop()
-    return spark.read.parquet(f"{work}/kept").orderBy("doc_id")
+    return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 
 def q_domain_doc_counts(spark, sf_dir):

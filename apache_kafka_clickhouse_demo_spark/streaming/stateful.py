@@ -28,6 +28,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_kafka_clickhouse_demo_spark.functions import text as TX_FN
+from apache_kafka_clickhouse_demo_spark.sources.txlog import (
+    ConcurrentWriteError,
+    TransactionalTable,
+)
 
 
 def streaming_dedup(
@@ -141,14 +145,115 @@ def shards_for_store(expected_rows: int, rows_per_shard: int = SHARD_TARGET_ROWS
     return n
 
 
-class _NearDupStreamWriter:
+class _DrainWriter:
+    """The exactly-once `foreachBatch` skeleton every `_*StreamWriter`
+    shares: Structured Streaming re-delivers a failed micro-batch
+    ("block") under the same batch id, so batch-id-keyed idempotent
+    commits make the sink exactly-once.  The drain contract:
+
+    - **Txn ids** are `<writer_id>:<batch_id>`, and the stream entry
+      points pass the checkpoint path as `writer_id`.  It is stable
+      across restarts of the SAME stream, so a replayed batch finds its
+      own commits, and distinct for a NEW stream, whose batch ids
+      restart at 0 — a bare batch id would make a new run over an
+      existing durable store silently swallow its first batches as
+      replays.
+    - **Replays.** `process` checks the txn against every table the
+      writer commits to, in commit order (`_commit_order`).  A batch every
+      table already holds is a fully committed replay: it returns with
+      zero Spark jobs.  Otherwise the subclass's `_process(block,
+      batch_id, txn)` runs; `_resumed` is True when an earlier attempt
+      already committed a prefix of the tables (a half-committed retry
+      of a two-table writer).
+    - **Maintenance.** `maintain()` runs after every `compact_every`-th
+      batch (or on demand).  The default rewrites the state table (the
+      first in commit order) to one file per `shard` directory — layout-
+      preserving, so `read_where` pruning survives — since a forever
+      stream otherwise accumulates one file per touched shard per block.
+      It then folds the txn ledger to per-writer batch watermarks (sound
+      because foreachBatch batch ids are monotonic and retries
+      sequential), prunes the folded commit files and vacuums replaced
+      data files, so the per-batch txn checks, the log and the disk stay
+      bounded.  Optimize publishes one atomic replace commit, and folded
+      txns still answer `txn_committed`, so idempotence survives it.
+      `maintain()` is safe ONLY between fully committed batches: the
+      fold forgets which commit recorded a txn, and a half-committed
+      retry needs that commit to re-derive its pre-append pin
+      (`_resolve_retry_pin`).  An out table is never compacted here —
+      it is the pipeline's product and grows with the corpus, so its
+      consumer compacts it on its own schedule.
+    """
+
+    #: attributes holding the tables a batch commits to, in commit order
+    _commit_order: tuple[str, ...] = ("store",)
+    #: run `maintain()` after every `compact_every`-th batch (None: never)
+    compact_every: int | None = None
+
+    def __init__(self, spark, writer_id: str):
+        self.spark = spark
+        self.writer_id = writer_id
+
+    def _tables(self) -> list[TransactionalTable]:
+        return [getattr(self, name) for name in self._commit_order]
+
+    def process(self, block: DataFrame, batch_id: int) -> None:
+        txn = f"{self.writer_id}:{batch_id}"
+        # commit order, short-circuited: a later table never holds the
+        # txn unless every earlier one does
+        self._resumed = False
+        for table in self._tables():
+            if not table.txn_committed(txn):
+                break
+            self._resumed = True
+        else:
+            return  # fully committed replay
+        self._process(block, batch_id, txn)
+        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
+            self.maintain()
+
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
+        raise NotImplementedError
+
+    def maintain(self) -> None:
+        self._compact(self._tables()[0], partition_by="shard")
+
+    def _compact(self, table: TransactionalTable, **optimize_kwargs) -> None:
+        table.optimize(self.spark, **optimize_kwargs)
+        table.checkpoint(compact_txn_watermarks=True)
+        table.prune_log()
+        table.vacuum()
+
+    def _compact_to_generation(self, gen: int | None) -> int | None:
+        """Generational stores: one retention rewrite keeps only
+        generation `gen` (the newest committed one; None reads it from the
+        store), so the store stays one summary's rows, not O(batches).
+        Returns the table version after maintenance, None when nothing
+        is committed."""
+        store = self._tables()[0]
+        if gen is None:
+            gen = store.read(self.spark).agg(F.max("gen")).first()[0]
+        if gen is None or gen < 0:
+            return None
+        self._compact(store, keep_where=F.col("gen") == int(gen))
+        return store.version()
+
+    def start(self, source: DataFrame, checkpoint: str):
+        """Drain everything available in `source` through `process`."""
+        return (
+            source.writeStream.foreachBatch(self.process)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+
+class _NearDupStreamWriter(_DrainWriter):
     """foreachBatch body shared by `minhash_dedup_stream` and
     `embedding_dedup_stream`: continuous near-duplicate filtering of an
     unbounded feed against an accumulating, BUCKET-PRUNED signature store.
 
-    Store layout (VERDICT r5 #1 — the r5 form re-read and re-banded the
-    WHOLE store every block, O(corpus) per block; single-table form is
-    VERDICT r6 #5): ONE transactional table `store/` written through
+    Store layout: ONE transactional table `store/` written through
     `sources/txlog.py`, holding both row kinds under a namespaced shard
     partition column:
 
@@ -158,15 +263,13 @@ class _NearDupStreamWriter:
     where `bkey` is the LSH bucket key ("band:minhash-slice" /
     "table:rp-bucket") and `payload` is what exact verification needs
     (shingle set / normalized vector).  One table means one staged write
-    and ONE commit publishes a block's bands AND payloads atomically —
-    the r6 two-table form paid two write jobs + two commits per block,
-    pure fixed cost that dominated the drains' wall time (BENCH_r06), and
-    briefly exposed a bands-without-payloads intermediate state to
-    concurrent readers.  The namespaced shard value keeps `read_where`
-    pruning exact per row kind: a band read touches only `shard=b*` dirs
-    that collide, a payload read only the candidate `shard=p*` dirs.
-    Per block (concurrent append-first, r9 — see `process` for the exact
-    protocol and its retry/exactness arguments):
+    and ONE commit publishes a block's bands AND payloads atomically — a
+    two-table form pays two write jobs + two commits per block and
+    briefly exposes bands without their payloads to concurrent readers.
+    The namespaced shard value keeps `read_where` pruning exact per row
+    kind: a band read touches only `shard=b*` dirs that collide, a
+    payload read only the candidate `shard=p*` dirs.  Per block (see
+    `_process` for the exact protocol and its retry/exactness arguments):
 
       1. compute the block's (id, payload, bkeys) once — same codegen
          expressions as the batch operators, so the stream makes exactly
@@ -183,10 +286,9 @@ class _NearDupStreamWriter:
          in-block ids; one collect for the candidate ids' payload
          shards), read ONLY those payload shards at the pin, verify
          exactly (Jaccard / cosine), then BARRIER on the append thread
-         and `append_once` the survivors — both commits keyed by the
-         micro-batch id, so a retried batch re-runs as a no-op instead
-         of duplicating rows (VERDICT r5 #3), and the out commit still
-         strictly follows the store commit.
+         and commit the survivors — both commits keyed by the batch txn
+         (`_DrainWriter`), and the out commit strictly follows the store
+         commit.
 
     The two `.first()` per block collect DISTINCT SHARD IDS — sets
     bounded by the constant shard counts B and P, never by data size: the
@@ -195,15 +297,17 @@ class _NearDupStreamWriter:
 
     Scale: per-block work is O(block + colliding buckets), so a stream
     that has already ingested 100 TB pays the same per block as one that
-    ingested 1 GB — the property the r5 form lacked.  Shard counts are
-    constructor params; production would size B/P in the thousands (one
-    partition dir each ~ a few GB of store), tests use small values.
+    ingested 1 GB.  Shard counts are constructor params; production
+    would size B/P in the thousands (one partition dir each ~ a few GB
+    of store), tests use small values.
 
     Failure semantics: a missing store is ONLY signalled by the txlog's
     FileNotFoundError ("no commits yet"); any other read error — corrupt
     or vanished committed files — propagates and fails the batch rather
-    than silently deduping against nothing (VERDICT r5 "what's wrong").
+    than silently deduping against nothing.
     """
+
+    _commit_order = ("store", "out")
 
     def __init__(
         self,
@@ -219,17 +323,8 @@ class _NearDupStreamWriter:
         writer_id: str = "",
         out_files: int | None = None,
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.id_col = id_col
-        #: scopes the per-batch txn ids.  A BARE batch id would make a NEW
-        #: stream run (fresh checkpoint -> ids restart at 0) over an
-        #: existing durable store silently swallow its first batches as
-        #: "replays"; the stream entry points pass the checkpoint path,
-        #: which is stable across restarts of the SAME stream and distinct
-        #: for a new one (code-review r6).
-        self.writer_id = writer_id
         self.prepare = prepare  # block -> (id, payload, bkeys array<string>)
         self.verify = verify  # (payload_col_a, payload_col_b) -> bool Column
         self.band_shards = band_shards
@@ -238,39 +333,6 @@ class _NearDupStreamWriter:
         self.out_files = out_files
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-
-    def maintain(self) -> None:
-        """Store maintenance: rewrite the store back to ONE file per shard
-        directory (`TransactionalTable.optimize(partition_by=…)`
-        — the layout-preserving form, so `read_where` pruning survives).
-        A forever-running stream otherwise accumulates one file per
-        touched shard per block, and each block's pruned read degrades
-        from O(colliding buckets) to O(colliding buckets x commits).
-        Safe mid-stream between blocks: optimize publishes one atomic
-        replace commit, and re-running it (a retried maintenance batch)
-        just replaces the snapshot with identical content; the replaced
-        commits stay in the log, so batch-id idempotence survives
-        maintenance (pinned by test).  The OUT table is deliberately not
-        rewritten here — it is the pipeline's product and grows with the
-        corpus, so rewriting it per maintenance would be the O(corpus)
-        pattern this store design removed; compact it on the consumer's
-        schedule via `TransactionalTable.optimize()` like any streaming
-        MV destination."""
-        self.store.optimize(self.spark, partition_by="shard")
-        # collapse the commit logs too: per-batch idempotence checks and
-        # file-list reads then cost O(commits since maintenance), not
-        # O(stream lifetime).  Watermark compaction is sound here — batch
-        # ids are monotonic with sequential retries (foreachBatch's
-        # contract) — and bounds the checkpoint itself at O(writers)
-        # instead of carrying every txn id ever seen; prune_log then
-        # reclaims the folded commit files (nothing pins old store
-        # snapshots; the stream owns these tables).
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        # and reclaim the replaced pre-optimize files once they age out of
-        # the in-flight-writer grace window — disk stays bounded as well
-        # (nothing pins old store snapshots; the stream owns these tables)
-        self.store.vacuum()
 
     def _shard(self, col: str, n: int):
         return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
@@ -287,49 +349,37 @@ class _NearDupStreamWriter:
             F.col("shard").startswith("p")
         ).select("id", "payload")
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
-        """Per-block pipeline, CONCURRENT APPEND-FIRST (r9, VERDICT r8 #3;
-        r8's sequential append-first protocol ran 3 Spark jobs back to
-        back and its profile showed the two write jobs carrying ~2/3 of
-        in-block wall — the candidate chain was pure added latency).
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
+        """Per-block pipeline, CONCURRENT APPEND-FIRST: the two write
+        jobs carry most of the in-block wall, so the candidate chain runs
+        while they do instead of after them.
 
         1. Pin the store snapshot: `pin = store.version()` BEFORE the
-           append — on the normal path the same pre-append version the r8
-           protocol read (its `v - 1`), so the files-read pruning
-           contract and every dedup decision are unchanged.  Multi-writer
-           note: a CONCURRENT writer's commit landing between this pin and
-           our own append is invisible to this block's candidate reads, so
-           cross-writer suppression is best-effort within one block
-           (fail-safe direction — a near-dup is KEPT, never wrongly
-           dropped) and converges on the next block's fresh pin, which
-           does see the other writer's rows.
+           append, so the block's reads never see its own rows on the
+           normal path.  Multi-writer note: a CONCURRENT writer's commit
+           landing between this pin and our own append is invisible to
+           this block's candidate reads, so cross-writer suppression is
+           best-effort within one block (fail-safe direction — a near-dup
+           is KEPT, never wrongly dropped) and converges on the next
+           block's fresh pin, which does see the other writer's rows.
         2. Commit the block's band+payload rows to the store on a SIDE
            THREAD while the main thread runs the candidate chain: band-
            shard collect (bounded: <= band_shards names), pruned band
            read AT `pin`, candidate join + payload-shard collect.  Both
            reads are pinned, so nothing the side thread writes is
            visible to them — the overlap changes wall time, not plans.
-           (The block-shard collect job is back versus r8's commit-file
-           derivation, but it rides entirely inside the append's wall.)
         3. Payload read at `pin`, verify, anti-join, and the survivors'
-           STAGING write all run before the barrier too (r16 two-phase
-           append — staged files are reader-invisible until a commit
-           names them, so only COMMIT order matters), then BARRIER: join
-           the append thread (re-raising its error, discarding the
-           staged survivors on failure), and publish the out commit.
-           The out commit still strictly follows the store commit, so
-           the crash-window argument is r8's: a batch that dies between
-           the two commits re-runs with the store append no-opping (txn
-           guard) and `pin` now INCLUDING its own earlier rows — over-
-           inclusive only of the block's own rows, which the block
-           union + distinct absorbs — and the out side staging +
-           publishing once.  A fully-committed batch short-circuits to
-           a no-op with zero Spark jobs.
+           STAGING write all run before the barrier too (staged files
+           are reader-invisible until a commit names them, so only
+           COMMIT order matters), then BARRIER: join the append thread
+           (re-raising its error, discarding the staged survivors on
+           failure), and publish the out commit.  The out commit strictly
+           follows the store commit: a batch that dies between the two
+           commits re-runs with the store append no-opping (txn guard)
+           and `pin` now INCLUDING its own earlier rows — over-inclusive
+           only of the block's own rows, which the block union + distinct
+           absorbs — and the out side staging + publishing once.
         """
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn) and self.out.txn_committed(txn):
-            return  # fully-committed replay: no-op, no jobs
-
         sigs_b = self.prepare(block).persist()
         # cand is persisted mid-chain (stashed on self._cand_scratch);
         # unpersist BOTH in the outer finally so an append failure or
@@ -344,8 +394,6 @@ class _NearDupStreamWriter:
                 cand.unpersist()
                 self._cand_scratch = None
             sigs_b.unpersist()
-        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-            self.maintain()
 
     def _process_inner(
         self, block: DataFrame, batch_id: int, txn: str, sigs_b: DataFrame
@@ -382,10 +430,10 @@ class _NearDupStreamWriter:
                 ).alias("shard"),
             )
         )
-        # Pin BEFORE the append (docstring step 1).  Normal path: equal to
-        # the r8 protocol's `v - 1`, own rows excluded.  Store-committed
-        # retry: version() already includes the earlier attempt's rows —
-        # own rows included, harmless per the union+distinct argument.
+        # Pin BEFORE the append (docstring step 1).  Normal path: own
+        # rows excluded.  Store-committed retry: version() already
+        # includes the earlier attempt's rows — own rows included,
+        # harmless per the union+distinct argument.
         pin = self.store.version()
 
         # Store commit on a side thread (docstring step 2).  ONE staged
@@ -488,10 +536,10 @@ class _NearDupStreamWriter:
                 if self.out_files is None
                 else survivors.coalesce(self.out_files)
             )
-            # STAGE the survivors BEFORE the barrier (r16 two-phase
-            # append): the verify/anti-join pipeline — the block's most
-            # expensive job — runs while the appender's tail is still in
-            # flight.  Every read in it is pinned, so the overlap changes
+            # STAGE the survivors BEFORE the barrier: the verify/anti-join
+            # pipeline — the block's most expensive job — runs while the
+            # appender's tail is still in flight.  Every read in it is
+            # pinned, so the overlap changes
             # wall time, not results; staged files are reader-invisible
             # until the commit below names them.  (out committed while
             # store is not cannot exist — the commit order below — so
@@ -614,8 +662,11 @@ def minhash_dedup_stream(
     (the gate fixture does; out-of-order arrival would need a compaction
     pass over `out_dir`, the same reconciliation any streaming dedup with
     late data needs).  Survivors land in the transactional table at
-    `out_dir` (read with `TransactionalTable.read`, or plain parquet —
-    the `_txlog/` dir is invisible to Spark scans).
+    `out_dir`: read it with `TransactionalTable(out_dir).read(spark)`,
+    never as plain parquet — the directory can also hold files no commit
+    names (an orphan of a failed stage, or files `optimize()` replaced
+    that `vacuum()` has not reclaimed yet), which only the commit log
+    filters out.
     """
     writer = minhash_stream_writer(
         spark,
@@ -634,13 +685,7 @@ def minhash_dedup_stream(
         writer_id=checkpoint,
         out_files=out_files,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def streaming_sessions(
@@ -793,13 +838,7 @@ def embedding_dedup_stream(
         writer_id=checkpoint,
         out_files=out_files,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def running_funnel(
@@ -873,7 +912,7 @@ def running_funnel(
     )
 
 
-class _TopKStreamWriter:
+class _TopKStreamWriter(_DrainWriter):
     """foreachBatch body for `heavy_hitters_stream`: maintain ONE global
     Misra-Gries summary of an unbounded feed in a transactional store.
 
@@ -882,31 +921,31 @@ class _TopKStreamWriter:
       1. distributed fold of the block's values into per-task capacity-C
          summaries (`sketches._mg_partition` — the batch operator's exact
          fold; <= C+1 rows per task however large the block);
-      2. merge-and-trim DRIVER-side (r15 driver-walk rewrite): ONE
-         bounded collect of the fold output, then merge into the
-         committed-state mirror, take the (C+1)-th largest merged count
-         as the trim subtrahend, trim and fold the error total — all
-         integer Python, bit-identical to the r14 DataFrame form.  The
-         collect is <= (tasks + 1) x (C + 1) rows by the MG per-task
-         invariant; past `DRIVER_MERGE_MAX_TASKS` tasks (a wide
-         production block — ADVICE r15's driver-OOM hazard) the
-         summaries are first re-summed per value DISTRIBUTEDLY, which
-         drops the multiplicity factor while changing nothing (the
+      2. merge-and-trim DRIVER-side: ONE bounded collect of the fold
+         output, then merge into the committed-state mirror, take the
+         (C+1)-th largest merged count as the trim subtrahend, trim and
+         fold the error total — all integer Python, bit-identical to a
+         distributed groupBy/orderBy merge.  The collect is
+         <= (tasks + 1) x (C + 1) rows by the MG per-task invariant; past
+         `DRIVER_MERGE_MAX_TASKS` tasks (a wide production block, where
+         that collect could exhaust the driver) the summaries are first
+         re-summed per value DISTRIBUTEDLY, which drops the
+         multiplicity factor while changing nothing (the
          driver merge sums per value anyway; the single trim still
          happens once, on the fully merged counts);
-      3. publish the new summary as the next GENERATION via
-         `append_once(txn=writer:batch)` — a retried batch re-runs as a
-         no-op, and readers take only the newest generation, so the store
-         read stays O(C) after any number of batches.  `maintain()`
-         (or `compact_every`) folds superseded generations away.
+      3. publish the new summary as the next GENERATION under the batch
+         txn (`_DrainWriter`) — readers take only the newest generation,
+         so the store read stays O(C) after any number of batches.
+         `maintain()` (or `compact_every`) folds superseded generations
+         away.
 
     Exactness contract matches the batch operator: while the stream's
     total distinct values fit in C no trim ever fires and the summary IS
     the exact counts; beyond that, undercount <= n / (C + 1).
 
     Concurrency contract: ONE live writer per store (the foreachBatch
-    model; retries of a batch are sequential) — and ENFORCED (ADVICE r6):
-    each publish is a compare-and-swap on the table version read by
+    model; retries of a batch are sequential) — and ENFORCED: each
+    publish is a compare-and-swap on the table version read by
     `_latest()`, so of two concurrent writers racing the same parent
     generation exactly one commits and the other fails its batch with
     `ConcurrentWriteError` — never the silent double-count that merging
@@ -916,10 +955,10 @@ class _TopKStreamWriter:
     """
 
     #: above this many block tasks, the per-task MG summaries are
-    #: re-summed per value distributedly BEFORE the driver collect
-    #: (ADVICE r15: the raw collect is (tasks+1)x(C+1) rows — fine for
-    #: micro-batch task counts, a driver-OOM hazard for a thousands-of-
-    #: tasks block at the 100 TB target).  The pre-reduce is a plain
+    #: re-summed per value distributedly BEFORE the driver collect (the
+    #: raw collect is (tasks+1)x(C+1) rows — fine for micro-batch task
+    #: counts, a driver-OOM hazard for a thousands-of-tasks block at the
+    #: 100 TB target).  The pre-reduce is a plain
     #: partial-aggregating groupBy, so it is bit-identical (the driver
     #: merge sums per value anyway) and the one trim still happens once
     #: on the fully merged counts — a distributed per-partition trim
@@ -937,15 +976,10 @@ class _TopKStreamWriter:
         writer_id: str = "",
         weight_col: str | None = None,
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-            TransactionalTable,
-        )
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.col = col
         self.capacity = capacity
         self.compact_every = compact_every
-        self.writer_id = writer_id
         # weighted twin (topKWeighted): the block fold increments by the
         # named integer column instead of 1; summaries, merge-and-trim,
         # publish, and the read tail are IDENTICAL — a weighted stream is
@@ -958,8 +992,7 @@ class _TopKStreamWriter:
         #: bounded at <= capacity+1 rows by the MG invariant.  Advanced
         #: only after a successful publish; rebuilt through `_latest()`
         #: on first use (restart/handover) and invalidated on a lost
-        #: CAS race so the retry re-reads the sibling's commit exactly
-        #: as the r14 per-block read did (r15 driver-walk rewrite).
+        #: CAS race so the retry re-reads the sibling's commit.
         self._mem: tuple[dict[str, int], int, int, int] | None = None
 
     def _latest(self) -> tuple[DataFrame | None, int, int]:
@@ -998,19 +1031,13 @@ class _TopKStreamWriter:
         self._mem = (counts, err, prev_gen, snap_v)
         return self._mem
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
             _SUMMARY_SCHEMA,
             _mg_partition,
             _mgw_partition,
         )
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-            ConcurrentWriteError,
-        )
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn):  # replayed batch: nothing to do
-            return
         if self.weight_col is None:
             block_sums = (
                 block.select(F.col(self.col).cast("string").alias("value"))
@@ -1026,12 +1053,11 @@ class _TopKStreamWriter:
             )
         # ONE bounded collect (<= (tasks + 1) x (capacity + 1) rows by
         # the MG per-task invariant): the block-scale fold stays
-        # distributed; the merge-and-trim moves DRIVER-side over the
-        # mirrored summary — all-integer, so bit-identical to the r14
+        # distributed; the merge-and-trim runs DRIVER-side over the
+        # mirrored summary — all-integer, so bit-identical to a
         # distributed groupBy/orderBy form, at two cluster jobs per
-        # block (this collect + the staged publish) instead of five
-        # (r15 driver-walk rewrite).  Wide blocks pre-reduce first —
-        # see DRIVER_MERGE_MAX_TASKS (r16, ADVICE r15).
+        # block (this collect + the staged publish) instead of five.
+        # Wide blocks pre-reduce first — see DRIVER_MERGE_MAX_TASKS.
         if block.rdd.getNumPartitions() > self.DRIVER_MERGE_MAX_TASKS:
             block_sums = block_sums.groupBy("value").agg(
                 F.sum("count_lb").alias("count_lb"),
@@ -1048,8 +1074,7 @@ class _TopKStreamWriter:
                     r["count_lb"]
                 )
         # (C+1)-th largest merged count = the trim subtrahend (0 when
-        # the merged summary already fits) — the exact order statistic
-        # the r14 orderBy-desc-limit head computed
+        # the merged summary already fits)
         if len(counts) > self.capacity:
             sub = sorted(counts.values(), reverse=True)[self.capacity]
         else:
@@ -1059,15 +1084,15 @@ class _TopKStreamWriter:
         # (fresh checkpoint, batch ids restart at 0) over an existing
         # durable store must write ABOVE the stored generations or
         # _latest() keeps serving the old run's summary and the new run's
-        # counts silently vanish — the same restart hazard the near-dup
-        # writer_id scoping exists for (code-review mid-r6)
+        # counts silently vanish — the same restart hazard the writer_id
+        # scoping of txn ids exists for
         new_summary = self.spark.createDataFrame(
             [(v, c, 0) for v, c in trimmed.items()]
             + [(None, 0, err + sub)],
             _SUMMARY_SCHEMA,
         ).withColumn("gen", F.lit(prev_gen + 1).cast("long"))
-        # CAS on the snapshot version (ADVICE r6): the single-live-writer
-        # contract is now ENFORCED, not just documented — a concurrent
+        # CAS on the snapshot version: the single-live-writer contract is
+        # ENFORCED, not just documented — a concurrent
         # sibling that committed after our `_latest()` read makes this
         # publish raise ConcurrentWriteError (failing the batch loudly)
         # instead of both writers publishing generation prev_gen+1 and
@@ -1076,39 +1101,18 @@ class _TopKStreamWriter:
             self.store.append_once(new_summary, txn=txn, cas_version=snap_v)
         except ConcurrentWriteError:
             # the sibling advanced the store past our mirror: drop it so
-            # a RETRY of this batch re-reads the sibling's commit (the
-            # r14 fresh-read-per-block behavior) instead of CAS-failing
-            # forever against a stale snapshot
+            # a RETRY of this batch re-reads the sibling's commit instead
+            # of CAS-failing forever against a stale snapshot
             self._mem = None
             raise
         self._mem = (trimmed, err + sub, prev_gen + 1, snap_v + 1)
-        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-            self.maintain()
 
     def maintain(self) -> None:
-        """Store maintenance: fold superseded generations away with a
-        retention rewrite (`optimize(keep_where=gen == max_gen)` — one
-        replace commit keeping only the newest summary's <= C+1 rows),
-        checkpoint + prune the commit log, and vacuum replaced files — a
-        forever-stream's store stays O(C) rows and O(1) files, not
-        O(batches).  Safe mid-stream between blocks like the near-dup
-        maintenance; batch-id idempotence survives (the replaced commits
-        stay in the watermark-compacted ledger)."""
-        if self._mem is not None:
-            gen = self._mem[2]  # the mirrored committed generation
-        else:
-            gen = self.store.read(self.spark).agg(F.max("gen")).first()[0]
-        if gen is None or gen < 0:
-            return
-        self.store.optimize(self.spark, keep_where=F.col("gen") == int(gen))
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
-        if self._mem is not None:
-            # optimize committed a retention rewrite: re-anchor the
-            # mirror's CAS version to the advanced table (content
-            # unchanged — the rewrite keeps exactly generation `gen`)
-            self._mem = (*self._mem[:3], self.store.version())
+        v = self._compact_to_generation(None if self._mem is None else self._mem[2])
+        if v is not None and self._mem is not None:
+            # re-anchor the mirror's CAS version; content is unchanged
+            # (the rewrite keeps exactly the mirrored generation)
+            self._mem = (*self._mem[:3], v)
 
     def topk(self, k: int) -> DataFrame:
         """Current top-k with bounds from the stored summary (same answer
@@ -1141,7 +1145,7 @@ def heavy_hitters_stream(
     weight, everything else is shared.  Mechanics, store layout, and
     exactly-once guarantees: see `_TopKStreamWriter`; read the current
     answer any time with `topk_stream_writer(...).topk(k)`."""
-    writer = _TopKStreamWriter(
+    writer = topk_stream_writer(
         spark,
         store_dir,
         col,
@@ -1150,13 +1154,7 @@ def heavy_hitters_stream(
         writer_id=checkpoint,
         weight_col=weight_col,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def topk_stream_writer(
@@ -1181,7 +1179,7 @@ def topk_stream_writer(
     )
 
 
-class _ReservoirStreamWriter:
+class _ReservoirStreamWriter(_DrainWriter):
     """foreachBatch body for `reservoir_sample_stream`: maintain a
     fixed-size UNIFORM sample of an unbounded feed as a bottom-k-by-hash
     sketch in a generational transactional store.
@@ -1198,9 +1196,9 @@ class _ReservoirStreamWriter:
 
     Per block: the block's own bottom-k (one TakeOrdered, O(block)),
     merged with the stored generation's <= k rows, re-trimmed to k, and
-    published as generation+1 through the same batch-txn `append_once` +
-    version-CAS discipline as `_TopKStreamWriter` (exactly-once on
-    retries; concurrent writers rejected, never merged).  Store reads are
+    published as generation+1 under the batch txn with the same
+    version-CAS discipline as `_TopKStreamWriter` (concurrent writers
+    rejected, never merged).  Store reads are
     O(k) after any number of batches; `maintain()` folds superseded
     generations away.
     """
@@ -1217,18 +1215,13 @@ class _ReservoirStreamWriter:
         salt: str = "sample:",
         group_col: str | None = None,
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-            TransactionalTable,
-        )
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.id_col = id_col
         self.k = k
         self.payload_cols = list(payload_cols or [])
         self.compact_every = compact_every
-        self.writer_id = writer_id
         self.salt = salt
-        #: r13: set -> STRATIFIED streaming sample (bottom-k PER GROUP —
+        #: set -> STRATIFIED streaming sample (bottom-k PER GROUP —
         #: the batch `sampling.stratified_sample` quota, maintained at
         #: ingest).  Same mergeable bottom-k algebra per group; state is
         #: <= groups * k rows, and the drained sample equals the batch
@@ -1242,7 +1235,7 @@ class _ReservoirStreamWriter:
         #: scalars drops the per-block max(gen) driver action.  Same
         #: protocol as the topK mirror: advanced only after a
         #: successful publish, rebuilt through the store on first use,
-        #: invalidated on a lost CAS race (r15 driver-walk round).
+        #: invalidated on a lost CAS race.
         self._mem: tuple[int, int] | None = None
 
     def _rank(self):
@@ -1283,18 +1276,11 @@ class _ReservoirStreamWriter:
             .drop("_rn")
         )
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-            ConcurrentWriteError,
-        )
-
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn):  # replayed batch
-            return
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         cols = [self.id_col, *self.payload_cols]
         if self.group_col is not None and self.group_col not in cols:
             cols.append(self.group_col)
-        # dedup by id BEFORE the bottom-k trim (review r7): duplicate rows
+        # dedup by id BEFORE the bottom-k trim: duplicate rows
         # of one id inside a single micro-batch (the at-least-once overlap
         # case) would each occupy a k-slot and could displace a genuinely
         # new id whose rank belongs in the feed's true bottom-k
@@ -1320,24 +1306,11 @@ class _ReservoirStreamWriter:
             self._mem = None
             raise
         self._mem = (prev_gen + 1, snap_v + 1)
-        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-            self.maintain()
 
     def maintain(self) -> None:
-        if self._mem is not None:
-            gen = self._mem[0]
-        else:
-            gen = self.store.read(self.spark).agg(F.max("gen")).first()[0]
-        if gen is None or gen < 0:
-            return
-        self.store.optimize(self.spark, keep_where=F.col("gen") == int(gen))
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
-        if self._mem is not None:
-            # the retention rewrite advanced the table version; content
-            # is unchanged (exactly generation `gen` survives)
-            self._mem = (self._mem[0], self.store.version())
+        v = self._compact_to_generation(None if self._mem is None else self._mem[0])
+        if v is not None and self._mem is not None:
+            self._mem = (self._mem[0], v)  # re-anchor; content unchanged
 
     def sample(self) -> DataFrame:
         """The current sample (id + payload columns, rank dropped)."""
@@ -1408,12 +1381,12 @@ def reservoir_sample_stream(
     """Streaming uniform k-sample of an unbounded feed — the streaming
     twin of the hash-rank batch samplers (`train_test_split.in_sample` /
     `hash_sample`), kept continuously current as the stream grows.
-    With `group_col` (+ the batch salt) this is the STRATIFIED form
-    (r13): `sampling.stratified_sample`'s per-group quota maintained at
+    With `group_col` (+ the batch salt) this is the STRATIFIED form:
+    `sampling.stratified_sample`'s per-group quota maintained at
     ingest, state <= groups * k rows.  Mechanics and guarantees: see
     `_ReservoirStreamWriter`; read the current sample any time with
     `reservoir_stream_writer(...).sample()` / `.stratified()`."""
-    writer = _ReservoirStreamWriter(
+    writer = reservoir_stream_writer(
         spark,
         store_dir,
         id_col,
@@ -1424,13 +1397,7 @@ def reservoir_sample_stream(
         salt=salt,
         group_col=group_col,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def stream_interval_join(
@@ -1483,7 +1450,7 @@ def stream_interval_join(
 # ---------------------------------------------------------------------------
 
 
-class _UrlDedupStreamWriter:
+class _UrlDedupStreamWriter(_DrainWriter):
     """foreachBatch body of `url_dedup_stream`: continuous EXACT dedup of
     a crawl feed by canonical URL, against ONE transactional key store
     (`shard=<hash(key) % key_shards>` layout; every read is shard-pruned,
@@ -1510,17 +1477,17 @@ class _UrlDedupStreamWriter:
        order: store first, THEN out — the crash-window argument only
        constrains COMMIT order, never staging order (staged files are
        reader-invisible until a commit names them), so the two write
-       jobs overlap on the cluster (r16, guide §2.6; the r15 form ran
-       them back to back — pure serial fixed cost per block).  Dying
-       between the commits re-runs the batch with the store side a txn
-       no-op and the out side staging + publishing once, exactly the
-       r15 behavior.
+       jobs overlap on the cluster (`_overlapped_store_out_commit`).
+       Dying between the commits re-runs the batch with the store side
+       a txn no-op and the out side staging + publishing once.
 
     Semantics: FIRST-ARRIVAL-WINS per canonical URL (what a crawl
     pipeline wants — the first fetch is kept, re-crawls drop).  On an
     id-ordered feed this equals the batch operator's min-id-per-URL
     rule, which is what the oracle checks.
     """
+
+    _commit_order = ("store", "out")
 
     def __init__(
         self,
@@ -1534,31 +1501,17 @@ class _UrlDedupStreamWriter:
         writer_id: str = "",
         out_files: int | None = None,
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.url_col = url_col
         self.id_col = id_col
         self.suffixes = suffixes
         self.key_shards = key_shards
-        self.writer_id = writer_id
         self.out_files = out_files
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
 
-    def maintain(self) -> None:
-        """Same store-maintenance contract as _NearDupStreamWriter."""
-        self.store.optimize(self.spark, partition_by="shard")
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
-
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.dedup import url_parts
-
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn) and self.out.txn_committed(txn):
-            return  # fully-committed replay: no-op, no jobs
 
         parts = url_parts(block, self.url_col, self.id_col, self.suffixes)
         key = F.coalesce(
@@ -1610,8 +1563,7 @@ class _UrlDedupStreamWriter:
                 out_df = survivors.select("doc_id", "url_norm", "reg_domain")
                 if self.out_files is not None:
                     out_df = out_df.coalesce(self.out_files)
-                # CONCURRENT staging, ORDERED commits (docstring step 3;
-                # r16 two-phase append — `_overlapped_store_out_commit`):
+                # CONCURRENT staging, ORDERED commits (docstring step 3):
                 # the store rows stage on a side thread while the out
                 # rows stage on this one; the store commit still strictly
                 # precedes the out commit.  Tasks stay aligned with the
@@ -1666,23 +1618,16 @@ def url_dedup_stream(
         writer_id=checkpoint,
         out_files=out_files,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _TermIndexStreamWriter:
+class _TermIndexStreamWriter(_DrainWriter):
     """foreachBatch body for `term_index_stream`: every micro-batch
     publishes one inverted-index SEGMENT — its postings plus its own
-    meta row (`search_index._segment_frames`) — through a batch-keyed
-    `append_once`, so a retried batch can never double-publish its meta
-    row (doubled corpus stats are exactly the corruption the segment
-    model must prevent; the replay check is the same txn protocol as
-    every other stream writer here).
+    meta row (`search_index._segment_frames`) — under the batch txn
+    (`_DrainWriter`), so a retried batch can never double-publish its
+    meta row (doubled corpus stats are exactly the corruption the
+    segment model must prevent).
 
     Contracts: the feed carries each doc_id ONCE across the stream's
     lifetime (run the URL / exact dedup stages upstream — a re-ingested
@@ -1696,6 +1641,8 @@ class _TermIndexStreamWriter:
     the segment ledger and merge exactly at read.
     """
 
+    _commit_order = ("table",)
+
     def __init__(
         self,
         spark,
@@ -1705,11 +1652,8 @@ class _TermIndexStreamWriter:
         text_col: str = "text",
         id_col: str = "doc_id",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.table = TransactionalTable(index_dir)
-        self.writer_id = writer_id
         self.text_col = text_col
         self.id_col = id_col
         # an EXISTING index's stored modulus is authoritative: trusting
@@ -1726,23 +1670,11 @@ class _TermIndexStreamWriter:
             n_shards = index_shard_count(spark, self.table)
         self.n_shards = n_shards
 
-    def maintain(self) -> None:
-        """Same store-maintenance contract as the other stream writers:
-        compact to one file per shard, checkpoint + prune the log,
-        vacuum replaced files."""
-        self.table.optimize(self.spark, partition_by="shard")
-        self.table.checkpoint(compact_txn_watermarks=True)
-        self.table.prune_log()
-        self.table.vacuum()
-
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.search_index import (
             _segment_frames,
         )
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.table.txn_committed(txn):
-            return  # committed replay: no-op, no jobs
         # an empty micro-batch publishes NOTHING (the class contract is
         # one meta row per NON-empty batch) — a full segment commit with
         # an (n_docs=0, tot_tokens NULL) meta row per idle trigger would
@@ -1786,16 +1718,10 @@ def term_index_stream(
         text_col=text_col,
         id_col=id_col,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _AnnIndexStreamWriter:
+class _AnnIndexStreamWriter(_DrainWriter):
     """foreachBatch body for `ann_index_stream`: a continuously indexed
     EMBEDDING corpus — the ANN twin of `_TermIndexStreamWriter`.
 
@@ -1818,6 +1744,8 @@ class _AnnIndexStreamWriter:
     term-index stored-modulus rule).
     """
 
+    _commit_order = ("table",)
+
     def __init__(
         self,
         spark,
@@ -1830,11 +1758,8 @@ class _AnnIndexStreamWriter:
         id_col: str = "vec_id",
         salt: str = "ivf:",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.table = TransactionalTable(index_dir)
-        self.writer_id = writer_id
         self.target_centroids = target_centroids
         self.expected_corpus_rows = expected_corpus_rows
         if expected_corpus_rows is not None and n_shards is None:
@@ -1845,12 +1770,12 @@ class _AnnIndexStreamWriter:
         self.salt = salt
         #: (n_shards, k) — BOTH creation-fixed by the extend contract,
         #: derived once on the first extension and passed back into
-        #: every later one (r15: the per-block meta aggregate +
-        #: centroid count were two driver-synchronized jobs re-deriving
-        #: constants).  Safe across THIS writer's maintenance: optimize
-        #: preserves rows, and neither value can change after creation.
-        #: An EXTERNAL `compact_*_index(recluster=True)` against a
-        #: live-streamed index is UNSUPPORTED (ADVICE r15): it founds a
+        #: every later one (re-deriving them per block would cost two
+        #: driver-synchronized jobs).  Safe across THIS writer's
+        #: maintenance: optimize preserves rows, and neither value can
+        #: change after creation.  An EXTERNAL
+        #: `compact_*_index(recluster=True)` against a live-streamed
+        #: index is UNSUPPORTED: it founds a
         #: new centroid generation that can change k, which would leave
         #: this cache stale (assignment stays exact — `_assign_two_level`
         #: is exact for any k — but the two-level/flat switch and
@@ -1858,20 +1783,9 @@ class _AnnIndexStreamWriter:
         #: Recluster between stream runs; a fresh writer re-derives.
         self._params: tuple[int, int] | None = None
 
-    def maintain(self) -> None:
-        """Compact to one file per shard + bound the log (the standard
-        stream-store maintenance contract)."""
-        self.table.optimize(self.spark, partition_by="shard")
-        self.table.checkpoint(compact_txn_watermarks=True)
-        self.table.prune_log()
-        self.table.vacuum()
-
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.table.txn_committed(txn):
-            return  # committed replay: no-op, no jobs
         if block.isEmpty():
             return  # idle trigger: publish nothing (the term-index rule)
         if self.table.version() < 0:
@@ -1932,17 +1846,11 @@ def ann_index_stream(
         id_col=id_col,
         salt=salt,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _IvfPqIndexStreamWriter:
-    """foreachBatch body for `ivfpq_index_stream` (r14): the IVFPQ twin
+class _IvfPqIndexStreamWriter(_DrainWriter):
+    """foreachBatch body for `ivfpq_index_stream`: the IVFPQ twin
     of `_AnnIndexStreamWriter`.  The first non-empty batch FOUNDS the
     index — IVF centroids AND PQ codebooks hash-sampled from it by the
     shared builders — and every later batch is one `extend_ivfpq_index`
@@ -1951,6 +1859,8 @@ class _IvfPqIndexStreamWriter:
     Exactly-once, stored-modulus, and fixed-generation contracts are
     the ANN writer's verbatim; the PQ dimension/pq_m parameters only
     seed creation — an existing index's stored meta always wins."""
+
+    _commit_order = ("table",)
 
     def __init__(
         self,
@@ -1968,11 +1878,8 @@ class _IvfPqIndexStreamWriter:
         ivf_salt: str = "ivf:",
         pq_salt: str = "pq:",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.table = TransactionalTable(index_dir)
-        self.writer_id = writer_id
         self.dim = dim
         self.m = m
         self.target_codes = target_codes
@@ -1987,25 +1894,14 @@ class _IvfPqIndexStreamWriter:
         self.pq_salt = pq_salt
         #: (n_shards, pq_m, dim, k) — all creation-fixed by the extend
         #: contract; derived once on the first extension and passed
-        #: back into every later one (r15: the per-block meta aggregate
-        #: + centroid count were two driver-synchronized jobs
-        #: re-deriving constants).  Safe across THIS writer's
+        #: back into every later one.  Safe across THIS writer's
         #: maintenance; an EXTERNAL recluster mid-stream is UNSUPPORTED
-        #: — see the ANN twin's `_params` note (ADVICE r15).
+        #: — see the ANN twin's `_params` note.
         self._params: tuple[int, int, int, int] | None = None
 
-    def maintain(self) -> None:
-        self.table.optimize(self.spark, partition_by="shard")
-        self.table.checkpoint(compact_txn_watermarks=True)
-        self.table.prune_log()
-        self.table.vacuum()
-
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.table.txn_committed(txn):
-            return  # committed replay: no-op, no jobs
         if block.isEmpty():
             return  # idle trigger: publish nothing (the term-index rule)
         if self.table.version() < 0:
@@ -2059,10 +1955,10 @@ def ivfpq_index_stream(
     ivf_salt: str = "ivf:",
     pq_salt: str = "pq:",
 ):
-    """Continuously indexed IVFPQ corpus (r14): the first block founds
+    """Continuously indexed IVFPQ corpus: the first block founds
     centroids + codebooks, every later block is one atomic encoded
     segment, and `ivfpq_index_lookup` answers at any committed
-    version — the streaming completion of VERDICT r13 #4."""
+    version."""
     writer = _IvfPqIndexStreamWriter(
         spark,
         index_dir,
@@ -2077,13 +1973,7 @@ def ivfpq_index_stream(
         ivf_salt=ivf_salt,
         pq_salt=pq_salt,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def _resolve_retry_pin(store, txn: str) -> int:
@@ -2197,7 +2087,7 @@ def _overlapped_store_out_commit(
         out.append_once(out_df, txn=txn)
 
 
-class _DomainCapStreamWriter:
+class _DomainCapStreamWriter(_DrainWriter):
     """foreachBatch body of `domain_cap_stream`: a continuous per-domain
     QUOTA over a crawl feed — keep each registered domain's first `cap`
     arrivals, drop everything after (the streaming twin of
@@ -2224,8 +2114,7 @@ class _DomainCapStreamWriter:
     3. Commit the survivors' per-domain increments to the store, THEN the
        survivors to out (the crash-window order every writer here uses).
        The two staging Spark jobs run CONCURRENTLY — only the cheap
-       filesystem commits are ordered (r16 two-phase append,
-       `_overlapped_store_out_commit`).
+       filesystem commits are ordered (`_overlapped_store_out_commit`).
 
     Exactly-once under retry is the interesting part: survivors are a
     function of the PRE-APPEND counts, so a batch that died between its
@@ -2234,18 +2123,16 @@ class _DomainCapStreamWriter:
     would double-count the block against itself and wrongly drop rows the
     first attempt kept).  The store pin is therefore `txn_version(txn)-1`
     on a store-committed retry (the commit our own txn published, located
-    by the txlog) and `version()` on the normal path.  A half-committed
-    txn folded away by log maintenance would make that pin unrecoverable,
-    so maintenance runs only via this writer's own `maintain()` — after
-    both commits — and the writer raises loudly if the pin is gone rather
-    than guessing.
+    by the txlog) and `version()` on the normal path
+    (`_resolve_retry_pin`, which raises loudly if maintenance folded
+    the pin away rather than guessing).
 
     NULL reg_domain rows (unparseable URLs) form ONE group — exactly the
     batch operator's `PARTITION BY reg_domain` NULL semantics — hashed
     under a sentinel for shard routing only; output keeps reg_domain
     NULL.
 
-    ``token_mode=True`` (r15) turns the quota into a TOKEN budget — the
+    ``token_mode=True`` turns the quota into a TOKEN budget — the
     streaming twin of `dedup.domain_token_cap`: each row charges
     greatest(ws_tokens, 1) of `text_col`, the block-local window becomes
     a running charge SUM instead of a row_number, and admission is
@@ -2259,6 +2146,8 @@ class _DomainCapStreamWriter:
     (doc_id, reg_domain, doc_tokens, cum_tokens) — the batch operator's
     rows VERBATIM on an id-ordered feed (the oracle).
     """
+
+    _commit_order = ("store", "out")
 
     #: shard-routing sentinel for NULL reg_domain (never a real domain —
     #: contains whitespace and a NUL)
@@ -2284,17 +2173,14 @@ class _DomainCapStreamWriter:
         token_mode: bool = False,
         text_col: str = "text",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
+        super().__init__(spark, writer_id)
         if cap < 1:
             raise ValueError("cap must be >= 1")
-        self.spark = spark
         self.cap = cap
         self.url_col = url_col
         self.id_col = id_col
         self.suffixes = suffixes
         self.domain_shards = domain_shards
-        self.writer_id = writer_id
         self.out_files = out_files
         self.token_mode = token_mode
         self.text_col = text_col
@@ -2302,23 +2188,15 @@ class _DomainCapStreamWriter:
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
 
     def maintain(self) -> None:
-        """Same store-maintenance contract as the other stream writers,
-        plus: shard files are rewritten SORTED by reg_domain, so the
-        per-block prior-count read's pushed `isin` filter can prune
-        parquet row groups by min/max stats on LARGE shard files
-        (measured at a 500x-domain store, SCALING.md r11: 1000-domain
-        probe blocks 3.28x -> 2.75x with the pushdown; the residual is
-        file-open fan-out — O(min(block domains, shards)) files — not
-        store size, proven by 20-domain blocks probing the same store
-        FLAT at 1.05x).  Safe ONLY between this
-        writer's fully-committed batches (see the half-committed-pin
-        argument in the class docstring)."""
-        self.store.optimize(
-            self.spark, partition_by="shard", cluster_cols=["reg_domain"]
-        )
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
+        """The default compaction, but shard files are rewritten SORTED
+        by reg_domain, so the per-block prior-count read's pushed `isin`
+        filter can prune parquet row groups by min/max stats on LARGE
+        shard files (measured at a 500x-domain store, SCALING.md:
+        1000-domain probe blocks 3.28x -> 2.75x with the pushdown; the
+        residual is file-open fan-out — O(min(block domains, shards))
+        files — not store size, proven by 20-domain blocks probing the
+        same store FLAT at 1.05x)."""
+        self._compact(self.store, partition_by="shard", cluster_cols=["reg_domain"])
 
     def _key(self):
         return F.coalesce(F.col("reg_domain"), F.lit(self._NULL_KEY))
@@ -2331,15 +2209,11 @@ class _DomainCapStreamWriter:
             ),
         )
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from pyspark.sql import Window as W
 
         from apache_kafka_clickhouse_demo_spark.operators.dedup import url_parts
 
-        txn = f"{self.writer_id}:{batch_id}"
-        store_done = self.store.txn_committed(txn)
-        if store_done and self.out.txn_committed(txn):
-            return  # fully-committed replay: no-op, no jobs
         pin = _resolve_retry_pin(self.store, txn)
 
         if self.token_mode:
@@ -2376,29 +2250,22 @@ class _DomainCapStreamWriter:
         ranked = parts.withColumn("_r", rank_col).withColumn(
             "_shard", self._shard()
         )
-        # persisted (r13 group-commit round): the shard collect, the
-        # domain probe, and the survivor join all consume `ranked` —
-        # uncached, the canonicalize+window chain re-ran up to 4x per
-        # block (two collects + the two appends' stages); block-bounded
+        # persisted: the domain probe, the survivor join and the
+        # increments all consume `ranked` — uncached, the canonicalize+
+        # window chain would re-run per consumer; block-bounded
         ranked = ranked.persist()
-        # ADVICE r13: the try must begin IMMEDIATELY after the
-        # persist — the shard collect, the capped domain probe and
-        # the prior read below all sit between persist and the
-        # commit block, and an exception there leaked the cached
-        # block before this wrapper existed
+        # the try begins IMMEDIATELY after the persist, so an exception
+        # in the probe or the prior read cannot leak the cached block
         try:
-
-            # ONE bounded driver action (r15 — the r14 form ran a
-            # collect_set job AND a distinct-domain job per block): a
-            # CAPPED distinct (shard, domain) probe — each domain maps
-            # to exactly one shard, so the pair count equals the
-            # distinct-domain count, bounded by the MAX+1 limit, never
-            # by block size (a 250k-literal isin was measured to hang
-            # analysis, so big blocks skip the pushdown instead of
-            # building one).  An over-cap block falls back to reading
-            # EVERY counter shard — bounded by `domain_shards`, and
-            # harmless to the merge: prior domains the block never
-            # mentions drop out of the left join.
+            # ONE bounded driver action: a CAPPED distinct (shard,
+            # domain) probe — each domain maps to exactly one shard, so
+            # the pair count equals the distinct-domain count, bounded by
+            # the MAX+1 limit, never by block size (a 250k-literal isin
+            # was measured to hang analysis, so big blocks skip the
+            # pushdown instead of building one).  An over-cap block falls
+            # back to reading EVERY counter shard — bounded by
+            # `domain_shards`, and harmless to the merge: prior domains
+            # the block never mentions drop out of the left join.
             pairs = (
                 ranked.select("_shard", "reg_domain")
                 .distinct()
@@ -2406,8 +2273,8 @@ class _DomainCapStreamWriter:
                 .collect()
             )
             if not pairs:
-                # idle trigger: nothing published (a store_done retry
-                # implies the first attempt saw a non-empty block)
+                # idle trigger: nothing published (a half-committed
+                # retry implies the first attempt saw a non-empty block)
                 return
             if len(pairs) <= self.MAX_PUSHDOWN_DOMAINS:
                 block_shards = sorted({r["_shard"] for r in pairs})
@@ -2502,8 +2369,8 @@ class _DomainCapStreamWriter:
                     )
                 if self.out_files is not None:
                     out_df = out_df.coalesce(self.out_files)
-                # CONCURRENT staging, ORDERED commits (r16 two-phase
-                # append, `_overlapped_store_out_commit`): the increment
+                # CONCURRENT staging, ORDERED commits
+                # (`_overlapped_store_out_commit`): the increment
                 # aggregate stages on a side thread while the survivors
                 # stage here; both read the persisted block caches, and
                 # the store commit still strictly precedes the out
@@ -2559,13 +2426,7 @@ def domain_cap_stream(
         writer_id=checkpoint,
         out_files=out_files,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
 def domain_token_cap_stream(
@@ -2583,7 +2444,7 @@ def domain_token_cap_stream(
     out_files: int | None = None,
     expected_domain_rows: int | None = None,
 ):
-    """Streaming per-domain TOKEN budget (r15): admit each registered
+    """Streaming per-domain TOKEN budget: admit each registered
     domain's arrivals while the accumulated greatest(ws_tokens, 1)
     charge stays within `budget` — the streaming twin of
     `dedup.domain_token_cap`, i.e. token-level mixture enforcement AT
@@ -2608,19 +2469,13 @@ def domain_token_cap_stream(
         token_mode=True,
         text_col=text_col,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _CountMinStreamWriter:
+class _CountMinStreamWriter(_DrainWriter):
     """foreachBatch body of `count_min_stream`: a continuously-maintained
     count-min sketch over an unbounded feed — the streaming twin of
-    `sketches.count_min_build` (r12, VERDICT r11 #6).  CMS counters are
+    `sketches.count_min_build`.  CMS counters are
     LINEAR and merge by per-cell sum, which is exactly the shape of the
     `domain_cap_stream` counter store, so the same architecture carries
     over verbatim:
@@ -2633,25 +2488,24 @@ class _CountMinStreamWriter:
     1. Build the BLOCK's sketch with the batch operator itself
        (`count_min_build` — provably shared cells/hashes), <=
        depth*width increment rows however large the block, PERSISTED
-       and materialized by ONE bounded shard-name collect (r15 — the
-       r14 form paid separate isEmpty and collect_set jobs).
+       and materialized by ONE bounded shard-name collect.
     2. Pin the store, read ONLY the block's touched cell shards at the
        pin (bounded by `cms_shards`), merge prior + block cells, and
        emit per-key running estimates AT INGEST for the block's
        distinct keys — est over everything that has arrived through
        this block (`count_min_lookup` against the merged bounded
        sketch).
-    3. ONE atomic publish (r13, VERDICT r12 #3 — the group-commit
-       protocol proven on the dyadic twin): increments (shard `c*`)
+    3. ONE atomic publish (the group-commit protocol of the dyadic
+       twin): increments (shard `c*`)
        and the block's estimate rows (namespaced shard `o`) union into
        a single frame, staged by ONE write job and committed under ONE
        txn record.
 
-    Exactly-once under retry is now structural: a replayed block is
+    Exactly-once under retry is structural: a replayed block is
     either fully committed (skip, no jobs) or fully absent — nothing
     of an uncommitted txn is ever visible, so the pre-block snapshot
-    IS the current version and the half-committed
-    `txn_version(txn) - 1` pin case no longer exists for this writer.
+    IS the current version and there is no half-committed
+    `txn_version(txn) - 1` pin case for this writer.
 
     Because counters are linear and the feed's blocks partition the
     corpus, the DRAINED store's merged sketch equals the batch
@@ -2675,28 +2529,15 @@ class _CountMinStreamWriter:
         cms_shards: int = 8,
         writer_id: str = "",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
+        super().__init__(spark, writer_id)
         if width < 1 or depth < 1:
             raise ValueError("width and depth must be >= 1")
-        self.spark = spark
         self.key_col = key_col
         self.width = width
         self.depth = depth
         self.salt = salt
         self.cms_shards = cms_shards
-        self.writer_id = writer_id
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-
-    def maintain(self) -> None:
-        """Compact the counter store (one file per cell shard), fold txn
-        watermarks, prune, vacuum.  Safe ONLY between fully-committed
-        batches — the half-committed-pin argument in the class
-        docstring."""
-        self.store.optimize(self.spark, partition_by="shard")
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
 
     def _shard(self):
         return F.concat(
@@ -2728,15 +2569,12 @@ class _CountMinStreamWriter:
             self.spark, "shard", [self.OUT_SHARD], version=version
         ).select("batch_id", self.key_col, "est")
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
             count_min_build,
             count_min_lookup,
         )
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn):
-            return  # single atomic publish: committed means FULLY done
         # nothing of an uncommitted txn is ever visible (single commit),
         # so the current version IS the pre-block snapshot
         pin = self.store.version()
@@ -2745,25 +2583,23 @@ class _CountMinStreamWriter:
             block, self.key_col, width=self.width, depth=self.depth, salt=self.salt
         ).withColumn("shard", self._shard())
         # persisted, then materialized by ONE bounded collect
-        # (<= depth*width rows by construction): the collect replaces
-        # the r14 form's isEmpty + shard-name collect_set driver
-        # actions and leaves the cache populated for the staged write's
-        # two branches (increments + the estimate's merge).  The merge
-        # itself STAYS distributed — an A/B of the full driver-side
-        # merge (local increment + merged-sketch frames re-uploaded per
-        # block) measured SLOWER here than the cached cluster plan
-        # (~+0.6 s/block of LocalTableScan serialization at
-        # depth*width=4096), the opposite of the dyadic twin where the
-        # upload is ~17 estimate rows — so this writer keeps the r14
-        # dataflow minus two driver-synchronized jobs per block.
+        # (<= depth*width rows by construction): the collect is both
+        # the empty-block probe and the shard-name list, and leaves the
+        # cache populated for the staged write's two branches
+        # (increments + the estimate's merge).  The merge itself STAYS
+        # distributed — an A/B of the full driver-side merge (local
+        # increment + merged-sketch frames re-uploaded per block)
+        # measured SLOWER here than the cached cluster plan (~+0.6
+        # s/block of LocalTableScan serialization at depth*width=4096),
+        # the opposite of the dyadic twin where the upload is ~17
+        # estimate rows.
         inc = inc.persist()
         try:
             inc_rows = inc.select("shard").collect()
             if not inc_rows:
                 # all keys NULL: CMS counts non-NULL keys (the batch
                 # operator's contract), so there is nothing to count
-                # and nothing is published — the ADVICE r10 empty-block
-                # rule
+                # and nothing is published
                 return
             block_shards = sorted({r["shard"] for r in inc_rows})
             try:
@@ -2797,8 +2633,8 @@ class _CountMinStreamWriter:
             unified = inc.select(
                 "shard", "d", "bucket", "n"
             ).unionByName(est, allowMissingColumns=True)
-            # CAS on the pinned version (r16, ADVICE r15 — the dyadic
-            # twin's hardening): the estimates above were derived from
+            # CAS on the pinned version (the dyadic twin's hardening):
+            # the estimates above were derived from
             # the snapshot at `pin`, so a concurrent appender landing
             # between pin and publish fails this batch loudly instead
             # of publishing estimates that silently miss its increments
@@ -2839,16 +2675,10 @@ def count_min_stream(
         cms_shards=cms_shards,
         writer_id=checkpoint,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _DyadicCmsStreamWriter:
+class _DyadicCmsStreamWriter(_DrainWriter):
     """foreachBatch body of `dyadic_cms_stream`: a continuously-
     maintained dyadic count-min structure over an unbounded feed — the
     streaming twin of `sketches.dyadic_cms_build`, emitting a LIVE
@@ -2868,17 +2698,14 @@ class _DyadicCmsStreamWriter:
        read on restart/replay, advanced only after a successful
        commit), and derive the ranges' running estimates and the
        quantile walk in pure integer Python (`dyadic_range_counts_py` /
-       `dyadic_quantiles_py` — the batch operators' exact rules, r15
-       driver-walk rewrite; the r14 form re-read prior shards and
-       re-aggregated per block, 2 extra cluster jobs each carrying a
-       store-read plan).
-    3. ONE atomic publish (VERDICT r12 #3, the group-commit
-       experiment): the increments (shard `y*`) and the estimate rows
-       (namespaced shard `o`, the r7 b*/p* convention) are union'd into
+       `dyadic_quantiles_py` — the batch operators' exact rules) instead
+       of re-reading prior shards and re-aggregating per block.
+    3. ONE atomic publish (group commit): the increments (shard `y*`)
+       and the estimate rows (namespaced shard `o`) are union'd into
        a single frame — every file carries the unified column set, so
        reads never need schema merging — staged by ONE write job, and
-       committed under ONE txn record naming both shard sets.  The
-       two-commit crash window is GONE: a replayed block is either
+       committed under ONE txn record naming both shard sets.  There
+       is no two-commit crash window: a replayed block is either
        fully committed (skip, no jobs) or fully absent (recompute
        against a pre-block snapshot — the retry pin degenerates to the
        current version, since nothing of an uncommitted txn is ever
@@ -2890,11 +2717,11 @@ class _DyadicCmsStreamWriter:
     `stream_range_counts` hash-checks exactly that, oracle unchanged.
     """
 
-    #: namespaced shard holding the published estimate rows (the r7
-    #: single-table b*/p* convention; store cells use `y{n}`)
+    #: namespaced shard holding the published estimate rows (store
+    #: cells use `y{n}`)
     OUT_SHARD = "o"
     #: namespaced shard holding the published running QUANTILE rows
-    #: (r14, VERDICT r13 #6 — live p50/p99 at ingest)
+    #: (live p50/p99 at ingest)
     QOUT_SHARD = "q"
 
     def __init__(
@@ -2911,11 +2738,9 @@ class _DyadicCmsStreamWriter:
         writer_id: str = "",
         ps: list[int] | None = None,
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
+        super().__init__(spark, writer_id)
         if width < 1 or depth < 1 or not 1 <= universe_bits <= 62:
             raise ValueError("need width, depth >= 1 and 1 <= universe_bits <= 62")
-        self.spark = spark
         self.value_col = value_col
         self.ranges = list(ranges)
         self.universe_bits = universe_bits
@@ -2923,7 +2748,6 @@ class _DyadicCmsStreamWriter:
         self.depth = depth
         self.salt = salt
         self.cms_shards = cms_shards
-        self.writer_id = writer_id
         for p_ in ps or []:
             if not 0 < int(p_) <= 1000:
                 raise ValueError(f"permille fraction {p_} outside (0, 1000]")
@@ -2938,8 +2762,8 @@ class _DyadicCmsStreamWriter:
         #: commit, so it always mirrors the committed state exactly —
         #: a failed append leaves it at the pre-block snapshot and the
         #: retry re-derives against that, preserving the exactly-once
-        #: replay contract unchanged (r15 driver-walk rewrite).
-        #: CAS-ANCHORED (r16, ADVICE r15): `_mem_version` records the
+        #: replay contract unchanged.
+        #: CAS-ANCHORED: `_mem_version` records the
         #: store version the mirror equals; `_prior_cells` serves it
         #: only at a matching pin, and every publish CASes on that
         #: version — a contract-violating concurrent appender now fails
@@ -2949,13 +2773,7 @@ class _DyadicCmsStreamWriter:
         self._mem_version: int = -2  # never a valid table version
 
     def maintain(self) -> None:
-        """Compact the counter store, fold watermarks, prune, vacuum —
-        between fully-committed batches only (the half-committed-pin
-        argument)."""
-        self.store.optimize(self.spark, partition_by="shard")
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
+        super().maintain()
         if self._mem is not None:
             # the retention rewrite advanced the version; the mirror's
             # CONTENT is unchanged (compaction preserves the merge-on-
@@ -3046,7 +2864,7 @@ class _DyadicCmsStreamWriter:
         ONE bounded read of every cell shard (restart/replay path).
         Increment rows are summed per cell — counters are linear.
         The mirror is served ONLY when its anchored version matches the
-        pin (r16): any other version means someone else advanced the
+        pin: any other version means someone else advanced the
         store, and the bounded re-read is the correct recovery."""
         if self._mem is not None and self._mem_version == pin:
             return self._mem
@@ -3071,19 +2889,16 @@ class _DyadicCmsStreamWriter:
         self._mem_version = pin
         return cells
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
             dyadic_cms_build,
             dyadic_quantiles_py,
             dyadic_range_counts_py,
         )
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn):
-            return  # single atomic publish: committed means FULLY done
         # nothing of an uncommitted txn is ever visible (single commit),
         # so the current version IS the pre-block snapshot — no
-        # half-committed pin case exists for this writer anymore
+        # half-committed pin case exists for this writer
         pin = self.store.version()
 
         inc = dyadic_cms_build(
@@ -3095,27 +2910,24 @@ class _DyadicCmsStreamWriter:
             salt=self.salt,
         ).withColumn("shard", self._shard())
         # persisted, then materialized by ONE bounded collect
-        # (<= (bits+1)*depth*width rows by construction): the collect
-        # replaces the r14 form's three driver actions per block
-        # (isEmpty, the shard-name collect_set, and the quantile
-        # descent's merged-grid collect) — it detects the empty block,
-        # hands the driver the block cells for the merge below, and
-        # leaves the cache populated so the staged write's increment
-        # branch reads it instead of re-running the block aggregate.
+        # (<= (bits+1)*depth*width rows by construction): it detects
+        # the empty block, hands the driver the block cells for the
+        # merge below, and leaves the cache populated so the staged
+        # write's increment branch reads it instead of re-running the
+        # block aggregate.
         inc = inc.persist()
         try:
             block_rows = inc.collect()
             if not block_rows:
                 # every value NULL/out-of-range: nothing countable,
                 # nothing published (the batch operator's drop
-                # contract; the ADVICE r10 empty-block rule)
+                # contract)
                 return
             # merge prior + block cells DRIVER-side: both sides are
             # bounded by construction, counters are linear, and the
             # estimate/descent rules are all-integer — bit-identical to
-            # the r14 distributed merge (ADVICE r12's unread-band-mass
-            # hazard is gone by construction: the dict covers EVERY
-            # committed cell, not a shard subset)
+            # a distributed merge, and the dict covers EVERY committed
+            # cell, so no band mass can go unread
             merged = dict(self._prior_cells(pin))
             for r in block_rows:
                 key = (r["level"], r["d"], r["bucket"])
@@ -3144,8 +2956,7 @@ class _DyadicCmsStreamWriter:
                 "shard", "level", "d", "bucket", "n"
             ).unionByName(est_df, allowMissingColumns=True)
             if self.ps:
-                # running quantiles AT INGEST (r14, VERDICT r13 #6):
-                # the descent over the SAME pre-append snapshot + block
+                # running quantiles AT INGEST: the descent over the SAME pre-append snapshot + block
                 # cells, published in the SAME single atomic commit —
                 # counters are linear, so the walk over `merged` equals
                 # the batch walk over a one-shot build of everything
@@ -3168,11 +2979,7 @@ class _DyadicCmsStreamWriter:
                     "target_rank long, q_value long",
                 )
                 unified = unified.unionByName(q_df, allowMissingColumns=True)
-            from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-                ConcurrentWriteError,
-            )
-
-            # CAS on the pinned version (r16, ADVICE r15): a concurrent
+            # CAS on the pinned version: a concurrent
             # appender advancing the store between our pin and this
             # publish fails the batch loudly — the retry re-pins and
             # rebuilds the mirror below — instead of the mirror silently
@@ -3214,9 +3021,9 @@ def dyadic_cms_stream(
     a cell-sharded counter store (estimates under the namespaced `o`
     shard; read them back via the writer's `out_rows()`).  Pass `ps`
     (permille fractions) to ALSO publish running quantiles per block —
-    the r13 dyadic descent over the same pre-append snapshot + block
+    the dyadic descent over the same pre-append snapshot + block
     cells, in the same single commit (namespaced shard `q`, read back
-    via `quantile_rows()` — r14, VERDICT r13 #6).  Mechanics,
+    via `quantile_rows()`).  Mechanics,
     single-commit replay rule, and the drained-store == batch-structure
     equality: see `_DyadicCmsStreamWriter`."""
     writer = _DyadicCmsStreamWriter(
@@ -3232,38 +3039,33 @@ def dyadic_cms_stream(
         writer_id=checkpoint,
         ps=ps,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _UniqStreamWriter:
+class _UniqStreamWriter(_DrainWriter):
     """foreachBatch body of `uniq_stream`: continuously-maintained
     per-group approximate count-distinct — the streaming twin of the
-    `uniqState`/`uniqMerge` pipeline (r12), completing the sketch
+    `uniqState`/`uniqMerge` pipeline, completing the sketch
     family's streaming trio (Misra-Gries `heavy_hitters_stream`,
     count-min `count_min_stream`, HLL here).  HLL sketch UNION is the
     merge-on-read algebra (per-register max — associative, commutative,
-    and register-exact under ANY block split: the r4 property test in
+    and register-exact under ANY block split: the property test in
     tests/test_agg_state.py), so the architecture is the CMS counter
     store's verbatim with states instead of counters:
 
     State: one transactional table of (group, state) HLL-binary rows
     under `shard=u<hash(group) % uniq_shards>`, unioned per group at
-    read.  Per block: ONE per-group `uniq_state` aggregate (<= block's
+    read (maintenance compacts files, never merges state rows).  Per
+    block: ONE per-group `uniq_state` aggregate (<= block's
     distinct groups rows, PERSISTED — the shard collect and the staged
     write's two branches share it), running estimates AT INGEST for
     the block's groups (union of the pre-block snapshot's states + the
-    block's own), then ONE atomic publish (r13, the group-commit
-    protocol proven on the dyadic/CMS twins): state rows (shard `u*`)
+    block's own), then ONE atomic publish (the group-commit protocol
+    of the dyadic/CMS twins): state rows (shard `u*`)
     and estimate rows (namespaced shard `o`) staged by one write job
     under one txn record.  A replayed block is fully committed (skip)
     or fully absent (recompute against the current version, which IS
-    the pre-block snapshot) — the half-committed pin case is gone.
+    the pre-block snapshot) — there is no half-committed pin case.
 
     The drained store's per-group union is register-identical to the
     batch whole-input sketch, so the final estimates equal
@@ -3288,25 +3090,12 @@ class _UniqStreamWriter:
         uniq_shards: int = 8,
         writer_id: str = "",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
-        self.spark = spark
+        super().__init__(spark, writer_id)
         self.group_col = group_col
         self.key_col = key_col
         self.lg_k = lg_k
         self.uniq_shards = uniq_shards
-        self.writer_id = writer_id
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-
-    def maintain(self) -> None:
-        """Compact + fold watermarks + prune + vacuum; between
-        fully-committed batches only (the half-committed-pin argument).
-        Note compaction preserves state ROWS — same-group states merge
-        only at read, exactly like the SummingMergeTree columns."""
-        self.store.optimize(self.spark, partition_by="shard")
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
 
     def _shard(self):
         key = F.coalesce(F.col(self.group_col).cast("string"), F.lit(self._NULL_KEY))
@@ -3335,12 +3124,9 @@ class _UniqStreamWriter:
             self.spark, "shard", [self.OUT_SHARD], version=version
         ).select("batch_id", self.group_col, "approx_uniq")
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.functions import agg_state as S
 
-        txn = f"{self.writer_id}:{batch_id}"
-        if self.store.txn_committed(txn):
-            return  # single atomic publish: committed means FULLY done
         if block.isEmpty():
             return
         # nothing of an uncommitted txn is ever visible (single commit)
@@ -3353,14 +3139,13 @@ class _UniqStreamWriter:
         )
         # persisted: the shard collect materializes the per-group state
         # rows (<= block's distinct groups); the staged write's two
-        # branches then read the cache.  NOTE (r15): the driver-walk
-        # round's local-frame form (collect the binary states, publish
-        # them from a LocalTableScan) was MEASURED ~1.75x SLOWER here in
-        # isolated warm A/B (5.98 -> 10.47 s min-of-5) — collecting and
-        # re-uploading HLL sketch binaries per block costs more than the
-        # two driver actions it saves, the count-min LocalTableScan
-        # lesson repeated on the state-store side — so this writer keeps
-        # the r14 dataflow.
+        # branches then read the cache.  A local-frame form (collect the
+        # binary states, publish them from a LocalTableScan) MEASURED
+        # ~1.75x SLOWER here in isolated warm A/B (5.98 -> 10.47 s
+        # min-of-5) — collecting and re-uploading HLL sketch binaries
+        # per block costs more than the two driver actions it saves, the
+        # count-min LocalTableScan lesson repeated on the state-store
+        # side — so this writer keeps the distributed dataflow.
         inc = inc.persist()
         try:
             block_shards = sorted(
@@ -3436,19 +3221,13 @@ def uniq_stream(
         uniq_shards=uniq_shards,
         writer_id=checkpoint,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)
 
 
-class _PackBinsStreamWriter:
+class _PackBinsStreamWriter(_DrainWriter):
     """foreachBatch body of `pack_bins_stream`: streaming first-fit bin
-    packing at INGEST — the packing family's streaming twin (VERDICT
-    r12 #6).  Training-data pipelines pack while they ingest, not only
+    packing at INGEST — the packing family's streaming twin.
+    Training-data pipelines pack while they ingest, not only
     in batch: each arriving block's documents pack into their buckets'
     OPEN bins the moment they land, so a downstream dataloader can
     start reading full bins without waiting for the corpus to close.
@@ -3501,6 +3280,8 @@ class _PackBinsStreamWriter:
     FFD parallelization — each bucket is one dataloader shard.
     """
 
+    _commit_order = ("store", "out")
+
     def __init__(
         self,
         spark,
@@ -3515,11 +3296,9 @@ class _PackBinsStreamWriter:
         max_open: int = 64,
         writer_id: str = "",
     ):
-        from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
-
+        super().__init__(spark, writer_id)
         if capacity <= 0 or buckets <= 0 or max_open <= 0:
             raise ValueError("capacity, buckets, max_open must be positive")
-        self.spark = spark
         self.capacity = capacity
         self.buckets = buckets
         self.salt = salt
@@ -3532,33 +3311,19 @@ class _PackBinsStreamWriter:
             max(1, capacity // 64) if close_below is None else close_below
         )
         self.max_open = max_open
-        self.writer_id = writer_id
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
         #: driver-resident (gen, version) of the newest COMMITTED
         #: snapshot generation — the reservoir mirror's protocol
         #: (advanced only after a successful publish, rebuilt on first
         #: use, invalidated on a lost CAS race); drops the per-block
-        #: max(gen) driver action (r15 driver-walk round).
+        #: max(gen) driver action.
         self._mem: tuple[int, int] | None = None
 
     def maintain(self) -> None:
-        """Fold superseded generations away, compact, prune, vacuum —
-        between fully-committed batches only (the half-committed-pin
-        argument)."""
-        if self._mem is not None:
-            gen = self._mem[0]
-        else:
-            gen = self.store.read(self.spark).agg(F.max("gen")).first()[0]
-        if gen is None or gen < 0:
-            return
-        self.store.optimize(self.spark, keep_where=F.col("gen") == int(gen))
-        self.store.checkpoint(compact_txn_watermarks=True)
-        self.store.prune_log()
-        self.store.vacuum()
-        if self._mem is not None:
-            # retention rewrite advanced the version; content unchanged
-            self._mem = (self._mem[0], self.store.version())
+        v = self._compact_to_generation(None if self._mem is None else self._mem[0])
+        if v is not None and self._mem is not None:
+            self._mem = (self._mem[0], v)  # re-anchor; content unchanged
 
     def _latest(self, version: int | None = None):
         """(open-bin frame, gen, snapshot version) at a committed
@@ -3691,15 +3456,11 @@ class _PackBinsStreamWriter:
 
         return pack
 
-    def process(self, block: DataFrame, batch_id: int) -> None:
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from pyspark.sql import types as T
 
         from apache_kafka_clickhouse_demo_spark.functions import hashing as H
 
-        txn = f"{self.writer_id}:{batch_id}"
-        store_done = self.store.txn_committed(txn)
-        if store_done and self.out.txn_committed(txn):
-            return  # fully-committed replay: no-op, no jobs
         pin = _resolve_retry_pin(self.store, txn)
 
         src = block.select(
@@ -3720,7 +3481,8 @@ class _PackBinsStreamWriter:
         src = src.persist()
         try:
             # bounded driver action: is there anything countable at all?
-            if not store_done and src.isEmpty():
+            # (a half-committed retry's first attempt already saw rows)
+            if not self._resumed and src.isEmpty():
                 return  # every row dropped by the batch contract
             prev, prev_gen, _v = self._latest(pin)
             if prev is None:
@@ -3785,14 +3547,10 @@ class _PackBinsStreamWriter:
                     "bin_fill",
                     "overflow",
                 )
-                from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-                    ConcurrentWriteError,
-                )
-
-                # CONCURRENT staging, ORDERED commits (r16 two-phase
-                # append): snapshot and assignment rows both read the
-                # persisted fold output; the snapshot's version-CAS
-                # commit still strictly precedes the out commit
+                # CONCURRENT staging, ORDERED commits: snapshot and
+                # assignment rows both read the persisted fold output;
+                # the snapshot's version-CAS commit still strictly
+                # precedes the out commit
                 try:
                     _overlapped_store_out_commit(
                         self.store,
@@ -3810,7 +3568,8 @@ class _PackBinsStreamWriter:
                     raise
                 # both commits landed: generation prev_gen+1 is committed
                 # at version _v+1 whichever attempt published it (on a
-                # store_done retry the pin rule guarantees the same pair)
+                # half-committed retry the pin rule guarantees the same
+                # pair)
                 self._mem = (prev_gen + 1, _v + 1)
             finally:
                 packed.unpersist()
@@ -3851,10 +3610,4 @@ def pack_bins_stream(
         max_open=max_open,
         writer_id=checkpoint,
     )
-    return (
-        source.writeStream.foreachBatch(writer.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return writer.start(source, checkpoint)

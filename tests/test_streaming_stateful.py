@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -709,6 +711,18 @@ def test_heavy_hitters_stream_matches_batch_and_replays_idempotently(
     # maintenance retention-rewrite: answers unchanged, store folded small
     writer.maintain()
     assert [tuple(r) for r in writer.topk(5).collect()] == expect
+
+    # wide-block pre-reduce forced on every block (two tasks each, the
+    # same user in both): the summary must equal the unforced drain's
+    forced = topk_stream_writer(
+        spark, str(tmp_path / "hh_forced"), "user_id", capacity=1 << 12,
+        writer_id="forced",
+    )
+    forced.DRIVER_MERGE_MAX_TASKS = 1
+    files = sorted(str(p) for p in Path(events_dir).glob("*.parquet"))
+    for i, f in enumerate(files):
+        forced.process(spark.read.parquet(f).select("user_id").repartition(2), i)
+    assert [tuple(r) for r in forced.topk(5).collect()] == got
 
 
 def test_weighted_topk_stream_matches_batch_and_replays_idempotently(
