@@ -18,6 +18,8 @@ custom per-key state:
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 from collections.abc import Iterable, Iterator
 
@@ -182,12 +184,47 @@ class _DrainWriter:
       (`_resolve_retry_pin`).  An out table is never compacted here —
       it is the pipeline's product and grows with the corpus, so its
       consumer compacts it on its own schedule.
+
+    The state table (`self.store`) comes in three families:
+
+    - **Shard-pruned stores** (near-dup, url-dedup, domain-cap, count-min,
+      uniq): rows under a namespaced `shard` partition (`_shard_col`); a
+      block reads only its touched shards at a pinned version
+      (`_read_prior`).
+    - **Generational snapshots** (top-k, reservoir, pack-bins): each block
+      publishes generation g+1 of a bounded summary under a version-CAS,
+      readers take only the newest generation (`_latest`), and
+      `maintain()` keeps only that generation.
+    - **Group-commit stores** (count-min, dyadic, uniq): a block's state
+      rows and its out rows (shard `OUT_SHARD`, read back by
+      `out_rows()`) publish in ONE commit (`_publish_group`), so there is
+      no half-committed retry and the pin is the current version.
+
+    **The driver mirror.**  Writers that keep the committed state on the
+    driver (the generational family, the dyadic cell grid) anchor it at
+    the table version it equals (`_mem_version`; `_mem_gen` is the newest
+    generation there, `_mem` any writer-specific content).  It advances
+    only after a commit lands, is dropped when a version-CAS publish
+    loses a race (`_cas_guard`) so the batch's retry re-reads the
+    winner's commit, and is re-anchored after `maintain()`, whose
+    rewrite keeps the content and only moves the version.  It is served
+    only for the version it is anchored at.
     """
 
     #: attributes holding the tables a batch commits to, in commit order
     _commit_order: tuple[str, ...] = ("store",)
     #: run `maintain()` after every `compact_every`-th batch (None: never)
     compact_every: int | None = None
+    #: a generational snapshot store (`maintain()` keeps the newest gen)
+    _generational = False
+    #: a group-commit store's shard of published out rows, and the
+    #: columns `out_rows()` returns
+    OUT_SHARD = "o"
+    _out_cols: tuple[str, ...] = ()
+    #: the driver mirror (see the class docstring; None: no mirror)
+    _mem_version: int | None = None
+    _mem_gen = -1
+    _mem = None
 
     def __init__(self, spark, writer_id: str):
         self.spark = spark
@@ -215,7 +252,20 @@ class _DrainWriter:
         raise NotImplementedError
 
     def maintain(self) -> None:
-        self._compact(self._tables()[0], partition_by="shard")
+        store = self._tables()[0]
+        if not self._generational:
+            self._compact(store, partition_by="shard")
+        else:
+            # one retention rewrite keeps only the newest generation, so
+            # the store stays one summary's rows, not O(batches)
+            gen = self._mem_gen
+            if self._mem_version is None:
+                gen = store.read(self.spark).agg(F.max("gen")).first()[0]
+            if gen is None or gen < 0:
+                return  # nothing committed
+            self._compact(store, keep_where=F.col("gen") == int(gen))
+        if self._mem_version is not None:
+            self._mem_version = store.version()  # re-anchor the mirror
 
     def _compact(self, table: TransactionalTable, **optimize_kwargs) -> None:
         table.optimize(self.spark, **optimize_kwargs)
@@ -223,19 +273,95 @@ class _DrainWriter:
         table.prune_log()
         table.vacuum()
 
-    def _compact_to_generation(self, gen: int | None) -> int | None:
-        """Generational stores: one retention rewrite keeps only
-        generation `gen` (the newest committed one; None reads it from the
-        store), so the store stays one summary's rows, not O(batches).
-        Returns the table version after maintenance, None when nothing
-        is committed."""
-        store = self._tables()[0]
-        if gen is None:
-            gen = store.read(self.spark).agg(F.max("gen")).first()[0]
-        if gen is None or gen < 0:
-            return None
-        self._compact(store, keep_where=F.col("gen") == int(gen))
-        return store.version()
+    def _mirror(self, version: int | None = None, gen: int = -1, content=None) -> None:
+        """Anchor the driver mirror at a committed version (no version:
+        drop it)."""
+        self._mem_version, self._mem_gen, self._mem = version, gen, content
+
+    @contextlib.contextmanager
+    def _cas_guard(self):
+        """Wraps a version-CAS publish: a lost race drops the mirror, so
+        a retry of the batch re-reads the winner's commit instead of
+        failing forever against a stale snapshot, and re-raises."""
+        try:
+            yield
+        except ConcurrentWriteError:
+            self._mirror()
+            raise
+
+    def _latest(self, version: int | None = None):
+        """(newest generation's rows without `gen`, or None; its gen, or
+        -1; the snapshot version) of the generational store at `version`
+        (the newest when None).  The gen comes from the mirror when it is
+        anchored at that version, else from one max(gen) read, which
+        anchors the mirror when it read the newest version (a retry pin
+        at an older one never does)."""
+        snap_v = self.store.version() if version is None else version
+        try:
+            stored = self.store.read(self.spark, version=snap_v)
+        except FileNotFoundError:  # nothing committed at/below snap_v
+            return None, -1, snap_v
+        gen = self._mem_gen
+        if snap_v != self._mem_version:
+            gen = stored.agg(F.max("gen")).first()[0]
+            if gen is None:
+                return None, -1, snap_v
+            gen = int(gen)
+            if version is None:
+                self._mirror(snap_v, gen)
+        return stored.filter(F.col("gen") == gen).drop("gen"), gen, snap_v
+
+    def _newest(self, what: str) -> DataFrame:
+        """The newest generation's rows; raises when nothing is committed."""
+        latest = self._latest()[0]
+        if latest is None:
+            raise FileNotFoundError(f"no {what} committed yet in {self.store.path}")
+        return latest
+
+    @staticmethod
+    def _shard_col(prefix: str, expr, n: int):
+        """A namespaced shard value: `prefix` + pmod(expr, n)."""
+        return F.concat(F.lit(prefix), F.pmod(expr, F.lit(n)).cast("string"))
+
+    def _read_prior(self, shards, pin: int, schema) -> DataFrame:
+        """The store's `shard` partitions `shards` at the pinned version.
+        With no commits at/below the pin this is an INDEPENDENT empty
+        frame of `schema`: one derived from the block would alias a later
+        join's two sides to one lineage (ambiguous references).  Its
+        `limit(0)` lets the optimizer fold it to an empty local relation
+        and prune the union or join branch it feeds.  Only the
+        txlog's FileNotFoundError means "nothing yet" — any other read
+        error (corrupt or vanished committed files) fails the batch
+        instead of deduping or counting against nothing."""
+        try:
+            return self.store.read_where(self.spark, "shard", shards, version=pin)
+        except FileNotFoundError:
+            return self.spark.createDataFrame([], schema).limit(0)
+
+    def out_rows(self, version: int | None = None) -> DataFrame:
+        """A group-commit store's published per-block rows (`_out_cols`)
+        at a committed version: its `OUT_SHARD` partition."""
+        return self.store.read_where(
+            self.spark, "shard", [self.OUT_SHARD], version=version
+        ).select(*self._out_cols)
+
+    def _publish_group(
+        self, txn: str, *parts: DataFrame, cas_version: int | None = None
+    ) -> None:
+        """A group-commit store's publish: the block's state rows and out
+        rows union into ONE staged write and ONE commit record.  Every
+        file carries the unified column set (the other rows' columns
+        NULL), so no read ever needs schema merging."""
+        unified = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
+        with self._cas_guard():
+            self.store.append_once(
+                unified.repartition(F.col("shard")),
+                txn=txn,
+                partition_by="shard",
+                cas_version=cas_version,
+            )
 
     def start(self, source: DataFrame, checkpoint: str):
         """Drain everything available in `source` through `process`."""
@@ -299,12 +425,8 @@ class _NearDupStreamWriter(_DrainWriter):
     that has already ingested 100 TB pays the same per block as one that
     ingested 1 GB.  Shard counts are constructor params; production
     would size B/P in the thousands (one partition dir each ~ a few GB
-    of store), tests use small values.
-
-    Failure semantics: a missing store is ONLY signalled by the txlog's
-    FileNotFoundError ("no commits yet"); any other read error — corrupt
-    or vanished committed files — propagates and fails the batch rather
-    than silently deduping against nothing.
+    of store), tests use small values.  Both store reads go through
+    `_read_prior`, so a corrupt store fails the batch.
     """
 
     _commit_order = ("store", "out")
@@ -333,9 +455,6 @@ class _NearDupStreamWriter(_DrainWriter):
         self.out_files = out_files
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-
-    def _shard(self, col: str, n: int):
-        return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
     def read_store_bands(self, version: int | None = None) -> DataFrame:
         """All band rows of the store snapshot (test/inspection helper)."""
@@ -403,7 +522,7 @@ class _NearDupStreamWriter(_DrainWriter):
         banded_b = sigs_b.select(
             "id", F.explode("bkeys").alias("bkey")
         ).withColumn(
-            "shard", F.concat(F.lit("b"), self._shard("bkey", self.band_shards))
+            "shard", self._shard_col("b", F.xxhash64("bkey"), self.band_shards)
         )
 
         # idempotent per-batch commit: a retried batch no-ops.  Store
@@ -425,9 +544,9 @@ class _NearDupStreamWriter(_DrainWriter):
                 "id",
                 F.lit(None).cast("string").alias("bkey"),
                 "payload",
-                F.concat(
-                    F.lit("p"), self._shard("id", self.id_shards)
-                ).alias("shard"),
+                self._shard_col("p", F.xxhash64("id"), self.id_shards).alias(
+                    "shard"
+                ),
             )
         )
         # Pin BEFORE the append (docstring step 1).  Normal path: own
@@ -467,12 +586,9 @@ class _NearDupStreamWriter(_DrainWriter):
             # inside the append's wall, and against the PINNED snapshot,
             # so the side thread's commit is invisible to it.
             block_shards = (banded_b.agg(F.collect_set("shard")).first()[0]) or []
-            try:
-                store_bands = self.store.read_where(
-                    self.spark, "shard", block_shards, version=pin
-                )
-            except FileNotFoundError:  # no commits below the pin — first block
-                store_bands = banded_b.limit(0)
+            store_bands = self._read_prior(
+                block_shards, pin, banded_b.select("id", "bkey").schema
+            )
             earlier_bands = store_bands.select("id", "bkey").unionByName(
                 banded_b.select("id", "bkey")
             )
@@ -500,16 +616,13 @@ class _NearDupStreamWriter(_DrainWriter):
             cand_shards = (
                 cand.agg(
                     F.collect_set(
-                        F.concat(F.lit("p"), self._shard("id_a", self.id_shards))
+                        self._shard_col("p", F.xxhash64("id_a"), self.id_shards)
                     )
                 ).first()[0]
             ) or []
-            try:
-                store_pay = self.store.read_where(
-                    self.spark, "shard", cand_shards, version=pin
-                ).select("id", "payload")
-            except FileNotFoundError:
-                store_pay = sigs_b.select("id", "payload").limit(0)
+            store_pay = self._read_prior(
+                cand_shards, pin, sigs_b.select("id", "payload").schema
+            ).select("id", "payload")
             earlier_pay = store_pay.unionByName(sigs_b.select("id", "payload"))
 
             dropped = (
@@ -668,7 +781,7 @@ def minhash_dedup_stream(
     that `vacuum()` has not reclaimed yet), which only the commit log
     filters out.
     """
-    writer = minhash_stream_writer(
+    return minhash_stream_writer(
         spark,
         out_dir,
         store_dir,
@@ -684,8 +797,7 @@ def minhash_dedup_stream(
         compact_every=compact_every,
         writer_id=checkpoint,
         out_files=out_files,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 def streaming_sessions(
@@ -820,7 +932,7 @@ def embedding_dedup_stream(
     (payload = the normalized vector, computed ONCE at arrival; bkey =
     "table:rp-bucket").
     """
-    writer = embedding_stream_writer(
+    return embedding_stream_writer(
         spark,
         out_dir,
         store_dir,
@@ -837,8 +949,7 @@ def embedding_dedup_stream(
         compact_every=compact_every,
         writer_id=checkpoint,
         out_files=out_files,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 def running_funnel(
@@ -966,6 +1077,8 @@ class _TopKStreamWriter(_DrainWriter):
     #: is a sum, never a second MG fold.
     DRIVER_MERGE_MAX_TASKS = 32
 
+    _generational = True
+
     def __init__(
         self,
         spark,
@@ -987,49 +1100,28 @@ class _TopKStreamWriter(_DrainWriter):
         # every store/exactness/concurrency contract above carries over
         self.weight_col = weight_col
         self.store = TransactionalTable(store_dir)
-        #: driver-resident mirror of the newest COMMITTED generation:
-        #: (counts {value: count_lb}, trim-error total, gen, version) —
-        #: bounded at <= capacity+1 rows by the MG invariant.  Advanced
-        #: only after a successful publish; rebuilt through `_latest()`
-        #: on first use (restart/handover) and invalidated on a lost
-        #: CAS race so the retry re-reads the sibling's commit.
-        self._mem: tuple[dict[str, int], int, int, int] | None = None
-
-    def _latest(self) -> tuple[DataFrame | None, int, int]:
-        """(newest generation's summary or None, its gen number or -1,
-        the table VERSION of the snapshot read) — the version is what the
-        publish CASes against (see `process`)."""
-        snap_v = self.store.version()
-        if snap_v < 0:  # no commits yet — first block
-            return None, -1, snap_v
-        stored = self.store.read(self.spark, version=snap_v)
-        gen = stored.agg(F.max("gen")).first()[0]
-        if gen is None:
-            return None, -1, snap_v
-        return stored.filter(F.col("gen") == gen).drop("gen"), int(gen), snap_v
-
-    def _latest_summary(self) -> DataFrame | None:
-        return self._latest()[0]
 
     def _latest_local(self) -> tuple[dict[str, int], int, int, int]:
-        """(counts, trim-error total, gen, snapshot version) of the
-        newest committed generation — from the driver mirror when this
-        writer advanced it, else ONE bounded read through `_latest()`
-        (<= capacity+1 rows by the MG invariant)."""
-        if self._mem is not None:
-            return self._mem
-        prev, prev_gen, snap_v = self._latest()
-        counts: dict[str, int] = {}
-        err = 0
-        if prev is not None:
-            for r in prev.collect():
-                err += int(r["trim_err"])
-                if r["value"] is not None:
-                    counts[r["value"]] = (
-                        counts.get(r["value"], 0) + int(r["count_lb"])
-                    )
-        self._mem = (counts, err, prev_gen, snap_v)
-        return self._mem
+        """(counts {value: count_lb}, trim-error total, gen, snapshot
+        version) of the newest committed generation.  The counts are the
+        mirror's content (<= capacity+1 entries by the MG invariant),
+        rebuilt by ONE bounded collect of `_latest()` when missing."""
+        if self._mem is None or self._mem_version != self.store.version():
+            prev, gen, snap_v = self._latest()
+            counts: dict[str, int] = {}
+            err = self._fold(counts, 0, [] if prev is None else prev.collect())
+            self._mirror(snap_v, gen, (counts, err))
+        return (*self._mem, self._mem_gen, self._mem_version)
+
+    @staticmethod
+    def _fold(counts: dict[str, int], err: int, rows) -> int:
+        """Add MG summary rows into `counts`; returns the new trim-error
+        total."""
+        for r in rows:
+            err += int(r["trim_err"])
+            if r["value"] is not None:
+                counts[r["value"]] = counts.get(r["value"], 0) + int(r["count_lb"])
+        return err
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
@@ -1066,13 +1158,7 @@ class _TopKStreamWriter(_DrainWriter):
         block_rows = block_sums.collect()
         prev_counts, prev_err, prev_gen, snap_v = self._latest_local()
         counts = dict(prev_counts)
-        err = prev_err
-        for r in block_rows:
-            err += int(r["trim_err"])
-            if r["value"] is not None:
-                counts[r["value"]] = counts.get(r["value"], 0) + int(
-                    r["count_lb"]
-                )
+        err = self._fold(counts, prev_err, block_rows)
         # (C+1)-th largest merged count = the trim subtrahend (0 when
         # the merged summary already fits)
         if len(counts) > self.capacity:
@@ -1097,22 +1183,9 @@ class _TopKStreamWriter(_DrainWriter):
         # publish raise ConcurrentWriteError (failing the batch loudly)
         # instead of both writers publishing generation prev_gen+1 and
         # `_latest()` merging their rows into double counts.
-        try:
+        with self._cas_guard():
             self.store.append_once(new_summary, txn=txn, cas_version=snap_v)
-        except ConcurrentWriteError:
-            # the sibling advanced the store past our mirror: drop it so
-            # a RETRY of this batch re-reads the sibling's commit instead
-            # of CAS-failing forever against a stale snapshot
-            self._mem = None
-            raise
-        self._mem = (trimmed, err + sub, prev_gen + 1, snap_v + 1)
-
-    def maintain(self) -> None:
-        v = self._compact_to_generation(None if self._mem is None else self._mem[2])
-        if v is not None and self._mem is not None:
-            # re-anchor the mirror's CAS version; content is unchanged
-            # (the rewrite keeps exactly the mirrored generation)
-            self._mem = (*self._mem[:3], v)
+        self._mirror(snap_v + 1, prev_gen + 1, (trimmed, err + sub))
 
     def topk(self, k: int) -> DataFrame:
         """Current top-k with bounds from the stored summary (same answer
@@ -1121,10 +1194,7 @@ class _TopKStreamWriter(_DrainWriter):
             finalize_topk,
         )
 
-        latest = self._latest_summary()
-        if latest is None:
-            raise FileNotFoundError(f"no summary committed yet in {self.store.path}")
-        return finalize_topk(latest, k)
+        return finalize_topk(self._newest("summary"), k)
 
 
 def heavy_hitters_stream(
@@ -1145,7 +1215,7 @@ def heavy_hitters_stream(
     weight, everything else is shared.  Mechanics, store layout, and
     exactly-once guarantees: see `_TopKStreamWriter`; read the current
     answer any time with `topk_stream_writer(...).topk(k)`."""
-    writer = topk_stream_writer(
+    return topk_stream_writer(
         spark,
         store_dir,
         col,
@@ -1153,30 +1223,12 @@ def heavy_hitters_stream(
         compact_every=compact_every,
         writer_id=checkpoint,
         weight_col=weight_col,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
-def topk_stream_writer(
-    spark,
-    store_dir: str,
-    col: str,
-    capacity: int = 1 << 14,
-    compact_every: int | None = None,
-    writer_id: str = "",
-    weight_col: str | None = None,
-) -> _TopKStreamWriter:
-    """The stream's writer object, exposed for direct `process(block, id)`
-    testing (retry idempotence) and for `topk(k)` reads of the store."""
-    return _TopKStreamWriter(
-        spark,
-        store_dir,
-        col,
-        capacity=capacity,
-        compact_every=compact_every,
-        writer_id=writer_id,
-        weight_col=weight_col,
-    )
+#: the stream's writer object, exposed for direct `process(block, id)`
+#: testing (retry idempotence) and for `topk(k)` reads of the store
+topk_stream_writer = _TopKStreamWriter
 
 
 class _ReservoirStreamWriter(_DrainWriter):
@@ -1196,12 +1248,14 @@ class _ReservoirStreamWriter(_DrainWriter):
 
     Per block: the block's own bottom-k (one TakeOrdered, O(block)),
     merged with the stored generation's <= k rows, re-trimmed to k, and
-    published as generation+1 under the batch txn with the same
-    version-CAS discipline as `_TopKStreamWriter` (concurrent writers
+    published as generation+1 under the batch txn and a version-CAS
+    (the generational family of `_DrainWriter`: concurrent writers
     rejected, never merged).  Store reads are
     O(k) after any number of batches; `maintain()` folds superseded
     generations away.
     """
+
+    _generational = True
 
     def __init__(
         self,
@@ -1229,14 +1283,6 @@ class _ReservoirStreamWriter(_DrainWriter):
         #: (hash, id) rank rule).
         self.group_col = group_col
         self.store = TransactionalTable(store_dir)
-        #: driver-resident (gen, version) of the newest COMMITTED
-        #: generation — the generation ROWS stay in the cluster (the
-        #: sample is data-sized, k per group); mirroring just the two
-        #: scalars drops the per-block max(gen) driver action.  Same
-        #: protocol as the topK mirror: advanced only after a
-        #: successful publish, rebuilt through the store on first use,
-        #: invalidated on a lost CAS race.
-        self._mem: tuple[int, int] | None = None
 
     def _rank(self):
         from apache_kafka_clickhouse_demo_spark.functions import hashing as H
@@ -1244,21 +1290,6 @@ class _ReservoirStreamWriter(_DrainWriter):
         return H.h48(
             F.concat(F.lit(self.salt), F.col(self.id_col).cast("string"))
         )
-
-    def _latest(self):
-        if self._mem is not None:
-            gen, snap_v = self._mem
-            stored = self.store.read(self.spark, version=snap_v)
-            return stored.filter(F.col("gen") == gen).drop("gen"), gen, snap_v
-        snap_v = self.store.version()
-        if snap_v < 0:
-            return None, -1, snap_v
-        stored = self.store.read(self.spark, version=snap_v)
-        gen = stored.agg(F.max("gen")).first()[0]
-        if gen is None:
-            return None, -1, snap_v
-        self._mem = (int(gen), snap_v)
-        return stored.filter(F.col("gen") == gen).drop("gen"), int(gen), snap_v
 
     def _bottom_k(self, df: DataFrame) -> DataFrame:
         if self.group_col is None:
@@ -1297,27 +1328,13 @@ class _ReservoirStreamWriter(_DrainWriter):
         next_gen = self._bottom_k(
             merged.dropDuplicates([self.id_col])
         ).withColumn("gen", F.lit(prev_gen + 1).cast("long"))
-        try:
+        with self._cas_guard():
             self.store.append_once(next_gen, txn=txn, cas_version=snap_v)
-        except ConcurrentWriteError:
-            # a sibling advanced the store past our mirror: drop it so a
-            # retry re-reads the sibling's commit instead of CAS-failing
-            # forever against a stale snapshot
-            self._mem = None
-            raise
-        self._mem = (prev_gen + 1, snap_v + 1)
-
-    def maintain(self) -> None:
-        v = self._compact_to_generation(None if self._mem is None else self._mem[0])
-        if v is not None and self._mem is not None:
-            self._mem = (self._mem[0], v)  # re-anchor; content unchanged
+        self._mirror(snap_v + 1, prev_gen + 1)
 
     def sample(self) -> DataFrame:
         """The current sample (id + payload columns, rank dropped)."""
-        latest, _gen, _v = self._latest()
-        if latest is None:
-            raise FileNotFoundError(f"no sample committed yet in {self.store.path}")
-        return latest.drop("rank")
+        return self._newest("sample").drop("rank")
 
     def stratified(self) -> DataFrame:
         """The current per-group sample in the batch operator's exact
@@ -1327,9 +1344,7 @@ class _ReservoirStreamWriter(_DrainWriter):
 
         if self.group_col is None:
             raise ValueError("stratified() needs a group_col writer")
-        latest, _gen, _v = self._latest()
-        if latest is None:
-            raise FileNotFoundError(f"no sample committed yet in {self.store.path}")
+        latest = self._newest("sample")
         w = W.partitionBy(self.group_col).orderBy("rank", self.id_col)
         return latest.select(
             self.group_col,
@@ -1338,32 +1353,10 @@ class _ReservoirStreamWriter(_DrainWriter):
         )
 
 
-def reservoir_stream_writer(
-    spark,
-    store_dir: str,
-    id_col: str,
-    k: int,
-    payload_cols: list[str] | None = None,
-    compact_every: int | None = None,
-    writer_id: str = "",
-    salt: str = "sample:",
-    group_col: str | None = None,
-) -> _ReservoirStreamWriter:
-    """The stream's writer object, exposed for direct `process(block, id)`
-    testing and `sample()`/`stratified()` reads of the store.  Pass
-    `group_col` (+ the batch operator's salt) for the r13 stratified
-    form: a per-group quota sample maintained at ingest."""
-    return _ReservoirStreamWriter(
-        spark,
-        store_dir,
-        id_col,
-        k,
-        payload_cols=payload_cols,
-        compact_every=compact_every,
-        writer_id=writer_id,
-        salt=salt,
-        group_col=group_col,
-    )
+#: the stream's writer object, exposed for direct `process(block, id)`
+#: testing and `sample()`/`stratified()` reads of the store (pass
+#: `group_col` + the batch operator's salt for the stratified form)
+reservoir_stream_writer = _ReservoirStreamWriter
 
 
 def reservoir_sample_stream(
@@ -1386,7 +1379,7 @@ def reservoir_sample_stream(
     ingest, state <= groups * k rows.  Mechanics and guarantees: see
     `_ReservoirStreamWriter`; read the current sample any time with
     `reservoir_stream_writer(...).sample()` / `.stratified()`."""
-    writer = reservoir_stream_writer(
+    return reservoir_stream_writer(
         spark,
         store_dir,
         id_col,
@@ -1396,8 +1389,7 @@ def reservoir_sample_stream(
         writer_id=checkpoint,
         salt=salt,
         group_col=group_col,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 def stream_interval_join(
@@ -1530,8 +1522,7 @@ class _UrlDedupStreamWriter(_DrainWriter):
                 F.col("m.reg_domain").alias("reg_domain"),
             )
             .withColumn(
-                "shard",
-                F.pmod(F.xxhash64("key"), F.lit(self.key_shards)).cast("string"),
+                "shard", self._shard_col("", F.xxhash64("key"), self.key_shards)
             )
             .persist()
         )
@@ -1539,14 +1530,9 @@ class _UrlDedupStreamWriter(_DrainWriter):
             pin = self.store.version()
             # bounded driver action: <= key_shards distinct names
             touched = (reduced.agg(F.collect_set("shard")).first()[0]) or []
-            try:
-                seen = self.store.read_where(
-                    self.spark, "shard", touched, version=pin
-                ).select("key", F.col("doc_id").alias("store_id"))
-            except FileNotFoundError:  # no commits below the pin
-                seen = reduced.select(
-                    "key", F.col("doc_id").alias("store_id")
-                ).limit(0)
+            seen = self._read_prior(
+                touched, pin, reduced.select("key", "doc_id").schema
+            ).select("key", F.col("doc_id").alias("store_id"))
             survivors = (
                 reduced.join(seen, "key", "left")
                 .filter(
@@ -1607,7 +1593,7 @@ def url_dedup_stream(
     (`shards_for_store`; one key row per surviving URL)."""
     if expected_corpus_rows is not None:
         key_shards = shards_for_store(expected_corpus_rows)
-    writer = _UrlDedupStreamWriter(
+    return _UrlDedupStreamWriter(
         spark,
         out_dir,
         store_dir,
@@ -1617,8 +1603,7 @@ def url_dedup_stream(
         key_shards=key_shards,
         writer_id=checkpoint,
         out_files=out_files,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _TermIndexStreamWriter(_DrainWriter):
@@ -1710,15 +1695,14 @@ def term_index_stream(
     rows; `shards_for_store`)."""
     if expected_corpus_rows is not None:
         n_shards = shards_for_store(expected_corpus_rows)
-    writer = _TermIndexStreamWriter(
+    return _TermIndexStreamWriter(
         spark,
         index_dir,
         n_shards=n_shards,
         writer_id=checkpoint,
         text_col=text_col,
         id_col=id_col,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _AnnIndexStreamWriter(_DrainWriter):
@@ -1789,33 +1773,50 @@ class _AnnIndexStreamWriter(_DrainWriter):
         if block.isEmpty():
             return  # idle trigger: publish nothing (the term-index rule)
         if self.table.version() < 0:
-            SI.build_ann_index(
-                block,
-                self.table.path,
-                target_centroids=self.target_centroids,
-                n_shards=self.n_shards,
-                vec_col=self.vec_col,
-                id_col=self.id_col,
-                salt=self.salt,
-                corpus_count=self.expected_corpus_rows,
-                txn=txn,
-            )
-        else:
-            if self._params is None:
-                _, n_shards = SI.ann_index_meta(self.spark, self.table)
-                k = self.table.read_where(
+            self._found(block, txn)
+            return
+        if self._params is None:
+            self._params = (
+                *self._meta_params(),
+                self.table.read_where(
                     self.spark, "shard", [SI.ANN_CENT_SHARD]
-                ).count()
-                self._params = (n_shards, k)
-            SI.extend_ann_index(
-                block,
-                self.table,
-                vec_col=self.vec_col,
-                id_col=self.id_col,
-                salt=self.salt,
-                txn=txn,
-                params=self._params,
+                ).count(),
             )
+        self._extend(block, txn)
+
+    def _found(self, block: DataFrame, txn: str) -> None:
+        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
+        SI.build_ann_index(
+            block,
+            self.table.path,
+            target_centroids=self.target_centroids,
+            n_shards=self.n_shards,
+            vec_col=self.vec_col,
+            id_col=self.id_col,
+            salt=self.salt,
+            corpus_count=self.expected_corpus_rows,
+            txn=txn,
+        )
+
+    def _meta_params(self) -> tuple[int, ...]:
+        """The stored meta's creation-fixed params, before k."""
+        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
+        return SI.ann_index_meta(self.spark, self.table)[1:]
+
+    def _extend(self, block: DataFrame, txn: str) -> None:
+        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
+        SI.extend_ann_index(
+            block,
+            self.table,
+            vec_col=self.vec_col,
+            id_col=self.id_col,
+            salt=self.salt,
+            txn=txn,
+            params=self._params,
+        )
 
 
 def ann_index_stream(
@@ -1836,7 +1837,7 @@ def ann_index_stream(
     `expected_corpus_rows` sizes the shard modulus for the corpus the
     stream will accumulate (`shards_for_store`); `target_centroids`
     sizes the centroid sample taken from the FOUNDING block."""
-    writer = _AnnIndexStreamWriter(
+    return _AnnIndexStreamWriter(
         spark,
         index_dir,
         writer_id=checkpoint,
@@ -1845,11 +1846,10 @@ def ann_index_stream(
         vec_col=vec_col,
         id_col=id_col,
         salt=salt,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
-class _IvfPqIndexStreamWriter(_DrainWriter):
+class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
     """foreachBatch body for `ivfpq_index_stream`: the IVFPQ twin
     of `_AnnIndexStreamWriter`.  The first non-empty batch FOUNDS the
     index — IVF centroids AND PQ codebooks hash-sampled from it by the
@@ -1858,9 +1858,8 @@ class _IvfPqIndexStreamWriter(_DrainWriter):
     fixed codebooks, published atomically under a batch-keyed txn.
     Exactly-once, stored-modulus, and fixed-generation contracts are
     the ANN writer's verbatim; the PQ dimension/pq_m parameters only
-    seed creation — an existing index's stored meta always wins."""
-
-    _commit_order = ("table",)
+    seed creation — an existing index's stored meta always wins.
+    `_params` is (n_shards, pq_m, dim, k)."""
 
     def __init__(
         self,
@@ -1878,66 +1877,58 @@ class _IvfPqIndexStreamWriter(_DrainWriter):
         ivf_salt: str = "ivf:",
         pq_salt: str = "pq:",
     ):
-        super().__init__(spark, writer_id)
-        self.table = TransactionalTable(index_dir)
+        super().__init__(
+            spark,
+            index_dir,
+            writer_id,
+            target_centroids=target_centroids,
+            n_shards=n_shards,
+            expected_corpus_rows=expected_corpus_rows,
+            vec_col=vec_col,
+            id_col=id_col,
+            salt=ivf_salt,
+        )
         self.dim = dim
         self.m = m
         self.target_codes = target_codes
-        self.target_centroids = target_centroids
-        self.expected_corpus_rows = expected_corpus_rows
-        if expected_corpus_rows is not None and n_shards is None:
-            n_shards = shards_for_store(expected_corpus_rows)
-        self.n_shards = n_shards
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self.ivf_salt = ivf_salt
         self.pq_salt = pq_salt
-        #: (n_shards, pq_m, dim, k) — all creation-fixed by the extend
-        #: contract; derived once on the first extension and passed
-        #: back into every later one.  Safe across THIS writer's
-        #: maintenance; an EXTERNAL recluster mid-stream is UNSUPPORTED
-        #: — see the ANN twin's `_params` note.
-        self._params: tuple[int, int, int, int] | None = None
 
-    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
+    def _found(self, block: DataFrame, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
-        if block.isEmpty():
-            return  # idle trigger: publish nothing (the term-index rule)
-        if self.table.version() < 0:
-            SI.build_ivfpq_index(
-                block,
-                self.table.path,
-                dim=self.dim,
-                m=self.m,
-                target_codes=self.target_codes,
-                target_centroids=self.target_centroids,
-                n_shards=self.n_shards,
-                vec_col=self.vec_col,
-                id_col=self.id_col,
-                ivf_salt=self.ivf_salt,
-                pq_salt=self.pq_salt,
-                corpus_count=self.expected_corpus_rows,
-                txn=txn,
-            )
-        else:
-            if self._params is None:
-                _, n_shards, pq_m, dim = SI.ivfpq_index_meta(
-                    self.spark, self.table
-                )
-                k = self.table.read_where(
-                    self.spark, "shard", [SI.ANN_CENT_SHARD]
-                ).count()
-                self._params = (n_shards, pq_m, dim, k)
-            SI.extend_ivfpq_index(
-                block,
-                self.table,
-                vec_col=self.vec_col,
-                id_col=self.id_col,
-                ivf_salt=self.ivf_salt,
-                txn=txn,
-                params=self._params,
-            )
+        SI.build_ivfpq_index(
+            block,
+            self.table.path,
+            dim=self.dim,
+            m=self.m,
+            target_codes=self.target_codes,
+            target_centroids=self.target_centroids,
+            n_shards=self.n_shards,
+            vec_col=self.vec_col,
+            id_col=self.id_col,
+            ivf_salt=self.salt,
+            pq_salt=self.pq_salt,
+            corpus_count=self.expected_corpus_rows,
+            txn=txn,
+        )
+
+    def _meta_params(self) -> tuple[int, ...]:
+        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
+        return SI.ivfpq_index_meta(self.spark, self.table)[1:]
+
+    def _extend(self, block: DataFrame, txn: str) -> None:
+        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
+        SI.extend_ivfpq_index(
+            block,
+            self.table,
+            vec_col=self.vec_col,
+            id_col=self.id_col,
+            ivf_salt=self.salt,
+            txn=txn,
+            params=self._params,
+        )
 
 
 def ivfpq_index_stream(
@@ -1959,7 +1950,7 @@ def ivfpq_index_stream(
     centroids + codebooks, every later block is one atomic encoded
     segment, and `ivfpq_index_lookup` answers at any committed
     version."""
-    writer = _IvfPqIndexStreamWriter(
+    return _IvfPqIndexStreamWriter(
         spark,
         index_dir,
         writer_id=checkpoint,
@@ -1972,16 +1963,13 @@ def ivfpq_index_stream(
         id_col=id_col,
         ivf_salt=ivf_salt,
         pq_salt=pq_salt,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 def _resolve_retry_pin(store, txn: str) -> int:
-    """Shared crash-window pin rule for the counter/state-store stream
-    writers — _DomainCapStreamWriter, _CountMinStreamWriter,
-    _UniqStreamWriter (code-review r12: previously triplicated
-    verbatim; one copy keeps the exactly-once guarantee provably
-    identical across writers).  On a store-committed retry the
+    """Crash-window pin rule of the two-table writers whose out rows are
+    a function of the pre-append state (`_DomainCapStreamWriter`,
+    `_PackBinsStreamWriter`).  On a store-committed retry the
     pre-append snapshot is txn_version(txn) - 1 — the current version
     already contains the first attempt's own append, and re-reading it
     would count the block against itself — and a pin folded away by
@@ -2011,10 +1999,9 @@ def _overlapped_store_out_commit(
 ) -> None:
     """The store-then-out commit pair every two-table drain writer ends
     with, as TWO CONCURRENT staging Spark jobs + ORDERED filesystem
-    commits (r16, guide §2.6 — overlap independent jobs).  The r15 form
-    ran `store.append_once(...)` then `out.append_once(...)` back to
-    back: two driver-synchronized write jobs in sequence, pure serial
-    per-block fixed cost.  The crash-window argument those writers rely
+    commits: two back-to-back `append_once` calls would run two
+    driver-synchronized write jobs in sequence, a serial per-block fixed
+    cost.  The crash-window argument those writers rely
     on only constrains COMMIT order (store strictly before out, so a
     death between them replays with the store side a txn no-op) — it
     never constrains STAGING order, because staged files are
@@ -2029,7 +2016,7 @@ def _overlapped_store_out_commit(
       retried batch must never overlap an orphaned stage job of the
       same txn), its staged files stay orphaned for vacuum, the error
       propagates — nothing committed;
-    - death between the commits -> exactly the r15 window: the retry
+    - death between the commits -> the two-commit window: the retry
       re-runs with `store.txn_committed(txn)` true and the out side
       staging + publishing once.
 
@@ -2202,12 +2189,7 @@ class _DomainCapStreamWriter(_DrainWriter):
         return F.coalesce(F.col("reg_domain"), F.lit(self._NULL_KEY))
 
     def _shard(self):
-        return F.concat(
-            F.lit("d"),
-            F.pmod(F.xxhash64(self._key()), F.lit(self.domain_shards)).cast(
-                "string"
-            ),
-        )
+        return self._shard_col("d", F.xxhash64(self._key()), self.domain_shards)
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from pyspark.sql import Window as W
@@ -2285,29 +2267,20 @@ class _DomainCapStreamWriter(_DrainWriter):
             else:
                 block_shards = [f"d{i}" for i in range(self.domain_shards)]
                 push = None
-            try:
-                prior = self.store.read_where(
-                    self.spark, "shard", block_shards, version=pin
+            prior = self._read_prior(
+                block_shards, pin, "reg_domain string, n long"
+            )
+            if push is not None:
+                # with maintain()'s domain-sorted shard files this
+                # prunes parquet row groups by min/max stats, so the
+                # read decodes the BLOCK's domains, not every domain a
+                # shard holds (a shard's row count grows with the TOTAL
+                # domain count; the block's does not)
+                prior = prior.filter(
+                    F.col("reg_domain").isin(push)
+                    | F.col("reg_domain").isNull()
                 )
-                if push is not None:
-                    # with maintain()'s domain-sorted shard files this
-                    # prunes parquet row groups by min/max stats, so the
-                    # read decodes the BLOCK's domains, not every domain a
-                    # shard holds (a shard's row count grows with the TOTAL
-                    # domain count; the block's does not)
-                    prior = prior.filter(
-                        F.col("reg_domain").isin(push)
-                        | F.col("reg_domain").isNull()
-                    )
-                prior = prior.groupBy("reg_domain").agg(
-                    F.sum("n").alias("_prior")
-                )
-            except FileNotFoundError:  # no commits at/below the pin — an
-                # INDEPENDENT empty frame (deriving it from `ranked` would
-                # alias the join's two sides to one lineage -> ambiguous refs)
-                prior = self.spark.createDataFrame(
-                    [], "reg_domain string, _prior long"
-                )
+            prior = prior.groupBy("reg_domain").agg(F.sum("n").alias("_prior"))
 
             extra = ["_charge"] if self.token_mode else []
             joined = (
@@ -2414,7 +2387,7 @@ def domain_cap_stream(
     maintenances, one file per touched shard per block)."""
     if expected_domain_rows is not None:
         domain_shards = shards_for_store(expected_domain_rows)
-    writer = _DomainCapStreamWriter(
+    return _DomainCapStreamWriter(
         spark,
         out_dir,
         store_dir,
@@ -2425,8 +2398,7 @@ def domain_cap_stream(
         domain_shards=domain_shards,
         writer_id=checkpoint,
         out_files=out_files,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 def domain_token_cap_stream(
@@ -2455,7 +2427,7 @@ def domain_token_cap_stream(
     (token_mode=True)."""
     if expected_domain_rows is not None:
         domain_shards = shards_for_store(expected_domain_rows)
-    writer = _DomainCapStreamWriter(
+    return _DomainCapStreamWriter(
         spark,
         out_dir,
         store_dir,
@@ -2468,8 +2440,7 @@ def domain_token_cap_stream(
         out_files=out_files,
         token_mode=True,
         text_col=text_col,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _CountMinStreamWriter(_DrainWriter):
@@ -2495,17 +2466,8 @@ class _CountMinStreamWriter(_DrainWriter):
        distinct keys — est over everything that has arrived through
        this block (`count_min_lookup` against the merged bounded
        sketch).
-    3. ONE atomic publish (the group-commit protocol of the dyadic
-       twin): increments (shard `c*`)
-       and the block's estimate rows (namespaced shard `o`) union into
-       a single frame, staged by ONE write job and committed under ONE
-       txn record.
-
-    Exactly-once under retry is structural: a replayed block is
-    either fully committed (skip, no jobs) or fully absent — nothing
-    of an uncommitted txn is ever visible, so the pre-block snapshot
-    IS the current version and there is no half-committed
-    `txn_version(txn) - 1` pin case for this writer.
+    3. ONE atomic publish (`_publish_group`): increments (shard `c*`)
+       and the block's estimate rows (shard `o`) in one commit.
 
     Because counters are linear and the feed's blocks partition the
     corpus, the DRAINED store's merged sketch equals the batch
@@ -2513,10 +2475,6 @@ class _CountMinStreamWriter(_DrainWriter):
     `stream_cms_counts` hash-checks exactly that (oracle: the batch
     CMS SQL verbatim).
     """
-
-    #: namespaced shard holding the published estimate rows (store
-    #: cells use `c{n}`)
-    OUT_SHARD = "o"
 
     def __init__(
         self,
@@ -2538,15 +2496,11 @@ class _CountMinStreamWriter(_DrainWriter):
         self.salt = salt
         self.cms_shards = cms_shards
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
+        self._out_cols = ("batch_id", key_col, "est")
 
     def _shard(self):
-        return F.concat(
-            F.lit("c"),
-            F.pmod(
-                F.col("d").cast("long") * self.width + F.col("bucket"),
-                F.lit(self.cms_shards),
-            ).cast("string"),
-        )
+        cell = F.col("d").cast("long") * self.width + F.col("bucket")
+        return self._shard_col("c", cell, self.cms_shards)
 
     def merged_sketch(self, version: int | None = None) -> DataFrame:
         """The store's merge-on-read sketch at a committed version:
@@ -2560,14 +2514,6 @@ class _CountMinStreamWriter(_DrainWriter):
             .groupBy("d", "bucket")
             .agg(F.sum("n").cast("long").alias("n"))
         )
-
-    def out_rows(self, version: int | None = None) -> DataFrame:
-        """The published per-block running estimates (batch_id, <key>,
-        est) — the former separate out table, now the `o` shard of the
-        single atomically-committed store."""
-        return self.store.read_where(
-            self.spark, "shard", [self.OUT_SHARD], version=version
-        ).select("batch_id", self.key_col, "est")
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
@@ -2602,12 +2548,9 @@ class _CountMinStreamWriter(_DrainWriter):
                 # and nothing is published
                 return
             block_shards = sorted({r["shard"] for r in inc_rows})
-            try:
-                prior = self.store.read_where(
-                    self.spark, "shard", block_shards, version=pin
-                ).select("d", "bucket", "n")
-            except FileNotFoundError:  # no commits at/below the pin
-                prior = self.spark.createDataFrame([], "d int, bucket int, n long")
+            prior = self._read_prior(
+                block_shards, pin, "d int, bucket int, n long"
+            ).select("d", "bucket", "n")
             merged = (
                 prior.unionByName(inc.select("d", "bucket", "n"))
                 .groupBy("d", "bucket")
@@ -2627,22 +2570,13 @@ class _CountMinStreamWriter(_DrainWriter):
                 F.col(self.key_col),
                 F.col("est"),
             )
-            # ONE staged write, ONE commit record naming both shard
-            # sets; every file carries the unified column set, so no
-            # read ever needs schema merging
-            unified = inc.select(
-                "shard", "d", "bucket", "n"
-            ).unionByName(est, allowMissingColumns=True)
-            # CAS on the pinned version (the dyadic twin's hardening):
-            # the estimates above were derived from
-            # the snapshot at `pin`, so a concurrent appender landing
-            # between pin and publish fails this batch loudly instead
-            # of publishing estimates that silently miss its increments
-            self.store.append_once(
-                unified.repartition(F.col("shard")),
-                txn=txn,
-                partition_by="shard",
-                cas_version=pin,
+            # CAS on the pinned version: the estimates above were
+            # derived from the snapshot at `pin`, so a concurrent
+            # appender landing between pin and publish fails this batch
+            # loudly instead of publishing estimates that silently miss
+            # its increments
+            self._publish_group(
+                txn, inc.select("shard", "d", "bucket", "n"), est, cas_version=pin
             )
         finally:
             inc.unpersist()
@@ -2665,7 +2599,7 @@ def count_min_stream(
     namespaced `o` shard; read back via the writer's `out_rows()`).
     Mechanics, single-commit replay rule, and the drained-store ==
     batch sketch equality: see `_CountMinStreamWriter`."""
-    writer = _CountMinStreamWriter(
+    return _CountMinStreamWriter(
         spark,
         store_dir,
         key_col=key_col,
@@ -2674,8 +2608,7 @@ def count_min_stream(
         salt=salt,
         cms_shards=cms_shards,
         writer_id=checkpoint,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _DyadicCmsStreamWriter(_DrainWriter):
@@ -2693,23 +2626,15 @@ class _DyadicCmsStreamWriter(_DrainWriter):
        (<= (bits+1)*depth*width rows by construction) that detects the
        empty block, materializes the persisted grid for the staged
        write, and hands the driver the block cells.
-    2. Merge prior + block cells DRIVER-side against the mirrored
-       committed grid (`_prior_cells` — rebuilt from one bounded store
-       read on restart/replay, advanced only after a successful
-       commit), and derive the ranges' running estimates and the
-       quantile walk in pure integer Python (`dyadic_range_counts_py` /
+    2. Merge prior + block cells DRIVER-side against the driver mirror
+       of the committed grid (`_prior_cells`), and derive the ranges'
+       running estimates and the quantile walk in pure integer Python
+       (`dyadic_range_counts_py` /
        `dyadic_quantiles_py` — the batch operators' exact rules) instead
        of re-reading prior shards and re-aggregating per block.
-    3. ONE atomic publish (group commit): the increments (shard `y*`)
-       and the estimate rows (namespaced shard `o`) are union'd into
-       a single frame — every file carries the unified column set, so
-       reads never need schema merging — staged by ONE write job, and
-       committed under ONE txn record naming both shard sets.  There
-       is no two-commit crash window: a replayed block is either
-       fully committed (skip, no jobs) or fully absent (recompute
-       against a pre-block snapshot — the retry pin degenerates to the
-       current version, since nothing of an uncommitted txn is ever
-       visible).
+    3. ONE atomic publish (`_publish_group`): the increments (shard
+       `y*`) and the estimate rows (shard `o`, quantiles `q`) in one
+       commit, under a version-CAS on the pin.
 
     Drained store == the batch structure cell-for-cell (linearity +
     blocks partition the feed), so the final range estimates equal the
@@ -2717,9 +2642,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
     `stream_range_counts` hash-checks exactly that, oracle unchanged.
     """
 
-    #: namespaced shard holding the published estimate rows (store
-    #: cells use `y{n}`)
-    OUT_SHARD = "o"
+    _out_cols = ("batch_id", "range_id", "lo", "hi", "est")
     #: namespaced shard holding the published running QUANTILE rows
     #: (live p50/p99 at ingest)
     QOUT_SHARD = "q"
@@ -2753,43 +2676,12 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                 raise ValueError(f"permille fraction {p_} outside (0, 1000]")
         self.ps = [int(p_) for p_ in ps] if ps else None
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-        #: driver-resident merged grid {(level, d, bucket): n} of the
-        #: COMMITTED store — bounded at <= (universe_bits+1)*depth*width
-        #: cells by construction whatever has ever arrived (the batch
-        #: operator's boundedness argument).  Maintained by the single
-        #: sequential foreachBatch writer: set from a store read on
-        #: first use (restart/replay), advanced only AFTER a successful
-        #: commit, so it always mirrors the committed state exactly —
-        #: a failed append leaves it at the pre-block snapshot and the
-        #: retry re-derives against that, preserving the exactly-once
-        #: replay contract unchanged.
-        #: CAS-ANCHORED: `_mem_version` records the
-        #: store version the mirror equals; `_prior_cells` serves it
-        #: only at a matching pin, and every publish CASes on that
-        #: version — a contract-violating concurrent appender now fails
-        #: the batch loudly (the topk/reservoir/pack-bins discipline)
-        #: instead of silently diverging estimates from a stale mirror.
-        self._mem: dict[tuple[int, int, int], int] | None = None
-        self._mem_version: int = -2  # never a valid table version
-
-    def maintain(self) -> None:
-        super().maintain()
-        if self._mem is not None:
-            # the retention rewrite advanced the version; the mirror's
-            # CONTENT is unchanged (compaction preserves the merge-on-
-            # read sums), so re-anchor instead of forcing a re-read
-            self._mem_version = self.store.version()
 
     def _shard(self):
-        return F.concat(
-            F.lit("y"),
-            F.pmod(
-                (F.col("level").cast("long") * self.depth + F.col("d"))
-                * self.width
-                + F.col("bucket"),
-                F.lit(self.cms_shards),
-            ).cast("string"),
-        )
+        cell = (
+            F.col("level").cast("long") * self.depth + F.col("d")
+        ) * self.width + F.col("bucket")
+        return self._shard_col("y", cell, self.cms_shards)
 
     def merged_sketch(self, version: int | None = None) -> DataFrame:
         """Merge-on-read structure at a committed version: (level, d,
@@ -2803,14 +2695,6 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             .groupBy("level", "d", "bucket")
             .agg(F.sum("n").cast("long").alias("n"))
         )
-
-    def out_rows(self, version: int | None = None) -> DataFrame:
-        """The published running band estimates (batch_id, range_id,
-        lo, hi, est) — the former separate out table, now the `o` shard
-        of the single atomically-committed store."""
-        return self.store.read_where(
-            self.spark, "shard", [self.OUT_SHARD], version=version
-        ).select("batch_id", "range_id", "lo", "hi", "est")
 
     def quantile_rows(self, version: int | None = None) -> DataFrame:
         """The published running quantiles (batch_id, p_permille,
@@ -2857,20 +2741,14 @@ class _DyadicCmsStreamWriter(_DrainWriter):
         )
 
     def _prior_cells(self, pin: int) -> dict[tuple[int, int, int], int]:
-        """The committed store's merged grid as a driver dict — from
-        memory when this writer has seen it (the sequential-writer
-        invariant: `_mem` is advanced only after a successful commit,
-        so it equals the committed state at `pin`), else rebuilt from
-        ONE bounded read of every cell shard (restart/replay path).
-        Increment rows are summed per cell — counters are linear.
-        The mirror is served ONLY when its anchored version matches the
-        pin: any other version means someone else advanced the
-        store, and the bounded re-read is the correct recovery."""
-        if self._mem is not None and self._mem_version == pin:
-            return self._mem
-        cells: dict[tuple[int, int, int], int] = {}
-        try:
-            rows = (
+        """The committed store's merged grid {(level, d, bucket): n} at
+        `pin` as a driver dict: the mirror's content (bounded at
+        <= (universe_bits+1)*depth*width cells whatever has arrived),
+        rebuilt from ONE bounded read of every cell shard when it is not
+        anchored at `pin`."""
+        if self._mem is None or self._mem_version != pin:
+            # an empty store (pin -1) needs no read, and no collect job
+            rows = [] if pin < 0 else (
                 self.store.read_where(
                     self.spark,
                     "shard",
@@ -2880,13 +2758,16 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                 .select("level", "d", "bucket", "n")
                 .collect()
             )
-        except FileNotFoundError:  # no commits at/below the pin
-            rows = []
+            self._mirror(pin, content=self._add_cells({}, rows))
+        return self._mem
+
+    @staticmethod
+    def _add_cells(cells: dict, rows) -> dict:
+        """Sum (level, d, bucket, n) rows into `cells` — counters are
+        linear."""
         for r in rows:
             key = (r["level"], r["d"], r["bucket"])
             cells[key] = cells.get(key, 0) + r["n"]
-        self._mem = cells  # committed state — safe to keep on failure
-        self._mem_version = pin
         return cells
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
@@ -2928,10 +2809,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             # estimate/descent rules are all-integer — bit-identical to
             # a distributed merge, and the dict covers EVERY committed
             # cell, so no band mass can go unread
-            merged = dict(self._prior_cells(pin))
-            for r in block_rows:
-                key = (r["level"], r["d"], r["bucket"])
-                merged[key] = merged.get(key, 0) + r["n"]
+            merged = self._add_cells(dict(self._prior_cells(pin)), block_rows)
             est = dyadic_range_counts_py(
                 merged,
                 self.ranges,
@@ -2948,13 +2826,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                 "shard string, batch_id long, range_id int, lo long, "
                 "hi long, est long",
             )
-            # ONE staged write, ONE commit record naming both shard
-            # sets; every parquet file carries the unified column set
-            # (cell columns NULL on estimate rows and vice versa), so
-            # no read ever needs schema merging
-            unified = inc.select(
-                "shard", "level", "d", "bucket", "n"
-            ).unionByName(est_df, allowMissingColumns=True)
+            parts = [inc.select("shard", "level", "d", "bucket", "n"), est_df]
             if self.ps:
                 # running quantiles AT INGEST: the descent over the SAME pre-append snapshot + block
                 # cells, published in the SAME single atomic commit —
@@ -2978,25 +2850,13 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                     "shard string, batch_id long, p_permille int, "
                     "target_rank long, q_value long",
                 )
-                unified = unified.unionByName(q_df, allowMissingColumns=True)
-            # CAS on the pinned version: a concurrent
-            # appender advancing the store between our pin and this
-            # publish fails the batch loudly — the retry re-pins and
-            # rebuilds the mirror below — instead of the mirror silently
-            # diverging from the sibling's committed cells
-            try:
-                self.store.append_once(
-                    unified.repartition(F.col("shard")),
-                    txn=txn,
-                    partition_by="shard",
-                    cas_version=pin,
-                )
-            except ConcurrentWriteError:
-                self._mem = None
-                raise
-            # commit landed: advance the driver-resident mirror
-            self._mem = merged
-            self._mem_version = pin + 1
+                parts.append(q_df)
+            # CAS on the pinned version: a concurrent appender advancing
+            # the store between our pin and this publish fails the batch
+            # loudly instead of the mirror silently diverging from the
+            # sibling's committed cells
+            self._publish_group(txn, *parts, cas_version=pin)
+            self._mirror(pin + 1, content=merged)
         finally:
             inc.unpersist()
 
@@ -3026,7 +2886,7 @@ def dyadic_cms_stream(
     via `quantile_rows()`).  Mechanics,
     single-commit replay rule, and the drained-store == batch-structure
     equality: see `_DyadicCmsStreamWriter`."""
-    writer = _DyadicCmsStreamWriter(
+    return _DyadicCmsStreamWriter(
         spark,
         store_dir,
         value_col=value_col,
@@ -3038,8 +2898,7 @@ def dyadic_cms_stream(
         cms_shards=cms_shards,
         writer_id=checkpoint,
         ps=ps,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _UniqStreamWriter(_DrainWriter):
@@ -3060,12 +2919,8 @@ class _UniqStreamWriter(_DrainWriter):
     distinct groups rows, PERSISTED — the shard collect and the staged
     write's two branches share it), running estimates AT INGEST for
     the block's groups (union of the pre-block snapshot's states + the
-    block's own), then ONE atomic publish (the group-commit protocol
-    of the dyadic/CMS twins): state rows (shard `u*`)
-    and estimate rows (namespaced shard `o`) staged by one write job
-    under one txn record.  A replayed block is fully committed (skip)
-    or fully absent (recompute against the current version, which IS
-    the pre-block snapshot) — there is no half-committed pin case.
+    block's own), then ONE atomic publish (`_publish_group`): state
+    rows (shard `u*`) and estimate rows (shard `o`) in one commit.
 
     The drained store's per-group union is register-identical to the
     batch whole-input sketch, so the final estimates equal
@@ -3075,10 +2930,6 @@ class _UniqStreamWriter(_DrainWriter):
     """
 
     _NULL_KEY = "\x00 null-group"
-
-    #: namespaced shard holding the published estimate rows (state
-    #: rows use `u{n}`)
-    OUT_SHARD = "o"
 
     def __init__(
         self,
@@ -3096,13 +2947,11 @@ class _UniqStreamWriter(_DrainWriter):
         self.lg_k = lg_k
         self.uniq_shards = uniq_shards
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
+        self._out_cols = ("batch_id", group_col, "approx_uniq")
 
     def _shard(self):
         key = F.coalesce(F.col(self.group_col).cast("string"), F.lit(self._NULL_KEY))
-        return F.concat(
-            F.lit("u"),
-            F.pmod(F.xxhash64(key), F.lit(self.uniq_shards)).cast("string"),
-        )
+        return self._shard_col("u", F.xxhash64(key), self.uniq_shards)
 
     def merged_estimates(self, version: int | None = None) -> DataFrame:
         """Per-group merged estimates at a committed version — the
@@ -3116,19 +2965,9 @@ class _UniqStreamWriter(_DrainWriter):
             .agg(S.uniq_merge("state").alias("approx_uniq"))
         )
 
-    def out_rows(self, version: int | None = None) -> DataFrame:
-        """The published per-block running estimates (batch_id, <group>,
-        approx_uniq) — the former separate out table, now the `o` shard
-        of the single atomically-committed store."""
-        return self.store.read_where(
-            self.spark, "shard", [self.OUT_SHARD], version=version
-        ).select("batch_id", self.group_col, "approx_uniq")
-
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.functions import agg_state as S
 
-        if block.isEmpty():
-            return
         # nothing of an uncommitted txn is ever visible (single commit)
         pin = self.store.version()
 
@@ -3151,15 +2990,14 @@ class _UniqStreamWriter(_DrainWriter):
             block_shards = sorted(
                 (inc.agg(F.collect_set("shard")).first()[0]) or []
             )
+            if not block_shards:
+                # an empty block: every group, NULL included (`_NULL_KEY`),
+                # routes to a shard, so no shard means no rows
+                return
             gtype = block.schema[self.group_col].dataType.simpleString()
-            try:
-                prior = self.store.read_where(
-                    self.spark, "shard", block_shards, version=pin
-                ).select(self.group_col, "state")
-            except FileNotFoundError:
-                prior = self.spark.createDataFrame(
-                    [], f"{self.group_col} {gtype}, state binary"
-                )
+            prior = self._read_prior(
+                block_shards, pin, f"{self.group_col} {gtype}, state binary"
+            ).select(self.group_col, "state")
             # running estimate at ingest: union prior + block states per
             # group, restricted to the BLOCK's groups (null-safe semi
             # join so a NULL group accumulates like any other)
@@ -3183,15 +3021,7 @@ class _UniqStreamWriter(_DrainWriter):
                     F.col("approx_uniq"),
                 )
             )
-            # ONE staged write, ONE commit record naming both shard sets
-            unified = inc.select(
-                "shard", self.group_col, "state"
-            ).unionByName(est, allowMissingColumns=True)
-            self.store.append_once(
-                unified.repartition(F.col("shard")),
-                txn=txn,
-                partition_by="shard",
-            )
+            self._publish_group(txn, inc.select("shard", gc, "state"), est)
         finally:
             inc.unpersist()
 
@@ -3212,7 +3042,7 @@ def uniq_stream(
     the namespaced `o` shard; read back via the writer's `out_rows()`).
     Mechanics, single-commit replay rule, and the drained-store ==
     batch sketch register-identity: see `_UniqStreamWriter`."""
-    writer = _UniqStreamWriter(
+    return _UniqStreamWriter(
         spark,
         store_dir,
         group_col=group_col,
@@ -3220,8 +3050,7 @@ def uniq_stream(
         lg_k=lg_k,
         uniq_shards=uniq_shards,
         writer_id=checkpoint,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)
 
 
 class _PackBinsStreamWriter(_DrainWriter):
@@ -3232,13 +3061,11 @@ class _PackBinsStreamWriter(_DrainWriter):
     OPEN bins the moment they land, so a downstream dataloader can
     start reading full bins without waiting for the corpus to close.
 
-    State is a GENERATIONAL open-bin snapshot (the reservoir-store
-    discipline), NOT an append-only counter store: bin fills are
-    read-modify-write and — decisively — the set of bins ever created
-    grows with the corpus, so any design whose per-block read touches
-    all historical bins is unbounded at 100 TB (the first cut of this
-    writer had exactly that flaw; caught by the open-bin accounting
-    below, rewritten before it shipped a scale claim).  Each block
+    State is a GENERATIONAL open-bin snapshot (`_DrainWriter`'s
+    generational family), NOT an append-only counter store: bin fills
+    are read-modify-write and — decisively — the set of bins ever
+    created grows with the corpus, so any design whose per-block read
+    touches all historical bins is unbounded at 100 TB.  Each block
     commits generation g+1 = the post-block OPEN bins only, bounded by
     construction:
 
@@ -3281,6 +3108,7 @@ class _PackBinsStreamWriter(_DrainWriter):
     """
 
     _commit_order = ("store", "out")
+    _generational = True
 
     def __init__(
         self,
@@ -3313,40 +3141,6 @@ class _PackBinsStreamWriter(_DrainWriter):
         self.max_open = max_open
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
-        #: driver-resident (gen, version) of the newest COMMITTED
-        #: snapshot generation — the reservoir mirror's protocol
-        #: (advanced only after a successful publish, rebuilt on first
-        #: use, invalidated on a lost CAS race); drops the per-block
-        #: max(gen) driver action.
-        self._mem: tuple[int, int] | None = None
-
-    def maintain(self) -> None:
-        v = self._compact_to_generation(None if self._mem is None else self._mem[0])
-        if v is not None and self._mem is not None:
-            self._mem = (self._mem[0], v)  # re-anchor; content unchanged
-
-    def _latest(self, version: int | None = None):
-        """(open-bin frame, gen, snapshot version) at a committed
-        version — the reservoir `_latest` discipline (mirror-served
-        when the requested version IS the mirrored one; a retry pin at
-        an older version always re-reads)."""
-        snap_v = self.store.version() if version is None else version
-        if self._mem is not None and self._mem[1] == snap_v:
-            gen = self._mem[0]
-            stored = self.store.read(self.spark, version=snap_v)
-            return stored.filter(F.col("gen") == gen).drop("gen"), gen, snap_v
-        if snap_v < 0:
-            return None, -1, snap_v
-        try:
-            stored = self.store.read(self.spark, version=snap_v)
-        except FileNotFoundError:
-            return None, -1, snap_v
-        gen = stored.agg(F.max("gen")).first()[0]
-        if gen is None:
-            return None, -1, snap_v
-        if version is None:
-            self._mem = (int(gen), snap_v)
-        return stored.filter(F.col("gen") == gen).drop("gen"), int(gen), snap_v
 
     def open_bins(self, version: int | None = None) -> DataFrame:
         """The current OPEN bins: (bucket, bin_id, fill) — the bounded
@@ -3551,7 +3345,7 @@ class _PackBinsStreamWriter(_DrainWriter):
                 # assignment rows both read the persisted fold output;
                 # the snapshot's version-CAS commit still strictly
                 # precedes the out commit
-                try:
+                with self._cas_guard():
                     _overlapped_store_out_commit(
                         self.store,
                         snapshot,
@@ -3561,16 +3355,11 @@ class _PackBinsStreamWriter(_DrainWriter):
                         txn,
                         store_cas_version=_v,
                     )
-                except ConcurrentWriteError:
-                    # a sibling advanced the store past our mirror:
-                    # drop it so a retry re-reads the sibling's commit
-                    self._mem = None
-                    raise
                 # both commits landed: generation prev_gen+1 is committed
                 # at version _v+1 whichever attempt published it (on a
                 # half-committed retry the pin rule guarantees the same
                 # pair)
-                self._mem = (prev_gen + 1, _v + 1)
+                self._mirror(_v + 1, prev_gen + 1)
             finally:
                 packed.unpersist()
         finally:
@@ -3597,7 +3386,7 @@ def pack_bins_stream(
     out exactly-once.  Mechanics, state bounds, the retry-pin
     protocol, and the bucket-aligned batch-equality pin: see
     `_PackBinsStreamWriter`."""
-    writer = _PackBinsStreamWriter(
+    return _PackBinsStreamWriter(
         spark,
         out_dir,
         store_dir,
@@ -3609,5 +3398,4 @@ def pack_bins_stream(
         close_below=close_below,
         max_open=max_open,
         writer_id=checkpoint,
-    )
-    return writer.start(source, checkpoint)
+    ).start(source, checkpoint)

@@ -798,46 +798,86 @@ def test_topk_stream_new_run_over_existing_store_not_lost(spark, tmp_path):
     assert got == {"a": 5, "b": 5}
 
 
-def test_topk_concurrent_writer_race_rejected_not_double_counted(spark, tmp_path):
-    """ADVICE r6: the single-live-writer contract is a CAS, not a comment.
-    Two writers racing the same parent generation: exactly one commits;
-    the loser raises ConcurrentWriteError and the store never holds two
-    same-generation summaries to double-count."""
-    import pytest as _pytest
-
-    from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-        ConcurrentWriteError,
-        TransactionalTable,
-    )
+def _race_writer(spark, tmp_path, kind, writer_id):
+    """A writer of `kind` over the one shared generational store, and a
+    block maker over distinct integer ids."""
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        _PackBinsStreamWriter,
+        reservoir_stream_writer,
         topk_stream_writer,
     )
 
     store = str(tmp_path / "race_store")
-    w1 = topk_stream_writer(spark, store, "v", capacity=64, writer_id="w1")
-    w1.process(spark.createDataFrame([("a",)] * 3, "v string"), 0)
+    if kind == "topk":
+        w = topk_stream_writer(spark, store, "v", capacity=64, writer_id=writer_id)
+        return w, lambda ids: spark.createDataFrame(
+            [(str(i),) for i in ids], "v string"
+        )
+    if kind == "reservoir":
+        w = reservoir_stream_writer(spark, store, "v", k=64, writer_id=writer_id)
+        return w, lambda ids: spark.createDataFrame([(i,) for i in ids], "v long")
+    w = _PackBinsStreamWriter(
+        spark, str(tmp_path / "race_out"), store, capacity=100, buckets=2,
+        writer_id=writer_id,
+    )
+    return w, lambda ids: spark.createDataFrame(
+        [(i, 10) for i in ids], "doc_id long, n_tokens long"
+    )
 
-    w2 = topk_stream_writer(spark, store, "v", capacity=64, writer_id="w2")
+
+def _race_state(spark, kind, w) -> dict[int, int]:
+    """{id: multiplicity} of everything the store's newest state holds."""
+    if kind == "topk":
+        return {int(r["value"]): r["count_lb"] for r in w.topk(64).collect()}
+    if kind == "reservoir":
+        return {r["v"]: 1 for r in w.sample().collect()}
+    return {r["doc_id"]: 1 for r in w.out.read(spark).collect()}
+
+
+@pytest.mark.parametrize("kind", ["topk", "reservoir", "pack_bins"])
+def test_generational_writer_race_rejected_not_double_counted(
+    spark, tmp_path, kind
+):
+    """The single-live-writer contract of the generational stores is a
+    CAS, not a comment.  Two writers racing the same parent generation:
+    exactly one commits; the loser raises ConcurrentWriteError and the
+    store never holds two same-generation snapshots to double-count.
+    The loser's retry of the same batch then succeeds on top of the
+    winner's commit, so the lost race dropped its stale mirror."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import (
+        ConcurrentWriteError,
+    )
+
+    w1, block = _race_writer(spark, tmp_path, kind, "w1")
+    w1.process(block([1, 2, 3]), 0)
+
+    w2, _ = _race_writer(spark, tmp_path, kind, "w2")
     # simulate the race: w2 reads the same snapshot w1 is about to advance
     orig_latest = type(w2)._latest
 
-    def stale_latest(self):
-        prev, gen, snap_v = orig_latest(self)
+    def stale_latest(self, version=None):
+        prev, gen, snap_v = orig_latest(self, version)
         # w1 commits AFTER our read but BEFORE our publish
-        w1.process(spark.createDataFrame([("a",)] * 2, "v string"), 1)
+        w1.process(block([4, 5]), 1)
         return prev, gen, snap_v
 
     w2._latest = stale_latest.__get__(w2)
-    with _pytest.raises(ConcurrentWriteError):
-        w2.process(spark.createDataFrame([("b",)] * 4, "v string"), 0)
+    with pytest.raises(ConcurrentWriteError):
+        w2.process(block([6, 7, 8, 9]), 0)
+
+    def gens():
+        stored = w1.store.read(spark).select("gen").distinct()
+        return sorted(r["gen"] for r in stored.collect())
 
     # w1's interleaved commit is the surviving generation; no merged
-    # double-generation rows, and no trace of w2's rejected summary
-    stored = TransactionalTable(store).read(spark)
-    gens = sorted({r["gen"] for r in stored.select("gen").distinct().collect()})
-    assert gens == [0, 1]
-    got = {r["value"]: r["count_lb"] for r in w1.topk(5).collect()}
-    assert got == {"a": 5}
+    # double-generation rows, and no trace of w2's rejected snapshot
+    assert gens() == [0, 1]
+    assert _race_state(spark, kind, w1) == {i: 1 for i in range(1, 6)}
+
+    del w2._latest
+    w2.process(block([6, 7, 8, 9]), 0)
+    assert gens() == [0, 1, 2]
+    assert _race_state(spark, kind, w2) == {i: 1 for i in range(1, 10)}
 
 
 def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):

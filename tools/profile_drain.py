@@ -108,8 +108,8 @@ def profile(spark, which: str) -> None:
 
 
 def profile_query(spark, name: str, passes: int = 2) -> None:
-    """Generic drain profile (r15, VERDICT r14 #3): wrap EVERY
-    `_*StreamWriter.process` in `streaming/stateful.py` plus the
+    """Generic drain profile: wrap `_DrainWriter.process` (every
+    `_*StreamWriter` in `streaming/stateful.py` inherits it) plus the
     TransactionalTable ops, run the named registry query `passes` times
     in ONE session, and print per-pass walls + the sub-op breakdown of
     each pass.  Pass 1 vs pass 2 separates JVM/codegen + Arrow warm-up
@@ -119,15 +119,8 @@ def profile_query(spark, name: str, passes: int = 2) -> None:
     applyInPandasWithState folds, e.g. stream_funnel) still report the
     pass walls — their warm-up is Arrow/state machinery, not store
     jobs, and shows up as the pass-1/pass-2 delta alone."""
-    import inspect
-
     reg = {**Q.QUERIES, **Q.EXTRA_QUERIES}
     fn = reg[name]
-    writer_classes = [
-        cls
-        for nm, cls in inspect.getmembers(ST, inspect.isclass)
-        if nm.endswith("StreamWriter") and hasattr(cls, "process")
-    ]
 
     for p in range(1, passes + 1):
         acc: dict[str, float] = defaultdict(float)
@@ -159,22 +152,16 @@ def profile_query(spark, name: str, passes: int = 2) -> None:
              timed(TX.TransactionalTable, "txn_committed", "txn_committed")),
             (DataFrame, "first", timed(DataFrame, "first", "collect(first)")),
         ]
-        saved = []
-        for cls in writer_classes:
-            orig_process = cls.process
+        orig_process = ST._DrainWriter.process
 
-            def make(orig_p):
-                def process(self, block, batch_id):
-                    t0 = time.time()
-                    try:
-                        return orig_p(self, block, batch_id)
-                    finally:
-                        blocks.append(time.time() - t0)
+        def process(self, block, batch_id):
+            t0 = time.time()
+            try:
+                return orig_process(self, block, batch_id)
+            finally:
+                blocks.append(time.time() - t0)
 
-                return process
-
-            cls.process = make(orig_process)
-            saved.append((cls, orig_process))
+        ST._DrainWriter.process = process
 
         spark.catalog.clearCache()
         try:
@@ -182,8 +169,7 @@ def profile_query(spark, name: str, passes: int = 2) -> None:
             n = fn(spark, SF).count()
             total = time.time() - t0
         finally:
-            for cls, orig_process in saved:
-                cls.process = orig_process
+            ST._DrainWriter.process = orig_process
             for obj, nm, orig in origs:
                 setattr(obj, nm, orig)
 
