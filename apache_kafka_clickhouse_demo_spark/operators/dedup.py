@@ -103,12 +103,22 @@ def minhash_signatures(
     per partition, far smaller than the data.  Same values as the
     row-local expression form, so the oracle is unchanged.
     """
+    return _minhash_signatures(
+        docs, text_col, id_col, num_perm, shingle_n,
+        lambda df: df.persist(StorageLevel.MEMORY_AND_DISK),
+    )
+
+
+def _minhash_signatures(docs, text_col, id_col, num_perm, shingle_n, cache):
+    """`minhash_signatures` with its shingle frame persisted by `cache`:
+    a stream writer passes its per-batch cache scope, which releases the
+    frame when the batch ends."""
     toks = TX.tokens(text_col)
     sh = F.array_distinct(TX.word_shingles(toks, shingle_n))
     # the interpreted shingle construction is the dominant row-local cost —
     # persist so the hash branch and the join branch both read it once
-    base = spread_small(docs).select(F.col(id_col).alias("doc_id"), sh.alias("shingles")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    base = cache(
+        spread_small(docs).select(F.col(id_col).alias("doc_id"), sh.alias("shingles"))
     )
 
     # explode_OUTER: a doc whose shingle array is NULL (NULL text — short

@@ -228,8 +228,7 @@ class TransactionalTable:
         re-derive its ORIGINAL pre-append snapshot on retry (pin at
         txn_version - 1): a counter-style writer that re-read at the
         current version would see its own first attempt's rows and make
-        DIFFERENT decisions than the attempt that already published them
-        (streaming/stateful.py:_DomainCapStreamWriter)."""
+        DIFFERENT decisions than the attempt that already published them."""
         _ckpt, commits = self._log_entries()
         for v, commit in commits:
             try:
@@ -452,10 +451,10 @@ class TransactionalTable:
     def stage_for_append(
         self, df: DataFrame, partition_by: str | None = None
     ) -> list[str]:
-        """Phase 1 of a two-phase append (r16, guide §2.6): run the Spark
-        write that stages `df`'s files into the table under unique,
-        commit-less (hence reader-invisible) names, and return the staged
-        file list for `commit_staged`.  Splitting the append lets a
+        """Phase 1 of a two-phase append: run the Spark write that stages
+        `df`'s files into the table under unique, commit-less (hence
+        reader-invisible) names, and return the staged file list for
+        `commit_staged`.  Splitting the append lets a
         writer with TWO dependent publications (the drain writers' store
         + out commits, whose crash-window argument only constrains COMMIT
         order) run both staging Spark jobs concurrently and serialize

@@ -21,6 +21,7 @@ from __future__ import annotations
 import contextlib
 import functools
 import os
+import threading
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -151,7 +152,7 @@ class _DrainWriter:
     """The exactly-once `foreachBatch` skeleton every `_*StreamWriter`
     shares: Structured Streaming re-delivers a failed micro-batch
     ("block") under the same batch id, so batch-id-keyed idempotent
-    commits make the sink exactly-once.  The drain contract:
+    commits make the sink exactly-once.  The block lifecycle:
 
     - **Txn ids** are `<writer_id>:<batch_id>`, and the stream entry
       points pass the checkpoint path as `writer_id`.  It is stable
@@ -160,13 +161,34 @@ class _DrainWriter:
       restart at 0 — a bare batch id would make a new run over an
       existing durable store silently swallow its first batches as
       replays.
-    - **Replays.** `process` checks the txn against every table the
-      writer commits to, in commit order (`_commit_order`).  A batch every
-      table already holds is a fully committed replay: it returns with
-      zero Spark jobs.  Otherwise the subclass's `_process(block,
-      batch_id, txn)` runs; `_resumed` is True when an earlier attempt
-      already committed a prefix of the tables (a half-committed retry
-      of a two-table writer).
+    - **One txn read.** `process` is the only place that asks the txlog
+      about the batch's txn: it checks every table the writer commits
+      to, in commit order (`_commit_order`).  A batch every table
+      already holds is a fully committed replay: it returns with zero
+      Spark jobs.  Otherwise the subclass's `_process(block, batch_id,
+      txn)` runs, knowing the txn is uncommitted in every table past
+      the committed prefix, so its publishes `append(..., txn=txn)`
+      without asking again (the ANN/IVFPQ writers publish through the
+      batch index helpers, which keep their own check).  `_resumed` is
+      True when that prefix is non-empty: a half-committed retry of a
+      two-table writer, whose store holds the txn and whose out table
+      does not.
+    - **One pin rule.** A block reads the store at `_pin(txn)`: the
+      current version, or on a half-committed retry the version just
+      before the batch's own store commit, so the retry re-derives
+      exactly what its first attempt derived.
+    - **One cache scope.** `_cache(df)` persists a frame for the rest of
+      the batch; `process` unpersists every cached frame once `_process`
+      returns or raises, so a failed batch never leaks cached blocks
+      into its retry.
+    - **One store→out publish.** A two-table writer (`_publish_pair`)
+      stages the store rows and the out rows concurrently, then commits
+      the store, then the out table.  Nothing is committed if either
+      staging fails, and whatever either side staged is discarded.  A
+      death between the two commits leaves the half-committed state
+      the pin rule resumes from; a resumed batch only appends out.
+      Single-table writers commit once (`_publish_group` for the
+      group-commit stores).
     - **Maintenance.** `maintain()` runs after every `compact_every`-th
       batch (or on demand).  The default rewrites the state table (the
       first in commit order) to one file per `shard` directory — layout-
@@ -177,20 +199,19 @@ class _DrainWriter:
       sequential), prunes the folded commit files and vacuums replaced
       data files, so the per-batch txn checks, the log and the disk stay
       bounded.  Optimize publishes one atomic replace commit, and folded
-      txns still answer `txn_committed`, so idempotence survives it.
+      txns still answer the txn check, so idempotence survives it.
       `maintain()` is safe ONLY between fully committed batches: the
       fold forgets which commit recorded a txn, and a half-committed
-      retry needs that commit to re-derive its pre-append pin
-      (`_resolve_retry_pin`).  An out table is never compacted here —
-      it is the pipeline's product and grows with the corpus, so its
-      consumer compacts it on its own schedule.
+      retry needs that commit to find its pin (`_pin` raises instead of
+      guessing).  An out table is never compacted here — it is the
+      pipeline's product and grows with the corpus, so its consumer
+      compacts it on its own schedule.
 
     The state table (`self.store`) comes in three families:
 
     - **Shard-pruned stores** (near-dup, url-dedup, domain-cap, count-min,
       uniq): rows under a namespaced `shard` partition (`_shard_col`); a
-      block reads only its touched shards at a pinned version
-      (`_read_prior`).
+      block reads only its touched shards at its pin (`_read_prior`).
     - **Generational snapshots** (top-k, reservoir, pack-bins): each block
       publishes generation g+1 of a bounded summary under a version-CAS,
       readers take only the newest generation (`_latest`), and
@@ -198,7 +219,7 @@ class _DrainWriter:
     - **Group-commit stores** (count-min, dyadic, uniq): a block's state
       rows and its out rows (shard `OUT_SHARD`, read back by
       `out_rows()`) publish in ONE commit (`_publish_group`), so there is
-      no half-committed retry and the pin is the current version.
+      no half-committed retry.
 
     **The driver mirror.**  Writers that keep the committed state on the
     driver (the generational family, the dyadic cell grid) anchor it at
@@ -244,12 +265,37 @@ class _DrainWriter:
             self._resumed = True
         else:
             return  # fully committed replay
-        self._process(block, batch_id, txn)
+        self._cached: list[DataFrame] = []
+        try:
+            self._process(block, batch_id, txn)
+        finally:
+            for df in self._cached:
+                df.unpersist()
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             self.maintain()
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         raise NotImplementedError
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """`df` persisted until the end of this batch's `_process`."""
+        self._cached.append(df.persist())
+        return df
+
+    def _pin(self, txn: str) -> int:
+        """The store version this batch reads at (the class docstring's
+        pin rule)."""
+        if not self._resumed:
+            return self.store.version()
+        v = self.store.txn_version(txn)
+        if v is None:
+            raise RuntimeError(
+                f"{self.store.path}: txn {txn} is committed but its "
+                "commit was folded away — cannot reconstruct the "
+                "pre-append snapshot a half-committed retry needs "
+                "(run maintain() only between fully-committed batches)"
+            )
+        return v - 1
 
     def maintain(self) -> None:
         store = self._tables()[0]
@@ -356,12 +402,65 @@ class _DrainWriter:
             lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
         with self._cas_guard():
-            self.store.append_once(
+            self.store.append(
                 unified.repartition(F.col("shard")),
                 txn=txn,
                 partition_by="shard",
                 cas_version=cas_version,
             )
+
+    def _publish_pair(
+        self,
+        txn: str,
+        store_df: DataFrame,
+        out,
+        partition_by: str | None = "shard",
+        cas_version: int | None = None,
+    ) -> None:
+        """A two-table writer's publish: the store rows stage on a side
+        thread while `out()` builds and stages the out rows on this one,
+        then the store commits (a version-CAS when `cas_version` is
+        given), then the out table.  Staged files are reader-invisible
+        until a commit names them, so only commit order carries the
+        crash-window argument and the two staging jobs overlap."""
+        if self._resumed:
+            self.out.append(out(), txn=txn)
+            return
+        side: list = []  # the store's staged files, or its error
+
+        def stage_store() -> None:
+            try:
+                side.append(self.store.stage_for_append(store_df, partition_by))
+            except BaseException as e:  # re-raised after the join
+                side.append(e)
+
+        thread = threading.Thread(target=stage_store, daemon=True)
+        thread.start()
+        staged_out: list[str] = []
+        try:
+            try:
+                staged_out = self.out.stage_for_append(out())
+            finally:
+                # a retry must never overlap this batch's staging job
+                thread.join()
+            if isinstance(side[0], BaseException):
+                raise side[0]
+        except BaseException:
+            # nothing committed: reclaim whatever either side staged
+            self.out.discard_staged(staged_out)
+            if isinstance(side[0], list):
+                self.store.discard_staged(side[0])
+            raise
+        try:
+            with self._cas_guard():
+                self.store.commit_staged(
+                    side[0], txn=txn, partition_by=partition_by,
+                    cas_version=cas_version,
+                )
+        except BaseException:
+            self.out.discard_staged(staged_out)
+            raise
+        self.out.commit_staged(staged_out, txn=txn)
 
     def start(self, source: DataFrame, checkpoint: str):
         """Drain everything available in `source` through `process`."""
@@ -394,32 +493,33 @@ class _NearDupStreamWriter(_DrainWriter):
     briefly exposes bands without their payloads to concurrent readers.
     The namespaced shard value keeps `read_where` pruning exact per row
     kind: a band read touches only `shard=b*` dirs that collide, a
-    payload read only the candidate `shard=p*` dirs.  Per block (see
-    `_process` for the exact protocol and its retry/exactness arguments):
+    payload read only the candidate `shard=p*` dirs.  Per block:
 
       1. compute the block's (id, payload, bkeys) once — same codegen
          expressions as the batch operators, so the stream makes exactly
-         the batch pair-finder's decisions — pin the store's pre-append
-         version, and `append_once` the band and payload rows in ONE
-         commit ON A SIDE THREAD (the write job also materializes the
-         persisted block signatures);
-      2. concurrently with that commit: read ONLY the store's colliding
-         band shards AT THE PIN (`TransactionalTable.read_where` prunes
+         the batch pair-finder's decisions — and stage its band and
+         payload rows as the store side of `_publish_pair`;
+      2. meanwhile, as the out side: read ONLY the store's colliding
+         band shards at the pin (`TransactionalTable.read_where` prunes
          driver-side off the commit log: O(matching buckets) files,
-         however big the store — the pinned snapshot makes the side
-         thread's commit invisible to every read in the block);
-      3. band-equality candidate join (block vs pruned store + earlier
-         in-block ids; one collect for the candidate ids' payload
-         shards), read ONLY those payload shards at the pin, verify
-         exactly (Jaccard / cosine), then BARRIER on the append thread
-         and commit the survivors — both commits keyed by the batch txn
-         (`_DrainWriter`), and the out commit strictly follows the store
-         commit.
+         however big the store), band-equality candidate join (block vs
+         pruned store + earlier in-block ids), read ONLY the candidate
+         ids' payload shards at the pin, verify exactly (Jaccard /
+         cosine) and stage the survivors;
+      3. commit the store, then the survivors.
+
+    Every read is pinned, so the concurrent store staging changes wall
+    time, not plans.  Multi-writer note: a CONCURRENT writer's commit
+    landing after the pin is invisible to this block's candidate reads,
+    so cross-writer suppression is best-effort within one block
+    (fail-safe direction — a near-dup is KEPT, never wrongly dropped)
+    and converges on the next block's fresh pin.  The store keeps EVERY
+    seen id's rows: dropped docs still suppress future copies of their
+    cluster.
 
     The two `.first()` per block collect DISTINCT SHARD IDS — sets
     bounded by the constant shard counts B and P, never by data size: the
-    same bounded-driver-action class as the IVF memoized count.  Both
-    ride inside the append thread's wall.
+    same bounded-driver-action class as the IVF memoized count.
 
     Scale: per-block work is O(block + colliding buckets), so a stream
     that has already ingested 100 TB pays the same per block as one that
@@ -447,7 +547,9 @@ class _NearDupStreamWriter(_DrainWriter):
     ):
         super().__init__(spark, writer_id)
         self.id_col = id_col
-        self.prepare = prepare  # block -> (id, payload, bkeys array<string>)
+        # (block, cache) -> (id, payload, bkeys array<string>); `cache`
+        # persists an intermediate for the rest of the batch
+        self.prepare = prepare
         self.verify = verify  # (payload_col_a, payload_col_b) -> bool Column
         self.band_shards = band_shards
         self.id_shards = id_shards
@@ -469,66 +571,12 @@ class _NearDupStreamWriter(_DrainWriter):
         ).select("id", "payload")
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
-        """Per-block pipeline, CONCURRENT APPEND-FIRST: the two write
-        jobs carry most of the in-block wall, so the candidate chain runs
-        while they do instead of after them.
-
-        1. Pin the store snapshot: `pin = store.version()` BEFORE the
-           append, so the block's reads never see its own rows on the
-           normal path.  Multi-writer note: a CONCURRENT writer's commit
-           landing between this pin and our own append is invisible to
-           this block's candidate reads, so cross-writer suppression is
-           best-effort within one block (fail-safe direction — a near-dup
-           is KEPT, never wrongly dropped) and converges on the next
-           block's fresh pin, which does see the other writer's rows.
-        2. Commit the block's band+payload rows to the store on a SIDE
-           THREAD while the main thread runs the candidate chain: band-
-           shard collect (bounded: <= band_shards names), pruned band
-           read AT `pin`, candidate join + payload-shard collect.  Both
-           reads are pinned, so nothing the side thread writes is
-           visible to them — the overlap changes wall time, not plans.
-        3. Payload read at `pin`, verify, anti-join, and the survivors'
-           STAGING write all run before the barrier too (staged files
-           are reader-invisible until a commit names them, so only
-           COMMIT order matters), then BARRIER: join the append thread
-           (re-raising its error, discarding the staged survivors on
-           failure), and publish the out commit.  The out commit strictly
-           follows the store commit: a batch that dies between the two
-           commits re-runs with the store append no-opping (txn guard)
-           and `pin` now INCLUDING its own earlier rows — over-inclusive
-           only of the block's own rows, which the block union + distinct
-           absorbs — and the out side staging + publishing once.
-        """
-        sigs_b = self.prepare(block).persist()
-        # cand is persisted mid-chain (stashed on self._cand_scratch);
-        # unpersist BOTH in the outer finally so an append failure or
-        # candidate-chain raise doesn't leak cached blocks into the retry
-        # (which re-persists fresh copies).
-        self._cand_scratch = None
-        try:
-            self._process_inner(block, batch_id, txn, sigs_b)
-        finally:
-            cand = getattr(self, "_cand_scratch", None)
-            if cand is not None:
-                cand.unpersist()
-                self._cand_scratch = None
-            sigs_b.unpersist()
-
-    def _process_inner(
-        self, block: DataFrame, batch_id: int, txn: str, sigs_b: DataFrame
-    ) -> None:
-        import threading
-
+        sigs_b = self._cache(self.prepare(block, self._cache))
         banded_b = sigs_b.select(
             "id", F.explode("bkeys").alias("bkey")
         ).withColumn(
             "shard", self._shard_col("b", F.xxhash64("bkey"), self.band_shards)
         )
-
-        # idempotent per-batch commit: a retried batch no-ops.  Store
-        # EVERY seen id's rows — dropped docs still suppress future
-        # copies of their cluster.
-        #
         # Align the write's task partitioning with the shard layout:
         # without it, every one of the block's N tasks writes a sliver
         # into every shard directory (N x shards tiny files PER BLOCK —
@@ -548,43 +596,11 @@ class _NearDupStreamWriter(_DrainWriter):
                     "shard"
                 ),
             )
-        )
-        # Pin BEFORE the append (docstring step 1).  Normal path: own
-        # rows excluded.  Store-committed retry: version() already
-        # includes the earlier attempt's rows — own rows included,
-        # harmless per the union+distinct argument.
-        pin = self.store.version()
+        ).repartition(F.col("shard"))
+        pin = self._pin(txn)
 
-        # Store commit on a side thread (docstring step 2).  ONE staged
-        # write + ONE commit publishes the block's bands and payloads
-        # atomically (no bands-without-payloads window); the write job
-        # also materializes the persisted block signatures the candidate
-        # chain reuses (the cache's per-partition locks serialize the
-        # overlap safely).
-        append_exc: list[BaseException] = []
-
-        def _append() -> None:
-            try:
-                self.store.append_once(
-                    store_rows.repartition(F.col("shard")),
-                    txn=txn,
-                    partition_by="shard",
-                )
-            except BaseException as e:  # re-raised after join()
-                append_exc.append(e)
-
-        appender = threading.Thread(target=_append, daemon=True)
-        appender.start()
-
-        # The candidate chain runs under try/finally on the appender join:
-        # if it raises, the batch must not fail (and get retried by
-        # foreachBatch) while the orphaned append thread is still running —
-        # append_once's idempotence contract requires retries of one txn to
-        # be SEQUENTIAL.
-        try:
-            # bounded driver action: <= band_shards distinct names.  Runs
-            # inside the append's wall, and against the PINNED snapshot,
-            # so the side thread's commit is invisible to it.
+        def survivors() -> DataFrame:
+            # bounded driver action: <= band_shards distinct names
             block_shards = (banded_b.agg(F.collect_set("shard")).first()[0]) or []
             store_bands = self._read_prior(
                 block_shards, pin, banded_b.select("id", "bkey").schema
@@ -592,7 +608,7 @@ class _NearDupStreamWriter(_DrainWriter):
             earlier_bands = store_bands.select("id", "bkey").unionByName(
                 banded_b.select("id", "bkey")
             )
-            cand = (
+            cand = self._cache(
                 banded_b.alias("b")
                 .join(
                     earlier_bands.alias("a"),
@@ -603,16 +619,12 @@ class _NearDupStreamWriter(_DrainWriter):
                 )
                 .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
                 .distinct()
-                .persist()
             )
-            self._cand_scratch = cand
-
-            # bounded driver action: ≤ id_shards distinct shard names.
+            # bounded driver action: <= id_shards distinct shard names.
             # The payload shards to read are those of CANDIDATE ids, which
             # only exist after the band-pruned store read; this collect is
-            # also the job that materializes the persisted candidate join
-            # `dropped` reuses, and it typically still overlaps the
-            # append thread.
+            # also the job that materializes the cached candidate join
+            # `dropped` reuses.
             cand_shards = (
                 cand.agg(
                     F.collect_set(
@@ -635,7 +647,7 @@ class _NearDupStreamWriter(_DrainWriter):
                 .select(F.col("id_b").alias(self.id_col))
                 .distinct()
             )
-            survivors = block.join(dropped, self.id_col, "left_anti")
+            kept = block.join(dropped, self.id_col, "left_anti")
             # survivors inherit the block's task layout — for a micro-
             # batch that is N mostly-tiny files per commit.  `out_files`
             # coalesces the commit (fewer files for the consumer + fewer
@@ -644,38 +656,9 @@ class _NearDupStreamWriter(_DrainWriter):
             # default for large blocks, because coalesce() propagates UP
             # the final stage and would throttle the anti-join itself to
             # `out_files` tasks.
-            out_df = (
-                survivors
-                if self.out_files is None
-                else survivors.coalesce(self.out_files)
-            )
-            # STAGE the survivors BEFORE the barrier: the verify/anti-join
-            # pipeline — the block's most expensive job — runs while the
-            # appender's tail is still in flight.  Every read in it is
-            # pinned, so the overlap changes
-            # wall time, not results; staged files are reader-invisible
-            # until the commit below names them.  (out committed while
-            # store is not cannot exist — the commit order below — so
-            # the txn guard here only protects a torn external state.)
-            staged_out = (
-                self.out.stage_for_append(out_df)
-                if not self.out.txn_committed(txn)
-                else None
-            )
-        finally:
-            appender.join()
+            return kept if self.out_files is None else kept.coalesce(self.out_files)
 
-        # BARRIER (docstring step 3): the appender is joined by the
-        # finally above; surface its failure BEFORE publishing survivors,
-        # else a failed store append could leave survivors whose
-        # suppressing rows never landed — their staging is discarded (no
-        # commit references it).
-        if append_exc:
-            if staged_out is not None:
-                self.out.discard_staged(staged_out)
-            raise append_exc[0]
-        if staged_out is not None:
-            self.out.commit_staged(staged_out, txn=txn)
+        self._publish_pair(txn, store_rows, survivors)
 
 
 def minhash_stream_writer(
@@ -711,11 +694,11 @@ def minhash_stream_writer(
     from apache_kafka_clickhouse_demo_spark.operators.dedup import (
         band_keys_array,
         jaccard_of,
-        minhash_signatures,
+        _minhash_signatures,
     )
 
-    def prepare(block: DataFrame) -> DataFrame:
-        sigs = minhash_signatures(block, text_col, id_col, num_perm, shingle_n)
+    def prepare(block: DataFrame, cache) -> DataFrame:
+        sigs = _minhash_signatures(block, text_col, id_col, num_perm, shingle_n, cache)
         # "band:key" strings collide iff (band, band_key) pairs collide —
         # identical bucketing to the batch band_key_rows
         bkeys = F.transform(
@@ -876,7 +859,7 @@ def embedding_stream_writer(
         ]
     )
 
-    def prepare(block: DataFrame) -> DataFrame:
+    def prepare(block: DataFrame, cache) -> DataFrame:
         bkeys = F.transform(
             buckets_expr,
             lambda b, t: F.concat(t.cast("string"), F.lit(":"), b.cast("string")),
@@ -1184,7 +1167,7 @@ class _TopKStreamWriter(_DrainWriter):
         # instead of both writers publishing generation prev_gen+1 and
         # `_latest()` merging their rows into double counts.
         with self._cas_guard():
-            self.store.append_once(new_summary, txn=txn, cas_version=snap_v)
+            self.store.append(new_summary, txn=txn, cas_version=snap_v)
         self._mirror(snap_v + 1, prev_gen + 1, (trimmed, err + sub))
 
     def topk(self, k: int) -> DataFrame:
@@ -1329,7 +1312,7 @@ class _ReservoirStreamWriter(_DrainWriter):
             merged.dropDuplicates([self.id_col])
         ).withColumn("gen", F.lit(prev_gen + 1).cast("long"))
         with self._cas_guard():
-            self.store.append_once(next_gen, txn=txn, cas_version=snap_v)
+            self.store.append(next_gen, txn=txn, cas_version=snap_v)
         self._mirror(snap_v + 1, prev_gen + 1)
 
     def sample(self) -> DataFrame:
@@ -1457,21 +1440,13 @@ class _UrlDedupStreamWriter(_DrainWriter):
        ambiguity, making every decision deterministic; the key is
        `coalesce(url_norm, 'invalid:' || doc_id)` per the repo's
        degenerate-doc contract (invalid URLs never collapse).
-    2. Pin the store version, collect the block's touched shard names
-       (bounded by `key_shards`, never by data), read ONLY those shards
-       at the pin, and suppress rows whose key exists in the store with
-       a DIFFERENT doc_id.  The != guard is what makes a store-committed
-       RETRY self-tolerant: the earlier attempt's own rows match on
-       doc_id and do not suppress, so the retry re-derives identical
-       survivors.
-    3. STAGE the survivors' key rows (store) and the survivors (out)
-       as two CONCURRENT Spark jobs, then publish the two commits in
-       order: store first, THEN out — the crash-window argument only
-       constrains COMMIT order, never staging order (staged files are
-       reader-invisible until a commit names them), so the two write
-       jobs overlap on the cluster (`_overlapped_store_out_commit`).
-       Dying between the commits re-runs the batch with the store side
-       a txn no-op and the out side staging + publishing once.
+    2. Collect the block's touched shard names (bounded by
+       `key_shards`, never by data), read ONLY those shards at the pin,
+       and suppress rows whose key exists in the store with a DIFFERENT
+       doc_id (the pin already excludes a store-committed retry's own
+       rows; the != guard keeps them harmless too).
+    3. Publish the survivors' key rows (store) and the survivors (out)
+       through `_publish_pair`.
 
     Semantics: FIRST-ARRIVAL-WINS per canonical URL (what a crawl
     pipeline wants — the first fetch is kept, re-crawls drop).  On an
@@ -1512,7 +1487,7 @@ class _UrlDedupStreamWriter(_DrainWriter):
         )
         # block-local min doc_id per key; struct min is lexicographic on
         # the leading doc_id, so url_norm/reg_domain stay aligned with it
-        reduced = (
+        reduced = self._cache(
             parts.groupBy(key.alias("key"))
             .agg(F.min(F.struct("doc_id", "url_norm", "reg_domain")).alias("m"))
             .select(
@@ -1524,50 +1499,33 @@ class _UrlDedupStreamWriter(_DrainWriter):
             .withColumn(
                 "shard", self._shard_col("", F.xxhash64("key"), self.key_shards)
             )
-            .persist()
         )
-        try:
-            pin = self.store.version()
-            # bounded driver action: <= key_shards distinct names
-            touched = (reduced.agg(F.collect_set("shard")).first()[0]) or []
-            seen = self._read_prior(
-                touched, pin, reduced.select("key", "doc_id").schema
-            ).select("key", F.col("doc_id").alias("store_id"))
-            survivors = (
-                reduced.join(seen, "key", "left")
-                .filter(
-                    F.col("store_id").isNull()
-                    | (F.col("store_id") == F.col("doc_id"))
-                )
-                .select("key", "doc_id", "url_norm", "reg_domain", "shard")
-                # both staging jobs read the survivor join; persisted so
-                # the pruned read + join run once and the second job
-                # reads cached partitions (block-bounded rows)
-                .persist()
+        pin = self._pin(txn)
+        # bounded driver action: <= key_shards distinct names
+        touched = (reduced.agg(F.collect_set("shard")).first()[0]) or []
+        seen = self._read_prior(
+            touched, pin, reduced.select("key", "doc_id").schema
+        ).select("key", F.col("doc_id").alias("store_id"))
+        # both staging jobs read the survivor join; cached so the pruned
+        # read + join run once (block-bounded rows)
+        survivors = self._cache(
+            reduced.join(seen, "key", "left")
+            .filter(
+                F.col("store_id").isNull()
+                | (F.col("store_id") == F.col("doc_id"))
             )
-            try:
-                out_df = survivors.select("doc_id", "url_norm", "reg_domain")
-                if self.out_files is not None:
-                    out_df = out_df.coalesce(self.out_files)
-                # CONCURRENT staging, ORDERED commits (docstring step 3):
-                # the store rows stage on a side thread while the out
-                # rows stage on this one; the store commit still strictly
-                # precedes the out commit.  Tasks stay aligned with the
-                # shard layout like the near-dup writers.
-                _overlapped_store_out_commit(
-                    self.store,
-                    survivors.select("key", "doc_id", "shard").repartition(
-                        F.col("shard")
-                    ),
-                    "shard",
-                    self.out,
-                    out_df,
-                    txn,
-                )
-            finally:
-                survivors.unpersist()
-        finally:
-            reduced.unpersist()
+            .select("key", "doc_id", "url_norm", "reg_domain", "shard")
+        )
+        out_df = survivors.select("doc_id", "url_norm", "reg_domain")
+        if self.out_files is not None:
+            out_df = out_df.coalesce(self.out_files)
+        # tasks stay aligned with the shard layout like the near-dup
+        # writers
+        self._publish_pair(
+            txn,
+            survivors.select("key", "doc_id", "shard").repartition(F.col("shard")),
+            lambda: out_df,
+        )
 
 
 def url_dedup_stream(
@@ -1671,7 +1629,7 @@ class _TermIndexStreamWriter(_DrainWriter):
         # shard-aligned tasks: one file per touched shard per segment,
         # keeping term_lookup's pruned read at O(segments) files pre-
         # maintenance instead of O(segments x tasks)
-        self.table.append_once(
+        self.table.append(
             seg.repartition(F.col("shard")), txn=txn, partition_by="shard"
         )
 
@@ -1966,114 +1924,6 @@ def ivfpq_index_stream(
     ).start(source, checkpoint)
 
 
-def _resolve_retry_pin(store, txn: str) -> int:
-    """Crash-window pin rule of the two-table writers whose out rows are
-    a function of the pre-append state (`_DomainCapStreamWriter`,
-    `_PackBinsStreamWriter`).  On a store-committed retry the
-    pre-append snapshot is txn_version(txn) - 1 — the current version
-    already contains the first attempt's own append, and re-reading it
-    would count the block against itself — and a pin folded away by
-    log maintenance raises loudly instead of guessing (maintain() runs
-    only between fully-committed batches)."""
-    if store.txn_committed(txn):
-        vc = store.txn_version(txn)
-        if vc is None:
-            raise RuntimeError(
-                f"{store.path}: txn {txn} is committed but its "
-                "commit was folded away — cannot reconstruct the "
-                "pre-append snapshot a half-committed retry needs "
-                "(run maintain() only between fully-committed batches)"
-            )
-        return vc - 1
-    return store.version()
-
-
-def _overlapped_store_out_commit(
-    store,
-    store_df: DataFrame,
-    store_partition_by: str | None,
-    out,
-    out_df: DataFrame,
-    txn: str,
-    store_cas_version: int | None = None,
-) -> None:
-    """The store-then-out commit pair every two-table drain writer ends
-    with, as TWO CONCURRENT staging Spark jobs + ORDERED filesystem
-    commits: two back-to-back `append_once` calls would run two
-    driver-synchronized write jobs in sequence, a serial per-block fixed
-    cost.  The crash-window argument those writers rely
-    on only constrains COMMIT order (store strictly before out, so a
-    death between them replays with the store side a txn no-op) — it
-    never constrains STAGING order, because staged files are
-    reader-invisible until a commit names them.  So: stage the store
-    rows on a side thread while the out rows stage on the caller's
-    thread, then publish the two commits in order.  Failure cases:
-
-    - side staging fails -> the out staging's files are discarded
-      immediately (they are referenced by no commit; vacuum remains the
-      crash backstop) and the side error re-raises — nothing committed;
-    - caller-side staging fails -> the side thread is joined FIRST (a
-      retried batch must never overlap an orphaned stage job of the
-      same txn), its staged files stay orphaned for vacuum, the error
-      propagates — nothing committed;
-    - death between the commits -> the two-commit window: the retry
-      re-runs with `store.txn_committed(txn)` true and the out side
-      staging + publishing once.
-
-    Each side is skipped when its table already committed `txn` (the
-    half-committed retry), degenerating to the single remaining
-    `append_once`.  `store_cas_version` passes through to the store
-    commit (the generational writers' version-CAS); a rejected CAS
-    discards the out staging too and re-raises — nothing committed."""
-    import threading
-
-    store_needed = not store.txn_committed(txn)
-    out_needed = not out.txn_committed(txn)
-    if store_needed and out_needed:
-        staged_store: list[list[str]] = []
-        stage_exc: list[BaseException] = []
-
-        def _stage_store() -> None:
-            try:
-                staged_store.append(
-                    store.stage_for_append(store_df, store_partition_by)
-                )
-            except BaseException as e:  # re-raised after join()
-                stage_exc.append(e)
-
-        stager = threading.Thread(target=_stage_store, daemon=True)
-        stager.start()
-        try:
-            staged_out = out.stage_for_append(out_df)
-        finally:
-            stager.join()
-        if stage_exc:
-            out.discard_staged(staged_out)
-            raise stage_exc[0]
-        try:
-            store.commit_staged(
-                staged_store[0],
-                txn=txn,
-                partition_by=store_partition_by,
-                cas_version=store_cas_version,
-            )
-        except BaseException:
-            # the store commit failed (CAS rejection or I/O): the out
-            # staging will never be committed — reclaim it now
-            out.discard_staged(staged_out)
-            raise
-        out.commit_staged(staged_out, txn=txn)
-    elif store_needed:
-        store.append_once(
-            store_df,
-            txn=txn,
-            partition_by=store_partition_by,
-            cas_version=store_cas_version,
-        )
-    elif out_needed:
-        out.append_once(out_df, txn=txn)
-
-
 class _DomainCapStreamWriter(_DrainWriter):
     """foreachBatch body of `domain_cap_stream`: a continuous per-domain
     QUOTA over a crawl feed — keep each registered domain's first `cap`
@@ -2098,21 +1948,16 @@ class _DomainCapStreamWriter(_DrainWriter):
        keep rows with `prior + block_rank <= cap` — emitting
        `domain_rank = prior + block_rank`, so on an id-ordered feed the
        output equals the batch operator's rows VERBATIM (the oracle).
-    3. Commit the survivors' per-domain increments to the store, THEN the
-       survivors to out (the crash-window order every writer here uses).
-       The two staging Spark jobs run CONCURRENTLY — only the cheap
-       filesystem commits are ordered (`_overlapped_store_out_commit`).
+    3. Publish the survivors' per-domain increments (store) and the
+       survivors (out) through `_publish_pair`.
 
     Exactly-once under retry is the interesting part: survivors are a
     function of the PRE-APPEND counts, so a batch that died between its
-    two commits must re-derive the counts its first attempt saw — but the
-    current version now INCLUDES that attempt's increments (re-reading it
+    two commits must re-derive the counts its first attempt saw — the
+    current version INCLUDES that attempt's increments, and re-reading it
     would double-count the block against itself and wrongly drop rows the
-    first attempt kept).  The store pin is therefore `txn_version(txn)-1`
-    on a store-committed retry (the commit our own txn published, located
-    by the txlog) and `version()` on the normal path
-    (`_resolve_retry_pin`, which raises loudly if maintenance folded
-    the pin away rather than guessing).
+    first attempt kept.  `_pin` reads at the version before the batch's
+    own store commit instead.
 
     NULL reg_domain rows (unparseable URLs) form ONE group — exactly the
     batch operator's `PARTITION BY reg_domain` NULL semantics — hashed
@@ -2196,7 +2041,7 @@ class _DomainCapStreamWriter(_DrainWriter):
 
         from apache_kafka_clickhouse_demo_spark.operators.dedup import url_parts
 
-        pin = _resolve_retry_pin(self.store, txn)
+        pin = self._pin(txn)
 
         if self.token_mode:
             # inline url_parts + the batch operator's exact charge
@@ -2229,137 +2074,103 @@ class _DomainCapStreamWriter(_DrainWriter):
             rank_col = F.row_number().over(
                 W.partitionBy(self._key()).orderBy("doc_id")
             ).cast("long")
-        ranked = parts.withColumn("_r", rank_col).withColumn(
-            "_shard", self._shard()
+        # cached: the domain probe, the survivor join and the increments
+        # all consume `ranked` — uncached, the canonicalize+window chain
+        # would re-run per consumer; block-bounded
+        ranked = self._cache(
+            parts.withColumn("_r", rank_col).withColumn("_shard", self._shard())
         )
-        # persisted: the domain probe, the survivor join and the
-        # increments all consume `ranked` — uncached, the canonicalize+
-        # window chain would re-run per consumer; block-bounded
-        ranked = ranked.persist()
-        # the try begins IMMEDIATELY after the persist, so an exception
-        # in the probe or the prior read cannot leak the cached block
-        try:
-            # ONE bounded driver action: a CAPPED distinct (shard,
-            # domain) probe — each domain maps to exactly one shard, so
-            # the pair count equals the distinct-domain count, bounded by
-            # the MAX+1 limit, never by block size (a 250k-literal isin
-            # was measured to hang analysis, so big blocks skip the
-            # pushdown instead of building one).  An over-cap block falls
-            # back to reading EVERY counter shard — bounded by
-            # `domain_shards`, and harmless to the merge: prior domains
-            # the block never mentions drop out of the left join.
-            pairs = (
-                ranked.select("_shard", "reg_domain")
-                .distinct()
-                .limit(self.MAX_PUSHDOWN_DOMAINS + 1)
-                .collect()
+        # ONE bounded driver action: a CAPPED distinct (shard, domain)
+        # probe — each domain maps to exactly one shard, so the pair
+        # count equals the distinct-domain count, bounded by the MAX+1
+        # limit, never by block size (a 250k-literal isin was measured to
+        # hang analysis, so big blocks skip the pushdown instead of
+        # building one).  An over-cap block falls back to reading EVERY
+        # counter shard — bounded by `domain_shards`, and harmless to the
+        # merge: prior domains the block never mentions drop out of the
+        # left join.
+        pairs = (
+            ranked.select("_shard", "reg_domain")
+            .distinct()
+            .limit(self.MAX_PUSHDOWN_DOMAINS + 1)
+            .collect()
+        )
+        if not pairs:
+            # idle trigger: nothing published (a half-committed retry
+            # implies the first attempt saw a non-empty block)
+            return
+        if len(pairs) <= self.MAX_PUSHDOWN_DOMAINS:
+            block_shards = sorted({r["_shard"] for r in pairs})
+            push = [r["reg_domain"] for r in pairs if r["reg_domain"] is not None]
+        else:
+            block_shards = [f"d{i}" for i in range(self.domain_shards)]
+            push = None
+        prior = self._read_prior(block_shards, pin, "reg_domain string, n long")
+        if push is not None:
+            # with maintain()'s domain-sorted shard files this prunes
+            # parquet row groups by min/max stats, so the read decodes
+            # the BLOCK's domains, not every domain a shard holds (a
+            # shard's row count grows with the TOTAL domain count; the
+            # block's does not)
+            prior = prior.filter(
+                F.col("reg_domain").isin(push) | F.col("reg_domain").isNull()
             )
-            if not pairs:
-                # idle trigger: nothing published (a half-committed
-                # retry implies the first attempt saw a non-empty block)
-                return
-            if len(pairs) <= self.MAX_PUSHDOWN_DOMAINS:
-                block_shards = sorted({r["_shard"] for r in pairs})
-                push = [
-                    r["reg_domain"] for r in pairs
-                    if r["reg_domain"] is not None
-                ]
-            else:
-                block_shards = [f"d{i}" for i in range(self.domain_shards)]
-                push = None
-            prior = self._read_prior(
-                block_shards, pin, "reg_domain string, n long"
-            )
-            if push is not None:
-                # with maintain()'s domain-sorted shard files this
-                # prunes parquet row groups by min/max stats, so the
-                # read decodes the BLOCK's domains, not every domain a
-                # shard holds (a shard's row count grows with the TOTAL
-                # domain count; the block's does not)
-                prior = prior.filter(
-                    F.col("reg_domain").isin(push)
-                    | F.col("reg_domain").isNull()
-                )
-            prior = prior.groupBy("reg_domain").agg(F.sum("n").alias("_prior"))
+        prior = prior.groupBy("reg_domain").agg(F.sum("n").alias("_prior"))
 
-            extra = ["_charge"] if self.token_mode else []
-            joined = (
-                ranked.alias("r")
-                .join(
-                    prior.alias("p"),
-                    F.col("r.reg_domain").eqNullSafe(F.col("p.reg_domain")),
-                    "left",
-                )
-                .select(
-                    F.col("r.doc_id").alias("doc_id"),
-                    F.col("r.url_norm").alias("url_norm"),
-                    F.col("r.reg_domain").alias("reg_domain"),
-                    F.col("r._r").alias("_r"),
-                    F.col("r._shard").alias("_shard"),
-                    F.coalesce(F.col("p._prior"), F.lit(0)).alias("_prior"),
-                    *[F.col(f"r.{c}").alias(c) for c in extra],
-                )
+        extra = ["_charge"] if self.token_mode else []
+        joined = (
+            ranked.alias("r")
+            .join(
+                prior.alias("p"),
+                F.col("r.reg_domain").eqNullSafe(F.col("p.reg_domain")),
+                "left",
             )
-            survivors = joined.filter(
-                F.col("_prior") + F.col("_r") <= self.cap
-            ).withColumn(
+            .select(
+                F.col("r.doc_id").alias("doc_id"),
+                F.col("r.url_norm").alias("url_norm"),
+                F.col("r.reg_domain").alias("reg_domain"),
+                F.col("r._r").alias("_r"),
+                F.col("r._shard").alias("_shard"),
+                F.coalesce(F.col("p._prior"), F.lit(0)).alias("_prior"),
+                *[F.col(f"r.{c}").alias(c) for c in extra],
+            )
+        )
+        # cached: the increment aggregate and the out append both read
+        # the survivor set; block-bounded rows
+        survivors = self._cache(
+            joined.filter(F.col("_prior") + F.col("_r") <= self.cap).withColumn(
                 "domain_rank",
                 (F.col("_prior") + F.col("_r")).cast(
                     "long" if self.token_mode else "int"
                 ),
             )
-            # persisted: the increment aggregate and the out append both
-            # read the survivor set; block-bounded rows
-            survivors = survivors.persist()
-            try:
-                if self.token_mode:
-                    # EVERY seen row's charge accumulates (see the
-                    # class docstring's batch-parity argument) — the
-                    # aggregate reads `ranked`, not the survivors
-                    increments = (
-                        ranked.groupBy("_shard", "reg_domain")
-                        .agg(F.sum("_charge").cast("long").alias("n"))
-                        .select(
-                            F.col("_shard").alias("shard"), "reg_domain", "n"
-                        )
-                    )
-                    out_df = survivors.select(
-                        "doc_id",
-                        "reg_domain",
-                        F.col("_charge").alias("doc_tokens"),
-                        F.col("domain_rank").alias("cum_tokens"),
-                    )
-                else:
-                    increments = (
-                        survivors.groupBy("_shard", "reg_domain")
-                        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                        .select(
-                            F.col("_shard").alias("shard"), "reg_domain", "n"
-                        )
-                    )
-                    out_df = survivors.select(
-                        "doc_id", "url_norm", "reg_domain", "domain_rank"
-                    )
-                if self.out_files is not None:
-                    out_df = out_df.coalesce(self.out_files)
-                # CONCURRENT staging, ORDERED commits
-                # (`_overlapped_store_out_commit`): the increment
-                # aggregate stages on a side thread while the survivors
-                # stage here; both read the persisted block caches, and
-                # the store commit still strictly precedes the out
-                # commit (the crash-window order in the class docstring)
-                _overlapped_store_out_commit(
-                    self.store,
-                    increments.repartition(F.col("shard")),
-                    "shard",
-                    self.out,
-                    out_df,
-                    txn,
-                )
-            finally:
-                survivors.unpersist()
-        finally:
-            ranked.unpersist()
+        )
+        if self.token_mode:
+            # EVERY seen row's charge accumulates (see the class
+            # docstring's batch-parity argument) — the aggregate reads
+            # `ranked`, not the survivors
+            increments = ranked.groupBy("_shard", "reg_domain").agg(
+                F.sum("_charge").cast("long").alias("n")
+            )
+            out_df = survivors.select(
+                "doc_id",
+                "reg_domain",
+                F.col("_charge").alias("doc_tokens"),
+                F.col("domain_rank").alias("cum_tokens"),
+            )
+        else:
+            increments = survivors.groupBy("_shard", "reg_domain").agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            )
+            out_df = survivors.select("doc_id", "url_norm", "reg_domain", "domain_rank")
+        if self.out_files is not None:
+            out_df = out_df.coalesce(self.out_files)
+        self._publish_pair(
+            txn,
+            increments.select(F.col("_shard").alias("shard"), "reg_domain", "n")
+            .repartition(F.col("shard")),
+            lambda: out_df,
+        )
 
 
 def domain_cap_stream(
@@ -2521,14 +2332,12 @@ class _CountMinStreamWriter(_DrainWriter):
             count_min_lookup,
         )
 
-        # nothing of an uncommitted txn is ever visible (single commit),
-        # so the current version IS the pre-block snapshot
-        pin = self.store.version()
+        pin = self._pin(txn)
 
         inc = count_min_build(
             block, self.key_col, width=self.width, depth=self.depth, salt=self.salt
         ).withColumn("shard", self._shard())
-        # persisted, then materialized by ONE bounded collect
+        # cached, then materialized by ONE bounded collect
         # (<= depth*width rows by construction): the collect is both
         # the empty-block probe and the shard-name list, and leaves the
         # cache populated for the staged write's two branches
@@ -2539,47 +2348,44 @@ class _CountMinStreamWriter(_DrainWriter):
         # s/block of LocalTableScan serialization at depth*width=4096),
         # the opposite of the dyadic twin where the upload is ~17
         # estimate rows.
-        inc = inc.persist()
-        try:
-            inc_rows = inc.select("shard").collect()
-            if not inc_rows:
-                # all keys NULL: CMS counts non-NULL keys (the batch
-                # operator's contract), so there is nothing to count
-                # and nothing is published
-                return
-            block_shards = sorted({r["shard"] for r in inc_rows})
-            prior = self._read_prior(
-                block_shards, pin, "d int, bucket int, n long"
-            ).select("d", "bucket", "n")
-            merged = (
-                prior.unionByName(inc.select("d", "bucket", "n"))
-                .groupBy("d", "bucket")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-            keys = (
-                block.select(self.key_col)
-                .filter(F.col(self.key_col).isNotNull())
-                .distinct()
-            )
-            est = count_min_lookup(
-                merged, keys, self.key_col,
-                width=self.width, depth=self.depth, salt=self.salt,
-            ).select(
-                F.lit(self.OUT_SHARD).alias("shard"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.col(self.key_col),
-                F.col("est"),
-            )
-            # CAS on the pinned version: the estimates above were
-            # derived from the snapshot at `pin`, so a concurrent
-            # appender landing between pin and publish fails this batch
-            # loudly instead of publishing estimates that silently miss
-            # its increments
-            self._publish_group(
-                txn, inc.select("shard", "d", "bucket", "n"), est, cas_version=pin
-            )
-        finally:
-            inc.unpersist()
+        inc = self._cache(inc)
+        inc_rows = inc.select("shard").collect()
+        if not inc_rows:
+            # all keys NULL: CMS counts non-NULL keys (the batch
+            # operator's contract), so there is nothing to count
+            # and nothing is published
+            return
+        block_shards = sorted({r["shard"] for r in inc_rows})
+        prior = self._read_prior(
+            block_shards, pin, "d int, bucket int, n long"
+        ).select("d", "bucket", "n")
+        merged = (
+            prior.unionByName(inc.select("d", "bucket", "n"))
+            .groupBy("d", "bucket")
+            .agg(F.sum("n").cast("long").alias("n"))
+        )
+        keys = (
+            block.select(self.key_col)
+            .filter(F.col(self.key_col).isNotNull())
+            .distinct()
+        )
+        est = count_min_lookup(
+            merged, keys, self.key_col,
+            width=self.width, depth=self.depth, salt=self.salt,
+        ).select(
+            F.lit(self.OUT_SHARD).alias("shard"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col(self.key_col),
+            F.col("est"),
+        )
+        # CAS on the pinned version: the estimates above were
+        # derived from the snapshot at `pin`, so a concurrent
+        # appender landing between pin and publish fails this batch
+        # loudly instead of publishing estimates that silently miss
+        # its increments
+        self._publish_group(
+            txn, inc.select("shard", "d", "bucket", "n"), est, cas_version=pin
+        )
 
 
 def count_min_stream(
@@ -2777,10 +2583,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             dyadic_range_counts_py,
         )
 
-        # nothing of an uncommitted txn is ever visible (single commit),
-        # so the current version IS the pre-block snapshot — no
-        # half-committed pin case exists for this writer
-        pin = self.store.version()
+        pin = self._pin(txn)
 
         inc = dyadic_cms_build(
             block,
@@ -2790,75 +2593,72 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             depth=self.depth,
             salt=self.salt,
         ).withColumn("shard", self._shard())
-        # persisted, then materialized by ONE bounded collect
+        # cached, then materialized by ONE bounded collect
         # (<= (bits+1)*depth*width rows by construction): it detects
         # the empty block, hands the driver the block cells for the
         # merge below, and leaves the cache populated so the staged
         # write's increment branch reads it instead of re-running the
         # block aggregate.
-        inc = inc.persist()
-        try:
-            block_rows = inc.collect()
-            if not block_rows:
-                # every value NULL/out-of-range: nothing countable,
-                # nothing published (the batch operator's drop
-                # contract)
-                return
-            # merge prior + block cells DRIVER-side: both sides are
-            # bounded by construction, counters are linear, and the
-            # estimate/descent rules are all-integer — bit-identical to
-            # a distributed merge, and the dict covers EVERY committed
-            # cell, so no band mass can go unread
-            merged = self._add_cells(dict(self._prior_cells(pin)), block_rows)
-            est = dyadic_range_counts_py(
+        inc = self._cache(inc)
+        block_rows = inc.collect()
+        if not block_rows:
+            # every value NULL/out-of-range: nothing countable,
+            # nothing published (the batch operator's drop
+            # contract)
+            return
+        # merge prior + block cells DRIVER-side: both sides are
+        # bounded by construction, counters are linear, and the
+        # estimate/descent rules are all-integer — bit-identical to
+        # a distributed merge, and the dict covers EVERY committed
+        # cell, so no band mass can go unread
+        merged = self._add_cells(dict(self._prior_cells(pin)), block_rows)
+        est = dyadic_range_counts_py(
+            merged,
+            self.ranges,
+            universe_bits=self.universe_bits,
+            width=self.width,
+            depth=self.depth,
+            salt=self.salt,
+        )
+        est_df = self.spark.createDataFrame(
+            [
+                (self.OUT_SHARD, int(batch_id), rid, lo, hi, e)
+                for rid, lo, hi, e in est
+            ],
+            "shard string, batch_id long, range_id int, lo long, "
+            "hi long, est long",
+        )
+        parts = [inc.select("shard", "level", "d", "bucket", "n"), est_df]
+        if self.ps:
+            # running quantiles AT INGEST: the descent over the SAME pre-append snapshot + block
+            # cells, published in the SAME single atomic commit —
+            # counters are linear, so the walk over `merged` equals
+            # the batch walk over a one-shot build of everything
+            # ingested so far, verbatim (the shared
+            # `dyadic_quantiles_py` IS the batch operator's walk)
+            qrows = dyadic_quantiles_py(
                 merged,
-                self.ranges,
+                self.ps,
                 universe_bits=self.universe_bits,
                 width=self.width,
                 depth=self.depth,
                 salt=self.salt,
             )
-            est_df = self.spark.createDataFrame(
+            q_df = self.spark.createDataFrame(
                 [
-                    (self.OUT_SHARD, int(batch_id), rid, lo, hi, e)
-                    for rid, lo, hi, e in est
+                    (self.QOUT_SHARD, int(batch_id), p, tr, qv)
+                    for p, tr, qv in qrows
                 ],
-                "shard string, batch_id long, range_id int, lo long, "
-                "hi long, est long",
+                "shard string, batch_id long, p_permille int, "
+                "target_rank long, q_value long",
             )
-            parts = [inc.select("shard", "level", "d", "bucket", "n"), est_df]
-            if self.ps:
-                # running quantiles AT INGEST: the descent over the SAME pre-append snapshot + block
-                # cells, published in the SAME single atomic commit —
-                # counters are linear, so the walk over `merged` equals
-                # the batch walk over a one-shot build of everything
-                # ingested so far, verbatim (the shared
-                # `dyadic_quantiles_py` IS the batch operator's walk)
-                qrows = dyadic_quantiles_py(
-                    merged,
-                    self.ps,
-                    universe_bits=self.universe_bits,
-                    width=self.width,
-                    depth=self.depth,
-                    salt=self.salt,
-                )
-                q_df = self.spark.createDataFrame(
-                    [
-                        (self.QOUT_SHARD, int(batch_id), p, tr, qv)
-                        for p, tr, qv in qrows
-                    ],
-                    "shard string, batch_id long, p_permille int, "
-                    "target_rank long, q_value long",
-                )
-                parts.append(q_df)
-            # CAS on the pinned version: a concurrent appender advancing
-            # the store between our pin and this publish fails the batch
-            # loudly instead of the mirror silently diverging from the
-            # sibling's committed cells
-            self._publish_group(txn, *parts, cas_version=pin)
-            self._mirror(pin + 1, content=merged)
-        finally:
-            inc.unpersist()
+            parts.append(q_df)
+        # CAS on the pinned version: a concurrent appender advancing
+        # the store between our pin and this publish fails the batch
+        # loudly instead of the mirror silently diverging from the
+        # sibling's committed cells
+        self._publish_group(txn, *parts, cas_version=pin)
+        self._mirror(pin + 1, content=merged)
 
 
 def dyadic_cms_stream(
@@ -2968,15 +2768,14 @@ class _UniqStreamWriter(_DrainWriter):
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.functions import agg_state as S
 
-        # nothing of an uncommitted txn is ever visible (single commit)
-        pin = self.store.version()
+        pin = self._pin(txn)
 
         inc = (
             block.groupBy(self.group_col)
             .agg(S.uniq_state(self.key_col, self.lg_k).alias("state"))
             .withColumn("shard", self._shard())
         )
-        # persisted: the shard collect materializes the per-group state
+        # cached: the shard collect materializes the per-group state
         # rows (<= block's distinct groups); the staged write's two
         # branches then read the cache.  A local-frame form (collect the
         # binary states, publish them from a LocalTableScan) MEASURED
@@ -2985,45 +2784,42 @@ class _UniqStreamWriter(_DrainWriter):
         # per block costs more than the two driver actions it saves, the
         # count-min LocalTableScan lesson repeated on the state-store
         # side — so this writer keeps the distributed dataflow.
-        inc = inc.persist()
-        try:
-            block_shards = sorted(
-                (inc.agg(F.collect_set("shard")).first()[0]) or []
+        inc = self._cache(inc)
+        block_shards = sorted(
+            (inc.agg(F.collect_set("shard")).first()[0]) or []
+        )
+        if not block_shards:
+            # an empty block: every group, NULL included (`_NULL_KEY`),
+            # routes to a shard, so no shard means no rows
+            return
+        gtype = block.schema[self.group_col].dataType.simpleString()
+        prior = self._read_prior(
+            block_shards, pin, f"{self.group_col} {gtype}, state binary"
+        ).select(self.group_col, "state")
+        # running estimate at ingest: union prior + block states per
+        # group, restricted to the BLOCK's groups (null-safe semi
+        # join so a NULL group accumulates like any other)
+        gc = self.group_col
+        merged = (
+            prior.unionByName(inc.select(gc, "state"))
+            .groupBy(gc)
+            .agg(S.uniq_merge("state").alias("approx_uniq"))
+        )
+        est = (
+            merged.alias("m")
+            .join(
+                inc.select(gc).distinct().alias("g"),
+                F.col(f"m.{gc}").eqNullSafe(F.col(f"g.{gc}")),
+                "leftsemi",
             )
-            if not block_shards:
-                # an empty block: every group, NULL included (`_NULL_KEY`),
-                # routes to a shard, so no shard means no rows
-                return
-            gtype = block.schema[self.group_col].dataType.simpleString()
-            prior = self._read_prior(
-                block_shards, pin, f"{self.group_col} {gtype}, state binary"
-            ).select(self.group_col, "state")
-            # running estimate at ingest: union prior + block states per
-            # group, restricted to the BLOCK's groups (null-safe semi
-            # join so a NULL group accumulates like any other)
-            gc = self.group_col
-            merged = (
-                prior.unionByName(inc.select(gc, "state"))
-                .groupBy(gc)
-                .agg(S.uniq_merge("state").alias("approx_uniq"))
+            .select(
+                F.lit(self.OUT_SHARD).alias("shard"),
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                F.col(gc),
+                F.col("approx_uniq"),
             )
-            est = (
-                merged.alias("m")
-                .join(
-                    inc.select(gc).distinct().alias("g"),
-                    F.col(f"m.{gc}").eqNullSafe(F.col(f"g.{gc}")),
-                    "leftsemi",
-                )
-                .select(
-                    F.lit(self.OUT_SHARD).alias("shard"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.col(gc),
-                    F.col("approx_uniq"),
-                )
-            )
-            self._publish_group(txn, inc.select("shard", gc, "state"), est)
-        finally:
-            inc.unpersist()
+        )
+        self._publish_group(txn, inc.select("shard", gc, "state"), est)
 
 
 def uniq_stream(
@@ -3083,13 +2879,12 @@ class _PackBinsStreamWriter(_DrainWriter):
     pack per bucket in ONE applyInPandas fold (block docs in FFD order
     — n_tokens desc, doc_id asc — first-fit into open bins by bin_id
     asc, then new bins; oversized docs open their own bin, flagged
-    `overflow`, and close immediately), then commit the new snapshot
-    generation (append_once + version-CAS — concurrent writers
-    rejected) and THEN the assignment rows to out, with
-    `_resolve_retry_pin`'s rule: assignments are a function of the
-    PRE-block snapshot, so a half-committed retry re-reads the
-    generation at `txn_version - 1` and re-derives byte-identical out
-    rows.
+    `overflow`, and close immediately), then publish the new snapshot
+    generation (store, under a version-CAS — concurrent writers
+    rejected) and the assignment rows (out) through `_publish_pair`.
+    Assignments are a function of the PRE-block snapshot, so a
+    half-committed retry re-reads the generation at its pin (`_pin`)
+    and re-derives byte-identical out rows.
 
     Batch equality (the pin): on a bucket-aligned feed — block
     boundaries never split a bucket — every bucket packs with no prior
@@ -3255,9 +3050,9 @@ class _PackBinsStreamWriter(_DrainWriter):
 
         from apache_kafka_clickhouse_demo_spark.functions import hashing as H
 
-        pin = _resolve_retry_pin(self.store, txn)
-
-        src = block.select(
+        pin = self._pin(txn)
+        # cached: the emptiness probe and the pack shuffle both read it
+        src = self._cache(block.select(
             (
                 H.h48(
                     F.concat(F.lit(self.salt), F.col(self.id_col).cast("string"))
@@ -3270,100 +3065,79 @@ class _PackBinsStreamWriter(_DrainWriter):
             F.col("doc_id").isNotNull()
             & F.col("n_tokens").isNotNull()
             & (F.col("n_tokens") >= 0)
-        )
-        # persisted: the emptiness probe and the pack shuffle both read it
-        src = src.persist()
-        try:
-            # bounded driver action: is there anything countable at all?
-            # (a half-committed retry's first attempt already saw rows)
-            if not self._resumed and src.isEmpty():
-                return  # every row dropped by the batch contract
-            prev, prev_gen, _v = self._latest(pin)
-            if prev is None:
-                prior = self.spark.createDataFrame(
-                    [], "bucket long, prior_bin long, prior_fill long"
-                )
-            else:
-                # the WHOLE snapshot rides into the pack: untouched
-                # buckets' bins (and sentinels) must carry forward into
-                # generation g+1 — the frame is <= buckets *
-                # (max_open + 1) rows by construction
-                prior = prev.select(
-                    "bucket",
-                    F.col("bin_id").alias("prior_bin"),
-                    F.col("fill").alias("prior_fill"),
-                )
-            unioned = src.select(
+        ))
+        # bounded driver action: is there anything countable at all?
+        # (a half-committed retry's first attempt already saw rows)
+        if not self._resumed and src.isEmpty():
+            return  # every row dropped by the batch contract
+        prev, prev_gen, _v = self._latest(pin)
+        if prev is None:
+            prior = self.spark.createDataFrame(
+                [], "bucket long, prior_bin long, prior_fill long"
+            )
+        else:
+            # the WHOLE snapshot rides into the pack: untouched
+            # buckets' bins (and sentinels) must carry forward into
+            # generation g+1 — the frame is <= buckets *
+            # (max_open + 1) rows by construction
+            prior = prev.select(
                 "bucket",
-                "doc_id",
-                "n_tokens",
-                F.lit(None).cast("long").alias("prior_bin"),
-                F.lit(None).cast("long").alias("prior_fill"),
-            ).unionByName(
-                prior.select(
-                    "bucket",
-                    F.lit(None).cast("long").alias("doc_id"),
-                    F.lit(None).cast("long").alias("n_tokens"),
-                    "prior_bin",
-                    "prior_fill",
-                )
+                F.col("bin_id").alias("prior_bin"),
+                F.col("fill").alias("prior_fill"),
             )
-            out_schema = T.StructType(
-                [
-                    T.StructField("bucket", T.LongType()),
-                    T.StructField("bin_id", T.LongType()),
-                    T.StructField("doc_id", T.LongType()),
-                    T.StructField("n_tokens", T.LongType()),
-                    T.StructField("bin_fill", T.LongType()),
-                    T.StructField("overflow", T.BooleanType()),
-                    T.StructField("is_open", T.BooleanType()),
-                ]
+        unioned = src.select(
+            "bucket",
+            "doc_id",
+            "n_tokens",
+            F.lit(None).cast("long").alias("prior_bin"),
+            F.lit(None).cast("long").alias("prior_fill"),
+        ).unionByName(
+            prior.select(
+                "bucket",
+                F.lit(None).cast("long").alias("doc_id"),
+                F.lit(None).cast("long").alias("n_tokens"),
+                "prior_bin",
+                "prior_fill",
             )
-            packed = unioned.groupBy("bucket").applyInPandas(
-                self._pack_fn(), out_schema
-            )
-            # persisted: the snapshot write and the out append both read
-            # the fold's output; <= block + buckets*(max_open+1) rows
-            packed = packed.persist()
-            try:
-                snapshot = packed.filter(F.col("is_open")).select(
-                    F.lit(prev_gen + 1).cast("long").alias("gen"),
-                    "bucket",
-                    "bin_id",
-                    F.col("bin_fill").alias("fill"),
-                )
-                out_df = packed.filter(~F.col("is_open")).select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "bucket",
-                    "bin_id",
-                    "doc_id",
-                    "n_tokens",
-                    "bin_fill",
-                    "overflow",
-                )
-                # CONCURRENT staging, ORDERED commits: snapshot and
-                # assignment rows both read the persisted fold output;
-                # the snapshot's version-CAS commit still strictly
-                # precedes the out commit
-                with self._cas_guard():
-                    _overlapped_store_out_commit(
-                        self.store,
-                        snapshot,
-                        None,
-                        self.out,
-                        out_df,
-                        txn,
-                        store_cas_version=_v,
-                    )
-                # both commits landed: generation prev_gen+1 is committed
-                # at version _v+1 whichever attempt published it (on a
-                # half-committed retry the pin rule guarantees the same
-                # pair)
-                self._mirror(_v + 1, prev_gen + 1)
-            finally:
-                packed.unpersist()
-        finally:
-            src.unpersist()
+        )
+        out_schema = T.StructType(
+            [
+                T.StructField("bucket", T.LongType()),
+                T.StructField("bin_id", T.LongType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("n_tokens", T.LongType()),
+                T.StructField("bin_fill", T.LongType()),
+                T.StructField("overflow", T.BooleanType()),
+                T.StructField("is_open", T.BooleanType()),
+            ]
+        )
+        # cached: the snapshot write and the out append both read the
+        # fold's output; <= block + buckets*(max_open+1) rows
+        packed = self._cache(
+            unioned.groupBy("bucket").applyInPandas(self._pack_fn(), out_schema)
+        )
+        snapshot = packed.filter(F.col("is_open")).select(
+            F.lit(prev_gen + 1).cast("long").alias("gen"),
+            "bucket",
+            "bin_id",
+            F.col("bin_fill").alias("fill"),
+        )
+        out_df = packed.filter(~F.col("is_open")).select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            "bucket",
+            "bin_id",
+            "doc_id",
+            "n_tokens",
+            "bin_fill",
+            "overflow",
+        )
+        self._publish_pair(
+            txn, snapshot, lambda: out_df, partition_by=None, cas_version=_v
+        )
+        # both commits landed: generation prev_gen+1 is committed at
+        # version _v+1 whichever attempt published it (on a
+        # half-committed retry the pin rule guarantees the same pair)
+        self._mirror(_v + 1, prev_gen + 1)
 
 
 def pack_bins_stream(

@@ -1214,12 +1214,14 @@ def test_expected_corpus_rows_sizes_writer_shards(spark, tmp_path):
 def test_candidate_chain_failure_joins_appender_and_retry_is_clean(
     spark, tmp_path, monkeypatch
 ):
-    """r9 concurrent protocol: when the candidate chain fails mid-block,
-    process() must JOIN the side append thread before the failure
-    propagates (append_once retries of one txn must be sequential), and
-    the foreachBatch retry of the same batch must produce the same final
-    state a crash-free run would — no duplicate store commits for the
-    txn, correct survivors."""
+    """When the candidate chain fails mid-block, process() must join the
+    concurrent store staging before the failure propagates (retries of
+    one txn must be sequential), commit NOTHING, reclaim the staged store
+    files and release the block's caches; the foreachBatch retry of the
+    same batch must produce the same final state a crash-free run would —
+    one store commit for the txn, correct survivors."""
+    import os
+
     from apache_kafka_clickhouse_demo_spark.sources import txlog as TX
     from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
@@ -1235,7 +1237,7 @@ def test_candidate_chain_failure_joins_appender_and_retry_is_clean(
     texts = _distinct_texts(5, "seed")
     writer.process(_docs_df(spark, list(enumerate(texts))), 0)
 
-    # fail the batch AFTER the append thread has started: the band-pruned
+    # fail the batch AFTER the store staging has started: the band-pruned
     # store read raises once, simulating a transient executor/read error
     orig = TX.TransactionalTable.read_where
     calls = {"n": 0}
@@ -1248,19 +1250,29 @@ def test_candidate_chain_failure_joins_appender_and_retry_is_clean(
 
     monkeypatch.setattr(TX.TransactionalTable, "read_where", flaky)
     block = _docs_df(spark, [(50, texts[0] + " tail"), (51, "all novel terms")])
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="injected"):
         writer.process(block, 1)
     monkeypatch.setattr(TX.TransactionalTable, "read_where", orig)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
     store = TransactionalTable(str(tmp_path / "store" / "store"))
-    # the failed attempt's append thread was joined before the raise, so
-    # its commit (if any) is fully published — never in-flight here
+    # the store staging was joined before the raise: nothing of the
+    # failed attempt is committed, and none of its staged files remain
+    assert not any(t.endswith(":1") for t in store.committed_txns())
+    on_disk = {
+        os.path.join(dp, n)
+        for dp, _d, ns in os.walk(store.path)
+        for n in ns
+        if n.endswith(".parquet")
+    }
+    assert on_disk == set(store.data_files())
     v_failed = store.version()
 
-    # the retry (same batch id) must no-op the store append and publish
-    # the out exactly once, with the same decisions
+    # the retry (same batch id) runs the whole block once: one store
+    # commit, one out commit, the same decisions
     writer.process(block, 1)
-    assert store.version() == v_failed  # no second commit for the txn
+    assert store.version() == v_failed + 1
     txns = [
         t for t in store.committed_txns() if t.endswith(":1")
     ]
@@ -1699,8 +1711,10 @@ def test_domain_cap_stream_half_committed_retry_rederives_survivors(
     import pytest
 
     block = _urls_df(spark, [(2, a + "2"), (3, a + "3")])
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="injected"):
         w.process(block, 1)  # store committed, out did not
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
     assert w.store.txn_committed("w:1") and not w.out.txn_committed("w:1")
 
     w.process(block, 1)  # retry: must keep doc 2 ONLY (slot 2 of 2)

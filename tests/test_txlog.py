@@ -639,38 +639,51 @@ def test_two_phase_append_cas_rejection_reclaims_staging(spark, tmp_path):
     assert t.read(spark).count() == 10  # 0-5 and 10-15 only
 
 
-def test_overlapped_store_out_commit_orders_and_recovers(spark, tmp_path):
-    """_overlapped_store_out_commit: concurrent staging publishes both
-    tables; a half-committed retry (store committed, out not — the only
-    crash window) publishes out exactly once; a side-staging failure
-    commits NOTHING and reclaims the out staging."""
+def test_publish_pair_orders_and_recovers(spark, tmp_path):
+    """_DrainWriter._publish_pair: concurrent staging publishes both
+    tables; a fully committed replay no-ops; a half-committed retry
+    (store committed, out not — the only crash window) publishes out
+    exactly once; a failure on EITHER staging side commits nothing and
+    leaves no staged file behind in either table."""
+    import time
+
     import pytest
 
-    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
-        _overlapped_store_out_commit,
-    )
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import _DrainWriter
 
-    store = TransactionalTable(str(tmp_path / "store"))
-    out = TransactionalTable(str(tmp_path / "out"))
-    sdf = _df(spark, 0, 4)
-    odf = _df(spark, 4, 10)
+    class _Pair(_DrainWriter):
+        _commit_order = ("store", "out")
 
-    _overlapped_store_out_commit(store, sdf, None, out, odf, "w:0")
+        def _process(self, block, batch_id, txn):
+            self._publish_pair(txn, self.store_df, self.out_fn, partition_by=None)
+
+    def parquet_on_disk(t):
+        return {
+            os.path.join(dp, n)
+            for dp, _d, ns in os.walk(t.path)
+            if ".staging-" not in dp
+            for n in ns
+            if n.endswith(".parquet")
+        }
+
+    w = _Pair(spark, "w")
+    store = w.store = TransactionalTable(str(tmp_path / "store"))
+    out = w.out = TransactionalTable(str(tmp_path / "out"))
+    w.store_df, w.out_fn = _df(spark, 0, 4), lambda: _df(spark, 4, 10)
+    w.process(None, 0)
     assert store.read(spark).count() == 4
     assert out.read(spark).count() == 6
     assert store.txn_committed("w:0") and out.txn_committed("w:0")
 
     # replay of the fully-committed txn: no-ops on both sides
-    _overlapped_store_out_commit(store, sdf, None, out, odf, "w:0")
-    assert store.read(spark).count() == 4
-    assert out.read(spark).count() == 6
+    w.process(None, 0)
+    assert (store.version(), out.version()) == (0, 0)
 
     # half-committed retry: store already has w:1, out does not
-    store.append_once(_df(spark, 20, 22), txn="w:1")
-    _overlapped_store_out_commit(
-        store, _df(spark, 20, 22), None, out, _df(spark, 22, 25), "w:1"
-    )
-    assert store.read(spark).count() == 6  # store side no-oped
+    store.append(_df(spark, 20, 22), txn="w:1")
+    w.store_df, w.out_fn = _df(spark, 20, 22), lambda: _df(spark, 22, 25)
+    w.process(None, 1)
+    assert store.read(spark).count() == 6  # store side skipped
     assert out.read(spark).count() == 9
 
     # side (store) staging failure: nothing committed, out staging gone
@@ -678,20 +691,24 @@ def test_overlapped_store_out_commit_orders_and_recovers(spark, tmp_path):
         def stage_for_append(self, df, partition_by=None):
             raise RuntimeError("injected staging failure")
 
-    boom = _Boom(str(tmp_path / "store"))
-    before_out_files = set(out.data_files())
-    with pytest.raises(RuntimeError, match="injected"):
-        _overlapped_store_out_commit(
-            boom, sdf, None, out, _df(spark, 30, 33), "w:2"
-        )
-    assert not store.txn_committed("w:2") and not out.txn_committed("w:2")
-    assert set(out.data_files()) == before_out_files
-    # no stray staged files left in the out table directory
-    committed = set(out.data_files())  # absolute paths
-    on_disk = {
-        os.path.join(dp, n)
-        for dp, _d, ns in os.walk(out.path)
-        for n in ns
-        if n.endswith(".parquet")
-    }
-    assert on_disk == committed
+    w.store = _Boom(store.path)
+    w.store_df, w.out_fn = _df(spark, 30, 33), lambda: _df(spark, 33, 36)
+    with pytest.raises(RuntimeError, match="injected staging"):
+        w.process(None, 2)
+    w.store = store
+
+    # caller-side (out) failure once the store rows are staged: the
+    # store's staged files are reclaimed too
+    def out_fails():
+        deadline = time.time() + 60
+        while parquet_on_disk(store) == set(store.data_files()):
+            assert time.time() < deadline, "store staging never landed"
+            time.sleep(0.05)
+        raise RuntimeError("injected out failure")
+
+    w.out_fn = out_fails
+    with pytest.raises(RuntimeError, match="injected out"):
+        w.process(None, 2)
+    for t in (store, out):
+        assert not t.txn_committed("w:2")
+        assert parquet_on_disk(t) == set(t.data_files())
