@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 
 from apache_kafka_clickhouse_demo_spark.functions import hashing as H
 from apache_kafka_clickhouse_demo_spark.functions import text as TX
+from apache_kafka_clickhouse_demo_spark.functions import vectors as V
+from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
 from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
 from apache_kafka_clickhouse_demo_spark.streaming.stateful import shards_for_store
@@ -116,6 +118,20 @@ def _segment_frames(
     return postings.unionByName(meta)
 
 
+def _fresh_index(path: str, kind: str, extend: str) -> TransactionalTable:
+    """The table a build creates at `path`.  A path that already holds a
+    committed index raises — re-running a create over an existing index
+    would double-publish segment 0's stats; extension is the explicit
+    API, not a silent second create."""
+    table = TransactionalTable(path)
+    if table.version() >= 0:
+        raise ValueError(
+            f"{kind} at {path} already built (version {table.version()}); "
+            f"grow it with {extend}, or rebuild into a fresh path"
+        )
+    return table
+
+
 def build_term_index(
     docs: DataFrame,
     path: str,
@@ -126,9 +142,7 @@ def build_term_index(
 ) -> TransactionalTable:
     """Create the inverted index at `path` from `docs` (the first
     SEGMENT); grow it later with `extend_term_index`.  A path that
-    already holds a committed index raises — re-running a create over an
-    existing index would double-publish segment 0's stats; extension is
-    the explicit API, not a silent second create.
+    already holds a committed index raises (`_fresh_index`).
 
     One explode -> (doc, term) count aggregate (the build's single
     corpus-scale shuffle, map-side partials), doc length carried through
@@ -145,12 +159,7 @@ def build_term_index(
             expected_corpus_rows = docs.count() * 100
         n_shards = shards_for_store(expected_corpus_rows)
     seg = _segment_frames(docs, n_shards, text_col, id_col)
-    table = TransactionalTable(path)
-    if table.version() >= 0:
-        raise ValueError(
-            f"index at {path} already built (version {table.version()}); "
-            "grow it with extend_term_index, or rebuild into a fresh path"
-        )
+    table = _fresh_index(path, "index", "extend_term_index")
     # CAS at version 0: two concurrent creators both passing the check
     # above would otherwise both append (retrying version numbers is
     # append()'s normal contention behavior) and publish TWO segment-0
@@ -242,8 +251,7 @@ def index_meta(
     rows = table.read_where(spark, "shard", [META_SHARD], version=version)
     # the assert rides INSIDE the consumed value (assert_true is NULL on
     # success, so coalesce passes min through) — a separate checked
-    # column would be pruned away with its check (the r9 lesson: pruned
-    # work never runs)
+    # column would be pruned away with its check (pruned work never runs)
     checked = F.coalesce(
         F.assert_true(
             F.min("n_shards") == F.max("n_shards"),
@@ -402,22 +410,48 @@ def phrase_lookup(
 
 
 # ---------------------------------------------------------------------------
-# Persisted ANN index (the embedding twin of the term index)
+# Persisted IVF indexes: ANN (the embedding twin of the term index) and IVFPQ
 # ---------------------------------------------------------------------------
 
 #: centroid partition value (one row per IVF centroid — bounded by the
 #: quantizer's fixed target, broadcastable at any corpus size)
 ANN_CENT_SHARD = "cent"
 
+#: PQ codebook shard (bounded: ~m * target_codes rows, fixed at creation)
+PQ_CB_SHARD = "cb"
 
-def _ann_nulls() -> dict:
-    return {
-        "vid": F.lit(None).cast("long"),
-        "nv": F.lit(None).cast("array<double>"),
-        "cv": F.lit(None).cast("array<double>"),
-        "n_vecs": F.lit(None).cast("long"),
-        "n_shards": F.lit(None).cast("long"),
-    }
+#: the IVFPQ store schema in stored order (column -> type); the ANN store
+#: is the `_ANN_COLS` subset in the same order
+_IVF_COLS = {
+    "cent_id": "long",
+    "vid": "long",
+    "nv": "array<double>",
+    "cv": "array<double>",
+    "sub_m": "int",
+    "code": "long",
+    "n_vecs": "long",
+    "n_shards": "long",
+    "pq_m": "long",
+    "dim": "long",
+}
+_ANN_COLS = ("cent_id", "vid", "nv", "cv", "n_vecs", "n_shards")
+
+
+def _ivf_row(shard, *names, cols=tuple(_IVF_COLS), **vals):
+    """One projection over an IVF store schema: `shard` plus every column
+    of `cols`, typed per `_IVF_COLS` — the same-named input column for
+    `names`, the given expression for `vals`, NULL otherwise.  Every row
+    kind of both stores (assignment / code / centroid / codebook / meta)
+    projects through here, so the single-commit frames can never drift
+    schemas."""
+    vals.update((c, F.col(c)) for c in names)
+    return [shard.alias("shard")] + [
+        vals.get(c, F.lit(None)).cast(_IVF_COLS[c]).alias(c) for c in cols
+    ]
+
+
+def _vshard(n_shards: int):
+    return F.concat(F.lit("v"), (F.col("cent_id") % n_shards).cast("string"))
 
 
 def _ann_segment_frames(
@@ -425,42 +459,207 @@ def _ann_segment_frames(
 ) -> DataFrame:
     """One ANN segment as a single frame: assignment rows + this
     segment's meta row, plus the centroid rows when `cents` is given
-    (creation only — centroids are FIXED at creation, extensions never
-    add or move them)."""
-    nulls = _ann_nulls()
-    arows = assign.select(
-        F.concat(F.lit("v"), (F.col("cent_id") % n_shards).cast("string")).alias(
-            "shard"
-        ),
-        F.col("cent_id").cast("long").alias("cent_id"),
-        F.col("vid").cast("long").alias("vid"),
-        F.col("nv").alias("nv"),
-        nulls["cv"].alias("cv"),
-        nulls["n_vecs"].alias("n_vecs"),
-        nulls["n_shards"].alias("n_shards"),
-    )
-    meta = counted.agg(F.count(F.lit(1)).cast("long").alias("n_vecs")).select(
-        F.lit(META_SHARD).alias("shard"),
-        F.lit(None).cast("long").alias("cent_id"),
-        nulls["vid"].alias("vid"),
-        nulls["nv"].alias("nv"),
-        nulls["cv"].alias("cv"),
-        "n_vecs",
-        F.lit(int(n_shards)).cast("long").alias("n_shards"),
-    )
-    out = arows.unionByName(meta)
-    if cents is not None:
-        crows = cents.select(
-            F.lit(ANN_CENT_SHARD).alias("shard"),
-            F.col("cent_id").cast("long").alias("cent_id"),
-            nulls["vid"].alias("vid"),
-            nulls["nv"].alias("nv"),
-            F.col("cv").alias("cv"),
-            nulls["n_vecs"].alias("n_vecs"),
-            nulls["n_shards"].alias("n_shards"),
+    (creation and recluster only — extensions never add or move
+    centroids)."""
+    meta = counted.agg(F.count(F.lit(1)).alias("n_vecs"))
+    out = assign.select(
+        *_ivf_row(_vshard(n_shards), "cent_id", "vid", "nv", cols=_ANN_COLS)
+    ).unionByName(
+        meta.select(
+            *_ivf_row(
+                F.lit(META_SHARD), "n_vecs", cols=_ANN_COLS, n_shards=F.lit(n_shards)
+            )
         )
-        out = out.unionByName(crows)
+    )
+    if cents is not None:
+        out = out.unionByName(
+            cents.select(
+                *_ivf_row(F.lit(ANN_CENT_SHARD), "cent_id", "cv", cols=_ANN_COLS)
+            )
+        )
     return out
+
+
+def _ivfpq_segment_frames(
+    assign: DataFrame,
+    codes: DataFrame,
+    n_shards: int,
+    pq_m: int,
+    dim: int,
+    cents: DataFrame | None = None,
+    cb: DataFrame | None = None,
+) -> DataFrame:
+    """One IVFPQ segment as a single frame — published in ONE atomic
+    commit (build: CAS at version -1; extend: one append keyed by the
+    caller's txn), so a reader pinned at any version sees assignments,
+    codes, codebooks and centroids that agree (the two-table alternative
+    would re-open the torn-read window the group-commit drains closed):
+
+        shard = "v<cent_id % n_shards>"  assignment rows (cent_id, vid,
+                                         nv) AND code rows (cent_id,
+                                         vid, sub_m, code) — code rows
+                                         have sub_m set, assignment
+                                         rows don't; parquet column
+                                         pruning means a serving read
+                                         that selects only (cent_id,
+                                         vid, sub_m, code) never
+                                         decodes the nv bytes
+        shard = "cent"                   centroid rows (creation only)
+        shard = "cb"                     PQ codebook rows (creation
+                                         only; bounded m*target_codes)
+        shard = "m"                      meta (n_vecs, n_shards, pq_m,
+                                         dim) — stored data, the
+                                         term-index modulus rule
+    """
+    vshard = _vshard(n_shards)
+    arows = assign.select(*_ivf_row(vshard, "cent_id", "vid", "nv"))
+    # codes carry their cell so a probed shard read needs NO join back
+    # to the assignment rows: (vid, sub_m, code) x cell membership
+    crows = codes.join(assign.select("vid", "cent_id"), "vid").select(
+        *_ivf_row(vshard, "cent_id", "vid", "code", sub_m=F.col("m"))
+    )
+    meta = assign.agg(F.count(F.lit(1)).alias("n_vecs")).select(
+        *_ivf_row(
+            F.lit(META_SHARD), "n_vecs", n_shards=F.lit(n_shards),
+            pq_m=F.lit(pq_m), dim=F.lit(dim),
+        )
+    )
+    out = arows.unionByName(crows).unionByName(meta)
+    if cents is not None:
+        out = out.unionByName(
+            cents.select(*_ivf_row(F.lit(ANN_CENT_SHARD), "cent_id", "cv"))
+        )
+    if cb is not None:
+        out = out.unionByName(
+            cb.select(*_ivf_row(F.lit(PQ_CB_SHARD), "code", "cv", sub_m=F.col("m")))
+        )
+    return out
+
+
+def _ivf_meta(rows: DataFrame, path: str) -> tuple[int, ...]:
+    """(n_vecs, *creation-fixed columns) from an IVF store's meta rows:
+    n_vecs SUMS the per-segment rows (the term index's merge-on-read
+    algebra); every creation-fixed column the store carries (n_shards,
+    plus pq_m and dim on IVFPQ) is invariant across segments by
+    construction, and min==max is checked DRIVER-side (a driver lookup,
+    so the check cannot be pruned away): a damaged store fails loudly
+    instead of mis-routing."""
+    fixed = [c for c in ("n_shards", "pq_m", "dim") if c in rows.columns]
+    n_vecs, *bounds = rows.agg(
+        F.sum("n_vecs"), *[agg(c) for c in fixed for agg in (F.min, F.max)]
+    ).first()
+    for c, lo, hi in zip(fixed, bounds[::2], bounds[1::2]):
+        if lo != hi:
+            raise ValueError(
+                f"{path}: index meta rows disagree on {c} ({lo} != {hi}) — "
+                "corrupted store"
+            )
+    return (int(n_vecs), *map(int, bounds[::2]))
+
+
+def _ivf_generation(
+    vecs: DataFrame, n: int, target_centroids: int | None, salt: str,
+    refine_rounds: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(cents, assign): a new centroid generation over `n` normalized
+    (vid, nv) rows — the founding draw of both `build_*` paths and the
+    fresh draw of both `maintain_*(recluster=True)` passes.  The shared
+    scan-path quantizer decisions (`similarity._ivf_k`, `_ivf_draw`,
+    `_ivf_assign`), then `refine_rounds` shared integer-micro Lloyd
+    rounds (`similarity._lloyd_rounds`, the exact `kmeans_refine`
+    iteration) when asked.  Refined centroids keep their donor's
+    cent_id, so shard routing, extend and lookup are
+    generation-agnostic; a centroid whose cell empties vanishes (the
+    stated Lloyd degeneracy), never leaving an unprobeable stored
+    cell."""
+    k = _S._ivf_k(n, target_centroids)
+    cents = _S._ivf_draw(vecs, n, k, salt)
+    # the hash sample CAN come up empty on a small corpus (P ~ (1 -
+    # 1/modulus)^n).  For the ephemeral scan path that is a visible empty
+    # result; for a PERSISTED index it would be a durable footgun — the
+    # generation is fixed until the next recluster, so every later lookup
+    # and extension would silently return nothing.
+    if cents.isEmpty():
+        raise ValueError(
+            f"hash-sampled zero centroids from {n} vectors — pass a larger "
+            "target_centroids, or draw from more vectors"
+        )
+    assign = _S._ivf_assign(vecs, cents, k, salt)
+    if refine_rounds > 0:
+        cents, assign = _S._lloyd_rounds(assign, refine_rounds, k, salt)
+    return cents, assign
+
+
+def _ivf_extend(
+    emb: DataFrame,
+    table: TransactionalTable,
+    vec_col: str,
+    id_col: str,
+    salt: str,
+    params: tuple[int, ...] | None,
+) -> tuple[int, tuple[int, ...], DataFrame]:
+    """The extend core both IVF stores share: pin the table version, read
+    the STORED centroids at the pin, normalize the new vectors and assign
+    them with the shared one-hop / two-level argmax.  `params` is (*the
+    store's creation-fixed meta columns, K); both are fixed at creation
+    (the stored-modulus and fixed-generation rules), so a repeat caller —
+    the streaming writer extending every block — passes back the params
+    this returned instead of re-paying the meta and centroid-count jobs.
+    Returns (pin, params, assign)."""
+    spark = emb.sparkSession
+    pin = table.version()
+    cents = table.read_where(
+        spark, "shard", [ANN_CENT_SHARD], version=pin
+    ).select("cent_id", "cv")
+    if params is None:
+        meta = table.read_where(spark, "shard", [META_SHARD], version=pin)
+        # K is one bounded count: the centroid table is fixed-size
+        params = (*_ivf_meta(meta, table.path)[1:], cents.count())
+    vecs = _S._ivf_vecs(emb, vec_col, id_col)
+    return pin, params, _S._ivf_assign(vecs, cents, params[-1], salt)
+
+
+def _publish_extension(
+    table: TransactionalTable, seg: DataFrame, txn: str | None
+) -> TransactionalTable:
+    """Append one extension segment; under a `txn`, idempotently (a txn
+    that already committed makes the call a no-op)."""
+    if txn is None:
+        table.append(seg, partition_by="shard")
+    else:
+        table.append_once(seg, txn=txn, partition_by="shard")
+    return table
+
+
+def _maintain_ivf(
+    spark: SparkSession,
+    table: TransactionalTable,
+    recluster: bool,
+    target_centroids: int | None,
+    salt: str,
+    refine_rounds: int,
+    frames,
+) -> int:
+    """The maintenance pass both IVF stores share: compaction, or a
+    recluster transform that reads the snapshot's meta, draws a fresh
+    generation over every stored vector and hands (snap, vecs, cents,
+    assign, *creation-fixed meta) to the store's `frames` builder."""
+    if not recluster:
+        return table.optimize(spark, partition_by="shard")
+
+    def _recluster(snap: DataFrame) -> DataFrame:
+        n_vecs, *fixed = _ivf_meta(
+            snap.filter(F.col("shard") == META_SHARD), table.path
+        )
+        vecs = snap.filter(
+            F.col("shard").startswith("v") & F.col("nv").isNotNull()
+        ).select("vid", "nv")
+        cents, assign = _ivf_generation(
+            vecs, n_vecs, target_centroids, salt, refine_rounds
+        )
+        return frames(snap, vecs, cents, assign, *fixed)
+
+    return table.optimize(spark, partition_by="shard", transform=_recluster)
 
 
 def build_ann_index(
@@ -478,11 +677,11 @@ def build_ann_index(
     """Persist the IVF structure once — centroids + normalized cell
     assignments — so ANN queries against a SERVING corpus read only
     their probed cells instead of re-quantizing 100 TB per query batch.
-    Same quantizer as `similarity.ivf_topk`/`dedup.semantic_dedup`
-    (`ivf_quantize`, shared by import), so the stored index answers
-    bit-identically to the scan path (test contract).  Grow it later
-    with `extend_ann_index` (or continuously with
-    `streaming.stateful.ann_index_stream`).
+    Same quantizer decisions as `similarity.ivf_topk`/`dedup.
+    semantic_dedup` (the shared `similarity._ivf_*` helpers), so the
+    stored index answers bit-identically to the scan path (test
+    contract).  Grow it later with `extend_ann_index` (or continuously
+    with `streaming.stateful.ann_index_stream`).
 
     Layout (one atomic CAS commit at version 0, build-once like the
     term index's segment 0; `txn` stamps the commit for the streaming
@@ -497,63 +696,25 @@ def build_ann_index(
 
     Cells bucket into shards (`shards_for_store` on the corpus row
     count) so directory count stays object-store-friendly while a
-    probe still reads O(nprobe) shards per query batch.  Pass the
-    EVENTUAL corpus size as `corpus_count`/`expected` sizing when the
-    index will grow — both the shard modulus and the centroid set are
-    fixed at creation.
+    probe still reads O(nprobe) shards per query batch.  `corpus_count`
+    is `emb`'s row count (it fixes the draw's modulus; without it one
+    memoized count runs).  Pass `n_shards` sized for the EVENTUAL corpus
+    when the index will grow — both the shard modulus and the centroid
+    set are fixed at creation.
 
-    ``refine_rounds=N`` (r15, VERDICT r14 #2): found the index on the
-    TRAINED quantizer instead of the one-shot draw — N integer-micro
-    Lloyd rounds (`similarity._lloyd_rounds`, the exact shared
-    `kmeans_refine` iteration, so the stored generation is bit-identical
-    to the gate-attested kmeans_clusters path) before anything is
-    persisted.  Refined centroids keep the founding donor's cent_id, so
-    shard routing, extend, and lookup are generation-agnostic; a
-    centroid whose cell empties vanishes (the stated Lloyd degeneracy),
-    never leaving an unprobeable stored cell.
+    ``refine_rounds=N``: found the index on the TRAINED quantizer
+    instead of the one-shot draw — N integer-micro Lloyd rounds before
+    anything is persisted, so the stored generation is bit-identical to
+    the gate-attested kmeans_clusters path (see `_ivf_generation`).
     """
-    from apache_kafka_clickhouse_demo_spark.operators.similarity import (
-        _lloyd_rounds,
-        _memoized_count,
-        ivf_quantize,
+    table = _fresh_index(path, "ANN index", "extend_ann_index")
+    n = corpus_count if corpus_count is not None else _S._memoized_count(emb)
+    cents, assign = _ivf_generation(
+        _S._ivf_vecs(emb, vec_col, id_col), n, target_centroids, salt,
+        refine_rounds,
     )
-
-    if refine_rounds > 0 and corpus_count is None:
-        corpus_count = _memoized_count(emb)
-    cents, assign = ivf_quantize(
-        emb, target_centroids, vec_col, id_col, salt, corpus_count
-    )
-    if refine_rounds > 0:
-        import math
-
-        k = (
-            target_centroids
-            if target_centroids
-            else max(1, math.isqrt(corpus_count))
-        )
-        cents, assign = _lloyd_rounds(assign, refine_rounds, k, salt)
     if n_shards is None:
-        if corpus_count is None:
-            corpus_count = emb.count()
-        n_shards = shards_for_store(corpus_count)
-
-    table = TransactionalTable(path)
-    if table.version() >= 0:
-        raise ValueError(
-            f"ANN index at {path} already built (version {table.version()}); "
-            "grow it with extend_ann_index, or rebuild into a fresh path"
-        )
-    # loud guard (self-review r11): the hash sample CAN come up empty on
-    # a small founding segment (P ~ (1 - 1/modulus)^n).  For the
-    # ephemeral scan path that is a visible empty result; for a PERSISTED
-    # index it would be a durable footgun — centroids are fixed at
-    # creation, so every later lookup and extension would silently
-    # return nothing.
-    if cents.isEmpty():
-        raise ValueError(
-            "founding segment hash-sampled zero centroids — found the "
-            "index on a larger block, or pass a smaller target_centroids"
-        )
+        n_shards = shards_for_store(n)
     table.append(
         _ann_segment_frames(assign, emb, n_shards, cents),
         partition_by="shard",
@@ -566,25 +727,26 @@ def build_ann_index(
 def ann_index_meta(
     spark: SparkSession, table: TransactionalTable, version: int | None = None
 ) -> tuple[int, int]:
-    """(n_vecs, n_shards) corpus stats: n_vecs SUMS the per-segment meta
-    rows (the term index's merge-on-read algebra); n_shards is invariant
-    across segments by construction and min==max is checked DRIVER-side
-    (this is a driver lookup, so the check cannot be pruned away)."""
-    row = (
-        table.read_where(spark, "shard", [META_SHARD], version=version)
-        .agg(
-            F.sum("n_vecs").alias("nv"),
-            F.min("n_shards").alias("mn"),
-            F.max("n_shards").alias("mx"),
-        )
-        .first()
+    """(n_vecs, n_shards) corpus stats via `_ivf_meta`: n_vecs SUMS the
+    per-segment meta rows; n_shards is the checked invariant."""
+    return _ivf_meta(
+        table.read_where(spark, "shard", [META_SHARD], version=version),
+        table.path,
     )
-    if row["mn"] != row["mx"]:
-        raise ValueError(
-            f"{table.path}: ANN index meta rows disagree on n_shards "
-            f"({row['mn']} != {row['mx']}) — corrupted store"
-        )
-    return int(row["nv"]), int(row["mn"])
+
+
+def _ann_extension(
+    emb: DataFrame,
+    table: TransactionalTable,
+    vec_col: str,
+    id_col: str,
+    salt: str,
+    params: tuple[int, int] | None = None,
+) -> tuple[DataFrame, tuple[int, int]]:
+    """(segment, params): one unpublished ANN extension segment built by
+    the shared extend core; params = (n_shards, K)."""
+    _, params, assign = _ivf_extend(emb, table, vec_col, id_col, salt, params)
+    return _ann_segment_frames(assign, emb, params[0], None), params
 
 
 def extend_ann_index(
@@ -594,61 +756,31 @@ def extend_ann_index(
     id_col: str = "vec_id",
     salt: str = "ivf:",
     txn: str | None = None,
-    params: tuple[int, int] | None = None,
 ) -> TransactionalTable:
     """Append a segment of NEW vectors to an existing ANN index — the
     term index's Lucene-segment model on the embedding side: new vectors
     are assigned against the STORED centroids (read at one pinned
     version, with the stored shard modulus — the term-index
     stored-modulus rule), and the segment publishes its assignment rows
-    plus its own meta row in one atomic commit.
+    plus its own meta row in one atomic commit (exactly once per `txn`
+    when one is given).
 
     Contract: each vec_id appears in exactly ONE segment (append-only
     corpus; dedupe upstream).  Centroids are FIXED at creation — the
     IVF contract: extension assigns, it never re-trains, so cell
     balance (and recall) degrade as the corpus drifts from the founding
     segment's distribution.  That trade is stated, not hidden: a real
-    serving pipeline rebuilds into a fresh path on a schedule, and the
-    fixed-centroid semantics are exactly SQL-expressible, so the grown
-    index stays ORACLE-exact (extra `ann_indexed_grown`).
+    serving pipeline reclusters (`maintain_ann_index(recluster=True)`)
+    or rebuilds on a schedule, and the fixed-centroid semantics are
+    exactly SQL-expressible, so the grown index stays ORACLE-exact
+    (extra `ann_indexed_grown`).
 
-    Assignment runs the same one-hop / two-level split as the shared
-    quantizer (two-level above `similarity._TWO_LEVEL_MIN_CENTROIDS`,
-    bit-identical by the pinned equality tests); K comes from the
-    bounded centroid table (one bounded count — the centroid set is
-    broadcastable by construction).
+    Assignment runs the shared one-hop / two-level switch
+    (`similarity._ivf_assign`, bit-identical by the pinned equality
+    tests); K comes from the bounded centroid table.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import vectors as V
-    from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
-
-    spark = emb.sparkSession
-    pin = table.version()
-    if params is not None:
-        # r15: (n_shards, k) are creation-fixed by the extend contract,
-        # so a repeat caller (the streaming writer) passes them back
-        # instead of re-paying the meta + centroid-count jobs per block
-        n_shards, k = params
-    else:
-        _, n_shards = ann_index_meta(spark, table, version=pin)
-        k = None
-    cents = table.read_where(
-        spark, "shard", [ANN_CENT_SHARD], version=pin
-    ).select("cent_id", "cv")
-    vecs = spread_small(emb).select(
-        F.col(id_col).alias("vid"), V.normalize(vec_col).alias("nv")
-    )
-    if k is None:
-        k = cents.count()  # bounded: the centroid table is fixed-size
-    if k > _S._TWO_LEVEL_MIN_CENTROIDS:
-        assign = _S._assign_two_level(vecs, cents, k, salt)
-    else:
-        assign = _S._assign_one_hop(vecs, cents)
-    seg = _ann_segment_frames(assign, emb, n_shards, None)
-    if txn is not None:
-        table.append_once(seg, txn=txn, partition_by="shard")
-    else:
-        table.append(seg, partition_by="shard")
-    return table
+    seg, _ = _ann_extension(emb, table, vec_col, id_col, salt)
+    return _publish_extension(table, seg, txn)
 
 
 def maintain_ann_index(
@@ -667,11 +799,11 @@ def maintain_ann_index(
     pay O(segments) files until maintenance).  Per-segment meta rows are
     ordinary rows: preserved by the rewrite, merged only at read.
 
-    ``recluster=True`` (r12, VERDICT r11 #3): found a NEW centroid
-    GENERATION.  `extend_ann_index` honestly fixes centroids at
-    creation, so after heavy corpus drift cell sizes skew and probe
-    cost degrades (a probed head cell rereads an ever-larger slice of
-    the corpus).  The recluster pass:
+    ``recluster=True``: found a NEW centroid GENERATION.
+    `extend_ann_index` honestly fixes centroids at creation, so after
+    heavy corpus drift cell sizes skew and probe cost degrades (a probed
+    head cell rereads an ever-larger slice of the corpus).  The
+    recluster pass:
 
     - hash-samples a fresh fixed-target centroid draw over ALL
       segments' vectors (same deterministic `h48(salt || vid) %
@@ -694,59 +826,15 @@ def maintain_ann_index(
     isqrt(n_vecs) — the same self-tuning rule as `ivf_quantize`, now
     sized by the grown corpus instead of the founding segment.
 
-    ``refine_rounds=N`` (r15, VERDICT r14 #2): train the fresh draw
-    with N shared integer-micro Lloyd rounds before the swap — see
-    `build_ann_index`.
+    ``refine_rounds=N``: train the fresh draw with N shared
+    integer-micro Lloyd rounds before the swap — see `build_ann_index`.
     """
-    if not recluster:
-        return table.optimize(spark, partition_by="shard")
-
-    import math
-
-    from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
-
-    def _recluster(snap: DataFrame) -> DataFrame:
-        meta = (
-            snap.filter(F.col("shard") == META_SHARD)
-            .agg(
-                F.sum("n_vecs").alias("nv"),
-                F.min("n_shards").alias("mn"),
-                F.max("n_shards").alias("mx"),
-            )
-            .first()
-        )
-        if meta["mn"] != meta["mx"]:
-            raise ValueError(
-                f"{table.path}: ANN index meta rows disagree on n_shards "
-                f"({meta['mn']} != {meta['mx']}) — corrupted store"
-            )
-        n_vecs, n_shards = int(meta["nv"]), int(meta["mn"])
-        vecs = snap.filter(F.col("shard").startswith("v")).select("vid", "nv")
-        k = target_centroids if target_centroids else max(1, math.isqrt(n_vecs))
-        modulus = max(1, n_vecs // k)
-        cents = vecs.filter(
-            H.h48(F.concat(F.lit(salt), F.col("vid").cast("string"))) % modulus
-            == 0
-        ).select(F.col("vid").alias("cent_id"), F.col("nv").alias("cv"))
-        # the build_ann_index founding guard, same reasoning: an empty
-        # draw would durably publish an index no lookup can probe
-        if cents.isEmpty():
-            raise ValueError(
-                "recluster hash-sampled zero centroids — pass a larger "
-                "target_centroids or recluster after more growth"
-            )
-        if k > _S._TWO_LEVEL_MIN_CENTROIDS:
-            assign = _S._assign_two_level(vecs, cents, k, salt)
-        else:
-            assign = _S._assign_one_hop(vecs, cents)
-        if refine_rounds > 0:
-            # r15 (VERDICT r14 #2): train the fresh generation with the
-            # shared integer-micro Lloyd rounds before the CAS swap —
-            # same transform hook, one replace-commit either way
-            cents, assign = _S._lloyd_rounds(assign, refine_rounds, k, salt)
-        return _ann_segment_frames(assign, vecs, n_shards, cents)
-
-    return table.optimize(spark, partition_by="shard", transform=_recluster)
+    return _maintain_ivf(
+        spark, table, recluster, target_centroids, salt, refine_rounds,
+        lambda snap, vecs, cents, assign, n_shards: _ann_segment_frames(
+            assign, vecs, n_shards, cents
+        ),
+    )
 
 
 def ann_index_lookup(
@@ -769,12 +857,6 @@ def ann_index_lookup(
     (pinned by test).  `version=None` pins the current committed version
     once so the meta, centroid, and assignment reads are one snapshot
     (the bm25_lookup torn-read argument)."""
-    from apache_kafka_clickhouse_demo_spark.functions import vectors as V
-    from apache_kafka_clickhouse_demo_spark.operators.similarity import (
-        ivf_probe_topk,
-    )
-    from pyspark.sql import Window
-
     if version is None:
         version = table.version()
     # ann_index_meta, not a bare .first(): a GROWN index holds one meta
@@ -788,20 +870,12 @@ def ann_index_lookup(
         F.col(id_col).alias("query_id"), V.normalize(vec_col).alias("qn")
     )
     # bounded driver action: the probe-cell set (|queries| x nprobe ids)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cent_id")
-    )
     probe_cells = [
         r["cent_id"]
-        for r in (
-            q.crossJoin(F.broadcast(cents))
-            .select("query_id", "cent_id", V.dot("qn", "cv").alias("ccos"))
-            .withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= nprobe)
-            .select("cent_id")
-            .distinct()
-            .collect()
-        )
+        for r in _S._ivf_probes(q, cents, nprobe)
+        .select("cent_id")
+        .distinct()
+        .collect()
     ]
     shards = sorted({f"v{c % n_shards}" for c in probe_cells})
     assign = (
@@ -809,129 +883,7 @@ def ann_index_lookup(
         .filter(F.col("cent_id").isin(probe_cells))
         .select(F.col("vid").alias("neighbor_id"), "nv", "cent_id")
     )
-    return ivf_probe_topk(cents, assign, q, k, nprobe)
-
-
-# ---------------------------------------------------------------------------
-# Persisted IVF-PQ index (r14, VERDICT r13 #4)
-# ---------------------------------------------------------------------------
-
-#: PQ codebook shard (bounded: ~m * target_codes rows, fixed at creation)
-PQ_CB_SHARD = "cb"
-
-
-def _ivfpq_nulls() -> dict:
-    return {
-        "cent_id": F.lit(None).cast("long"),
-        "vid": F.lit(None).cast("long"),
-        "nv": F.lit(None).cast("array<double>"),
-        "cv": F.lit(None).cast("array<double>"),
-        "sub_m": F.lit(None).cast("int"),
-        "code": F.lit(None).cast("long"),
-        "n_vecs": F.lit(None).cast("long"),
-        "n_shards": F.lit(None).cast("long"),
-        "pq_m": F.lit(None).cast("long"),
-        "dim": F.lit(None).cast("long"),
-    }
-
-
-def _ivfpq_row(shard, **cols):
-    """One projection over the unified IVFPQ schema: `shard` plus every
-    column from `_ivfpq_nulls()`, overridden by `cols`.  All five row
-    kinds (assignment / code / centroid / codebook / meta) project
-    through here, so the single-commit frames can never drift schemas
-    (the unified-schema file contract the drains pinned in r13)."""
-    nulls = _ivfpq_nulls()
-    return [shard.alias("shard")] + [
-        (cols[k] if k in cols else nulls[k]).alias(k) for k in nulls
-    ]
-
-
-def _ivfpq_segment_frames(
-    assign: DataFrame,
-    codes: DataFrame,
-    n_shards: int,
-    pq_m: int,
-    dim: int,
-    cents: DataFrame | None = None,
-    cb: DataFrame | None = None,
-) -> DataFrame:
-    """One IVFPQ segment as a single frame — published in ONE atomic
-    commit (build: CAS at version -1; extend: append/append_once), so a
-    reader pinned at any version sees assignments, codes, codebooks and
-    centroids that agree (the two-table alternative would re-open the
-    torn-read window the group-commit drains closed in r13):
-
-        shard = "v<cent_id % n_shards>"  assignment rows (cent_id, vid,
-                                         nv) AND code rows (cent_id,
-                                         vid, sub_m, code) — code rows
-                                         have sub_m set, assignment
-                                         rows don't; parquet column
-                                         pruning means a serving read
-                                         that selects only (cent_id,
-                                         vid, sub_m, code) never
-                                         decodes the nv bytes
-        shard = "cent"                   centroid rows (creation only)
-        shard = "cb"                     PQ codebook rows (creation
-                                         only; bounded m*target_codes)
-        shard = "m"                      meta (n_vecs, n_shards, pq_m,
-                                         dim) — stored data, the
-                                         term-index modulus rule
-    """
-    vshard = F.concat(F.lit("v"), (F.col("cent_id") % n_shards).cast("string"))
-    arows = assign.select(
-        *_ivfpq_row(
-            vshard,
-            cent_id=F.col("cent_id").cast("long"),
-            vid=F.col("vid").cast("long"),
-            nv=F.col("nv"),
-        )
-    )
-    # codes carry their cell so a probed shard read needs NO join back
-    # to the assignment rows: (vid, sub_m, code) x cell membership
-    crows = codes.join(
-        assign.select("vid", "cent_id"), "vid"
-    ).select(
-        *_ivfpq_row(
-            vshard,
-            cent_id=F.col("cent_id").cast("long"),
-            vid=F.col("vid").cast("long"),
-            sub_m=F.col("m").cast("int"),
-            code=F.col("code").cast("long"),
-        )
-    )
-    meta = assign.agg(F.count(F.lit(1)).cast("long").alias("_n")).select(
-        *_ivfpq_row(
-            F.lit(META_SHARD),
-            n_vecs=F.col("_n"),
-            n_shards=F.lit(int(n_shards)).cast("long"),
-            pq_m=F.lit(int(pq_m)).cast("long"),
-            dim=F.lit(int(dim)).cast("long"),
-        )
-    )
-    out = arows.unionByName(crows).unionByName(meta)
-    if cents is not None:
-        out = out.unionByName(
-            cents.select(
-                *_ivfpq_row(
-                    F.lit(ANN_CENT_SHARD),
-                    cent_id=F.col("cent_id").cast("long"),
-                    cv=F.col("cv"),
-                )
-            )
-        )
-    if cb is not None:
-        out = out.unionByName(
-            cb.select(
-                *_ivfpq_row(
-                    F.lit(PQ_CB_SHARD),
-                    sub_m=F.col("m").cast("int"),
-                    code=F.col("code").cast("long"),
-                    cv=F.col("cv"),
-                )
-            )
-        )
-    return out
+    return _S.ivf_probe_topk(cents, assign, q, k, nprobe)
 
 
 def build_ivfpq_index(
@@ -954,65 +906,47 @@ def build_ivfpq_index(
     centroids, PQ codebooks, cell assignments AND the m-code compressed
     corpus — so `ivfpq_index_lookup` reads committed codes from nprobe
     shards only, never re-running the linear encode pass the scan-path
-    `similarity.ivfpq_topk` pays per invocation (VERDICT r13 #4: at
-    gate scale those one-time builds WERE the row's wall; at 100 TB
-    they are a once-per-index-lifetime cost, not a per-query one).
+    `similarity.ivfpq_topk` pays per invocation (at gate scale those
+    one-time builds WERE the row's wall; at 100 TB they are a
+    once-per-index-lifetime cost, not a per-query one).
 
-    Same quantizer (`ivf_quantize`) and encoder (`pq_codes` /
-    `_pq_encode_sub`) as the scan path, by import — the stored index
-    answers bit-identically to `ivfpq_topk` on the same corpus (pinned
-    by tests/test_search_index.py).  Both the centroid set and the PQ
+    Same quantizer decisions (the founding generation `build_ann_index`
+    draws) and encoder (`pq_codes` / `_pq_encode_sub`) as the scan
+    path, by import — the stored index answers bit-identically to
+    `ivfpq_topk` on the same corpus (pinned by
+    tests/test_search_index.py).  Both the centroid set and the PQ
     codebooks are FIXED at creation (the extend contract); recluster
     re-founds centroids but codes are codebook-relative and survive a
-    recluster untouched.
+    recluster untouched.  `corpus_count` and `n_shards` follow
+    `build_ann_index`.
 
-    ``refine_rounds=N`` (r15, VERDICT r14 #2): train the COARSE
-    quantizer with N shared integer-micro Lloyd rounds before founding
-    (see `build_ann_index`).  The PQ codebooks are trained on subvector
-    content independent of cell membership, so refinement changes ONLY
-    which cell each code row lives in — no re-encode, ADC distances
-    unchanged by construction.
+    ``refine_rounds=N``: train the COARSE quantizer with N shared
+    integer-micro Lloyd rounds before founding (see `build_ann_index`).
+    The PQ codebooks are trained on subvector content independent of
+    cell membership, so refinement changes ONLY which cell each code
+    row lives in — no re-encode, ADC distances unchanged by
+    construction.
     """
-    from apache_kafka_clickhouse_demo_spark.operators.similarity import (
-        _lloyd_rounds,
-        _memoized_count,
-        ivf_quantize,
-        pq_codes,
+    table = _fresh_index(path, "IVFPQ index", "extend_ivfpq_index")
+    n = corpus_count if corpus_count is not None else _S._memoized_count(emb)
+    cents, assign = _ivf_generation(
+        _S._ivf_vecs(emb, vec_col, id_col), n, target_centroids, ivf_salt,
+        refine_rounds,
     )
-
-    n = corpus_count if corpus_count is not None else _memoized_count(emb)
-    cents, assign = ivf_quantize(emb, target_centroids, vec_col, id_col, ivf_salt, n)
-    if refine_rounds > 0:
-        import math
-
-        k = target_centroids if target_centroids else max(1, math.isqrt(n))
-        cents, assign = _lloyd_rounds(assign, refine_rounds, k, ivf_salt)
-    cb, codes = pq_codes(
+    cb, codes = _S.pq_codes(
         emb, dim, m=m, target_codes=target_codes,
         vec_col=vec_col, id_col=id_col, salt=pq_salt, corpus_count=n,
     )
-    if n_shards is None:
-        n_shards = shards_for_store(n)
-
-    table = TransactionalTable(path)
-    if table.version() >= 0:
-        raise ValueError(
-            f"IVFPQ index at {path} already built (version {table.version()}); "
-            "grow it with extend_ivfpq_index, or rebuild into a fresh path"
-        )
-    # the build_ann_index founding guards, doubled: an empty centroid OR
-    # codebook draw would durably publish an index no lookup can answer
-    if cents.isEmpty():
-        raise ValueError(
-            "founding segment hash-sampled zero centroids — found the "
-            "index on a larger block, or pass a smaller target_centroids"
-        )
+    # the centroid guard's twin: an empty codebook draw would durably
+    # publish an index no lookup can answer
     if cb.isEmpty():
         raise ValueError(
             "founding segment hash-sampled zero PQ codebook entries — "
             "found the index on a larger block, or pass a smaller "
             "target_codes"
         )
+    if n_shards is None:
+        n_shards = shards_for_store(n)
     table.append(
         _ivfpq_segment_frames(assign, codes, n_shards, m, dim, cents, cb),
         partition_by="shard",
@@ -1025,84 +959,30 @@ def build_ivfpq_index(
 def ivfpq_index_meta(
     spark: SparkSession, table: TransactionalTable, version: int | None = None
 ) -> tuple[int, int, int, int]:
-    """(n_vecs, n_shards, pq_m, dim): n_vecs SUMS per-segment meta rows;
-    the other three are creation-fixed invariants, min==max checked
-    driver-side like `ann_index_meta`."""
-    row = (
-        table.read_where(spark, "shard", [META_SHARD], version=version)
-        .agg(
-            F.sum("n_vecs").alias("nv"),
-            F.min("n_shards").alias("sn"), F.max("n_shards").alias("sx"),
-            F.min("pq_m").alias("mn"), F.max("pq_m").alias("mx"),
-            F.min("dim").alias("dn"), F.max("dim").alias("dx"),
-        )
-        .first()
+    """(n_vecs, n_shards, pq_m, dim) via `_ivf_meta`: n_vecs SUMS
+    per-segment meta rows; the other three are creation-fixed
+    invariants, min==max checked driver-side."""
+    return _ivf_meta(
+        table.read_where(spark, "shard", [META_SHARD], version=version),
+        table.path,
     )
-    for lo, hi, what in (
-        (row["sn"], row["sx"], "n_shards"),
-        (row["mn"], row["mx"], "pq_m"),
-        (row["dn"], row["dx"], "dim"),
-    ):
-        if lo != hi:
-            raise ValueError(
-                f"{table.path}: IVFPQ meta rows disagree on {what} "
-                f"({lo} != {hi}) — corrupted store"
-            )
-    return int(row["nv"]), int(row["sn"]), int(row["mn"]), int(row["dn"])
 
 
-def extend_ivfpq_index(
+def _ivfpq_extension(
     emb: DataFrame,
     table: TransactionalTable,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    ivf_salt: str = "ivf:",
-    txn: str | None = None,
-    check_duplicates: bool = False,
+    vec_col: str,
+    id_col: str,
+    salt: str,
     params: tuple[int, int, int, int] | None = None,
-) -> TransactionalTable:
-    """Append a segment of NEW vectors: assign against the STORED
-    centroids and encode against the STORED codebooks (both read at one
-    pinned version with the stored modulus/params — nothing re-trained,
-    the fixed-generation contract `extend_ann_index` states for
-    centroids, extended here to the PQ codebooks), publishing
-    assignment rows + code rows + the segment's meta row in ONE atomic
-    commit.
-
-    The NEW-vectors contract is load-bearing (ADVICE r14): a vid fed
-    twice lands duplicate code rows, and `ivfpq_index_lookup`'s
-    groupBy-sum would double that vid's ADC distance — a silently
-    corrupted ranking, not an error.  The streaming writer's txn replay
-    guard only deduplicates whole replayed BLOCKS; it cannot see a
-    caller re-feeding the same vids in a fresh txn.  Pass
-    ``check_duplicates=True`` to anti-join-assert the segment against
-    the stored vid set before committing — one extra index-linear
-    semi-join, so it is opt-in for bulk loads where the caller already
-    owns the uniqueness invariant."""
-    from apache_kafka_clickhouse_demo_spark.functions import vectors as V
-    from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
-
+    check_duplicates: bool = False,
+) -> tuple[DataFrame, tuple[int, int, int, int]]:
+    """(segment, params): one unpublished IVFPQ extension segment — the
+    shared extend core plus the codebook read at the same pin and the
+    encode; params = (n_shards, pq_m, dim, K)."""
     spark = emb.sparkSession
-    pin = table.version()
-    if params is not None:
-        # r15: (n_shards, pq_m, dim, k) are ALL creation-fixed by the
-        # extend contract (the stored-modulus / fixed-generation rules
-        # this docstring states), so a repeat caller — the streaming
-        # writer extending every block — passes them back instead of
-        # re-paying the meta aggregate + centroid count jobs per block.
-        n_shards, pq_m, dim, k = params
-    else:
-        _, n_shards, pq_m, dim = ivfpq_index_meta(spark, table, version=pin)
-        k = None
-    cents = table.read_where(
-        spark, "shard", [ANN_CENT_SHARD], version=pin
-    ).select("cent_id", "cv")
-    cb = table.read_where(spark, "shard", [PQ_CB_SHARD], version=pin).select(
-        F.col("sub_m").alias("m"), "code", "cv"
-    )
-    vecs = spread_small(emb).select(
-        F.col(id_col).alias("vid"), V.normalize(vec_col).alias("nv")
-    )
+    pin, params, assign = _ivf_extend(emb, table, vec_col, id_col, salt, params)
+    n_shards, pq_m, dim, _ = params
     if check_duplicates:
         # index-linear semi-join (vid columns only — parquet never reads
         # the vector/code bytes); fails loudly instead of letting a
@@ -1113,7 +993,8 @@ def extend_ivfpq_index(
             .select("vid")
         )
         dup = (
-            vecs.select("vid")
+            _S._ivf_vecs(emb, vec_col, id_col)
+            .select("vid")
             .join(stored_vids, "vid", "left_semi")
             .limit(5)
             .collect()
@@ -1124,19 +1005,44 @@ def extend_ivfpq_index(
                 f"the index (e.g. {sorted(r['vid'] for r in dup)}) — "
                 "duplicate code rows would corrupt ADC rankings"
             )
-    if k is None:
-        k = cents.count()  # bounded: the centroid table is fixed-size
-    if k > _S._TWO_LEVEL_MIN_CENTROIDS:
-        assign = _S._assign_two_level(vecs, cents, k, ivf_salt)
-    else:
-        assign = _S._assign_one_hop(vecs, cents)
+    cb = table.read_where(spark, "shard", [PQ_CB_SHARD], version=pin).select(
+        F.col("sub_m").alias("m"), "code", "cv"
+    )
     codes = _S.pq_encode(emb, cb, dim, pq_m, vec_col, id_col)
-    seg = _ivfpq_segment_frames(assign, codes, n_shards, pq_m, dim)
-    if txn is not None:
-        table.append_once(seg, txn=txn, partition_by="shard")
-    else:
-        table.append(seg, partition_by="shard")
-    return table
+    return _ivfpq_segment_frames(assign, codes, n_shards, pq_m, dim), params
+
+
+def extend_ivfpq_index(
+    emb: DataFrame,
+    table: TransactionalTable,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    ivf_salt: str = "ivf:",
+    txn: str | None = None,
+    check_duplicates: bool = False,
+) -> TransactionalTable:
+    """Append a segment of NEW vectors: assign against the STORED
+    centroids and encode against the STORED codebooks (both read at one
+    pinned version with the stored modulus/params — nothing re-trained,
+    the fixed-generation contract `extend_ann_index` states for
+    centroids, extended here to the PQ codebooks), publishing
+    assignment rows + code rows + the segment's meta row in ONE atomic
+    commit (exactly once per `txn` when one is given).
+
+    The NEW-vectors contract is load-bearing: a vid fed twice lands
+    duplicate code rows, and `ivfpq_index_lookup`'s groupBy-sum would
+    double that vid's ADC distance — a silently corrupted ranking, not
+    an error.  The streaming writer's txn replay guard only
+    deduplicates whole replayed BLOCKS; it cannot see a caller
+    re-feeding the same vids in a fresh txn.  Pass
+    ``check_duplicates=True`` to anti-join-assert the segment against
+    the stored vid set before committing — one extra index-linear
+    semi-join, so it is opt-in for bulk loads where the caller already
+    owns the uniqueness invariant."""
+    seg, _ = _ivfpq_extension(
+        emb, table, vec_col, id_col, ivf_salt, check_duplicates=check_duplicates
+    )
+    return _publish_extension(table, seg, txn)
 
 
 def maintain_ivfpq_index(
@@ -1156,71 +1062,24 @@ def maintain_ivfpq_index(
     preserved verbatim and simply follow their vector into its new
     cell (no re-encode: ADC distances are unchanged by construction,
     which is what makes the reclustered index answer exactly like a
-    same-generation rebuild).  Codebooks and dim/pq_m meta survive the
+    same-generation rebuild; with ``refine_rounds=N`` they follow it
+    into its refined cell).  Codebooks and dim/pq_m meta survive the
     swap; one CAS replace-commit via `TransactionalTable.optimize`."""
-    if not recluster:
-        return table.optimize(spark, partition_by="shard")
 
-    import math
-
-    from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
-
-    def _recluster(snap: DataFrame) -> DataFrame:
-        meta = (
-            snap.filter(F.col("shard") == META_SHARD)
-            .agg(
-                F.sum("n_vecs").alias("nv"),
-                F.min("n_shards").alias("sn"), F.max("n_shards").alias("sx"),
-                F.min("pq_m").alias("mn"), F.max("pq_m").alias("mx"),
-                F.min("dim").alias("dn"), F.max("dim").alias("dx"),
-            )
-            .first()
-        )
-        for lo, hi, what in (
-            (meta["sn"], meta["sx"], "n_shards"),
-            (meta["mn"], meta["mx"], "pq_m"),
-            (meta["dn"], meta["dx"], "dim"),
-        ):
-            if lo != hi:
-                raise ValueError(
-                    f"{table.path}: IVFPQ meta rows disagree on {what} "
-                    f"({lo} != {hi}) — corrupted store"
-                )
-        n_vecs, n_shards = int(meta["nv"]), int(meta["sn"])
-        pq_m, dim = int(meta["mn"]), int(meta["dn"])
-        vrows = snap.filter(F.col("shard").startswith("v"))
-        vecs = vrows.filter(F.col("sub_m").isNull()).select("vid", "nv")
-        old_codes = vrows.filter(F.col("sub_m").isNotNull()).select(
-            "vid", F.col("sub_m").alias("m"), "code"
-        )
+    def frames(snap, vecs, cents, assign, n_shards, pq_m, dim):
+        old_codes = snap.filter(
+            F.col("shard").startswith("v") & F.col("sub_m").isNotNull()
+        ).select("vid", F.col("sub_m").alias("m"), "code")
         cb = snap.filter(F.col("shard") == PQ_CB_SHARD).select(
             F.col("sub_m").alias("m"), "code", "cv"
         )
-        k = target_centroids if target_centroids else max(1, math.isqrt(n_vecs))
-        modulus = max(1, n_vecs // k)
-        cents = vecs.filter(
-            H.h48(F.concat(F.lit(salt), F.col("vid").cast("string"))) % modulus
-            == 0
-        ).select(F.col("vid").alias("cent_id"), F.col("nv").alias("cv"))
-        if cents.isEmpty():
-            raise ValueError(
-                "recluster hash-sampled zero centroids — pass a larger "
-                "target_centroids or recluster after more growth"
-            )
-        if k > _S._TWO_LEVEL_MIN_CENTROIDS:
-            assign = _S._assign_two_level(vecs, cents, k, salt)
-        else:
-            assign = _S._assign_one_hop(vecs, cents)
-        if refine_rounds > 0:
-            # r15 (VERDICT r14 #2): shared Lloyd training of the fresh
-            # generation; codes are codebook-relative and follow their
-            # vector into its refined cell verbatim — no re-encode
-            cents, assign = _S._lloyd_rounds(assign, refine_rounds, k, salt)
         return _ivfpq_segment_frames(
             assign, old_codes, n_shards, pq_m, dim, cents, cb
         )
 
-    return table.optimize(spark, partition_by="shard", transform=_recluster)
+    return _maintain_ivf(
+        spark, table, recluster, target_centroids, salt, refine_rounds, frames
+    )
 
 
 def ivfpq_index_lookup(
@@ -1241,16 +1100,12 @@ def ivfpq_index_lookup(
     ADC-score against the query's bounded distance table.  No linear
     pass anywhere at query time; answers are bit-identical to the scan
     path `similarity.ivfpq_topk` on the same corpus (pinned by test) —
-    ranking via the SHARED `_adc_rank_topk`.
+    the SHARED probe (`_ivf_probes`) and ranking (`_adc_rank_topk`).
 
     Assumes vids are unique across segments (the extend contract):
     duplicate code rows for a vid would double its ADC sum in the
     groupBy below and corrupt the ranking — see
     `extend_ivfpq_index(check_duplicates=True)` for the loud guard."""
-    from apache_kafka_clickhouse_demo_spark.functions import vectors as V
-    from apache_kafka_clickhouse_demo_spark.operators import similarity as _S
-    from pyspark.sql import Window
-
     if version is None:
         version = table.version()
     _, n_shards, pq_m, dim = ivfpq_index_meta(spark, table, version=version)
@@ -1263,19 +1118,11 @@ def ivfpq_index_lookup(
     q = queries.select(
         F.col(id_col).alias("query_id"), V.normalize(vec_col).alias("qn")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cent_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("query_id", "cent_id", V.dot("qn", "cv").alias("ccos"))
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cent_id")
-    )
     # bounded driver action: the probe-cell set (<= |queries| x nprobe
     # ids), same class as ann_index_lookup's broadcast planning
-    probe_rows = probes.collect()
+    probe_rows = (
+        _S._ivf_probes(q, cents, nprobe).select("query_id", "cent_id").collect()
+    )
     probe_cells = sorted({r["cent_id"] for r in probe_rows})
     shards = sorted({f"v{c % n_shards}" for c in probe_cells})
     pairs = spark.createDataFrame(probe_rows, "query_id long, cent_id long")

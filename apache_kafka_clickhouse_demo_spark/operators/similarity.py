@@ -5,7 +5,7 @@
   per-QUERY hotspot: a window row_number() funnels the whole scored
   corpus into #query sorted partitions, while here every (query,
   partition) group reduces independently and the final merge handles
-  only k-length lists.  Honest cost note (code-review r6): the slice is
+  only k-length lists.  Honest cost note: the slice is
   a post-aggregation expression, so the exchange between the phases
   still carries the grouped entries — O(scored rows), not O(q x k x
   partitions).  That is acceptable by design: brute force is the
@@ -29,6 +29,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_kafka_clickhouse_demo_spark.functions import hashing as H
 from apache_kafka_clickhouse_demo_spark.functions.hashing import _lcg
 from apache_kafka_clickhouse_demo_spark.functions import vectors as V
 from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
@@ -43,11 +44,11 @@ _COUNT_CACHE: dict[tuple[str, int, int], int] = {}
 def _memoized_count(df: DataFrame) -> int:
     """Scalar count memoized per (session, semantic plan, data version):
     repeated builds of the same query don't re-scan the corpus just to
-    re-derive the IVF sampling modulus (ADVICE r3).  Falls back to a plain
-    count when the plan has no stable semantic hash.
+    re-derive the IVF sampling modulus.  Falls back to a plain count
+    when the plan has no stable semantic hash.
 
-    Key design (VERDICT r4 #5 / ADVICE r4): `spark.app.id` — unique per
-    SparkSession lifetime — instead of `id(session)`, whose address a new
+    Key design: `spark.app.id` — unique per SparkSession lifetime —
+    instead of `id(session)`, whose address a new
     session can reuse after GC; plus the sorted `inputFiles()` list as a
     data-version fingerprint, so appending files to a table (same semantic
     plan, new data) invalidates the cached count instead of silently fixing
@@ -197,7 +198,7 @@ def sq8_topk(
     cos_sim the QUANTIZED approximation (the operator's honest output —
     a float rerank is the caller's composition)."""
     qz = sq8_quantize(corpus, vec_col, id_col).persist()
-    # quantize the QUERIES' own vectors (review r7) — the input contract
+    # quantize the QUERIES' own vectors — the input contract
     # every sibling ANN operator has: a query id absent from the corpus
     # still scores, and a query row's embedding is what gets scored even
     # if the corpus carries a different vector under the same id.  For
@@ -474,33 +475,65 @@ def ivf_quantize(
     decisions, and a copy would let the two silently drift.  The single
     driver action is the memoized corpus count (see `ivf_topk`).
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-
     n = corpus_count if corpus_count is not None else _memoized_count(corpus)
-    if target_centroids is None:
-        # Self-tuning default (VERDICT r6 #4): K = isqrt(n) balances the
-        # two quadratic costs that bound IVF-family operators — centroid
-        # assignment is O(n*K) and within-cell work is O(n * n/K) — so
-        # sqrt(n) minimizes their sum and keeps BOTH sub-linear per row as
-        # the corpus grows, instead of a fixed K whose cells grow linearly.
-        # math.isqrt is exact integer sqrt; the DuckDB oracle mirrors it as
-        # floor(sqrt(n)) in doubles, which agrees for every n < 2^52 (far
-        # beyond any oracle-checked corpus; a 100 TB corpus is ~1e11 rows).
-        target_centroids = max(1, math.isqrt(n))
-    modulus = max(1, n // target_centroids)
+    k = _ivf_k(n, target_centroids)
+    vecs = _ivf_vecs(corpus, vec_col, id_col)
+    cents = _ivf_draw(vecs, n, k, salt)
+    return cents, _ivf_assign(vecs, cents, k, salt)
 
-    vecs = spread_small(corpus).select(
+
+def _ivf_k(n: int, target: int | None) -> int:
+    """The IVF centroid count: `target`, else the self-tuning default
+    K = isqrt(n).  That default balances the two quadratic costs that
+    bound IVF-family operators — centroid assignment is O(n*K) and
+    within-cell work is O(n * n/K) — so sqrt(n) minimizes their sum and
+    keeps BOTH sub-linear per row as the corpus grows, instead of a
+    fixed K whose cells grow linearly.  math.isqrt is exact integer
+    sqrt; the DuckDB oracle mirrors it as floor(sqrt(n)) in doubles,
+    which agrees for every n < 2^52 (far beyond any oracle-checked
+    corpus; a 100 TB corpus is ~1e11 rows)."""
+    return target if target else max(1, math.isqrt(n))
+
+
+def _ivf_vecs(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(vid, nv): the corpus-side IVF input, normalized once."""
+    return spread_small(df).select(
         F.col(id_col).alias("vid"), V.normalize(vec_col).alias("nv")
     )
-    cents = vecs.filter(
+
+
+def _ivf_draw(vecs: DataFrame, n: int, k: int, salt: str) -> DataFrame:
+    """The centroid draw (cent_id, cv) over normalized (vid, nv) rows:
+    h48(salt || vid) % max(1, n div k) == 0, so the expected draw is ~k
+    rows at any corpus size and exactly SQL-expressible."""
+    modulus = max(1, n // k)
+    return vecs.filter(
         H.h48(F.concat(F.lit(salt), F.col("vid").cast("string"))) % modulus == 0
     ).select(F.col("vid").alias("cent_id"), F.col("nv").alias("cv"))
 
-    if target_centroids > _TWO_LEVEL_MIN_CENTROIDS:
-        assign = _assign_two_level(vecs, cents, target_centroids, salt)
-    else:
-        assign = _assign_one_hop(vecs, cents)
-    return cents, assign
+
+def _ivf_assign(
+    vecs: DataFrame, cents: DataFrame, k: int, salt: str
+) -> DataFrame:
+    """(vid, cent_id, nv) argmax-cosine assignment: two-level above
+    `_TWO_LEVEL_MIN_CENTROIDS` (read at call time), one-hop below; both
+    make the identical decision, so the switch only picks the plan."""
+    if k > _TWO_LEVEL_MIN_CENTROIDS:
+        return _assign_two_level(vecs, cents, k, salt)
+    return _assign_one_hop(vecs, cents)
+
+
+def _ivf_probes(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qn, cent_id): each query's `nprobe` best centroids by
+    (cos desc, cent_id) — a window over the small query side."""
+    wq = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select("query_id", "qn", "cent_id", V.dot("qn", "cv").alias("ccos"))
+        .withColumn("_rn", F.row_number().over(wq))
+        .filter(F.col("_rn") <= nprobe)
+        .select("query_id", "qn", "cent_id")
+    )
 
 
 def _assign_one_hop(vecs, cents):
@@ -533,7 +566,7 @@ def _super_target(k: int) -> int:
     the choice is MEASURED, not assumed.  The bound pass costs n*S dots
     of pure overhead when a cell's bound fails to prune, so raising S
     only pays if the extra supers collapse the surviving-candidate set;
-    at K=8192 / n=200k (SCALING.md r8) S=isqrt(K)=90 beat one-hop on
+    at K=8192 / n=200k (SCALING.md) S=isqrt(K)=90 beat one-hop on
     both corpus shapes (0.78x isotropic, 0.92x clustered) while a
     cluster-covering S=1024 REGRESSED to 1.39x of one-hop — the
     per-element HOF dot is the dominant constant, and n*(2S + survivors)
@@ -544,7 +577,7 @@ def _super_target(k: int) -> int:
 
 
 def _assign_two_level(vecs, cents, target_centroids: int, salt: str):
-    """EXACT argmax-cosine assignment in two hops (VERDICT r7 #5): with
+    """EXACT argmax-cosine assignment in two hops: with
     K = isqrt(n) centroids, the one-hop assignment is O(n*K) = O(n^1.5)
     dot products — the dominant super-linear term at ~1e11 rows (and the
     broadcast grows to ~K vectors).  This prunes with S ~= sqrt(K)
@@ -586,8 +619,6 @@ def _assign_two_level(vecs, cents, target_centroids: int, salt: str):
     (1 - 1/smod)^K ~ e^-S — with the S >= 64 this switch guarantees,
     physically impossible.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-
     _EPS = 1e-12
     s_target = _super_target(target_centroids)
     smod = max(1, target_centroids // s_target)
@@ -727,7 +758,7 @@ def ivf_topk(
     Pass `corpus_count` (e.g. a cached table statistic) to skip it; without
     it the count memoizes per (session, plan) so repeated builds of the
     same query — gate, bench passes, plan lint — scan the corpus once, and
-    only the first build's timing includes the count job (ADVICE r3).
+    only the first build's timing includes the count job.
 
     Plan shape: centroid assignment is a broadcast nested-loop over the
     small centroid table folded into one max_by aggregate per vector (all
@@ -737,8 +768,6 @@ def ivf_topk(
     """
     if dim is None:
         raise ValueError("pass dim explicitly (no driver-side inference)")
-    from pyspark.sql import Window
-
     cents, assign = ivf_quantize(
         corpus, target_centroids, vec_col, id_col, salt, corpus_count
     )
@@ -756,19 +785,9 @@ def ivf_probe_topk(
     rerank decisions (their bit-identity is a test contract).  cents =
     (cent_id, cv); assign = (neighbor_id, nv, cent_id); q = (query_id,
     qn normalized)."""
-    from pyspark.sql import Window
-
-    wq = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("query_id", "qn", "cent_id", V.dot("qn", "cv").alias("ccos"))
-        .withColumn("_rn", F.row_number().over(wq))  # query side is small
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qn", "cent_id")
-    )
-
     scored = (
-        probes.join(assign, "cent_id")  # the IVF cell join: shuffle on cell id
+        _ivf_probes(q, cents, nprobe)
+        .join(assign, "cent_id")  # the IVF cell join: shuffle on cell id
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", _score_entry(V.dot("qn", "nv")).alias("entry"))
     )
@@ -966,8 +985,6 @@ def pq_codes(
         raise ValueError(f"m={m} must divide dim={dim}")
     n = corpus_count if corpus_count is not None else _memoized_count(corpus)
     modulus = max(1, n // target_codes)
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-
     sub = _pq_subvectors(spread_small(corpus), dim, m, id_col, "vid", vec_col)
     cb = sub.filter(
         H.h48(
@@ -988,7 +1005,7 @@ def _pq_encode_sub(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """Nearest-codebook-entry assignment of long-form subvectors
     (vid, m, sv) against a bounded codebook (m, code, cv): one broadcast
     join on the subspace key + one min_by hash aggregate, integer
-    micro-L2 with (dmicro, code) tie-break.  Factored (r14) so
+    micro-L2 with (dmicro, code) tie-break.  Factored so
     `pq_codes` and the persisted IVFPQ index's extend/re-encode hooks
     provably share one encoder — a copy would let the stored codes
     silently drift from the scan path's."""
@@ -1020,7 +1037,7 @@ def pq_encode(
 def _adc_rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Two-phase top-k over ADC scores (query_id, vid, adc) — the
     (query, partition) partial-merge every ANN operator here uses,
-    factored (r14) so the scan paths and the persisted IVFPQ index
+    factored so the scan paths and the persisted IVFPQ index
     lookup share one ranking.  Output: (query_id, neighbor_id, rank,
     adc_dist_micro), rank 1..k by (adc asc, neighbor_id asc)."""
     entries = scored.select(
@@ -1146,19 +1163,10 @@ def ivfpq_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), V.normalize(vec_col).alias("qn")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cent_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select("query_id", "qn", "cent_id", V.dot("qn", "cv").alias("ccos"))
-        .withColumn("_rn", F.row_number().over(wq))  # query side is small
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qn", "cent_id")
-    )
     # candidates: (query_id, vid) pairs inside probed cells
     cands = (
-        probes.select("query_id", "cent_id")
+        _ivf_probes(q, cents, nprobe)
+        .select("query_id", "cent_id")
         .join(cells, "cent_id")
         .filter(F.col("vid") != F.col("query_id"))
         .select("query_id", "vid")
@@ -1177,7 +1185,7 @@ def ivfpq_topk(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic spherical k-means (Lloyd refinement of the hash draw) — r14
+# Deterministic spherical k-means (Lloyd refinement of the hash draw)
 # ---------------------------------------------------------------------------
 
 #: centroid components are averaged in INTEGER micro-units so the sums
@@ -1198,7 +1206,7 @@ def kmeans_refine(
 ):
     """Spherical k-means: the shared IVF hash draw as init, then `rounds`
     Lloyd iterations — assign every vector to its argmax-cosine centroid
-    (the SHARED `_assign_one_hop`/`_assign_two_level` machinery), then
+    (the SHARED `_ivf_assign` machinery), then
     recompute each centroid as the RENORMALIZED mean of its members.
     This is the trained-quantizer upgrade over the one-shot draw that
     `ivf_quantize` (and therefore SemDeDup / the ANN index family)
@@ -1233,11 +1241,8 @@ def kmeans_refine(
     if rounds < 1:
         raise ValueError("need rounds >= 1")
     n = corpus_count if corpus_count is not None else _memoized_count(corpus)
-    cents, assign = ivf_quantize(
-        corpus, target_centroids, vec_col, id_col, salt, n
-    )
-    k = target_centroids if target_centroids else max(1, math.isqrt(n))
-    return _lloyd_rounds(assign, rounds, k, salt)
+    _, assign = ivf_quantize(corpus, target_centroids, vec_col, id_col, salt, n)
+    return _lloyd_rounds(assign, rounds, _ivf_k(n, target_centroids), salt)
 
 
 def _lloyd_rounds(
@@ -1246,7 +1251,7 @@ def _lloyd_rounds(
     """The deterministic Lloyd core of `kmeans_refine`, factored out so
     the persisted-index founding/recluster paths (`search_index.
     build_ann_index` / `maintain_ann_index` and the IVFPQ twins,
-    `refine_rounds=N` — r15, VERDICT r14 #2) run the EXACT shared
+    `refine_rounds=N`) run the EXACT shared
     iteration: integer-micro member means, DIV quotients, the shared
     renormalize and argmax re-assignment.  `assign` is an initial
     (vid, nv, cent_id) generation (normally `ivf_quantize`'s draw); `k`
@@ -1297,8 +1302,5 @@ def _lloyd_rounds(
         cents = new_cv
         if vecs is None:
             vecs = assign.select("vid", "nv")
-        if k > _TWO_LEVEL_MIN_CENTROIDS:
-            assign = _assign_two_level(vecs, cents, k, salt)
-        else:
-            assign = _assign_one_hop(vecs, cents)
+        assign = _ivf_assign(vecs, cents, k, salt)
     return cents, assign

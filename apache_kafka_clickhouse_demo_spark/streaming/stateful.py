@@ -1674,8 +1674,8 @@ class _AnnIndexStreamWriter(_DrainWriter):
     Both paths publish through batch-keyed commits, so a retried batch
     can never double-publish its meta row: creation stamps the txn into
     its CAS commit (crash AFTER the commit -> the replay's txn check
-    no-ops; two concurrent creators -> one loses the CAS), extension
-    goes through `append_once`.
+    no-ops; two concurrent creators -> one loses the CAS), and extension
+    appends its segment under the txn that `process()` already checked.
 
     Contracts inherited from the batch API: each vec_id arrives ONCE
     across the stream's lifetime (dedupe upstream); centroids are fixed
@@ -1703,7 +1703,6 @@ class _AnnIndexStreamWriter(_DrainWriter):
         super().__init__(spark, writer_id)
         self.table = TransactionalTable(index_dir)
         self.target_centroids = target_centroids
-        self.expected_corpus_rows = expected_corpus_rows
         if expected_corpus_rows is not None and n_shards is None:
             n_shards = shards_for_store(expected_corpus_rows)
         self.n_shards = n_shards
@@ -1711,38 +1710,32 @@ class _AnnIndexStreamWriter(_DrainWriter):
         self.id_col = id_col
         self.salt = salt
         #: (n_shards, k) — BOTH creation-fixed by the extend contract,
-        #: derived once on the first extension and passed back into
-        #: every later one (re-deriving them per block would cost two
+        #: returned by the first extension and passed back into every
+        #: later one (re-deriving them per block would cost two
         #: driver-synchronized jobs).  Safe across THIS writer's
         #: maintenance: optimize preserves rows, and neither value can
         #: change after creation.  An EXTERNAL
-        #: `compact_*_index(recluster=True)` against a live-streamed
+        #: `maintain_*_index(recluster=True)` against a live-streamed
         #: index is UNSUPPORTED: it founds a
         #: new centroid generation that can change k, which would leave
         #: this cache stale (assignment stays exact — `_assign_two_level`
         #: is exact for any k — but the two-level/flat switch and
         #: super-centroid sizing would be computed from the wrong k).
         #: Recluster between stream runs; a fresh writer re-derives.
-        self._params: tuple[int, int] | None = None
+        self._params: tuple[int, ...] | None = None
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
-        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
-
         if block.isEmpty():
             return  # idle trigger: publish nothing (the term-index rule)
         if self.table.version() < 0:
             self._found(block, txn)
             return
-        if self._params is None:
-            self._params = (
-                *self._meta_params(),
-                self.table.read_where(
-                    self.spark, "shard", [SI.ANN_CENT_SHARD]
-                ).count(),
-            )
-        self._extend(block, txn)
+        seg, self._params = self._extension(block)
+        self.table.append(seg, txn=txn, partition_by="shard")
 
     def _found(self, block: DataFrame, txn: str) -> None:
+        # the founding draw counts its own block; `expected_corpus_rows`
+        # only sizes the shards (`__init__`)
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
         SI.build_ann_index(
@@ -1753,27 +1746,15 @@ class _AnnIndexStreamWriter(_DrainWriter):
             vec_col=self.vec_col,
             id_col=self.id_col,
             salt=self.salt,
-            corpus_count=self.expected_corpus_rows,
             txn=txn,
         )
 
-    def _meta_params(self) -> tuple[int, ...]:
-        """The stored meta's creation-fixed params, before k."""
+    def _extension(self, block: DataFrame) -> tuple[DataFrame, tuple[int, ...]]:
+        """(segment, params) for one extension block, unpublished."""
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
-        return SI.ann_index_meta(self.spark, self.table)[1:]
-
-    def _extend(self, block: DataFrame, txn: str) -> None:
-        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
-
-        SI.extend_ann_index(
-            block,
-            self.table,
-            vec_col=self.vec_col,
-            id_col=self.id_col,
-            salt=self.salt,
-            txn=txn,
-            params=self._params,
+        return SI._ann_extension(
+            block, self.table, self.vec_col, self.id_col, self.salt, self._params
         )
 
 
@@ -1866,26 +1847,14 @@ class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
             id_col=self.id_col,
             ivf_salt=self.salt,
             pq_salt=self.pq_salt,
-            corpus_count=self.expected_corpus_rows,
             txn=txn,
         )
 
-    def _meta_params(self) -> tuple[int, ...]:
+    def _extension(self, block: DataFrame) -> tuple[DataFrame, tuple[int, ...]]:
         from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
 
-        return SI.ivfpq_index_meta(self.spark, self.table)[1:]
-
-    def _extend(self, block: DataFrame, txn: str) -> None:
-        from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
-
-        SI.extend_ivfpq_index(
-            block,
-            self.table,
-            vec_col=self.vec_col,
-            id_col=self.id_col,
-            ivf_salt=self.salt,
-            txn=txn,
-            params=self._params,
+        return SI._ivfpq_extension(
+            block, self.table, self.vec_col, self.id_col, self.salt, self._params
         )
 
 

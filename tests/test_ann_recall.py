@@ -134,16 +134,36 @@ def test_two_level_assignment_identical_to_one_hop(spark, monkeypatch):
     assert len(one_hop) == 408  # every vector assigned
 
 
-def test_two_level_ivf_topk_results_identical(spark, monkeypatch):
-    """End-to-end: ivf_topk under the forced two-level assignment returns
+def test_two_level_ivf_topk_results_identical(spark, monkeypatch, tmp_path):
+    """End-to-end: ivf_topk and the persisted ANN index (built, extended,
+    reclustered, looked up) under the forced two-level assignment return
     byte-identical rows to the one-hop plan (same cells probed, same
     rerank, same ranks)."""
+    from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
+
     corpus, queries = _fixture(spark)
     kw = dict(k=5, dim=DIM, target_centroids=64, nprobe=2, corpus_count=408)
-    want = sorted(map(tuple, S.ivf_topk(corpus, queries, **kw).collect()))
+
+    def answers(tag):
+        table = SI.build_ann_index(
+            corpus.filter(F.col("vec_id") < 300), str(tmp_path / tag),
+            target_centroids=64,
+        )
+        SI.extend_ann_index(corpus.filter(F.col("vec_id") >= 300), table)
+        SI.maintain_ann_index(spark, table, recluster=True, target_centroids=64)
+        return [
+            sorted(map(tuple, rows.collect()))
+            for rows in (
+                S.ivf_topk(corpus, queries, **kw),
+                SI.ann_index_lookup(spark, table, queries, k=5, nprobe=2),
+            )
+        ]
+
+    want = answers("one_hop")
     monkeypatch.setattr(S, "_TWO_LEVEL_MIN_CENTROIDS", 0)
-    got = sorted(map(tuple, S.ivf_topk(corpus, queries, **kw).collect()))
+    got = answers("two_level")
     assert got == want
+    assert all(len(rows) == 5 * N_QUERIES for rows in want)
 
 
 def test_margin_bitext_penalizes_hub_targets(spark):

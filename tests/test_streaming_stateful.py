@@ -1487,6 +1487,23 @@ def test_ann_index_stream_writer_founds_then_extends(spark, tmp_path):
     assert w.table.version() == v + 1
     assert SI.ann_index_meta(spark, w.table)[0] == 25
 
+    # a writer sized for a far larger eventual corpus founds on the same
+    # block (the founding draw counts the block; the size only picks the
+    # shard count) and answers like the unsized writer
+    ws = _AnnIndexStreamWriter(
+        spark, str(tmp_path / "ann_sized"), writer_id="s",
+        target_centroids=6, expected_corpus_rows=10_000_000,
+    )
+    ws.process(b0, 0)
+    ws.process(b1, 2)
+    assert SI.ann_index_meta(spark, ws.table)[0] == 25
+    q = emb.filter(F.col("vec_id") < 3)
+    sized, unsized = (
+        sorted(tuple(r) for r in SI.ann_index_lookup(spark, t, q, k=3, nprobe=2).collect())
+        for t in (ws.table, w.table)
+    )
+    assert sized == unsized and len(sized) > 0
+
     # a SECOND writer over the existing index must extend, not re-found:
     # centroid set unchanged, its block lands as one more segment
     w2 = _AnnIndexStreamWriter(
@@ -1554,6 +1571,27 @@ def test_ivfpq_index_stream_writer_founds_then_extends(spark, tmp_path):
     assert w.table.version() == v + 1
     assert SI.ivfpq_index_meta(spark, w.table)[0] == 25
 
+    # sized for a far larger eventual corpus: founds on the same block
+    # and answers like the unsized writer (see the ANN twin above)
+    ws = _IvfPqIndexStreamWriter(
+        spark, str(tmp_path / "ix_sized"), writer_id="s",
+        dim=8, m=4, target_codes=8, target_centroids=6,
+        expected_corpus_rows=10_000_000,
+    )
+    ws.process(b0, 0)
+    ws.process(b1, 2)
+    assert SI.ivfpq_index_meta(spark, ws.table)[0] == 25
+    q = emb.filter(F.col("vec_id") < 3)
+    sized, unsized = (
+        [
+            tuple(r)
+            for r in SI.ivfpq_index_lookup(spark, t, q, k=3, nprobe=2)
+            .orderBy("query_id", "rank").collect()
+        ]
+        for t in (ws.table, w.table)
+    )
+    assert sized == unsized and len(sized) > 0
+
     w2 = _IvfPqIndexStreamWriter(
         spark, str(tmp_path / "ix"), writer_id="s2",
         dim=8, m=4, target_codes=2, target_centroids=2,
@@ -1573,7 +1611,6 @@ def test_ivfpq_index_stream_writer_founds_then_extends(spark, tmp_path):
         dim=8, m=4, target_codes=8, target_centroids=6,
     )
     SI.extend_ivfpq_index(emb.filter(F.col("vec_id") >= 20), oneshot)
-    q = emb.filter(F.col("vec_id") < 3)
     got = [
         tuple(r)
         for r in SI.ivfpq_index_lookup(spark, w2.table, q, k=3, nprobe=2)

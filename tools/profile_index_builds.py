@@ -1,11 +1,11 @@
-"""Phase-wall profiler for the batch index-build gate rows (r16,
-VERDICT r15 tasks 3/4): times each driver-sequential phase of
-build_ivfpq_index / extend / recluster and of build_term_index +
-bm25_lookup, so the scheduler-idle question ("is there serial driver
-time between independent training jobs?") is answered with numbers
-before any overlap is attempted (guide §1).
+"""Phase-wall profiler for the batch index-build gate rows: times each
+public call of the ANN and IVFPQ index lifecycle (build / extend /
+recluster / lookup) and of build_term_index + bm25_lookup, one phase
+each.
 
-Usage: python tools/profile_index_builds.py [ivfpq|bm25|ann] [passes]
+Usage: python tools/profile_index_builds.py [ivfpq|indexed|grown|reclustered|bm25|ann] [passes]
+(`ivfpq` is the IVFPQ `reclustered` variant; `ann` runs the ANN index
+through the same grown + reclustered lifecycle.)
 """
 
 from __future__ import annotations
@@ -28,17 +28,12 @@ def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def profile_ivfpq(spark, variant: str):
+def profile_ivf(spark, kind: str, variant: str):
+    """Time the public ANN (`kind="ann"`) or IVFPQ index calls one phase
+    each: build, then for `grown`/`reclustered` an extension with the
+    rest of the corpus, then for `reclustered` a recluster, then a
+    lookup.  `indexed` builds on the whole corpus."""
     from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
-    from apache_kafka_clickhouse_demo_spark.operators.similarity import (
-        _lloyd_rounds,
-        _memoized_count,
-        ivf_quantize,
-        pq_codes,
-    )
-    from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-        TransactionalTable,
-    )
 
     emb = Q._t(spark, SF_DIR, "embeddings")
     if variant != "indexed":
@@ -46,57 +41,30 @@ def profile_ivfpq(spark, variant: str):
         growth = emb.filter(~F.expr(Q.ANN_GROWN_FOUNDING_PRED))
     else:
         founding, growth = emb, None
-    work = Q._workdir("prof_ivfpq_")
-    path = f"{work}/ix"
+    if kind == "ivfpq":
+        build, extend = SI.build_ivfpq_index, SI.extend_ivfpq_index
+        maintain, lookup = SI.maintain_ivfpq_index, SI.ivfpq_index_lookup
+        salt = {"ivf_salt": Q.IVF_SALT}
+        pq = {"dim": Q.EMBED_DIM, "m": Q.PQ_M, "target_codes": Q.PQ_TARGET_CODES}
+    else:
+        build, extend = SI.build_ann_index, SI.extend_ann_index
+        maintain, lookup = SI.maintain_ann_index, SI.ann_index_lookup
+        salt, pq = {"salt": Q.IVF_SALT}, {}
+    work = Q._workdir(f"prof_{kind}_")
     t: dict[str, float] = {}
-
     t0 = time.time()
-    n = _memoized_count(founding)
-    t["count"] = time.time() - t0
-
-    t0 = time.time()
-    cents, assign = ivf_quantize(
-        founding, Q.IVF_TARGET_CENTROIDS, "embedding", "vec_id", Q.IVF_SALT, n
+    table = build(
+        founding, f"{work}/ix", target_centroids=Q.IVF_TARGET_CENTROIDS,
+        **salt, **pq,
     )
-    cb, codes = pq_codes(
-        founding,
-        Q.EMBED_DIM,
-        m=Q.PQ_M,
-        target_codes=Q.PQ_TARGET_CODES,
-        vec_col="embedding",
-        id_col="vec_id",
-        salt="pq:",
-        corpus_count=n,
-    )
-    t["plan"] = time.time() - t0
-
-    t0 = time.time()
-    cents_empty = cents.isEmpty()
-    t["cents_isEmpty"] = time.time() - t0
-    t0 = time.time()
-    cb_empty = cb.isEmpty()
-    t["cb_isEmpty"] = time.time() - t0
-    assert not cents_empty and not cb_empty
-
-    table = TransactionalTable(path)
-    n_shards = SI.shards_for_store(n)
-    t0 = time.time()
-    table.append(
-        SI._ivfpq_segment_frames(
-            assign, codes, n_shards, Q.PQ_M, Q.EMBED_DIM, cents, cb
-        ),
-        partition_by="shard",
-        cas_version=-1,
-    )
-    t["append"] = time.time() - t0
-
-    if variant in ("grown", "reclustered"):
+    t["build"] = time.time() - t0
+    if growth is not None:
         t0 = time.time()
-        SI.extend_ivfpq_index(growth, table, ivf_salt=Q.IVF_SALT)
+        extend(growth, table, **salt)
         t["extend"] = time.time() - t0
     if variant == "reclustered":
         t0 = time.time()
-        SI.maintain_ivfpq_index(
+        maintain(
             spark,
             table,
             recluster=True,
@@ -104,10 +72,9 @@ def profile_ivfpq(spark, variant: str):
             salt=Q.IVF_SALT,
         )
         t["recluster"] = time.time() - t0
-
     t0 = time.time()
     _noop(
-        SI.ivfpq_index_lookup(
+        lookup(
             spark,
             table,
             emb.filter(F.col("vec_id") < Q.ANN_NUM_QUERIES),
@@ -138,64 +105,21 @@ def profile_bm25(spark):
     return t
 
 
-def profile_ann(spark, variant: str):
-    from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
-
-    emb = Q._t(spark, SF_DIR, "embeddings")
-    founding = emb.filter(F.expr(Q.ANN_GROWN_FOUNDING_PRED))
-    growth = emb.filter(~F.expr(Q.ANN_GROWN_FOUNDING_PRED))
-    work = Q._workdir("prof_ann_")
-    t: dict[str, float] = {}
-    t0 = time.time()
-    table = SI.build_ann_index(
-        founding,
-        f"{work}/ix",
-        target_centroids=Q.IVF_TARGET_CENTROIDS,
-        salt=Q.IVF_SALT,
-    )
-    t["build"] = time.time() - t0
-    t0 = time.time()
-    SI.extend_ann_index(growth, table, salt=Q.IVF_SALT)
-    t["extend"] = time.time() - t0
-    if variant == "reclustered":
-        t0 = time.time()
-        SI.maintain_ann_index(
-            spark,
-            table,
-            recluster=True,
-            target_centroids=Q.IVF_TARGET_CENTROIDS,
-            salt=Q.IVF_SALT,
-        )
-        t["recluster"] = time.time() - t0
-    t0 = time.time()
-    _noop(
-        SI.ann_index_lookup(
-            spark,
-            table,
-            emb.filter(F.col("vec_id") < Q.ANN_NUM_QUERIES),
-            k=Q.ANN_K,
-            nprobe=Q.IVF_NPROBE,
-        ).orderBy("query_id", "rank")
-    )
-    t["lookup"] = time.time() - t0
-    return t
-
-
 def main() -> int:
     which = sys.argv[1] if len(sys.argv) > 1 else "ivfpq"
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     spark = get_spark(app_name=f"profile_{which}")
-    Q.ALL_QUERIES["count_events"](spark, SF_DIR).collect()  # warm-up
+    Q.q_count_events(spark, SF_DIR).collect()  # warm-up
     for p in range(passes):
         spark.catalog.clearCache()
         if which == "bm25":
             t = profile_bm25(spark)
         elif which == "ann":
-            t = profile_ann(spark, "reclustered")
+            t = profile_ivf(spark, "ann", "reclustered")
         elif which in ("indexed", "grown", "reclustered"):
-            t = profile_ivfpq(spark, which)
+            t = profile_ivf(spark, "ivfpq", which)
         else:
-            t = profile_ivfpq(spark, "reclustered")
+            t = profile_ivf(spark, "ivfpq", "reclustered")
         total = sum(t.values())
         print(
             f"pass {p}: total={total:.2f}s  "
