@@ -45,6 +45,9 @@ def get_spark(
         # driver fixtures store events.ts as TIMESTAMP(NANOS); read as long
         # and convert in sources.tables.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # never list files in a Spark job: the txlog already names every
+        # file a read takes, and stats on local files are cheap
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,16 +1,16 @@
 """Transactional append-only table — atomic commits over plain parquet.
 
-Why this exists (VERDICT r02 / streaming/pipeline.py's backfill note): plain
-parquet appends stage task files under a SHARED `<table>/_temporary/`
-directory, so two concurrent writers (a streaming MV block + a backfill
-`INSERT ... SELECT`) can delete each other's in-flight files — the race that
-forces `backfill_cutover` to sequence its two phases.  Real clusters solve
-this with a transactional table format (Delta/Iceberg); this module is the
-same commit protocol reduced to its core, with no new dependencies:
+Why this exists (streaming/pipeline.py's backfill note): plain parquet
+appends stage task files under a SHARED `<table>/_temporary/` directory,
+so two concurrent writers (a streaming MV block + a backfill
+`INSERT ... SELECT`) can delete each other's in-flight files — the race
+that forces `backfill_cutover` to sequence its two phases.  Real clusters
+solve this with a transactional table format (Delta/Iceberg); this module
+is the same commit protocol reduced to its core, with no new dependencies:
 
     <table>/
       _txlog/
-        00000000000.json     # commit 0: {"files": ["<uuid>-part-...parquet", ...]}
+        00000000000.json     # commit 0: {"files": [...], "schema": {...}}
         00000000001.json     # commit 1: ...
       <uuid>-part-0.parquet  # data files (immutable once committed)
 
@@ -27,26 +27,30 @@ same commit protocol reduced to its core, with no new dependencies:
 - Readers list `_txlog/*.json` (optionally up to a pinned version — free
   snapshot/time-travel) and read exactly the files those commits name.
   Uncommitted data files and leftover staging directories are invisible.
+- Every commit records the schema of the columns in its files, as Delta's
+  `metaData.schemaString` does, so a read is planned on the driver from
+  the log alone: no footer is opened to infer a schema, and (with
+  `session.get_spark`'s listing threshold) no Spark job lists the files
+  the log already names.  See `TransactionalTable` for the schema policy.
 
 Concurrency model: optimistic, append-only (the OCC loop every log-based
 table format uses).  On a shared filesystem/object store with atomic
 create-if-absent this protocol is correct for any number of concurrent
 writers; at 100 TB scale the log stays tiny (one small JSON per commit)
-and readers pay one listing, independent of data size.  A long-running
-streaming MV commits once per block, so the log does grow — `checkpoint()`
-collapses every commit up to a version into one summary file (readers then
-skip the per-commit JSONs), exactly Delta's log-checkpoint mechanism.
-
-Round 6 additions (VERDICT r5 #1/#3):
+and a read costs one log listing plus one small JSON per live commit,
+independent of data size.  A long-running streaming MV commits once per
+block, so the log does grow — `checkpoint()` collapses every commit up to
+a version into one summary file (readers then skip the per-commit JSONs),
+exactly Delta's log-checkpoint mechanism.
 
 - **Partitioned layout** (`append(..., partition_by=...)`): data files land
   under Hive-style `<col>=<value>/` subdirectories, and `read_where()`
   reads ONLY the committed files whose partition value is in a given set —
-  driver-side file pruning straight off the commit log, no directory
-  listing, no Spark partition discovery.  This is what lets a streaming
-  dedup block touch O(colliding buckets) of an ever-growing signature
-  store instead of rescanning all of it.  Partition columns must not start
-  with `_` or `.` (Spark readers skip such directories).
+  file pruning on the driver straight off the commit log.  This is what
+  lets a streaming dedup block touch O(colliding buckets) of an
+  ever-growing signature store instead of rescanning all of it.  Partition
+  columns must not start with `_` or `.` (Spark readers skip such
+  directories).
 - **Idempotent commits** (`append_once(df, txn=...)`): each commit can
   carry an application transaction id; `append_once` no-ops when that id
   is already in the log.  foreachBatch sinks are at-least-once — keying
@@ -63,12 +67,38 @@ import os
 import shutil
 import uuid
 from collections.abc import Iterable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
+from pyspark.sql.types import StructType
 
 _LOG_DIR = "_txlog"
 _VERSION_DIGITS = 11
+#: log listings one replay may take before giving up (see `_replay`)
+_MAX_RELISTS = 8
+
+
+class _Staged(list):
+    """`stage_for_append`'s value: the staged table-relative file names,
+    plus the StructType JSON of the columns in those files, which
+    `commit_staged` records in the commit."""
+
+    def __init__(self, files: Iterable[str], schema: dict):
+        super().__init__(files)
+        self.schema = schema
+
+
+class _Snapshot(NamedTuple):
+    """The log replayed up to a version (see `TransactionalTable._replay`)."""
+
+    version: int  # newest version replayed, -1 when none
+    files: list[str]  # table-relative data files
+    schema: dict | None  # newest recorded StructType JSON
+    partition_by: str | None
+    txns: set[str]
+    txn_watermarks: dict[str, int]
 
 
 def _newest_mtime(root: str) -> float:
@@ -76,8 +106,8 @@ def _newest_mtime(root: str) -> float:
     liveness signal for staging trees whose writes happen in nested
     `_temporary/` dirs that never touch the top-level mtime.  A root that
     vanishes mid-check (its writer finished concurrently) reads as
-    brand-new — the caller must then SKIP it, never abort (code-review
-    r6: the unguarded getmtime crashed a concurrent vacuum)."""
+    brand-new — the caller must then SKIP it, never abort (an unguarded
+    getmtime would crash a concurrent vacuum)."""
     import time
 
     try:
@@ -98,7 +128,7 @@ def _fsync_dir(path: str) -> None:
     """fsync a directory so a just-created/renamed entry survives power
     loss (a process crash never loses it — the entry is in the page
     cache — but an acknowledged commit must also survive the machine
-    dying; code-review r6).  Best-effort: some filesystems refuse
+    dying).  Best-effort: some filesystems refuse
     directory fds."""
     try:
         fd = os.open(path, os.O_RDONLY)
@@ -118,7 +148,18 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class TransactionalTable:
-    """Handle for an atomic-append parquet table rooted at `path`."""
+    """Handle for an atomic-append parquet table rooted at `path`.
+
+    **Schema policy: the newest recorded schema wins.**  Every append and
+    `optimize()` commit records the schema of the columns in its files
+    (the partition column left out: its type is inferred from the
+    `<col>=<value>` paths, as Spark always does), and `checkpoint()`
+    carries the newest one.  A read at a version uses the newest schema
+    recorded at or below it.  So a commit whose files add a column makes
+    older rows read that column as NULL, and a commit that changes a
+    column's type makes any read over the older files fail at scan time —
+    never silent NULLs.
+    """
 
     def __init__(self, path: str):
         self.path = path.rstrip("/")
@@ -130,14 +171,13 @@ class TransactionalTable:
         """(latest checkpoint version or None, [(version, commit path)...])."""
         if not os.path.isdir(self.log_dir):
             return None, []
+        names = os.listdir(self.log_dir)
         ckpt_versions = sorted(
-            int(n.split(".")[0])
-            for n in os.listdir(self.log_dir)
-            if n.endswith(".checkpoint.json")
+            int(n.split(".")[0]) for n in names if n.endswith(".checkpoint.json")
         )
         commits = sorted(
             (int(n.split(".")[0]), os.path.join(self.log_dir, n))
-            for n in os.listdir(self.log_dir)
+            for n in names
             if n.endswith(".json") and not n.endswith(".checkpoint.json")
         )
         return (ckpt_versions[-1] if ckpt_versions else None), commits
@@ -148,20 +188,43 @@ class TransactionalTable:
         latest = max([c for c, _ in commits], default=-1)
         return max(latest, ckpt if ckpt is not None else -1)
 
-    def data_files(self, up_to_version: int | None = None) -> list[str]:
-        ckpt, commits = self._log_entries()
-        files: list[str] = []
-        # start from the newest checkpoint at or below the requested version
-        if ckpt is not None and (up_to_version is None or ckpt <= up_to_version):
-            with open(os.path.join(self.log_dir, self._ckpt_name(ckpt))) as fh:
-                files.extend(json.load(fh)["files"])
-            floor = ckpt
-        else:
-            floor = -1
-        for v, commit in commits:
-            if v <= floor:
+    def _replay(self, up_to_version: int | None = None) -> _Snapshot:
+        """The log replayed up to `up_to_version` (newest when None): the
+        newest checkpoint at or below it, then each live commit after it,
+        each JSON opened once.  Commits at or below the checkpoint are not
+        reopened — their files, txns (verbatim, or compacted to
+        watermarks), schema and layout are in its summary — so this costs
+        O(commits since checkpoint), not O(stream lifetime).
+
+        A commit that vanishes between the listing and its open was folded
+        into a newer checkpoint and pruned by another handle: the replay
+        re-lists the log and starts over, so a committed table never reads
+        as empty."""
+        for _ in range(_MAX_RELISTS):
+            ckpt, commits = self._log_entries()
+            try:
+                return self._replay_listing(ckpt, commits, up_to_version)
+            except FileNotFoundError:
                 continue
-            if up_to_version is not None and v > up_to_version:
+        raise RuntimeError(
+            f"{self.path}: the log changed under {_MAX_RELISTS} replays in a row"
+        )
+
+    def _replay_listing(
+        self, ckpt: int | None, commits: list[tuple[int, str]], up_to: int | None
+    ) -> _Snapshot:
+        version, files, schema, pcol = -1, [], None, None
+        txns: set[str] = set()
+        marks: dict[str, int] = {}
+        if ckpt is not None and (up_to is None or ckpt <= up_to):
+            with open(os.path.join(self.log_dir, self._ckpt_name(ckpt))) as fh:
+                summary = json.load(fh)
+            version, files = ckpt, list(summary["files"])
+            schema, pcol = summary.get("schema"), summary.get("partition_by")
+            txns.update(summary.get("txns", []))
+            marks.update(summary.get("txn_watermarks", {}))
+        for v, commit in commits:
+            if v <= version or (up_to is not None and v > up_to):
                 continue
             with open(commit) as fh:
                 payload = json.load(fh)
@@ -170,32 +233,15 @@ class TransactionalTable:
                 files = list(payload["files"])
             else:
                 files.extend(payload["files"])
-        return [os.path.join(self.path, f) for f in files]
+            version = v
+            schema = payload.get("schema", schema)
+            pcol = payload.get("partition_by") or pcol
+            if payload.get("txn") is not None:
+                txns.add(payload["txn"])
+        return _Snapshot(version, files, schema, pcol, txns, marks)
 
-    def _txn_state(self) -> tuple[set[str], dict[str, int]]:
-        """(explicit txn ids, per-writer batch watermarks).  Commits at or
-        below the newest checkpoint are NOT reopened — their txns are in
-        the checkpoint's summary (verbatim, or compacted to watermarks) —
-        so after a `checkpoint()` this costs O(commits since checkpoint),
-        not O(stream lifetime)."""
-        ckpt, commits = self._log_entries()
-        txns: set[str] = set()
-        marks: dict[str, int] = {}
-        floor = -1
-        if ckpt is not None:
-            with open(os.path.join(self.log_dir, self._ckpt_name(ckpt))) as fh:
-                payload = json.load(fh)
-            txns.update(payload.get("txns", []))
-            marks.update(payload.get("txn_watermarks", {}))
-            floor = ckpt
-        for v, commit in commits:
-            if v <= floor:
-                continue
-            with open(commit) as fh:
-                txn = json.load(fh).get("txn")
-            if txn is not None:
-                txns.add(txn)
-        return txns, marks
+    def data_files(self, up_to_version: int | None = None) -> list[str]:
+        return [os.path.join(self.path, f) for f in self._replay(up_to_version).files]
 
     def commit_files(self, version: int) -> list[str] | None:
         """TABLE-RELATIVE file names of exactly one commit, or None when
@@ -203,7 +249,7 @@ class TransactionalTable:
         Bounded driver work: one small JSON read — lets a writer that just
         committed partitioned data recover WHICH partition dirs it touched
         without running a Spark job over the data (streaming/stateful.py
-        derives a block's band shards this way, r8)."""
+        derives a block's band shards this way)."""
         path = os.path.join(self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json")
         try:
             with open(path) as fh:
@@ -217,8 +263,7 @@ class TransactionalTable:
         `checkpoint(compact_txn_watermarks=True)`) are not enumerated here
         — membership for those goes through `txn_committed`, which
         `append_once` uses."""
-        txns, _marks = self._txn_state()
-        return txns
+        return self._replay().txns
 
     def txn_version(self, txn: str) -> int | None:
         """The VERSION of the commit that recorded `txn`, or None when it
@@ -243,18 +288,20 @@ class TransactionalTable:
         """True iff `txn` was committed: an explicit id match, or — for
         `<writer>:<batch>` ids — batch at or below the writer's
         checkpointed watermark."""
-        txns, marks = self._txn_state()
-        if txn in txns:
+        snap = self._replay()
+        if txn in snap.txns:
             return True
         writer, sep, num = txn.rpartition(":")
-        return bool(sep) and num.isdigit() and marks.get(writer, -1) >= int(num)
+        return (
+            bool(sep) and num.isdigit() and snap.txn_watermarks.get(writer, -1) >= int(num)
+        )
 
     @staticmethod
     def _ckpt_name(version: int) -> str:
         return f"{version:0{_VERSION_DIGITS}d}.checkpoint.json"
 
     def _publish(self, payload: bytes, dest_path: str) -> bool:
-        """Atomically publish `payload` at `dest_path` (ADVICE r3): write a
+        """Atomically publish `payload` at `dest_path`: write a
         uniquely-named temp file in the log dir, then hard-link it to the
         final name.  link() is atomic and fails with FileExistsError when
         the name is taken, which preserves the OCC version race; because the
@@ -291,18 +338,18 @@ class TransactionalTable:
         into one per-writer high-water mark instead of carrying every id
         ever seen — the Delta appId->version model, bounding the
         checkpoint and every idempotence check at O(writers) instead of
-        O(stream lifetime) (code-review r6).  ONLY sound when each
+        O(stream lifetime).  ONLY sound when each
         writer's batch numbers are monotonic with sequential retries
         (foreachBatch's contract: a watermark claims every batch at or
         below it committed); leave it off for arbitrary txn id schemes.
-        The table's partition layout (`append(partition_by=...)`) is
-        carried into the summary either way, so `optimize()` can default
-        to it."""
-        version = self.version()
-        if version < 0:
+        The table's newest schema and its partition layout
+        (`append(partition_by=...)`) are carried into the summary either
+        way, so reads keep their schema and `optimize()` can default to
+        the layout once the folded commits are pruned."""
+        snap = self._replay()
+        if snap.version < 0:
             raise FileNotFoundError(f"nothing to checkpoint in {self.path}")
-        files = [os.path.relpath(f, self.path) for f in self.data_files(version)]
-        txns, marks = self._txn_state()
+        txns, marks = snap.txns, snap.txn_watermarks
         if compact_txn_watermarks:
             keep: set[str] = set()
             for t in txns:
@@ -312,32 +359,24 @@ class TransactionalTable:
                 else:
                     keep.add(t)
             txns = keep
-        summary: dict = {"files": sorted(files), "txns": sorted(txns)}
+        summary: dict = {"files": sorted(snap.files), "txns": sorted(txns)}
         if marks:
             summary["txn_watermarks"] = marks
-        pcol = self.partition_column()
-        if pcol:
-            summary["partition_by"] = pcol
+        if snap.schema is not None:
+            summary["schema"] = snap.schema
+        if snap.partition_by:
+            summary["partition_by"] = snap.partition_by
         payload = json.dumps(summary).encode()
-        ckpt_path = os.path.join(self.log_dir, self._ckpt_name(version))
+        ckpt_path = os.path.join(self.log_dir, self._ckpt_name(snap.version))
         # lost the race -> an identical checkpoint already exists: fine
         self._publish(payload, ckpt_path)
-        return version
+        return snap.version
 
     def partition_column(self) -> str | None:
         """The partition column this table's appends declared, read from
         the newest commit that recorded one (or the newest checkpoint's
         summary).  None for an unpartitioned table."""
-        ckpt, commits = self._log_entries()
-        for _v, commit in sorted(commits, reverse=True):
-            with open(commit) as fh:
-                pcol = json.load(fh).get("partition_by")
-            if pcol:
-                return pcol
-        if ckpt is not None:
-            with open(os.path.join(self.log_dir, self._ckpt_name(ckpt))) as fh:
-                return json.load(fh).get("partition_by")
-        return None
+        return self._replay().partition_by
 
     def prune_log(self) -> list[str]:
         """Delete commit JSONs at or below the newest checkpoint — their
@@ -362,12 +401,12 @@ class TransactionalTable:
 
     # -- write path ---------------------------------------------------------
 
-    def _stage(self, df: DataFrame, partition_by: str | None) -> list[str]:
+    def _stage(self, df: DataFrame, partition_by: str | None) -> _Staged:
         """Write `df` to a private staging dir, move its parquet files into
         the table under unique names (preserving `<col>=<value>/` partition
         subdirectories when `partition_by` is given), and return the moved
-        files' table-relative paths.  The files are invisible to readers
-        until a commit names them."""
+        files' table-relative paths with the schema of their columns.  The
+        files are invisible to readers until a commit names them."""
         token = uuid.uuid4().hex[:12]
         staging = os.path.join(self.path, f".staging-{token}")
         try:
@@ -401,9 +440,8 @@ class TransactionalTable:
                     # rename PRESERVES the staging-phase mtime: a write
                     # phase longer than vacuum's grace window would land
                     # files that already look expired, and a concurrent
-                    # vacuum could delete them before the commit publishes
-                    # (code-review r6).  Stamp move time so age is
-                    # measured from here.
+                    # vacuum could delete them before the commit publishes.
+                    # Stamp move time so age is measured from here.
                     try:
                         os.utime(dest)
                     except OSError:
@@ -413,7 +451,8 @@ class TransactionalTable:
                 _fsync_dir(d)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return moved
+        schema = StructType([f for f in df.schema.fields if f.name != partition_by])
+        return _Staged(moved, schema.jsonValue())
 
     def append(
         self,
@@ -432,7 +471,7 @@ class TransactionalTable:
         (enabling `read_where` pruning); `txn` records an application
         transaction id in the commit (see `append_once`).
 
-        `cas_version` (ADVICE r6) makes the append a compare-and-swap on
+        `cas_version` makes the append a compare-and-swap on
         the table version: the commit is attempted at EXACTLY
         cas_version + 1 and `ConcurrentWriteError` raised if that version
         is already taken — i.e. someone else committed after the caller's
@@ -454,7 +493,7 @@ class TransactionalTable:
         """Phase 1 of a two-phase append: run the Spark write that stages
         `df`'s files into the table under unique, commit-less (hence
         reader-invisible) names, and return the staged file list for
-        `commit_staged`.  Splitting the append lets a
+        `commit_staged` (a list that also carries the files' schema).  Splitting the append lets a
         writer with TWO dependent publications (the drain writers' store
         + out commits, whose crash-window argument only constrains COMMIT
         order) run both staging Spark jobs concurrently and serialize
@@ -483,11 +522,11 @@ class TransactionalTable:
         cas_version: int | None = None,
     ) -> int:
         """Phase 2 of a two-phase append: publish a commit naming the
-        files `stage_for_append` returned.  Pure filesystem work — no
-        Spark job.  Identical publish/CAS semantics to `append` (which is
-        now stage + this)."""
+        files `stage_for_append` returned, and their schema.  Pure
+        filesystem work — no Spark job.  Identical publish/CAS semantics
+        to `append` (which is stage + this)."""
         moved = staged
-        commit: dict = {"files": sorted(moved)}
+        commit: dict = {"files": sorted(moved), "schema": staged.schema}
         if partition_by:
             # recorded so optimize() can default to the table's layout
             # instead of relying on the caller remembering it
@@ -502,7 +541,7 @@ class TransactionalTable:
             )
             if self._publish(payload, commit_path):
                 return version
-            # Best-effort delete of the just-moved files (review r7): they
+            # Best-effort delete of the just-moved files: they
             # are known by name and referenced by NO commit, so removing
             # them reclaims disk immediately instead of leaving a full
             # block of orphaned parquet per rejected batch for vacuum()'s
@@ -563,7 +602,7 @@ class TransactionalTable:
         keep_where: Column | None = None,
         transform=None,
     ) -> int:
-        """Small-file compaction (VERDICT r4 #6): rewrite the current
+        """Small-file compaction: rewrite the current
         snapshot into `target_files` parquet files and publish them as ONE
         replace-commit, atomically.  A long-running streaming MV commits
         one small file per block per partition; at 100 TB the FILE COUNT,
@@ -581,7 +620,7 @@ class TransactionalTable:
         from the new snapshot (bounded retries).  Old data files stay on
         disk for pinned snapshot reads until `vacuum()` reclaims them.
 
-        `cluster_cols` (VERDICT r5 #7) lays the compacted files out along
+        `cluster_cols` lays the compacted files out along
         the Morton key over those columns (`storage.zorder_cluster_key`):
         range-partitioned on the z-value so each file is a bounded
         hyper-rectangle in every cluster dimension — multi-dimensional
@@ -595,8 +634,8 @@ class TransactionalTable:
         recorded (`partition_column()`), so a caller can no longer
         forget it and silently flatten the layout — which would make
         every later `read_where` prefix match nothing and return the
-        empty frame, i.e. a dedup store would dedupe against nothing
-        (code-review r6).  This is the maintenance pass a
+        empty frame, i.e. a dedup store would dedupe against nothing.
+        This is the maintenance pass a
         continuously-appending store needs: per-partition file count
         drops from O(commits) back to 1.  Returns the committed
         version."""
@@ -620,7 +659,7 @@ class TransactionalTable:
                 # re-read and filtered on the retry like everything else.
                 df = df.filter(keep_where)
             if transform is not None:
-                # snapshot-to-snapshot rewrite hook (r12): the staged
+                # snapshot-to-snapshot rewrite hook: the staged
                 # snapshot becomes transform(read(snapshot)) — the ANN
                 # recluster path founds a new centroid generation this
                 # way.  Runs INSIDE the OCC loop, so a retry re-derives
@@ -652,7 +691,11 @@ class TransactionalTable:
             else:
                 df = df.coalesce(max(1, target_files))
             moved = self._stage(df, partition_by)
-            replace: dict = {"files": sorted(moved), "replaces": snapshot}
+            replace: dict = {
+                "files": sorted(moved),
+                "schema": moved.schema,
+                "replaces": snapshot,
+            }
             if partition_by:
                 replace["partition_by"] = partition_by  # layout survives prune_log
             payload = json.dumps(replace).encode()
@@ -671,13 +714,13 @@ class TransactionalTable:
         files (writers that crashed between the move and the commit, and
         pre-`optimize()` files no longer in the current snapshot),
         `.staging-*` scratch directories (writers killed mid-`df.write`,
-        before their finally-block cleanup ran — ADVICE r3), and orphaned
+        before their finally-block cleanup ran), and orphaned
         `.tmp-*` commit payloads in the log dir (writers killed inside
-        `_publish` between write and link — ADVICE r4).  `grace_seconds`
+        `_publish` between write and link).  `grace_seconds`
         protects in-flight appends: anything younger than the grace window
         may belong to a writer that has not yet published its commit, so it
         is kept.  A staging directory's age is the NEWEST mtime anywhere
-        under it (ADVICE r4: `df.write` creates files under
+        under it (`df.write` creates files under
         `staging/_temporary/...` without touching the top-level dir's
         mtime, so a long write phase must not look idle).  Note vacuuming
         unreferenced pre-optimize files breaks pinned snapshot reads older
@@ -729,16 +772,28 @@ class TransactionalTable:
 
     # -- read path ----------------------------------------------------------
 
+    def _reader(
+        self, spark: SparkSession, version: int | None
+    ) -> tuple[list[str], DataFrameReader]:
+        """(the table-relative files committed up to `version`, a reader
+        with the schema recorded at or below it).  The reader infers
+        nothing: the data columns come from the log and the partition
+        column from the paths, so planning a read opens no footer.
+        `basePath` keeps Hive-style partition columns visible (harmless
+        for flat tables)."""
+        snap = self._replay(version)
+        if not snap.files:
+            raise FileNotFoundError(f"no committed data in {self.path}")
+        schema = StructType.fromJson(snap.schema)
+        return snap.files, spark.read.schema(schema).option("basePath", self.path)
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot read: exactly the files committed up to `version`
-        (latest when None).  An empty table needs at least one commit to
-        infer a schema from — callers create tables by appending.
-        `basePath` keeps Hive-style partition columns visible when the
-        table was written with `partition_by` (harmless for flat tables)."""
-        files = self.data_files(version)
-        if not files:
-            raise FileNotFoundError(f"no committed data in {self.path}")
-        return spark.read.option("basePath", self.path).parquet(*files)
+        (latest when None), planned with zero Spark jobs.  Raises
+        FileNotFoundError when nothing is committed — callers create
+        tables by appending."""
+        files, reader = self._reader(spark, version)
+        return reader.parquet(*(os.path.join(self.path, f) for f in files))
 
     def read_where(
         self,
@@ -749,11 +804,12 @@ class TransactionalTable:
     ) -> DataFrame:
         """Partition-pruned snapshot read: only the committed files under
         `<partition_col>=<value>/` for the given values.  The pruning is
-        DRIVER-SIDE off the commit log's file list — no directory listing,
-        no data touched outside the named partitions — so the scan cost is
-        O(matching files) no matter how large the table has grown.  This is
-        the read the streaming near-dup store does per block: values =
-        the block's band-key shards, files read = colliding buckets only.
+        done on the driver off the commit log's file list, so no data
+        outside the named partitions is touched and the scan cost is
+        O(matching files) no matter how large the table has grown.  Like
+        `read`, it plans with zero Spark jobs.  This is the read the
+        streaming near-dup store does per block: values = the block's
+        band-key shards, files read = colliding buckets only.
 
         Returns an empty frame (with the table's schema) when no committed
         file matches; raises FileNotFoundError only when the table has no
@@ -764,28 +820,20 @@ class TransactionalTable:
         booleans, `__HIVE_DEFAULT_PARTITION__` for NULL — a plain
         f-string would silently return the empty frame for any value
         Spark escapes, and a dedup-store caller would then dedupe
-        against nothing (code-review r6)."""
-        files = self.data_files(version)
-        if not files:
-            raise FileNotFoundError(f"no committed data in {self.path}")
-        # match TABLE-RELATIVE paths: a table whose own root happens to
-        # live under a directory named `<col>=<value>` must not match
-        # every file (code-review r6)
+        against nothing.  Matching is on TABLE-RELATIVE paths, so a table
+        whose own root lives under a directory named `<col>=<value>` does
+        not match every file."""
+        files, reader = self._reader(spark, version)
         prefixes = tuple(
             f"{partition_col}={_partition_path_value(v)}{os.sep}" for v in values
         )
-        picked = [
-            f
-            for f in files
-            if os.path.relpath(f, self.path).startswith(prefixes)
-        ]
+        picked = [f for f in files if f.startswith(prefixes)]
         if not picked:
-            # schema-only empty frame: ONE committed file suffices — a
-            # reader over the whole list costs O(table) for nothing
-            return (
-                spark.read.option("basePath", self.path).parquet(files[0]).limit(0)
-            )
-        return spark.read.option("basePath", self.path).parquet(*picked)
+            # schema-only empty frame: ONE committed file gives the
+            # partition column's type — a reader over the whole list costs
+            # O(table) for nothing
+            return reader.parquet(os.path.join(self.path, files[0])).limit(0)
+        return reader.parquet(*(os.path.join(self.path, f) for f in picked))
 
 
 #: Characters Hive/Spark escape in partition-directory names

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_kafka_clickhouse_demo_spark.sources.txlog import (
@@ -240,6 +241,7 @@ def test_optimize_preserves_reads_and_drops_file_count(spark, tmp_path):
     for i in range(6):
         t.append(_df(spark, i * 10, (i + 1) * 10).repartition(3))
     before = sorted(tuple(r) for r in t.read(spark).collect())
+    schema_before = t.read(spark).schema
     n_files_before = len(t.data_files())
     assert n_files_before >= 6 * 3
 
@@ -247,6 +249,7 @@ def test_optimize_preserves_reads_and_drops_file_count(spark, tmp_path):
     assert v == t.version()
     after = sorted(tuple(r) for r in t.read(spark).collect())
     assert after == before
+    assert t.read(spark).schema == schema_before  # the replace records it
     assert len(t.data_files()) < n_files_before
     assert len(t.data_files()) <= 2  # coalesce(1) -> a file or two
 
@@ -367,10 +370,14 @@ def test_optimize_partition_by_preserves_layout_and_pruning(spark, tmp_path):
             partition_by="shard",
         )
     before = sorted(r["id"] for r in t.read(spark).collect())
+    schema_before = t.read(spark).schema
     files_before = t.data_files()
     assert len(files_before) > 4
 
     t.optimize(spark, partition_by="shard")
+    # `shard` is left out of the recorded schema: still inferred as int
+    assert t.read(spark).schema == schema_before
+    assert t.read(spark).schema["shard"].dataType.simpleString() == "int"
 
     files_after = t.data_files()
     # one file per shard value, still under shard=<v>/ dirs
@@ -556,8 +563,9 @@ def test_append_with_added_column_reads_merged_schema(spark, tmp_path):
     """Schema evolution pin (ALTER TABLE ADD COLUMN analogue): an append
     carrying a NEW column must not corrupt the table — a snapshot read
     with mergeSchema surfaces the union schema with NULLs for old rows,
-    and the plain read keeps working on the original columns."""
-    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
+    and so does the plain read, because the newest recorded schema wins.
+    An append that changes a column's type makes the next read over the
+    older files fail loudly instead of returning NULLs."""
 
     t = TransactionalTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a")], "id long, v string"))
@@ -573,8 +581,15 @@ def test_append_with_added_column_reads_merged_schema(spark, tmp_path):
     )
     rows = {r["id"]: (r["v"], r["score"]) for r in merged.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
-    # plain snapshot read still answers on the common columns
-    assert {r["id"] for r in t.read(spark).select("id").collect()} == {1, 2}
+    # the plain read uses the newest recorded schema: old rows read NULL
+    assert t.read(spark).columns == ["id", "v", "score"]
+    assert {r["id"]: (r["v"], r["score"]) for r in t.read(spark).collect()} == rows
+    # a snapshot pinned before the added column keeps its own schema
+    assert t.read(spark, version=0).columns == ["id", "v"]
+
+    t.append(spark.createDataFrame([(3, 7, 1.0)], "id long, v long, score double"))
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        t.read(spark).collect()
 
 
 def test_txn_version_locates_commit(spark, tmp_path):
@@ -712,3 +727,97 @@ def test_publish_pair_orders_and_recovers(spark, tmp_path):
     for t in (store, out):
         assert not t.txn_committed("w:2")
         assert parquet_on_disk(t) == set(t.data_files())
+
+
+def _stale_once(monkeypatch, table, listing):
+    """Make `table`'s next log listing return `listing` (taken before a
+    concurrent prune), and every later one the real log."""
+    real = table._log_entries
+    listings = iter([lambda: listing])
+    monkeypatch.setattr(table, "_log_entries", lambda: next(listings, real)())
+
+
+def test_reads_survive_a_concurrent_checkpoint_and_prune(spark, tmp_path, monkeypatch):
+    """A reader that listed the log just before another handle folded and
+    pruned the listed commits must re-list and read the checkpoint, not
+    raise FileNotFoundError: a drain writer takes that error for "nothing
+    committed yet" and would count a block against an empty store."""
+    writer = TransactionalTable(str(tmp_path / "t"))
+    df = spark.range(30).select(
+        F.col("id"), F.pmod("id", F.lit(3)).cast("int").alias("shard")
+    )
+    for i in range(3):
+        writer.append(df.filter(F.col("id") % 3 == i), partition_by="shard", txn=f"w:{i}")
+    reader = TransactionalTable(writer.path)
+
+    _stale_once(monkeypatch, reader, reader._log_entries())
+    writer.checkpoint(compact_txn_watermarks=True)
+    assert len(writer.prune_log()) == 3
+    got = reader.read_where(spark, "shard", [1])
+    assert sorted(r["id"] for r in got.collect()) == list(range(1, 30, 3))
+
+    for i in (3, 4):
+        writer.append(df.filter(F.col("id") == i), partition_by="shard", txn=f"w:{i}")
+    _stale_once(monkeypatch, reader, reader._log_entries())
+    writer.checkpoint(compact_txn_watermarks=True)
+    assert len(writer.prune_log()) == 2
+    assert reader.txn_committed("w:4")
+    assert not reader.txn_committed("w:5")
+
+
+@pytest.fixture(scope="module")
+def _wide_table(spark, tmp_path_factory):
+    """12 commits x 8 shards = 96 files: past Spark's 32-path threshold for
+    listing files in a job of its own."""
+    t = TransactionalTable(str(tmp_path_factory.mktemp("wide") / "t"))
+    for i in range(12):
+        df = spark.range(i * 40, (i + 1) * 40).select(
+            F.col("id"), F.pmod("id", F.lit(8)).cast("int").alias("shard")
+        )
+        t.append(df.repartition(1, "shard"), partition_by="shard")
+    assert len(t.data_files()) == 96
+    return t
+
+
+@pytest.mark.parametrize(
+    "case", ["read", "read_where", "read_where_miss", "read_older", "read_pruned"]
+)
+def test_reads_plan_with_zero_spark_jobs(spark, _wide_table, tmp_path, case):
+    """Every log read is planned on the driver: the files come from the
+    log, the data columns from the schema the log records and the
+    partition column from the paths, so no Spark job runs between the
+    call and the first action.  The frame equals a plain parquet read of
+    the same files."""
+    import shutil
+
+    t = _wide_table
+    if case == "read_pruned":
+        shutil.copytree(t.path, tmp_path / "t")
+        t = TransactionalTable(str(tmp_path / "t"))
+        t.checkpoint()
+        assert t.prune_log()
+    version = 5 if case == "read_older" else None
+    shards = [1, 3, 5] if case == "read_where" else [99]
+    files = t.data_files(version)
+    if case == "read_where":
+        files = [f for f in files if any(f"shard={s}/" in f for s in shards)]
+        assert len(files) > 32
+
+    sc = spark.sparkContext
+    group = f"txlog-plan-{case}"
+    sc.setJobGroup(group, group)
+    try:
+        if case.startswith("read_where"):
+            got = t.read_where(spark, "shard", shards)
+        else:
+            got = t.read(spark, version=version)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    want = spark.read.option("basePath", t.path).parquet(*files)
+    if case == "read_where_miss":
+        want = want.limit(0)
+    assert got.schema == want.schema
+    assert got.schema["shard"].dataType.simpleString() == "int"
+    assert sorted(got.collect()) == sorted(want.collect())
