@@ -85,8 +85,9 @@ def sum_states(state: Column | str) -> Column:
 # compaction.  The Spark-first state is the built-in Apache DataSketches
 # HLL binary (`hll_sketch_agg`, JVM-side, map-side combinable) — strictly
 # better than a hand-rolled register-array struct: the union is a single
-# aggregate expression, so the SAME compact_summing path that collapses
-# max/min/avg states collapses uniq states, and the sketch encoding is a
+# aggregate expression, so the same `storage.compact_summing` merge (one
+# `TransactionalTable.optimize` commit) that collapses max/min/avg states
+# collapses uniq states, and the sketch encoding is a
 # portable, versioned format rather than an ad-hoc array.
 #
 # Determinism contract: unioning per-block sketches built with one lg_k

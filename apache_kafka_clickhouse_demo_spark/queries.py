@@ -738,7 +738,7 @@ def q_mv_cascade_attendance(spark, sf_dir):
     and the partial rows merge exactly.
     """
     from apache_kafka_clickhouse_demo_spark.operators import entry_pipeline as EP
-    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.cascade import (
         CascadeStage,
         run_cascade,
@@ -755,17 +755,16 @@ def q_mv_cascade_attendance(spark, sf_dir):
         src1,
         [
             # MV#1: opaque message -> typed table; then the S5
-            # background-merge analogue LOAD-BEARING in the gate (r05):
-            # collapse MV#1's per-block file debris before the next stage
-            # scans it (README.rst:88).  target_files=4 keeps >= 2
-            # downstream insert blocks so the partial-row property holds;
-            # the oracle equality proves the swap loses/duplicates nothing.
+            # background-merge analogue LOAD-BEARING in the gate: collapse
+            # MV#1's per-block file debris in one log commit before the
+            # next stage scans it (README.rst:88).  target_files=4 keeps
+            # >= 2 downstream insert blocks so the partial-row property
+            # holds; the oracle equality proves the merge loses/duplicates
+            # nothing.
             CascadeStage(
                 "typed",
                 EP.typed_entry_events,
-                post_compact=lambda s, p: compact_files(
-                    s, p, target_files=4, sort_cols=["timestamp"]
-                ),
+                post_compact=lambda s, t: t.optimize(s, target_files=4),
             ),
             # MV#2 with M4 cutover: typed -> per-(timestamp, subject)
             # PARTIAL counts.  History (< T) backfills in one shot; the
@@ -784,7 +783,7 @@ def q_mv_cascade_attendance(spark, sf_dir):
 
     # read path: merge the stored partial rows
     return (
-        spark.read.parquet(counts)
+        TransactionalTable(counts).read(spark)
         .groupBy("timestamp", "subject")
         .agg(F.sum("n_students").alias("n_students"))
         .orderBy("timestamp", "subject")
@@ -815,6 +814,7 @@ def q_mv_cascade_daily(spark, sf_dir):
     aggregate — equal iff every seam (ingest, partial counts, compaction,
     cutover, state merge) loses and duplicates nothing."""
     from apache_kafka_clickhouse_demo_spark.sources.storage import compact_summing
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.cascade import (
         CascadeStage,
         run_cascade,
@@ -854,9 +854,9 @@ def q_mv_cascade_daily(spark, sf_dir):
                 "granular",
                 attendance.attendance_granular,
                 max_files_per_trigger=2,
-                post_compact=lambda s, p: compact_summing(
+                post_compact=lambda s, t: compact_summing(
                     s,
-                    p,
+                    t,
                     keys=["ts_hour", "event_type"],
                     agg_exprs={"student_count": F.sum("student_count")},
                 ),
@@ -875,7 +875,7 @@ def q_mv_cascade_daily(spark, sf_dir):
     )
 
     # read path: maxMerge/minMerge/avgMerge over the stored partial states
-    return attendance.attendance_daily_merged(spark.read.parquet(daily))
+    return attendance.attendance_daily_merged(TransactionalTable(daily).read(spark))
 
 
 def q_attendance_daily_compacted(spark, sf_dir):
@@ -884,11 +884,8 @@ def q_attendance_daily_compacted(spark, sf_dir):
     COMPACTED table (README.rst:206-216, 264-272).  Equal to the direct
     aggregate iff compaction preserves the merge."""
     from apache_kafka_clickhouse_demo_spark.functions import agg_state as S
-    from apache_kafka_clickhouse_demo_spark.sources.storage import (
-        compact_summing,
-        read_table,
-        write_sorted,
-    )
+    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_summing
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     events = _t(spark, sf_dir, "events")
     granular = attendance.attendance_granular(events).withColumn(
@@ -896,11 +893,11 @@ def q_attendance_daily_compacted(spark, sf_dir):
     )
     states = attendance.attendance_daily_states(granular, "_block").drop("_block")
 
-    path = _workdir("daily_states_") + "/t"
-    write_sorted(states, path, sort_cols=["day", "event_type"])
+    t = TransactionalTable(_workdir("daily_states_") + "/t")
+    t.append(states)
     compact_summing(
         spark,
-        path,
+        t,
         keys=["day", "event_type"],
         agg_exprs={
             "max_state": S.max_merge("max_state"),
@@ -908,7 +905,7 @@ def q_attendance_daily_compacted(spark, sf_dir):
             "avg_state": S.sum_states("avg_state"),
         },
     )
-    return attendance.attendance_daily_merged(read_table(spark, path))
+    return attendance.attendance_daily_merged(t.read(spark))
 
 
 def q_stream_dedup(spark, sf_dir):
@@ -2622,9 +2619,8 @@ def q_replacing_latest(spark, sf_dir):
     from apache_kafka_clickhouse_demo_spark.sources.storage import (
         compact_replacing,
         read_replacing_final,
-        read_table,
-        write_sorted,
     )
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -2633,15 +2629,13 @@ def q_replacing_latest(spark, sf_dir):
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    path = _workdir("replacing_") + "/t"
-    write_sorted(ev, path, sort_cols=["user_id", "ts"])
+    t = TransactionalTable(_workdir("replacing_") + "/t")
+    t.append(ev)
     compact_replacing(
-        spark, path, keys=["user_id"], version_col="ts", tiebreak=["event_id"]
+        spark, t, keys=["user_id"], version_col="ts", tiebreak=["event_id"]
     )
     return (
-        read_replacing_final(
-            read_table(spark, path), ["user_id"], "ts", ["event_id"]
-        )
+        read_replacing_final(t.read(spark), ["user_id"], "ts", ["event_id"])
         .select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
@@ -2663,9 +2657,8 @@ def q_replacing_deletes(spark, sf_dir):
     from apache_kafka_clickhouse_demo_spark.sources.storage import (
         compact_replacing,
         read_replacing_final,
-        read_table,
-        write_sorted,
     )
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
@@ -2675,11 +2668,11 @@ def q_replacing_deletes(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
         (F.col("event_type") == "error").cast("int").alias("is_deleted"),
     )
-    path = _workdir("replacing_del_") + "/t"
-    write_sorted(ev, path, sort_cols=["user_id", "ts"])
+    t = TransactionalTable(_workdir("replacing_del_") + "/t")
+    t.append(ev)
     compact_replacing(
         spark,
-        path,
+        t,
         keys=["user_id"],
         version_col="ts",
         tiebreak=["event_id"],
@@ -2687,11 +2680,7 @@ def q_replacing_deletes(spark, sf_dir):
     )
     return (
         read_replacing_final(
-            read_table(spark, path),
-            ["user_id"],
-            "ts",
-            ["event_id"],
-            deleted_col="is_deleted",
+            t.read(spark), ["user_id"], "ts", ["event_id"], deleted_col="is_deleted"
         )
         .select(
             "user_id",
@@ -2712,10 +2701,8 @@ def q_collapsing_balance(spark, sf_dir):
     final state row per user must survive, so the compacted table read IS
     the per-user (n_events, balance); the oracle states that directly as
     count/sum over the raw events."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import (
-        compact_collapsing,
-        read_table,
-    )
+    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_collapsing
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     cents = F.round(F.col("value") * 100).cast("long")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2735,13 +2722,13 @@ def q_collapsing_balance(spark, sf_dir):
         F.lit(-1).alias("sign"),
         (F.col("balance_cents") - F.col("_cents")).alias("balance_cents"),
     )
-    path = _workdir("collapsing_") + "/t"
-    states.unionByName(cancels).write.parquet(path)
+    t = TransactionalTable(_workdir("collapsing_") + "/t")
+    t.append(states.unionByName(cancels))
     compact_collapsing(
-        spark, path, keys=["user_id"], sign_col="sign", version_col="version"
+        spark, t, keys=["user_id"], sign_col="sign", version_col="version"
     )
     return (
-        read_table(spark, path)
+        t.read(spark)
         .select(
             "user_id", F.col("version").alias("n_events"), "balance_cents"
         )
@@ -2752,20 +2739,17 @@ def q_collapsing_balance(spark, sf_dir):
 def q_ttl_cleanup(spark, sf_dir):
     """Row TTL on a day-partitioned table: write events partitioned by day,
     expire everything before a MID-day cutoff (`apply_ttl` — whole expired
-    days are unlinked from partition values alone, only the boundary day is
-    filter-rewritten), and report the surviving per-day counts/sums."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import (
-        apply_ttl,
-        read_table,
-        write_sorted,
-    )
+    days leave the snapshot from partition values alone, only the boundary
+    day is filter-rewritten), and report the surviving per-day counts/sums."""
+    from apache_kafka_clickhouse_demo_spark.sources.storage import apply_ttl
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    path = _workdir("ttl_") + "/t"
-    write_sorted(ev, path, sort_cols=["ts"], partition_cols=["day"])
-    apply_ttl(spark, path, "ts", TTL_CUTOFF, partition_day_col="day")
+    t = TransactionalTable(_workdir("ttl_") + "/t")
+    t.append(ev, partition_by="day")
+    apply_ttl(spark, t, "ts", TTL_CUTOFF, partition_day_col="day")
     return (
-        read_table(spark, path)
+        t.read(spark)
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -5313,7 +5297,7 @@ EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # they carried keeps >= 1 green gate row:
     "ann_lsh_topk": q_ann_lsh_topk,  # RP-LSH bucket join gated via stream_embed_near_dup; ANN family keeps ann_topk + ann_ivf_topk + ann_sq8_topk gate rows
     "doc_fingerprint": q_doc_fingerprint,  # fingerprint family's gate row is now the richer winnow_fingerprint; min-shingle form stays locally oracle-checked + degenerate-docs pytest
-    "attendance_daily_compacted": q_attendance_daily_compacted,  # S5/S6/A7/A8 batch form: mv_cascade_daily's streaming cascade runs the same write_sorted + summing compaction + merge read; pruning/plan pytests unchanged
+    "attendance_daily_compacted": q_attendance_daily_compacted,  # S5/S6/A7/A8 batch form: mv_cascade_daily's streaming cascade runs the same summing compaction (one log commit) + merge read; pruning/plan pytests unchanged
     # rotated OUT of the gate in r07 for semantic_dedup / stream_funnel /
     # snapshot_changelog (VERDICT r6 #2); every §2 operator they carried
     # keeps ≥1 green gate row:

@@ -60,7 +60,7 @@ def compact_bucketed(
     num_buckets: int,
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Compact-by-rewrite for a bucketed catalog table (VERDICT r6 #7).
+    """Compact-by-rewrite for a bucketed catalog table.
 
     Every append writes one file per (task, bucket) pair, so a table fed
     by K inserts of T tasks each accumulates up to K*T files PER BUCKET —
@@ -73,12 +73,12 @@ def compact_bucketed(
     lands in a staging table, and a catalog DROP + RENAME swaps it in.
 
     Concurrency contract: the DROP->RENAME swap is the catalog analogue
-    of `storage._atomic_swap`'s two renames — a reader between the two
-    statements sees no table.  Single writer, maintenance window, same as
-    every non-transactional compaction here; concurrent-reader compaction
-    belongs to `txlog.TransactionalTable.optimize`.
+    of the two-rename directory swap `ProjectedTable.optimize` uses — a
+    reader between the two statements sees no table.  Single writer,
+    maintenance window; concurrent-reader compaction belongs to
+    `txlog.TransactionalTable.optimize`.
 
-    Crash recovery (review r7): a crash between the DROP and the RENAME
+    Crash recovery: a crash between the DROP and the RENAME
     leaves the fully-written staging table as the ONLY copy — a rerun
     detects that state (staging exists, live table doesn't) and COMPLETES
     the swap instead of dropping the sole survivor.  Caveat for tables

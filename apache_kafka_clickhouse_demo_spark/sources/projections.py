@@ -28,11 +28,49 @@ pushdown does the pruning from there.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_kafka_clickhouse_demo_spark.sources.storage import write_sorted
+
+
+def _atomic_swap(path: str, write_fn) -> None:
+    """Directory swap for `ProjectedTable.optimize`: write the new copy
+    via `write_fn(tmp)`, then path -> _old, tmp -> path, drop _old.
+
+    Failure handling:
+    - a stale `<path>_old` left by an earlier failed/interrupted swap is
+      cleared first, instead of making every later compaction die with
+      ENOTEMPTY at the first rename;
+    - if the second rename fails after the first succeeded, the ORIGINAL
+      copy is restored from `_old` before re-raising, so the table never
+      ends up with no copy at all;
+    - a failed cleanup of `_old` is non-fatal (the next swap clears it).
+
+    The swap is TWO renames: a reader listing the directory between them
+    sees no copy, so it needs a single writer and no concurrent readers.
+    The transactional table's `optimize()` is the one-commit alternative;
+    it does not write the per-column bloom filters or the range layout a
+    projection copy carries."""
+    p = path.rstrip("/")
+    old = p + "_old"
+    tmp = tempfile.mkdtemp(dir=os.path.dirname(p) or ".", prefix="_compact_")
+    try:
+        write_fn(tmp)
+        shutil.rmtree(old, ignore_errors=True)  # stale debris from a crash
+        os.rename(p, old)
+        try:
+            os.rename(tmp, p)
+        except BaseException:
+            os.rename(old, p)  # restore the live table before surfacing
+            raise
+        shutil.rmtree(old, ignore_errors=True)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
 
 
 class ProjectedTable:
@@ -55,7 +93,7 @@ class ProjectedTable:
         self.orders = {k: list(v) for k, v in orders.items()}
         #: on the TABLE, not per-write: appended files must carry the same
         #: blooms as the base files or point-predicate skipping silently
-        #: degrades with every insert (code-review mid-r6)
+        #: degrades with every insert
         self.bloom_cols = list(bloom_cols or [])
 
     def _dir(self, name: str) -> str:
@@ -71,8 +109,8 @@ class ProjectedTable:
     ) -> None:
         """One copy = RANGE-partitioned on its sort key, then handed to
         `storage.write_sorted` (ONE sorted-parquet writer in the engine —
-        a local copy of its option plumbing would drift; code-review
-        mid-r6): every FILE owns a narrow, disjoint slice of the key space
+        a local copy of its option plumbing would drift): every FILE owns
+        a narrow, disjoint slice of the key space
         (the MergeTree part shape), so min/max pruning works at file
         granularity — a hash-random task layout would leave every file
         spanning the whole key range however well its rows are sorted
@@ -129,21 +167,16 @@ class ProjectedTable:
         return spark.read.parquet(self._dir(self.choose(filter_cols)))
 
     def optimize(self, spark: SparkSession, files: int | None = None) -> None:
-        """Per-copy compaction (VERDICT r6 #7): every insert appends its
-        own range-sliced file set, so after many inserts each projection
-        holds N_inserts overlapping slice families and a routed scan pays
-        one footer + one task per tiny file — the same small-file decay
-        `compact_files` exists for, once per copy.  This rewrites each
-        copy back to a single range-partitioned sorted file family through
-        `_write_one` — the SAME writer inserts use, so the per-file
-        disjoint-slice property, in-file sort, AND the table's bloom
-        skip-indexes all survive (routing `compact_files` here instead
-        would silently drop the blooms: its plain parquet rewrite knows
-        nothing of them).  The swap is `storage._atomic_swap`'s
-        two-rename, same single-writer/no-concurrent-reader maintenance
-        window as every non-transactional compaction in the engine."""
-        from apache_kafka_clickhouse_demo_spark.sources.storage import _atomic_swap
-
+        """Per-copy compaction: every insert appends its own range-sliced
+        file set, so after many inserts each projection holds N_inserts
+        overlapping slice families and a routed scan pays one footer + one
+        task per tiny file — small-file decay, once per copy.  This
+        rewrites each copy back to a single range-partitioned sorted file
+        family through `_write_one` — the SAME writer inserts use, so the
+        per-file disjoint-slice property, in-file sort, AND the table's
+        bloom skip-indexes all survive (a plain parquet rewrite knows
+        nothing of the blooms).  Each copy is swapped in by `_atomic_swap`:
+        single writer, no concurrent readers."""
         for name, sort_cols in self.orders.items():
             path = self._dir(name)
             df = spark.read.parquet(path)

@@ -13,9 +13,13 @@ analogue (SURVEY.md §2.1 S5/S6, §2.6 O4):
 - `insert_into`    : `INSERT INTO ... SELECT` batch backfill (S7,
                      README.rst:178-185, 242-252) — append of an arbitrary
                      transformed DataFrame into a live table directory.
-- `compact_summing`: SummingMergeTree background-merge analogue (S6/A8,
-                     README.rst:214-216) — collapse same-key partial rows
-                     into one combined row and atomically rewrite the table.
+- `compact_summing`, `compact_replacing`, `compact_collapsing`, `apply_ttl`:
+                     the MergeTree-family background merges (S6/A8,
+                     README.rst:214-216).  Each one is a single
+                     `TransactionalTable.optimize` replace commit on a
+                     transactional table, so a concurrent reader sees the
+                     snapshot before the merge or the one after it, never
+                     a partial table.
 
 At 100 TB the write pattern is the same: `repartition(partition_cols)` keeps
 one shuffle whose output is aligned with the directory layout, and each task
@@ -26,11 +30,11 @@ fragments.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 
 def zorder_value(cols: list[Column | str], bits: int = 16) -> Column:
@@ -66,7 +70,7 @@ def zorder_value(cols: list[Column | str], bits: int = 16) -> Column:
 def zorder_cluster_key(df: DataFrame, cluster_cols: list[str], bits: int = 8) -> Column:
     """Morton clustering key over ARBITRARY columns — the normalization
     front-end `zorder_value` deliberately leaves to the caller, packaged
-    for the compaction hooks (VERDICT r5 #7).
+    for `TransactionalTable.optimize(cluster_cols=...)`.
 
     Per-column mapping into the required non-negative [0, 2^bits) domain:
 
@@ -172,139 +176,32 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _atomic_swap(path: str, write_fn) -> None:
-    """Shared swap for the compaction rewrites (code-review r6: the two
-    inline copies had drifted AND shared a crash hole): write the new
-    table via `write_fn(tmp)`, then path -> _old, tmp -> path, drop _old.
-
-    Failure handling the inline copies lacked:
-    - a stale `<path>_old` left by an earlier failed/interrupted swap is
-      cleared first, instead of making every later compaction die with
-      ENOTEMPTY at the first rename;
-    - if the second rename fails after the first succeeded, the ORIGINAL
-      table is restored from `_old` before re-raising — previously the
-      handler deleted the newly written data while `path` no longer
-      existed, leaving NO table at all;
-    - a failed cleanup of `_old` is non-fatal (the next swap clears it).
-
-    The single-writer/no-concurrent-reader window between the two renames
-    remains (see compact_files' concurrency contract)."""
-    p = path.rstrip("/")
-    old = p + "_old"
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(p) or ".", prefix="_compact_")
-    try:
-        write_fn(tmp)
-        shutil.rmtree(old, ignore_errors=True)  # stale debris from a crash
-        os.rename(p, old)
-        try:
-            os.rename(tmp, p)
-        except BaseException:
-            os.rename(old, p)  # restore the live table before surfacing
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_files: int = 1,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-    cluster_cols: list[str] | None = None,
-    zorder_bits: int = 8,
-) -> int:
-    """Small-file compaction for a plain-parquet table directory (VERDICT
-    r4 #6): rewrite the table into `target_files` files (optionally
-    re-sorted, restoring tight row-group stats) and atomically swap it in.
-
-    A streaming MV's destination accumulates one file per micro-batch per
-    partition (`streaming/pipeline.py`); at 100 TB the FILE COUNT — driver
-    listing, footer reads, one task per tiny file — kills the downstream
-    scan long before the bytes do.  This is the background-merge half of
-    MergeTree the reference gets for free (README.rst:88 "background
-    merges"), applied to row-preserving tables; `compact_summing` below is
-    the same swap for same-key-collapsing tables.
-
-    Concurrency contract (ADVICE r5): readers never see a HALF table — each
-    rename is atomic — but the swap is TWO renames (path -> _old, tmp ->
-    path), so a reader listing the directory in the window between them
-    sees NO table; like `compact_summing`, this requires a single writer
-    and no concurrent readers (the sequential `run_cascade` usage;
-    `run_cascade_live` rejects post_compact for exactly this reason).
-    Concurrent-reader compaction belongs to the transactional table
-    (`txlog.TransactionalTable.optimize`), whose commit-log swap is one
-    atomic publish.
-
-    Pass `partition_cols` for a Hive-partitioned layout: the rewrite then
-    shuffles onto the partition columns (each output directory produced by
-    one task -> one file per directory, the write_sorted shape) and keeps
-    the directory structure — without it a partitioned table would compact
-    into a flat layout and lose partition pruning.
-
-    Pass `cluster_cols` (VERDICT r5 #7; mutually exclusive with
-    `sort_cols`) to lay the rewrite out along the Morton key over those
-    columns (`zorder_cluster_key`): files become small hyper-rectangles in
-    EVERY cluster dimension, so min/max stats prune selective predicates
-    on any of them — multi-dimensional pruning that survives compaction
-    instead of collapsing back to one sort column.  With `partition_cols`
-    the clustering applies within each directory.  Returns the resulting
-    data-file count (recursive when partitioned)."""
-    if sort_cols and cluster_cols:
-        raise ValueError("sort_cols and cluster_cols are mutually exclusive")
-    df = spark.read.parquet(path)
-    zc = "_zcluster"
-    if cluster_cols:
-        df = df.withColumn(zc, zorder_cluster_key(df, cluster_cols, bits=zorder_bits))
-        sort_cols = [zc]
-    if partition_cols:
-        out = df.repartition(*[F.col(c) for c in partition_cols])
-        if sort_cols:
-            out = out.sortWithinPartitions(*[*partition_cols, *sort_cols])
-    elif cluster_cols:
-        # range-partition on the Morton key: each task owns one contiguous
-        # z-range -> each FILE is a bounded hyper-rectangle, not just each
-        # row group
-        out = df.repartitionByRange(max(1, target_files), zc).sortWithinPartitions(zc)
-    else:
-        out = df.coalesce(max(1, target_files))
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-    if cluster_cols:
-        out = out.drop(zc)
-    def _write(tmp: str) -> None:
-        writer = out.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
-
-    _atomic_swap(path, _write)
-    root = path.rstrip("/")
-    return sum(
-        1
-        for dirpath, _d, names in os.walk(root)
-        for n in names
-        if n.endswith(".parquet")
-    )
+def _merge(spark: SparkSession, table: TransactionalTable, keys: list[str] | None, **kw) -> int:
+    """Run one MergeTree merge as one `table.optimize` replace commit and
+    return its version.  The merged snapshot keeps the table's recorded
+    partition layout, which is why a partition column must be one of the
+    merge `keys`: a column absent from the grouping would be dropped from
+    the data.  An unpartitioned merge writes up to
+    `spark.sql.shuffle.partitions` files, so its aggregate is not
+    coalesced into a single task."""
+    pcol = table.partition_column()
+    if keys is not None and pcol is not None and pcol not in keys:
+        raise ValueError(f"partition column {pcol!r} must be one of the keys {keys}")
+    files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return table.optimize(spark, target_files=files, **kw)
 
 
 def compact_summing(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    agg_exprs: dict[str, Column],
-    partition_cols: list[str] | None = None,
-) -> None:
+    spark: SparkSession, table: TransactionalTable, keys: list[str], agg_exprs: dict[str, Column]
+) -> int:
     """S6/A8 — SummingMergeTree same-key collapse (README.rst:214-216).
 
-    Reads the table, combines all partial rows per key with the given
-    aggregate expressions (e.g. `agg_state.sum_states` for avg states,
-    max/min for max/min states), and atomically replaces the table with the
-    compacted form (`_atomic_swap`).  The read-path result is identical
-    before and after — compaction only reduces stored row count, exactly
-    like a background merge.
+    Combines all partial rows per key with the given aggregate expressions
+    (e.g. `agg_state.sum_states` for avg states, max/min for max/min
+    states) in one atomic replace commit.  The read-path result is
+    identical before and after — compaction only reduces stored row count,
+    exactly like a background merge, and a concurrent reader sees either
+    the old snapshot or the merged one.
 
     This one function covers BOTH summing-family engines: plain numeric
     `agg_exprs` give SummingMergeTree; state-merge expressions from
@@ -312,29 +209,16 @@ def compact_summing(
     AggregatingMergeTree — ClickHouse separates the two engines only
     because its merge step must know each column's combine function, which
     here IS the `agg_exprs` argument.
-
-    For a Hive-partitioned destination pass `partition_cols` (they must
-    be part of `keys` — a column absent from the grouping would be
-    DROPPED from the data): the rewrite then keeps the directory layout
-    and its partition pruning, like compact_files (code-review r6: the
-    bare groupBy silently flattened partitioned tables).
     """
-    if partition_cols and not set(partition_cols) <= set(keys):
-        raise ValueError(
-            f"partition_cols {partition_cols} must be a subset of keys {keys}"
-        )
-    df = spark.read.parquet(path)
-    compacted = df.groupBy(*keys).agg(*[expr.alias(name) for name, expr in agg_exprs.items()])
-    if partition_cols:
-        compacted = compacted.repartition(*[F.col(c) for c in partition_cols])
+    aggs = [expr.alias(name) for name, expr in agg_exprs.items()]
+    return _merge(spark, table, keys, transform=lambda df: df.groupBy(*keys).agg(*aggs))
 
-    def _write(tmp: str) -> None:
-        writer = compacted.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
 
-    _atomic_swap(path, _write)
+def _live(deleted_col: str) -> Column:
+    """A NULL tombstone flag is LIVE: ClickHouse's is_deleted is a
+    non-nullable UInt8, and a CDC feed missing the flag on some rows must
+    not lose those keys, which a bare `== 0` would do."""
+    return F.coalesce(F.col(deleted_col), F.lit(0)) == 0
 
 
 def final_rows(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -367,11 +251,8 @@ def final_rows(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFra
 
 
 def read_replacing_final(
-    df: DataFrame,
-    keys: list[str],
-    version_col: str,
-    tiebreak: list[str] | None = None,
-    deleted_col: str | None = None,
+    df: DataFrame, keys: list[str], version_col: str,
+    tiebreak: list[str] | None = None, deleted_col: str | None = None,
 ) -> DataFrame:
     """ReplacingMergeTree read path — `SELECT ... FINAL`: collapse the
     upsert history to the max-version row per key at READ time, before (or
@@ -388,31 +269,19 @@ def read_replacing_final(
     exactly ClickHouse's rule)."""
     out = final_rows(df, keys, [version_col, *(tiebreak or [])])
     if deleted_col is not None:
-        # NULL tombstone flag = LIVE (review r7): ClickHouse's is_deleted
-        # is a non-nullable UInt8, but a CDC feed missing the flag on some
-        # rows must not silently LOSE those keys — a bare `== 0` filters
-        # NULL out, which is neither live nor deleted semantics
-        out = out.filter(F.coalesce(F.col(deleted_col), F.lit(0)) == 0).drop(
-            deleted_col
-        )
+        out = out.filter(_live(deleted_col)).drop(deleted_col)
     return out
 
 
 def compact_replacing(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    version_col: str,
-    tiebreak: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-    deleted_col: str | None = None,
-    cleanup: bool = False,
-) -> None:
+    spark: SparkSession, table: TransactionalTable, keys: list[str], version_col: str,
+    tiebreak: list[str] | None = None, deleted_col: str | None = None, cleanup: bool = False,
+) -> int:
     """ReplacingMergeTree background merge (the upsert/CDC storage engine:
-    `ENGINE = ReplacingMergeTree(ver) ORDER BY key`): atomically rewrite
-    the table keeping only the max-(version, tiebreak) row per key.  The
-    read answer through `read_replacing_final` is identical before and
-    after — compaction only discards superseded versions, exactly like
+    `ENGINE = ReplacingMergeTree(ver) ORDER BY key`): one replace commit
+    keeping only the max-(version, tiebreak) row per key.  The read answer
+    through `read_replacing_final` is identical before and after —
+    compaction only discards superseded versions, exactly like
     ClickHouse's merge-time collapse.
 
     `deleted_col` + `cleanup` mirror `ReplacingMergeTree(ver, is_deleted)`
@@ -421,39 +290,21 @@ def compact_replacing(
     version of the key must still lose to it, so dropping tombstones at
     every merge would resurrect deleted keys.  `cleanup=True` physically
     removes won tombstones (the terminal reclamation pass a CDC pipeline
-    runs once upstream replay of older versions is impossible).
-
-    Like `compact_summing`, `partition_cols` (subset of `keys`) preserves
-    a Hive-partitioned layout and its pruning.  Same single-writer /
-    no-concurrent-reader swap contract as `compact_files`.
+    runs once upstream replay of older versions is impossible), with the
+    FINAL read's rule that a NULL flag is live.
     """
-    if partition_cols and not set(partition_cols) <= set(keys):
-        raise ValueError(
-            f"partition_cols {partition_cols} must be a subset of keys {keys}"
-        )
     if cleanup and deleted_col is None:
         raise ValueError("cleanup=True requires deleted_col")
-    df = spark.read.parquet(path)
-    compacted = final_rows(df, keys, [version_col, *(tiebreak or [])])
-    if cleanup:
-        compacted = compacted.filter(F.col(deleted_col) == 0)
-    if partition_cols:
-        compacted = compacted.repartition(*[F.col(c) for c in partition_cols])
 
-    def _write(tmp: str) -> None:
-        writer = compacted.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
+    def _final(df: DataFrame) -> DataFrame:
+        out = final_rows(df, keys, [version_col, *(tiebreak or [])])
+        return out.filter(_live(deleted_col)) if cleanup else out
 
-    _atomic_swap(path, _write)
+    return _merge(spark, table, keys, transform=_final)
 
 
 def collapse_versioned(
-    df: DataFrame,
-    keys: list[str],
-    sign_col: str,
-    version_col: str,
+    df: DataFrame, keys: list[str], sign_col: str, version_col: str,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """VersionedCollapsingMergeTree merge semantics, as a transformation:
@@ -480,17 +331,9 @@ def collapse_versioned(
     no-op rather than a column collision or a double count.
     """
     tb = [F.col(c) for c in (tiebreak or [])]
-    payload = [
-        c
-        for c in df.columns
-        if c not in (*keys, version_col, sign_col, "multiplicity")
-    ]
+    payload = [c for c in df.columns if c not in (*keys, version_col, sign_col, "multiplicity")]
     sign = F.col(sign_col)
-    weight = (
-        F.col("multiplicity").cast("long")
-        if "multiplicity" in df.columns
-        else F.lit(1).cast("long")
-    )
+    weight = (F.col("multiplicity") if "multiplicity" in df.columns else F.lit(1)).cast("long")
     g = (
         df.groupBy(*keys, version_col)
         .agg(
@@ -515,113 +358,75 @@ def collapse_versioned(
 
 
 def compact_collapsing(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    sign_col: str,
-    version_col: str,
-    tiebreak: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """VersionedCollapsingMergeTree background merge: atomically rewrite
-    the change-log table in its collapsed form (`collapse_versioned`).
+    spark: SparkSession, table: TransactionalTable, keys: list[str], sign_col: str,
+    version_col: str, tiebreak: list[str] | None = None,
+) -> int:
+    """VersionedCollapsingMergeTree background merge: one replace commit
+    of the change-log table in its collapsed form (`collapse_versioned`).
     Sign-weighted reads (`sum(sign * metric)` style) are identical before
-    and after — the merge only removes annihilated pairs.  The rewritten
+    and after — the merge only removes annihilated pairs.  The merged
     table gains the `multiplicity` column; re-compaction treats it as a
     row WEIGHT (see `collapse_versioned`), so running the merge again —
     or merging freshly appended change-log rows into an already-collapsed
-    table — stays exact instead of double-counting.
+    table — stays exact instead of double-counting."""
+    def _collapse(df: DataFrame) -> DataFrame:
+        return collapse_versioned(df, keys, sign_col, version_col, tiebreak)
 
-    `partition_cols` / swap contract: as `compact_replacing`."""
-    if partition_cols and not set(partition_cols) <= set(keys):
-        raise ValueError(
-            f"partition_cols {partition_cols} must be a subset of keys {keys}"
-        )
-    df = spark.read.parquet(path)
-    collapsed = collapse_versioned(df, keys, sign_col, version_col, tiebreak)
-    if partition_cols:
-        collapsed = collapsed.repartition(*[F.col(c) for c in partition_cols])
-
-    def _write(tmp: str) -> None:
-        writer = collapsed.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
-
-    _atomic_swap(path, _write)
+    return _merge(spark, table, keys, transform=_collapse)
 
 
 def apply_ttl(
-    spark: SparkSession,
-    path: str,
-    ts_col: str,
-    expire_before: str,
+    spark: SparkSession, table: TransactionalTable, ts_col: str, expire_before: str,
     partition_day_col: str | None = None,
 ) -> dict:
     """Row TTL on compaction (`TTL ts + INTERVAL n DAY` analogue): delete
     every row with `ts_col` < `expire_before` (an explicit cutoff, not
-    wall-clock — deterministic and replayable by construction).
+    wall-clock — deterministic and replayable by construction).  A NULL
+    timestamp has no age, so its row never expires.
 
     The 100 TB path is the PARTITION-DROP fast path: when the table is
-    Hive-partitioned by the day of `ts_col` (pass `partition_day_col`),
-    directories are classified driver-side from their partition VALUES
-    alone — a directory whose whole day range [d, d+1) lies before the
-    cutoff is unlinked without reading a byte, fully-live days are never
-    touched, and only the single boundary day (a mid-day cutoff) is
-    rewritten with a row filter.  TTL on a day-partitioned 100 TB table
-    is then metadata work + one day's rewrite, not a full-table scan —
-    which is exactly how MergeTree drops whole expired parts.
+    partitioned by the day of `ts_col` (pass `partition_day_col`, which
+    must be the table's partition column), days are classified on the
+    driver from the snapshot's partition VALUES alone.  One replace commit
+    then rewrites only the single boundary day (a mid-day cutoff) with a
+    row filter, leaves each wholly expired day out without reading it
+    (the keep predicate bounds the partition column, so Spark prunes
+    those files at planning), and carries every live day's files over
+    under their old names.  TTL on a day-partitioned 100 TB table is then
+    metadata work + one day's rewrite, not a full-table scan — which is
+    exactly how MergeTree drops whole expired parts.
 
-    Without `partition_day_col` the whole table is rewritten filtered
-    (`_atomic_swap`).  Returns counts: `{"dropped_dirs": n, "rewritten":
-    m}` (rewritten = 1 for the unpartitioned full rewrite).
-
-    Swap contract: single writer, no concurrent readers (`compact_files`).
+    Without `partition_day_col` the whole table is rewritten filtered.
+    Returns counts: `{"dropped_dirs": n, "rewritten": m}` (expired days
+    dropped, boundary days rewritten; rewritten = 1 for the unpartitioned
+    full rewrite).
     """
     import datetime as _dt
 
-    cutoff = _dt.datetime.fromisoformat(expire_before)
+    keep = F.col(ts_col).isNull() | (F.col(ts_col) >= F.lit(expire_before).cast("timestamp"))
     if partition_day_col is None:
-        df = spark.read.parquet(path).filter(
-            F.col(ts_col) >= F.lit(expire_before).cast("timestamp")
-        )
-
-        def _write(tmp: str) -> None:
-            df.write.mode("overwrite").parquet(tmp)
-
-        _atomic_swap(path, _write)
+        _merge(spark, table, None, keep_where=keep)
         return {"dropped_dirs": 0, "rewritten": 1}
-
-    root = path.rstrip("/")
-    prefix = partition_day_col + "="
-    dropped, rewritten = 0, 0
-    for entry in sorted(os.listdir(root)):
-        if not entry.startswith(prefix):
-            continue
+    if partition_day_col != table.partition_column():
+        raise ValueError(f"{partition_day_col!r} is not the partition column of {table.path}")
+    cutoff = _dt.datetime.fromisoformat(expire_before)
+    expired, boundary = set(), set()
+    for f in table.data_files():
+        part = os.path.relpath(f, table.path).split(os.sep)[0]
+        value = part[len(partition_day_col) + 1 :]
         try:
-            day = _dt.datetime.fromisoformat(entry[len(prefix):])
+            day = _dt.datetime.fromisoformat(value)
         except ValueError:
-            # non-date partition values: NULL-ts rows land in
-            # `day=__HIVE_DEFAULT_PARTITION__` (a NULL timestamp has no
-            # age, so it never expires), and a crashed boundary-day swap
-            # can leave `day=<d>_old` debris (cleared by that day's next
-            # swap).  Skip instead of failing the whole TTL pass.
+            # NULL-ts rows live in `__HIVE_DEFAULT_PARTITION__`: never expire
             continue
-        sub = os.path.join(root, entry)
-        if day + _dt.timedelta(days=1) <= cutoff:  # whole day expired
-            shutil.rmtree(sub)
-            dropped += 1
-        elif day < cutoff:  # boundary day: filter-rewrite this dir only
-            df = spark.read.parquet(sub).filter(
-                F.col(ts_col) >= F.lit(expire_before).cast("timestamp")
-            )
-
-            def _write(tmp: str) -> None:
-                df.write.mode("overwrite").parquet(tmp)
-
-            _atomic_swap(sub, _write)
-            rewritten += 1
-    return {"dropped_dirs": dropped, "rewritten": rewritten}
+        if day + _dt.timedelta(days=1) <= cutoff:
+            expired.add(value)
+        elif day < cutoff:
+            boundary.add(value)
+    if expired or boundary:
+        in_boundary = F.col(partition_day_col).cast("string").isin(sorted(boundary))
+        table.optimize(spark, partitions=sorted(expired | boundary), keep_where=in_boundary & keep)
+    return {"dropped_dirs": len(expired), "rewritten": len(boundary)}
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:

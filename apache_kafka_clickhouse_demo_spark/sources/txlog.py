@@ -1,12 +1,12 @@
 """Transactional append-only table — atomic commits over plain parquet.
 
-Why this exists (streaming/pipeline.py's backfill note): plain parquet
-appends stage task files under a SHARED `<table>/_temporary/` directory,
-so two concurrent writers (a streaming MV block + a backfill
-`INSERT ... SELECT`) can delete each other's in-flight files — the race
-that forces `backfill_cutover` to sequence its two phases.  Real clusters
-solve this with a transactional table format (Delta/Iceberg); this module
-is the same commit protocol reduced to its core, with no new dependencies:
+Why this exists: plain parquet appends stage task files under a SHARED
+`<table>/_temporary/` directory, so two concurrent writers (a streaming MV
+block + a backfill `INSERT ... SELECT`) can delete each other's in-flight
+files, and a directory rewrite has no atomic way to replace the files a
+reader is listing.  Real clusters solve this with a transactional table
+format (Delta/Iceberg); this module is the same commit protocol reduced to
+its core, with no new dependencies:
 
     <table>/
       _txlog/
@@ -601,6 +601,7 @@ class TransactionalTable:
         partition_by: str | None = None,
         keep_where: Column | None = None,
         transform=None,
+        partitions: list | None = None,
     ) -> int:
         """Small-file compaction: rewrite the current
         snapshot into `target_files` parquet files and publish them as ONE
@@ -637,20 +638,38 @@ class TransactionalTable:
         empty frame, i.e. a dedup store would dedupe against nothing.
         This is the maintenance pass a
         continuously-appending store needs: per-partition file count
-        drops from O(commits) back to 1.  Returns the committed
-        version."""
+        drops from O(commits) back to 1.
+
+        `partitions` (values of the table's partition column) narrows the
+        rewrite to the committed files under those values; every other
+        file is carried into the same replace commit under its existing
+        name.  A `keep_where` that bounds the partition column lets Spark
+        prune whole partitions at planning, so they leave the snapshot
+        without a byte of theirs being read (the TTL partition drop).
+        Raises ValueError on an unpartitioned table.  Returns the
+        committed version."""
         from apache_kafka_clickhouse_demo_spark.sources.storage import (
             zorder_cluster_key,
         )
 
+        layout = self.partition_column()
         if partition_by is None:
-            partition_by = self.partition_column()
+            partition_by = layout
+        if partitions is not None and (layout is None or partition_by != layout):
+            raise ValueError(f"partitions= needs the partition column of {self.path}")
 
         for _ in range(max_retries):
             snapshot = self.version()
             if snapshot < 0:
                 raise FileNotFoundError(f"nothing to optimize in {self.path}")
-            df = self.read(spark, snapshot)
+            carried: list[str] = []
+            if partitions is None:
+                df = self.read(spark, snapshot)
+            else:
+                prefixes = _partition_prefixes(partition_by, partitions)
+                files = self._replay(snapshot).files
+                carried = [f for f in files if not f.startswith(prefixes)]
+                df = self.read_where(spark, partition_by, partitions, snapshot)
             if keep_where is not None:
                 # retention rewrite (REPLACE WHERE): the compacted snapshot
                 # keeps only matching rows — how a generational store folds
@@ -692,7 +711,7 @@ class TransactionalTable:
                 df = df.coalesce(max(1, target_files))
             moved = self._stage(df, partition_by)
             replace: dict = {
-                "files": sorted(moved),
+                "files": sorted(carried + moved),
                 "schema": moved.schema,
                 "replaces": snapshot,
             }
@@ -824,9 +843,7 @@ class TransactionalTable:
         whose own root lives under a directory named `<col>=<value>` does
         not match every file."""
         files, reader = self._reader(spark, version)
-        prefixes = tuple(
-            f"{partition_col}={_partition_path_value(v)}{os.sep}" for v in values
-        )
+        prefixes = _partition_prefixes(partition_col, values)
         picked = [f for f in files if f.startswith(prefixes)]
         if not picked:
             # schema-only empty frame: ONE committed file gives the
@@ -840,6 +857,11 @@ class TransactionalTable:
 #: (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName):
 #: ASCII control chars plus this literal set.
 _PATH_ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
+
+
+def _partition_prefixes(col: str, values: Iterable) -> tuple[str, ...]:
+    """The table-relative directory prefixes of `col`'s given values."""
+    return tuple(f"{col}={_partition_path_value(v)}{os.sep}" for v in values)
 
 
 def _partition_path_value(v) -> str:
@@ -862,8 +884,7 @@ def _partition_path_value(v) -> str:
 def transactional_sink(table: TransactionalTable, exactly_once_id: str | None = None):
     """Pluggable MV destination (create_materialized_view(sink=...)): each
     insert block becomes one atomic commit, safe against ANY concurrent
-    writer — this removes the parquet `_temporary/` caveat that forces
-    backfill_cutover to sequence its backfill before the stream.
+    writer, with none of plain parquet's shared `_temporary/` staging.
 
     Pass `exactly_once_id` (a stable per-writer name, e.g. the MV's
     checkpoint path) to upgrade delivery from at-least-once to

@@ -9,7 +9,10 @@ Each stage is one `create_materialized_view` (or `backfill_cutover`) whose
 source is the previous stage's destination directory — the exact cascade
 the two streaming gate queries drive, factored so a user declares the
 pipeline instead of hand-wiring reader schemas, checkpoints, and drain
-calls per hop.
+calls per hop.  In `run_cascade` every destination is a
+`TransactionalTable`: each block is one commit keyed by the stage's
+checkpoint (a replayed block adds no rows), and a stage's compaction is a
+log commit, not a directory rewrite.
 """
 
 from __future__ import annotations
@@ -19,6 +22,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from apache_kafka_clickhouse_demo_spark.sources.txlog import (
+    TransactionalTable,
+    transactional_sink,
+)
 from apache_kafka_clickhouse_demo_spark.streaming.pipeline import (
     backfill_cutover,
     create_materialized_view,
@@ -41,18 +48,19 @@ class CascadeStage:
                           stream, the complement backfills in one
                           `INSERT ... SELECT` (not valid on the first
                           stage, which has no history table yet)
-    post_compact          background-merge hook run on the stage's OWN
-                          destination after it drains — e.g. a
-                          `compact_files` lambda (S5 merge) or
-                          `compact_summing` (S6 same-key collapse) —
-                          before the next stage scans it
+    post_compact          background-merge hook `post_compact(spark, table)`
+                          run on the stage's OWN destination
+                          `TransactionalTable` after it drains — e.g.
+                          `lambda s, t: t.optimize(s)` (S5 small-file
+                          merge) or `compact_summing` (S6 same-key
+                          collapse) — before the next stage scans it
     """
 
     name: str
     transform: Callable[[DataFrame], DataFrame]
     max_files_per_trigger: int | None = None
     cutover_predicate: Column | None = None
-    post_compact: Callable[[SparkSession, str], object] | None = None
+    post_compact: Callable[[SparkSession, TransactionalTable], object] | None = None
 
 
 def run_cascade(
@@ -62,21 +70,21 @@ def run_cascade(
     work_root: str,
 ) -> str:
     """Wire and drain an N-stage cascade; returns the final destination
-    path.  `source` is the first stage's streaming DataFrame (Kafka, file,
-    rate); every later stage file-streams from its predecessor's
-    destination with the predecessor's schema.  Stages drain fully
-    (availableNow) in order — the batch-test twin of a continuously-running
-    cascade, whose queries would instead stay started."""
+    path, a `TransactionalTable` (read it with
+    `TransactionalTable(path).read(spark)`).  `source` is the first
+    stage's streaming DataFrame (Kafka, file, rate); every later stage
+    file-streams from its predecessor's destination with the
+    predecessor's schema.  Stages drain fully (availableNow) in order —
+    the batch-test twin of a continuously-running cascade, whose queries
+    would instead stay started."""
     import os
 
     _validate_stages(stages)
     # static schema chain (same trick as live mode): stage i's input schema
     # is derived by pushing an empty batch through the upstream transforms,
-    # so an EMPTY source (zero batches -> destination never created) drains
-    # cleanly instead of crashing the next stage's eager parquet read
-    # (code-review r6)
+    # so an EMPTY source (zero batches -> empty destination) drains cleanly
     in_schema = source.schema
-    path: str | None = None
+    table: TransactionalTable | None = None
     for i, st in enumerate(stages):
         dest = f"{work_root}/{st.name}"
         ckpt = f"{work_root}/_ck_{st.name}"
@@ -86,15 +94,9 @@ def run_cascade(
             src = source
             history = None
         else:
-            os.makedirs(path, exist_ok=True)
-            has_data = any(
-                n.endswith(".parquet")
-                for _d, _s, names in os.walk(path)
-                for n in names
-            )
             history = (
-                spark.read.parquet(path)
-                if has_data
+                table.read(spark)
+                if table.version() >= 0
                 else spark.createDataFrame([], in_schema)
             )
             reader = spark.readStream.schema(in_schema)
@@ -102,7 +104,7 @@ def run_cascade(
                 reader = reader.option(
                     "maxFilesPerTrigger", st.max_files_per_trigger
                 )
-            src = reader.parquet(path)
+            src = reader.parquet(table.path)
         if st.cutover_predicate is not None:
             mv = backfill_cutover(
                 spark,
@@ -115,20 +117,25 @@ def run_cascade(
                 available_now=True,
             )
         else:
+            sink = transactional_sink(TransactionalTable(dest), exactly_once_id=ckpt)
             mv = create_materialized_view(
-                src, st.transform, dest, ckpt, available_now=True
+                src, st.transform, dest, ckpt, available_now=True, sink=sink
             )
         try:
             mv.process_available()
         finally:
             # a transform failing at execution time must not leak a
-            # started query holding the checkpoint (code-review r6)
+            # started query holding the checkpoint
             mv.stop()
+        os.makedirs(dest, exist_ok=True)
+        table = TransactionalTable(dest)
         if st.post_compact is not None:
-            st.post_compact(spark, dest)
+            st.post_compact(spark, table)
+        # the next stage file-streams this directory, which must then hold
+        # exactly the committed snapshot: no replaced files, no orphans
+        table.vacuum(grace_seconds=0)
         in_schema = st.transform(spark.createDataFrame([], in_schema)).schema
-        path = dest
-    return path
+    return table.path
 
 
 def _validate_stages(stages: Sequence[CascadeStage]) -> None:
@@ -137,7 +144,7 @@ def _validate_stages(stages: Sequence[CascadeStage]) -> None:
     names = [st.name for st in stages]
     if len(set(names)) != len(names):
         # duplicate names would make a stage file-stream its own output
-        # directory — silent row compounding, not an error (code-review r6)
+        # directory — silent row compounding, not an error
         raise ValueError(f"duplicate stage names: {sorted(names)}")
     if stages[0].max_files_per_trigger is not None:
         raise ValueError(
@@ -172,10 +179,10 @@ def run_cascade_live(
     simply stay started and this function would not stop them).
     Unsupported in live mode: `cutover_predicate` (backfill targets an
     EXISTING history table — with all stages starting empty there is no
-    history to cut over; use `run_cascade`) and `post_compact` (an atomic
-    swap would race the downstream file-stream's directory listing; run
-    compaction after the cascade stops, or use a transactional sink).
-    Returns the final destination path."""
+    history to cut over; use `run_cascade`) and `post_compact` (live hops
+    file-stream each other, so a compaction's replaced files would be
+    re-read).  Destinations are plain parquet.  Returns the final
+    destination path."""
     import os
 
     _validate_stages(stages)
@@ -211,7 +218,6 @@ def run_cascade_live(
     # each full pass pushes every in-flight block one hop downstream;
     # stop EVERY started query even when a drain fails mid-pass — leaked
     # queries keep consuming and hold the checkpoints against any retry
-    # (code-review r6)
     try:
         for _ in range(len(stages)):
             for mv in mvs:

@@ -15,10 +15,9 @@ Reference semantics (/root/reference/README.rst):
 The Spark-first mapping is `foreachBatch`: each micro-batch IS the insert
 block.  `create_materialized_view` runs `transform(block)` and appends to a
 columnar destination — the exact per-block semantics, with Spark's
-checkpointed source offsets providing exactly-once block delivery (better
-than the reference's manual cutover trick, SURVEY.md §2.2 M4).  Cascading
-works by pointing the next MV's file-stream source at the previous MV's
-destination directory.
+checkpointed source offsets replaying any block a failure interrupted.
+Cascading works by pointing the next MV's file-stream source at the
+previous MV's destination directory (`streaming/cascade.py`).
 
 `backfill_cutover` reproduces the reference's signature pattern
 (README.rst:121-123, 147, 160, 178-185, 242-252): pick a cutover timestamp
@@ -26,11 +25,13 @@ T, let the streaming MV handle rows `>= T`, and one-shot `INSERT ... SELECT`
 the history `< T` — exposed as one call for parity even though a single
 checkpointed stream from earliest offsets would be exactly-once on its own.
 
-Destinations are pluggable (`sink=`): plain parquet directories (default —
-sandbox-simple, semantics identical for availableNow triggers), a JDBC
-database (`jdbc_sink` — the north star's sink half), or the in-repo
-transactional table (`sources/txlog.TransactionalTable`, atomic manifest
-commits — the Delta-style option concurrent writers need).
+Destinations are pluggable (`sink=`): plain parquet directories (default;
+foreachBatch is at-least-once, so a replayed block appends its rows
+again), a JDBC database (`jdbc_sink` — the north star's sink half), or the
+in-repo transactional table (`sources/txlog.transactional_sink`: atomic
+commits, and exactly-once blocks given an `exactly_once_id`).
+`backfill_cutover` and the sequential cascade write the transactional
+table, which is also what lets them compact with `optimize()`.
 """
 
 from __future__ import annotations
@@ -42,6 +43,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from apache_kafka_clickhouse_demo_spark.sources.storage import insert_into
+from apache_kafka_clickhouse_demo_spark.sources.txlog import (
+    TransactionalTable,
+    transactional_sink,
+)
 
 
 @dataclass
@@ -51,7 +56,6 @@ class MaterializedView:
     query: StreamingQuery
     dest_path: str
     checkpoint: str
-    partition_cols: list[str] | None = None
 
     def process_available(self) -> None:
         """Drain everything currently available (test/backfill helper)."""
@@ -59,28 +63,6 @@ class MaterializedView:
 
     def stop(self) -> None:
         self.query.stop()
-
-    def optimize(
-        self, spark: SparkSession, target_files: int = 1,
-        sort_cols: list[str] | None = None,
-        cluster_cols: list[str] | None = None,
-    ) -> int:
-        """Post-cascade small-file compaction (VERDICT r4 #6): collapse the
-        one-file-per-block-per-partition debris a long-running MV leaves at
-        `dest_path` into few files, atomically (storage.compact_files
-        swap), preserving the MV's Hive-partitioned layout when it has one.
-        `cluster_cols` (VERDICT r5 #7) Z-orders the rewrite instead of
-        plain-sorting it, so file stats prune predicates on every cluster
-        dimension.  Call after `stop()` — or between blocks — on
-        parquet-sink MVs; transactional-sink MVs compact through
-        `TransactionalTable.optimize()` instead, which is safe under
-        concurrent writers.  Returns the resulting file count."""
-        from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
-
-        return compact_files(
-            spark, self.dest_path, target_files, sort_cols, self.partition_cols,
-            cluster_cols=cluster_cols,
-        )
 
 
 def create_materialized_view(
@@ -102,13 +84,12 @@ def create_materialized_view(
     `sink` makes the destination pluggable: a callable receiving each
     transformed block.  Default is the parquet append (`insert_into` at
     `dest_path`); pass `jdbc_sink(...)` for the north star's JDBC
-    destination, or a Delta/Iceberg writer on a cluster where parquet's
-    non-atomic `_temporary/` staging is not acceptable (see
-    backfill_cutover's note below — the transactional-table path removes
-    that caveat entirely).  A sink that declares TWO parameters receives
-    `(block, batch_id)` — the hook an idempotent destination needs to
-    make foreachBatch's at-least-once delivery exactly-once
-    (`jdbc_sink_exactly_once`, `sources/txlog.append_once`).
+    destination, `transactional_sink(table)` for atomic commits, or a
+    Delta/Iceberg writer on a cluster where parquet's non-atomic
+    `_temporary/` staging is not acceptable.  A sink that declares TWO
+    parameters receives `(block, batch_id)` — the hook an idempotent
+    destination needs to make foreachBatch's at-least-once delivery
+    exactly-once (`jdbc_sink_exactly_once`, `sources/txlog.append_once`).
     """
     if not source.isStreaming:
         raise ValueError("source must be a streaming DataFrame (use spark.readStream)")
@@ -120,7 +101,7 @@ def create_materialized_view(
         try:
             # count only parameters callable positionally — a 1-arg sink
             # with **kwargs or keyword-only extras must NOT be handed a
-            # second positional argument (code-review r6)
+            # second positional argument
             params = inspect.signature(sink).parameters.values()
             positional = [
                 p
@@ -151,7 +132,7 @@ def create_materialized_view(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return MaterializedView(writer.start(), dest_path, checkpoint, partition_cols)
+    return MaterializedView(writer.start(), dest_path, checkpoint)
 
 
 def jdbc_sink(
@@ -241,7 +222,7 @@ def jdbc_sink_exactly_once(
     (pass the MV's checkpoint path): two MVs appending to one table both
     count batches from 0, so an unscoped ledger would silently drop the
     second stream's early batches as "replays", and a shared staging
-    table could publish the wrong writer's rows (code-review r6).
+    table could publish the wrong writer's rows.
     Connection credentials (`user`/`password` and any other driver
     properties) are forwarded to the driver-side connections too, not
     just to Spark's staging writer.
@@ -332,7 +313,6 @@ def backfill_cutover(
     cutover_predicate: Column,
     dest_path: str,
     checkpoint: str,
-    partition_cols: list[str] | None = None,
     available_now: bool = False,
 ) -> MaterializedView:
     """M4 — the backfill/stream cutover (README.rst:121-123, 178-185).
@@ -350,23 +330,18 @@ def backfill_cutover(
     split is redundant — Spark's offsets already give exactly-once — but it
     is the reference's signature pattern, so it is a first-class API.)
 
-    The backfill runs BEFORE the stream starts: plain-parquet appends stage
-    under a shared `_temporary/` inside dest, so two concurrent jobs
-    writing the same directory can delete each other's in-flight task
-    files (a real race observed under load).  Sequencing them removes the
-    only concurrent writer.  To run backfill and stream CONCURRENTLY, give
-    both a transactional destination instead
-    (`sources/txlog.TransactionalTable` + `transactional_sink` — atomic
-    manifest commits, private staging; concurrency-safety pinned in
-    tests/test_txlog.py), which is exactly what Delta/Iceberg provide on a
-    real cluster.
+    `dest_path` is a `TransactionalTable`: the history half is one append
+    and each stream block one commit keyed by `checkpoint`, so a replayed
+    block adds no rows.  Read the result with
+    `TransactionalTable(dest_path).read(spark)`.
     """
-    insert_into(transform(history.filter(~cutover_predicate)), dest_path, partition_cols)
+    table = TransactionalTable(dest_path)
+    table.append(transform(history.filter(~cutover_predicate)))
     return create_materialized_view(
         source,
         lambda block: transform(block.filter(cutover_predicate)),
         dest_path,
         checkpoint,
-        partition_cols,
         available_now=available_now,
+        sink=transactional_sink(table, exactly_once_id=checkpoint),
     )

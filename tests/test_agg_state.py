@@ -167,20 +167,17 @@ def test_uniq_state_merge_round_trip(kv, seed, n_blocks):
 
 def test_uniq_state_compaction_path(kv, tmp_path):
     """The uniq sketch rides the SAME SummingMergeTree compaction as
-    max/min/avg states: write per-block sketch rows, compact_summing with
+    max/min/avg states: append per-block sketch rows, compact_summing with
     the sketch union, and the merged read answer is unchanged."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import (
-        compact_summing,
-        read_table,
-        write_sorted,
-    )
+    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_summing
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
     spark = kv.sparkSession
     states = kv.withColumn("block", F.pmod(F.hash("v"), F.lit(8))).groupBy(
         "key", "block"
     ).agg(uniq_state("v").alias("uniq_state")).drop("block")
-    path = str(tmp_path / "t")
-    write_sorted(states, path, sort_cols=["key"])
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.append(states)
 
     def read(d):
         return {
@@ -188,12 +185,12 @@ def test_uniq_state_compaction_path(kv, tmp_path):
             for r in d.groupBy("key").agg(uniq_merge("uniq_state").alias("u")).collect()
         }
 
-    before = read(read_table(spark, path))
+    before = read(t.read(spark))
     compact_summing(
-        spark, path, keys=["key"],
+        spark, t, keys=["key"],
         agg_exprs={"uniq_state": uniq_merge_state("uniq_state")},
     )
-    compacted = read_table(spark, path)
+    compacted = t.read(spark)
     assert compacted.count() == kv.select("key").distinct().count()
     assert read(compacted) == before
 

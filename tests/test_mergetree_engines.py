@@ -1,10 +1,13 @@
-"""ReplacingMergeTree / VersionedCollapsingMergeTree / TTL engine semantics
-(sources/storage.py r06 additions)."""
+"""ReplacingMergeTree / VersionedCollapsingMergeTree / SummingMergeTree /
+TTL engine semantics (sources/storage.py), each merge one replace commit
+on a `TransactionalTable`."""
 
 from __future__ import annotations
 
 import os
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_kafka_clickhouse_demo_spark.sources.storage import (
@@ -12,10 +15,21 @@ from apache_kafka_clickhouse_demo_spark.sources.storage import (
     collapse_versioned,
     compact_collapsing,
     compact_replacing,
+    compact_summing,
     read_replacing_final,
-    read_table,
-    write_sorted,
 )
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
+
+
+def _table(tmp_path, name, df, partition_by=None):
+    t = TransactionalTable(str(tmp_path / name))
+    t.append(df, partition_by=partition_by)
+    return t
+
+
+def _snapshot_dirs(t):
+    """Top-level directories of the files the snapshot names."""
+    return {os.path.relpath(f, t.path).split(os.sep)[0] for f in t.data_files()}
 
 
 def _upserts(spark):
@@ -43,11 +57,10 @@ def test_replacing_final_read_and_compaction_agree(spark, tmp_path):
     assert got == expect
 
     # background merge: stored rows collapse, FINAL read unchanged
-    path = str(tmp_path / "t")
-    df.write.parquet(path)
-    compact_replacing(spark, path, keys=["k"], version_col="ver", tiebreak=["seq"])
-    back = read_table(spark, path)
-    assert back.count() == 3  # one row per key remains on disk
+    t = _table(tmp_path, "t", df)
+    compact_replacing(spark, t, keys=["k"], version_col="ver", tiebreak=["seq"])
+    back = t.read(spark)
+    assert back.count() == 3  # one row per key remains in the snapshot
     got2 = {
         (r["k"], r["payload"])
         for r in read_replacing_final(back, ["k"], "ver", ["seq"]).collect()
@@ -57,20 +70,17 @@ def test_replacing_final_read_and_compaction_agree(spark, tmp_path):
 
 def test_replacing_partitioned_keeps_layout(spark, tmp_path):
     df = _upserts(spark)
-    path = str(tmp_path / "p")
-    df.write.partitionBy("k").parquet(path)
+    t = _table(tmp_path, "p", df, partition_by="k")
+    with pytest.raises(ValueError, match="must be one of the keys"):
+        compact_replacing(spark, t, keys=["ver"], version_col="seq")
     compact_replacing(
         spark,
-        path,
+        t,
         keys=["k", "ver"],  # version within partition key set is allowed
         version_col="seq",
-        partition_cols=["k"],
     )
-    assert sorted(d for d in os.listdir(path) if d.startswith("k=")) == [
-        "k=a",
-        "k=b",
-        "k=c",
-    ]
+    assert sorted(_snapshot_dirs(t)) == ["k=a", "k=b", "k=c"]
+    assert t.read(spark).count() == 5  # the two "b" rows share ver=5
 
 
 def test_collapse_versioned_annihilates_matched_pairs(spark):
@@ -106,15 +116,14 @@ def test_compact_collapsing_roundtrip_and_idempotence(spark, tmp_path):
         ("u", 2, 1, 250),
     ]
     df = spark.createDataFrame(rows, "k string, ver int, sign int, bal int")
-    path = str(tmp_path / "c")
-    df.write.parquet(path)
-    compact_collapsing(spark, path, keys=["k"], sign_col="sign", version_col="ver")
-    first = [r.asDict() for r in read_table(spark, path).collect()]
+    t = _table(tmp_path, "c", df)
+    compact_collapsing(spark, t, keys=["k"], sign_col="sign", version_col="ver")
+    first = [r.asDict() for r in t.read(spark).collect()]
     assert len(first) == 1 and first[0]["bal"] == 250
 
     # a second merge over the already-collapsed table is a no-op
-    compact_collapsing(spark, path, keys=["k"], sign_col="sign", version_col="ver")
-    again = [r.asDict() for r in read_table(spark, path).collect()]
+    compact_collapsing(spark, t, keys=["k"], sign_col="sign", version_col="ver")
+    again = [r.asDict() for r in t.read(spark).collect()]
     assert again == first
 
 
@@ -125,50 +134,55 @@ def test_apply_ttl_partition_drop_fast_path(spark, tmp_path):
         )],
         "id long, s string",
     ).select("id", F.col("s").cast("timestamp").alias("ts"), F.to_date("s").alias("day"))
-    path = str(tmp_path / "ttl")
-    write_sorted(ev, path, sort_cols=["ts"], partition_cols=["day"])
+    t = _table(tmp_path, "ttl", ev, partition_by="day")
 
     # record the live day's file identities: the fast path must not rewrite it
-    live_dir = os.path.join(path, "day=2024-01-03")
-    before = sorted(os.listdir(live_dir))
+    live = [f for f in t.data_files() if f"{os.sep}day=2024-01-03{os.sep}" in f]
+    assert live
 
-    stats = apply_ttl(spark, path, "ts", "2024-01-02 12:00:00", partition_day_col="day")
+    stats = apply_ttl(spark, t, "ts", "2024-01-02 12:00:00", partition_day_col="day")
     assert stats == {"dropped_dirs": 1, "rewritten": 1}
-    assert not os.path.exists(os.path.join(path, "day=2024-01-01"))
-    assert sorted(os.listdir(live_dir)) == before  # untouched bytes
+    assert "day=2024-01-01" not in _snapshot_dirs(t)  # no file of that day
+    assert set(live) <= set(t.data_files())  # same names: untouched bytes
 
-    kept = sorted(r["id"] for r in read_table(spark, path).collect())
+    kept = sorted(r["id"] for r in t.read(spark).collect())
     assert kept == [3, 4, 5]  # 01-02 18:00 survives the mid-day cutoff
+
+    with pytest.raises(ValueError, match="partition column"):
+        apply_ttl(spark, t, "ts", "2024-01-02 12:00:00", partition_day_col="ts")
 
 
 def test_apply_ttl_unpartitioned_rewrite(spark, tmp_path):
+    # a NULL timestamp has no age: the row survives, as on the partitioned path
     df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00"), (2, "2024-02-01 00:00:00")], "id long, s string"
+        [(1, "2024-01-01 00:00:00"), (2, "2024-02-01 00:00:00"), (3, None)],
+        "id long, s string",
     ).select("id", F.col("s").cast("timestamp").alias("ts"))
-    path = str(tmp_path / "flat")
-    df.write.parquet(path)
-    stats = apply_ttl(spark, path, "ts", "2024-01-15 00:00:00")
+    t = _table(tmp_path, "flat", df)
+    stats = apply_ttl(spark, t, "ts", "2024-01-15 00:00:00")
     assert stats == {"dropped_dirs": 0, "rewritten": 1}
-    assert [r["id"] for r in read_table(spark, path).collect()] == [2]
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [2, 3]
+    with pytest.raises(ValueError, match="partition column"):
+        t.optimize(spark, partitions=["2024-01-01"])  # unpartitioned table
 
 
 def test_apply_ttl_skips_unparsable_partition_dirs(spark, tmp_path):
-    # NULL-ts rows produce day=__HIVE_DEFAULT_PARTITION__; crashed swaps
-    # can leave day=<d>_old debris — neither may fail the TTL pass
+    # NULL-ts rows produce day=__HIVE_DEFAULT_PARTITION__, which must not
+    # fail the TTL pass and never expires
     ev = spark.createDataFrame(
         [(1, "2024-01-01 05:00:00"), (2, "2024-01-03 05:00:00"), (3, None)],
         "id long, s string",
     ).select("id", F.col("s").cast("timestamp").alias("ts"), F.to_date("s").alias("day"))
-    path = str(tmp_path / "ttlx")
-    write_sorted(ev, path, sort_cols=["ts"], partition_cols=["day"])
-    os.makedirs(os.path.join(path, "day=2024-01-03_old"))
+    t = _table(tmp_path, "ttlx", ev, partition_by="day")
 
-    stats = apply_ttl(spark, path, "ts", "2024-01-02 00:00:00", partition_day_col="day")
+    stats = apply_ttl(spark, t, "ts", "2024-01-02 00:00:00", partition_day_col="day")
     assert stats == {"dropped_dirs": 1, "rewritten": 0}
     kept = sorted(
-        r["id"] for r in read_table(spark, path).filter(F.col("ts").isNotNull()).collect()
+        r["id"] for r in t.read(spark).filter(F.col("ts").isNotNull()).collect()
     )
-    assert kept == [2]  # NULL-ts row also survives in the default partition
+    assert kept == [2]
+    # the NULL-ts row also survives in the default partition
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [2, 3]
 
 
 def test_snapshot_diff_feeds_the_collapse_back_to_new(spark):
@@ -248,14 +262,13 @@ def test_replacing_merge_keeps_tombstones_unless_cleanup(spark, tmp_path):
     FINAL answer is identical through every state."""
     df = _upserts_with_deletes(spark)
     expect = {("b", "b-back"), ("c", "only")}
-    path = str(tmp_path / "t")
-    df.write.parquet(path)
+    t = _table(tmp_path, "t", df)
 
     compact_replacing(
-        spark, path, keys=["k"], version_col="ver", tiebreak=["seq"],
+        spark, t, keys=["k"], version_col="ver", tiebreak=["seq"],
         deleted_col="is_deleted",
     )
-    back = read_table(spark, path)
+    back = t.read(spark)
     assert back.count() == 3  # a's tombstone retained, b-back, c
     # the retained tombstone still suppresses a post-merge older replay
     replay = spark.createDataFrame(
@@ -272,10 +285,10 @@ def test_replacing_merge_keeps_tombstones_unless_cleanup(spark, tmp_path):
     assert got == expect
 
     compact_replacing(
-        spark, path, keys=["k"], version_col="ver", tiebreak=["seq"],
+        spark, t, keys=["k"], version_col="ver", tiebreak=["seq"],
         deleted_col="is_deleted", cleanup=True,
     )
-    back2 = read_table(spark, path)
+    back2 = t.read(spark)
     assert back2.count() == 2  # tombstone physically reclaimed
     got2 = {
         (r["k"], r["payload"])
@@ -289,20 +302,19 @@ def test_replacing_merge_keeps_tombstones_unless_cleanup(spark, tmp_path):
 def test_replacing_cleanup_requires_deleted_col(spark, tmp_path):
     import pytest as _pytest
 
-    df = _upserts(spark)
-    path = str(tmp_path / "t")
-    df.write.parquet(path)
+    t = _table(tmp_path, "t", _upserts(spark))
     with _pytest.raises(ValueError):
         compact_replacing(
-            spark, path, keys=["k"], version_col="ver", cleanup=True
+            spark, t, keys=["k"], version_col="ver", cleanup=True
         )
 
 
-def test_replacing_null_tombstone_flag_is_live(spark):
-    """Review r7: a CDC row missing the is_deleted flag (NULL) is neither
-    live nor deleted under a bare `== 0` filter — the key silently
-    vanishes.  NULL must read as LIVE (ClickHouse's is_deleted is a
-    non-nullable UInt8; a feed that omits it means 'no delete')."""
+def test_replacing_null_tombstone_flag_is_live(spark, tmp_path):
+    """A CDC row missing the is_deleted flag (NULL) is neither live nor
+    deleted under a bare `== 0` filter — the key silently vanishes.  NULL
+    must read as LIVE (ClickHouse's is_deleted is a non-nullable UInt8; a
+    feed that omits it means 'no delete'), in the FINAL read and in a
+    cleanup merge alike."""
     rows = [
         ("a", 1, 1, "a-v1", None),   # NULL flag on the winning version
         ("b", 1, 2, "b-v1", 0),
@@ -318,3 +330,81 @@ def test_replacing_null_tombstone_flag_is_live(spark):
         ).collect()
     }
     assert got == {("a", "a-v1")}
+
+    # a cleanup merge reclaims the real tombstone and keeps the NULL-flag row
+    t = _table(tmp_path, "t", df)
+    compact_replacing(
+        spark, t, keys=["k"], version_col="ver", tiebreak=["seq"],
+        deleted_col="is_deleted", cleanup=True,
+    )
+    assert t.read(spark).count() == 1
+    got2 = {
+        (r["k"], r["payload"])
+        for r in read_replacing_final(
+            t.read(spark), ["k"], "ver", ["seq"], deleted_col="is_deleted"
+        ).collect()
+    }
+    assert got2 == {("a", "a-v1")}
+
+
+def test_summing_merge_under_concurrent_append_and_read(spark, tmp_path):
+    """The SummingMergeTree merge runs while an appender commits blocks of
+    partial rows and a reader reads the merged sum: every read equals the
+    total of some prefix of the committed blocks (no lost or
+    double-counted rows mid-merge), and the final read equals the total of
+    all of them."""
+    n_blocks, keys = 4, ["k0", "k1", "k2"]
+
+    def block(b):  # two partial rows per key; block b adds 2*(b+1) per key
+        rows = [(k, b + 1) for k in keys for _ in range(2)]
+        return spark.createDataFrame(rows, "k string, v long")
+
+    # per-key total of blocks 0..i: (i+1)(i+2), distinct for every prefix
+    prefixes = [{k: (i + 1) * (i + 2) for k in keys} for i in range(n_blocks)]
+    t = _table(tmp_path, "sums", block(0))
+    errors: list[Exception] = []
+    reads: list[dict] = []
+    appending, merged = threading.Event(), threading.Event()
+    appending.set()
+
+    def appender():
+        try:
+            for b in range(1, n_blocks):
+                # a merge publishes between consecutive appends, so merges
+                # run against a growing table and each loses at most one
+                # commit race (optimize retries 5 times)
+                merged.wait(timeout=120)
+                merged.clear()
+                t.append(block(b))
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+        finally:
+            appending.clear()
+
+    def reader():
+        try:
+            while appending.is_set() or len(reads) < 2:
+                df = t.read(spark).groupBy("k").agg(F.sum("v").alias("v"))
+                reads.append({r["k"]: r["v"] for r in df.collect()})
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=appender), threading.Thread(target=reader)]
+    for th in threads:
+        th.start()
+    merges = 0
+    while appending.is_set():
+        compact_summing(spark, t, keys=["k"], agg_exprs={"v": F.sum("v")})
+        merges += 1
+        merged.set()
+    for th in threads:
+        th.join(timeout=300)
+        assert not th.is_alive()
+    assert not errors, errors
+    assert merges >= n_blocks - 1
+    assert reads and all(r in prefixes for r in reads), reads
+
+    compact_summing(spark, t, keys=["k"], agg_exprs={"v": F.sum("v")})
+    final = t.read(spark)
+    assert final.count() == len(keys)  # one merged row per key
+    assert {r["k"]: r["v"] for r in final.collect()} == prefixes[-1]

@@ -4,10 +4,13 @@ A `TransactionalTable` directory can hold parquet files no commit names:
 an orphan of a failed stage, or files `optimize()` replaced that
 `vacuum()` has not reclaimed yet.  Only `TransactionalTable.read` filters
 them out, so a plain `spark.read.parquet` of such a directory can return
-duplicate rows.  This test scans `queries.py` with `ast` and fails if a
-function hands a path to the transaction log — as `out_dir=` of a
-`streaming.stateful` writer, or as the path of a `TransactionalTable` —
-and then also reads that same path with `spark.read.parquet`.
+duplicate rows: a compaction leaves the replaced files on disk until
+vacuum, and a plain read then counts both.  This test scans `queries.py`
+with `ast` and fails if a function hands a path to the transaction log —
+as `out_dir=` of a `streaming.stateful` writer, as the path of a
+`TransactionalTable`, as `dest_path=` of `backfill_cutover`, or as the
+path `run_cascade` returns — and then also reads that same path with
+`spark.read.parquet` or `storage.read_table`.
 """
 
 from __future__ import annotations
@@ -53,15 +56,22 @@ def _callee(call: ast.Call) -> tuple[str | None, str | None]:
     return None, None
 
 
-def _is_plain_parquet_read(call: ast.Call) -> bool:
-    """`<x>.read.parquet(...)` — a DataFrameReader parquet scan."""
+def _plain_parquet_paths(call: ast.Call) -> list[ast.expr]:
+    """The path arguments of `<x>.read.parquet(...)` (a DataFrameReader
+    parquet scan) or of `read_table(spark, path)` (the same scan in
+    `sources.storage`); [] for any other call."""
     fn = call.func
-    return (
+    if (
         isinstance(fn, ast.Attribute)
         and fn.attr == "parquet"
         and isinstance(fn.value, ast.Attribute)
         and fn.value.attr == "read"
-    )
+    ):
+        return list(call.args)
+    base, attr = _callee(call)
+    if (attr or base) == "read_table":
+        return call.args[1:2]
+    return []
 
 
 def txlog_paths_read_as_parquet(source: str) -> list[tuple[str, int, str]]:
@@ -89,18 +99,32 @@ def txlog_paths_read_as_parquet(source: str) -> list[tuple[str, int, str]]:
                 owned.update(
                     ast.unparse(k.value) for k in call.keywords if k.arg == "path"
                 )
+            if (attr or base) == "backfill_cutover":
+                owned.update(
+                    ast.unparse(k.value) for k in call.keywords if k.arg == "dest_path"
+                )
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and "run_cascade" in _callee(node.value)
+            ):
+                owned.update(ast.unparse(t) for t in node.targets)
         for call in calls:
-            if _is_plain_parquet_read(call):
-                for arg in call.args:
-                    if ast.unparse(arg) in owned:
-                        found.append((fn.name, call.lineno, ast.unparse(arg)))
+            for arg in _plain_parquet_paths(call):
+                if ast.unparse(arg) in owned:
+                    found.append((fn.name, call.lineno, ast.unparse(arg)))
     return found
 
 
-#: both ways of handing a path to the log, and a log-filtered read that
-#: must not be flagged — the checker has to catch the first two
+#: every way of handing a path to the log, read back plainly, and
+#: log-filtered or plain-parquet reads that must not be flagged — the
+#: checker has to catch q_a to q_d and nothing else
 _KNOWN = '''
 from apache_kafka_clickhouse_demo_spark.streaming.stateful import url_dedup_stream
+from apache_kafka_clickhouse_demo_spark.streaming import backfill_cutover
+from apache_kafka_clickhouse_demo_spark.streaming.cascade import run_cascade, run_cascade_live
+from apache_kafka_clickhouse_demo_spark.sources.storage import read_table
 from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 def q_a(spark, work):
@@ -111,9 +135,21 @@ def q_b(spark, work):
     TransactionalTable(f"{work}/idx").append_once(None, txn="t")
     return spark.read.parquet(f"{work}/idx")
 
+def q_c(spark, work):
+    out = run_cascade(spark, None, [], work)
+    return read_table(spark, out)
+
+def q_d(spark, work, hist):
+    backfill_cutover(spark, hist, None, None, None, dest_path=f"{work}/d", checkpoint="c")
+    return spark.read.parquet(f"{work}/d")
+
 def q_ok(spark, work):
     url_dedup_stream(spark, None, out_dir=f"{work}/kept", store_dir="s", checkpoint="c")
     return TransactionalTable(f"{work}/kept").read(spark)
+
+def q_ok_live(spark, work):
+    out = run_cascade_live(spark, None, [], work)
+    return read_table(spark, out).union(spark.read.parquet(out))
 '''
 
 
@@ -121,10 +157,12 @@ def test_queries_read_txlog_tables_through_the_log():
     assert [(f, p) for f, _ln, p in txlog_paths_read_as_parquet(_KNOWN)] == [
         ("q_a", "f'{work}/kept'"),
         ("q_b", "f'{work}/idx'"),
+        ("q_c", "out"),
+        ("q_d", "f'{work}/d'"),
     ]
     found = txlog_paths_read_as_parquet(QUERIES.read_text())
     assert not found, (
-        "plain spark.read.parquet of a TransactionalTable path (read it with "
+        "plain parquet read of a TransactionalTable path (read it with "
         "TransactionalTable(path).read(spark)): "
         + ", ".join(f"{f} (queries.py:{ln}, {p})" for f, ln, p in found)
     )

@@ -19,6 +19,7 @@ from apache_kafka_clickhouse_demo_spark.sources.storage import (
     write_sorted,
 )
 from apache_kafka_clickhouse_demo_spark.sources.tables import load_table
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 
 def test_write_sorted_round_trip_and_partition_pruning(spark, sf_dir, tmp_path):
@@ -62,92 +63,28 @@ def test_compact_summing_preserves_read(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "key string, block int, v int")
     states = df.groupBy("key", "block").agg(avg_state("v").alias("avg_state"))
-    path = str(tmp_path / "states")
-    states.write.parquet(path)
+    t = TransactionalTable(str(tmp_path / "states"))
+    t.append(states)
 
     def merged_read():
         return {
             r["key"]: r["av"]
-            for r in read_table(spark, path)
+            for r in t.read(spark)
             .groupBy("key")
             .agg(avg_merge("avg_state").alias("av"))
             .collect()
         }
 
     before = merged_read()
-    n_before = read_table(spark, path).count()
+    n_before = t.read(spark).count()
     compact_summing(
-        spark, path, keys=["key"], agg_exprs={"avg_state": sum_states("avg_state")}
+        spark, t, keys=["key"], agg_exprs={"avg_state": sum_states("avg_state")}
     )
     after = merged_read()
-    assert read_table(spark, path).count() < n_before
+    assert t.read(spark).count() < n_before
     assert before.keys() == after.keys()
     for k in before:
         assert abs(before[k] - after[k]) < 1e-12
-
-
-def test_compact_files_preserves_reads_and_drops_file_count(spark, sf_dir, tmp_path):
-    """VERDICT r4 #6 (plain-parquet half): a streaming-MV destination full
-    of per-block files compacts to few files with an identical read answer
-    and restored in-file sort order."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
-
-    events = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    path = str(tmp_path / "mv_dest")
-    # simulate 8 insert blocks x 3 partitions of small-file debris
-    for _ in range(8):
-        events.limit(100).repartition(3).write.mode("append").parquet(path)
-
-    before_rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    n_before = sum(1 for n in os.listdir(path) if n.endswith(".parquet"))
-    assert n_before >= 24
-
-    n_after = compact_files(spark, path, target_files=1, sort_cols=["event_id"])
-    assert n_after < n_before and n_after <= 2
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before_rows
-
-    # in-file ordering restored (tight row-group stats for pruning)
-    ids = [r["event_id"] for r in spark.read.parquet(path).select("event_id").collect()]
-    assert ids == sorted(ids)
-
-
-def test_compact_files_preserves_partitioned_layout(spark, sf_dir, tmp_path):
-    """Partition-aware compaction: a Hive-partitioned MV destination keeps
-    its day= directory layout (partition pruning survives), each directory
-    collapses to one file, and the read answer is unchanged."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", F.to_date("ts").alias("day")
-    )
-    path = str(tmp_path / "mv_by_day")
-    for _ in range(4):  # four insert blocks of per-day debris
-        events.limit(200).repartition(2).write.mode("append").partitionBy(
-            "day"
-        ).parquet(path)
-
-    before_rows = sorted(
-        tuple(r) for r in spark.read.parquet(path).select("event_id", "day").collect()
-    )
-    day_dirs = [d for d in os.listdir(path) if d.startswith("day=")]
-    n_before = sum(
-        1
-        for dirpath, _d, names in os.walk(path)
-        for n in names
-        if n.endswith(".parquet")
-    )
-    assert n_before > len(day_dirs)  # real debris: several files per dir
-
-    n_after = compact_files(
-        spark, path, sort_cols=["ts"], partition_cols=["day"]
-    )
-    after_dirs = [d for d in os.listdir(path) if d.startswith("day=")]
-    assert sorted(after_dirs) == sorted(day_dirs)  # layout preserved
-    assert n_after == len(day_dirs)  # one file per day directory
-    after_rows = sorted(
-        tuple(r) for r in spark.read.parquet(path).select("event_id", "day").collect()
-    )
-    assert after_rows == before_rows
 
 
 def test_zorder_layout_bounds_both_dimensions(spark, sf_dir, tmp_path):
@@ -244,46 +181,6 @@ def _avg(xs):
     return sum(xs) / len(xs)
 
 
-def test_compact_files_cluster_cols_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """VERDICT r5 #7: compaction with cluster_cols routes through the
-    Morton key, so the rewritten files bound BOTH dimensions — the
-    single-sort rewrite is blind on the second column."""
-    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d"), "ts"
-    )
-    day0 = events.agg(F.min("d")).first()[0]
-    dims = events.select("user_id", F.datediff("d", F.lit(day0)).alias("day_num"))
-
-    by_sort = str(tmp_path / "by_sort")
-    by_z = str(tmp_path / "by_z")
-    # fragmented starting layout, identical for both rewrites
-    dims.repartition(16).write.parquet(by_sort)
-    dims.repartition(16).write.parquet(by_z)
-
-    n_sort = compact_files(spark, by_sort, target_files=8, sort_cols=["day_num"])
-    n_z = compact_files(spark, by_z, target_files=8, cluster_cols=["day_num", "user_id"])
-    assert n_sort >= 1 and n_z >= 1
-
-    # rows preserved
-    assert spark.read.parquet(by_z).count() == dims.count()
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(by_z).collect()
-    ) == sorted(tuple(r) for r in dims.collect())
-
-    sort_spans = _file_spans(spark, by_sort, "user_id", "day_num")
-    z_spans = _file_spans(spark, by_z, "user_id", "day_num")
-    # the coalesce+sort rewrite packs everything into files spanning the
-    # full user range; the clustered rewrite shrinks user spans decisively
-    # while day spans stay bounded
-    full_user = dims.agg(F.max("user_id") - F.min("user_id")).first()[0]
-    assert _avg([u for u, _ in sort_spans]) > 0.9 * full_user
-    assert _avg([u for u, _ in z_spans]) < 0.6 * _avg([u for u, _ in sort_spans])
-    full_day = dims.agg(F.max("day_num")).first()[0]
-    assert _avg([d for _, d in z_spans]) <= full_day
-
-
 def test_txlog_optimize_cluster_cols_prunes_both_dimensions(spark, sf_dir, tmp_path):
     """The transactional table's OPTIMIZE accepts the same cluster_cols:
     post-compaction files are hyper-rectangles in both dimensions, and the
@@ -372,20 +269,22 @@ def test_zorder_cluster_key_on_empty_table(spark):
 def test_atomic_swap_tolerates_stale_old_and_restores_on_failure(
     spark, tmp_path, monkeypatch
 ):
-    """Crash-recovery contract of the compaction swap (code-review r6):
-    a stale <path>_old from an interrupted run must not fail the next
-    compaction, and a failure of the second rename must RESTORE the
-    original table instead of leaving no table at all."""
+    """Crash-recovery contract of the projection compaction swap: a stale
+    <copy>_old from an interrupted run must not fail the next compaction,
+    and a failure of the second rename must RESTORE the original copy
+    instead of leaving no copy at all."""
     import os as _os
 
-    from apache_kafka_clickhouse_demo_spark.sources.storage import compact_files
+    from apache_kafka_clickhouse_demo_spark.sources.projections import ProjectedTable
 
-    path = str(tmp_path / "t")
-    spark.range(100).repartition(8).write.parquet(path)
+    t = ProjectedTable(str(tmp_path / "t"), {"primary": ["id"]})
+    t.write(spark.range(100).repartition(8), files=8)
+    path = _os.path.join(t.path, "primary")
     _os.makedirs(path + "_old")  # stale debris from an interrupted swap
     with open(path + "_old/junk", "w") as fh:
         fh.write("x")
-    n = compact_files(spark, path, target_files=1)
+    t.optimize(spark, files=1)
+    n = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
     assert n == 1 and spark.read.parquet(path).count() == 100
     assert not _os.path.exists(path + "_old")
 
@@ -403,7 +302,7 @@ def test_atomic_swap_tolerates_stale_old_and_restores_on_failure(
     import pytest as _pytest
 
     with _pytest.raises(OSError, match="injected"):
-        compact_files(spark, path, target_files=2)
+        t.optimize(spark, files=2)
     monkeypatch.undo()
     # the ORIGINAL table was restored — readers still see every row
     assert spark.read.parquet(path).count() == 100

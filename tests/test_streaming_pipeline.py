@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from apache_kafka_clickhouse_demo_spark.operators import entry_pipeline
 from apache_kafka_clickhouse_demo_spark.schemas import STUDENT_ENTRY_EVENTS_SCHEMA
 from apache_kafka_clickhouse_demo_spark.sources.tables import load_table
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 from apache_kafka_clickhouse_demo_spark.streaming import (
     backfill_cutover,
     create_materialized_view,
@@ -109,7 +110,8 @@ def test_mv_cascade_partial_counts_merge(spark, ndjson_dir, tmp_path):
 
 def test_backfill_cutover_no_loss_no_dup(spark, ndjson_dir, tmp_path):
     """M4: history < T via one-shot INSERT...SELECT, stream handles >= T;
-    the union is exactly the full answer (README.rst:121-123, 178-185)."""
+    the union is exactly the full answer (README.rst:121-123, 178-185).
+    Both halves commit to the transactional table at `dest_path`."""
     typed_dir = str(tmp_path / "typed")
     dest = str(tmp_path / "attendance")
     typed = _typed_batch(spark, ndjson_dir)
@@ -137,56 +139,13 @@ def test_backfill_cutover_no_loss_no_dup(spark, ndjson_dir, tmp_path):
     mv.stop()
 
     merged = (
-        spark.read.parquet(dest)
+        TransactionalTable(dest).read(spark)
         .groupBy("timestamp", "subject")
         .agg(F.sum("n_students").alias("n_students"))
     )
     direct = entry_pipeline.class_attendance(typed)
     key = ["timestamp", "subject"]
     assert _sorted_rows(merged, *key) == _sorted_rows(direct, *key)
-
-
-def test_mv_optimize_compacts_dest_without_changing_reads(spark, sf_dir, tmp_path):
-    """MaterializedView.optimize(): per-block parquet debris at dest_path
-    collapses to few files; the merged read answer is unchanged."""
-    import os
-
-    from apache_kafka_clickhouse_demo_spark.sources.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    src_dir = str(tmp_path / "src")
-    events.select("event_id", "event_type", "value").repartition(6).write.parquet(src_dir)
-
-    source = (
-        spark.readStream.schema("event_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    mv = create_materialized_view(
-        source,
-        lambda b: b.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
-        dest_path=str(tmp_path / "dest"),
-        checkpoint=str(tmp_path / "ck"),
-        available_now=True,
-    )
-    mv.process_available()
-    mv.stop()
-
-    dest = str(tmp_path / "dest")
-    before = {
-        r["event_type"]: r["n"]
-        for r in spark.read.parquet(dest).groupBy("event_type").agg(F.sum("n").alias("n")).collect()
-    }
-    n_before = sum(1 for n in os.listdir(dest) if n.endswith(".parquet"))
-    assert n_before >= 6  # one-plus file per block
-
-    n_after = mv.optimize(spark, target_files=1)
-    assert n_after < n_before and n_after <= 2
-    after = {
-        r["event_type"]: r["n"]
-        for r in spark.read.parquet(dest).groupBy("event_type").agg(F.sum("n").alias("n")).collect()
-    }
-    assert after == before
 
 
 def test_live_cascade_all_stages_concurrent(spark, sf_dir, tmp_path):

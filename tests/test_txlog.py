@@ -143,7 +143,7 @@ def test_concurrent_backfill_and_stream(spark, sf_dir, tmp_path):
     """The reference's M4 cutover with the sequencing constraint REMOVED:
     history backfill appends while the streaming MV is draining blocks into
     the SAME transactional table.  With plain parquet this interleaving is
-    the `_temporary/` race backfill_cutover must serialize around; with
+    the `_temporary/` race that makes a plain-parquet backfill run alone; with
     atomic commits both writers land safely and the union is exact."""
     from apache_kafka_clickhouse_demo_spark.sources.tables import load_table
 

@@ -33,12 +33,12 @@ SF = "/root/testdata/sf0.001"
 PIPELINE = {
     "mv_cascade_daily": "streaming/cascade.py run_cascade (3 checkpointed MVs + compaction + cutover)",
     "mv_cascade_attendance": "streaming/cascade.py run_cascade (2 checkpointed MVs + compaction + cutover)",
-    "attendance_daily_compacted": "sources/storage.py write_sorted + compact_summing",
+    "attendance_daily_compacted": "sources/txlog.py append + sources/storage.py compact_summing (one optimize commit)",
     "stream_dedup": "streaming/stateful.py streaming_dedup (dropDuplicatesWithinWatermark drain)",
     "stream_near_dup": "streaming/stateful.py minhash_dedup_stream (4-block drain vs bucket-pruned store)",
     "stream_embed_near_dup": "streaming/stateful.py embedding_dedup_stream (4-block drain vs bucket-pruned store)",
     "dedup_clusters": "operators/dedup.py connected_components (pointer-jumping fixpoint; per-round plans)",
-    "replacing_latest": "sources/storage.py write_sorted + compact_replacing; final read = read_replacing_final (one max_by hash aggregate)",
+    "replacing_latest": "sources/txlog.py append + sources/storage.py compact_replacing (one optimize commit); final read = read_replacing_final (one max_by hash aggregate)",
 }
 
 
