@@ -13,6 +13,8 @@ import re as _re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from apache_kafka_clickhouse_demo_spark.functions.literals import isin_strings
+
 # Small fixed stopword lists for the language-ID heuristic (top function
 # words per language; public knowledge).  Scores are distinct-token overlap
 # with each list — deterministic and SQL-expressible in both engines.
@@ -95,7 +97,7 @@ def sql_string_array_literal(values: tuple[str, ...] | list[str]) -> str:
 
 
 # ---------------------------------------------------------------------------
-# URL primitives (r10): canonicalization + registered-domain extraction for
+# URL primitives: canonicalization + registered-domain extraction for
 # URL/host-level dedup (the CCNet/RefinedWeb dedupe-by-URL pass that runs
 # BEFORE content dedup).  Same two-form contract as the token primitives:
 # a Spark Column chain of builtins (pure whole-stage codegen, zero
@@ -108,9 +110,10 @@ def sql_string_array_literal(values: tuple[str, ...] | list[str]) -> str:
 
 #: Mini public-suffix list: the common single-label TLDs plus the frequent
 #: multi-label registry suffixes.  A deployment would swap in the full
-#: publicsuffix.org list (~9.7k entries) — the extraction below is an
-#: InSet membership test per candidate depth, so list size only grows a
-#: row-local hash set, never a join or shuffle.
+#: publicsuffix.org list (~9.7k entries) — the extraction below tests
+#: membership with `literals.isin_strings`, so list size only grows a
+#: row-local hash set (and never the py4j calls that build it), never a
+#: join or shuffle.
 PUBLIC_SUFFIXES: tuple[str, ...] = (
     # single-label
     "com", "org", "net", "io", "edu", "gov", "info", "biz", "dev", "app",
@@ -188,16 +191,18 @@ def registered_domain(
     suffix, so the registered domain is the last two labels).
 
     The suffix list is a bounded reference table by construction, so
-    membership is an InSet test per candidate depth — fully row-local
-    whole-stage codegen, the same zero-exchange reasoning as
-    quality_classifier's hashed-weights default path."""
+    membership at each candidate depth is one `literals.isin_strings`
+    test (an InSet at run time, fully row-local whole-stage codegen, the
+    same zero-exchange reasoning as quality_classifier's hashed-weights
+    default path), and each list crosses py4j in a constant number of
+    calls however long it is."""
     h = F.col(host) if isinstance(host, str) else host
-    sfx = list(suffixes)
+    l1, l2, l3, l4 = (_last_labels(h, k) for k in (1, 2, 3, 4))
     return (
-        F.when(_last_labels(h, 3).isin(sfx), _last_labels(h, 4))
-        .when(_last_labels(h, 2).isin(sfx), _last_labels(h, 3))
-        .when(_last_labels(h, 1).isin(sfx), _last_labels(h, 2))
-        .otherwise(_last_labels(h, 2))
+        F.when(isin_strings(l3, suffixes), l4)
+        .when(isin_strings(l2, suffixes), l3)
+        .when(isin_strings(l1, suffixes), l2)
+        .otherwise(l2)
     )
 
 

@@ -1364,7 +1364,7 @@ def semantic_dedup(
 
 
 # ---------------------------------------------------------------------------
-# URL / host-level dedup (r10): the CCNet/RefinedWeb dedupe-by-URL pass
+# URL / host-level dedup: the CCNet/RefinedWeb dedupe-by-URL pass
 # that runs BEFORE any content dedup — the cheapest dedup in the pipeline
 # (no shingling, no signatures) and the one that removes re-crawls of the
 # same page outright.  Beyond-parity LLM-pipeline layer; the reference has
@@ -1387,15 +1387,33 @@ def url_parts(
     NULL reg_domain rather than collapsing into a shared '' / '://' key —
     the repo-wide degenerate-doc contract (see exact_dedup): a corpus of
     extraction failures must never fold into one giant bogus duplicate
-    group."""
+    group.
+
+    The suffix tests go through `literals.isin_strings` (see
+    `TX.registered_domain`), so the columns cost a constant number of py4j
+    calls whatever the suffix list's length; `_url_parts_cols` builds
+    them once for a caller that plans many blocks."""
+    return spread_small(docs).select(*_url_parts_cols(url_col, id_col, suffixes))
+
+
+def _url_parts_cols(
+    url_col: str, id_col: str, suffixes: tuple[str, ...]
+) -> list[Column]:
+    """`url_parts`'s (doc_id, url_norm, reg_domain) columns."""
     u = F.col(url_col)
     valid = u.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
     host = TX.url_host(u)
-    return spread_small(docs).select(
+    return [
         F.col(id_col).alias("doc_id"),
         F.when(valid, TX.url_normalize(u)).alias("url_norm"),
         F.when(valid, TX.registered_domain(host, suffixes)).alias("reg_domain"),
-    )
+    ]
+
+
+def _token_charge(text_col: str) -> Column:
+    """The token-budget charge of a document: greatest(ws_tokens, 1)."""
+    t = F.trim(F.lower(F.col(text_col)))
+    return F.greatest(F.size(F.split(t, r"\s+")), F.lit(1)).cast("long")
 
 
 def url_dedup(
@@ -1551,12 +1569,10 @@ def domain_token_cap(
     u = F.col(url_col)
     valid = u.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
     host = TX.url_host(u)
-    t = F.trim(F.lower(F.col(text_col)))
-    charge = F.greatest(F.size(F.split(t, r"\s+")), F.lit(1)).cast("long")
     parts = spread_small(docs).select(
         F.col(id_col).alias("doc_id"),
         F.when(valid, TX.registered_domain(host, suffixes)).alias("reg_domain"),
-        charge.alias("doc_tokens"),
+        _token_charge(text_col).alias("doc_tokens"),
     )
     if two_level:
         shard = F.pmod(F.xxhash64("doc_id"), F.lit(pre_shards))

@@ -35,9 +35,10 @@ guaranteed n/C error on arbitrary domains.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -250,12 +251,28 @@ def count_min_build(
     one groupBy((d, bucket)) count with partial aggregation — grouping
     cardinality is depth*width regardless of input rows.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-    from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
-
     if width < 1 or depth < 1:
         raise ValueError("width and depth must be >= 1")
-    k = F.col(key_col).cast("string")
+    return _count_min_build(df, _cms(key_col, width, depth, salt))
+
+
+class _Cms(NamedTuple):
+    """The columns `count_min_build` and `count_min_lookup` share, built
+    once by a caller that plans many blocks (`_cms`)."""
+
+    key: Column  # the key column
+    counted: Column  # the key is not NULL
+    fan: Column  # the key's `depth` (d, bucket) cells, exploded as `c`
+    cell: list  # c.d AS d, c.bucket AS bucket
+    n: Column  # a cell's count
+    est: Column  # a key's estimate: the min over its cells
+
+
+def _cms(key_col: str, width: int, depth: int, salt: str) -> _Cms:
+    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
+
+    key = F.col(key_col)
+    k = key.cast("string")
     cells = F.array(
         *[
             F.struct(
@@ -267,12 +284,25 @@ def count_min_build(
             for d in range(depth)
         ]
     )
+    return _Cms(
+        key=key,
+        counted=k.isNotNull(),
+        fan=F.explode(cells).alias("c"),
+        cell=[F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket")],
+        n=F.count(F.lit(1)).alias("n"),
+        est=F.min(F.coalesce(F.col("n"), F.lit(0))).cast("long").alias("est"),
+    )
+
+
+def _count_min_build(df: DataFrame, cms: _Cms) -> DataFrame:
+    from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
+
     return (
         spread_small(df)
-        .filter(k.isNotNull())
-        .select(F.explode(cells).alias("c"))
-        .groupBy(F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(cms.counted)
+        .select(cms.fan)
+        .groupBy(*cms.cell)
+        .agg(cms.n)
     )
 
 
@@ -640,26 +670,11 @@ def count_min_lookup(
     row-locally and join the bounded sketch (depth*width rows,
     broadcast) — per-key cost O(depth), no window, no driver collect.
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
+    return _count_min_lookup(sketch, keys, _cms(key_col, width, depth, salt))
 
-    k = F.col(key_col).cast("string")
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("d"),
-                F.pmod(
-                    H.h48(F.concat(F.lit(f"{salt}{d}:"), k)), F.lit(width)
-                ).cast("int").alias("bucket"),
-            )
-            for d in range(depth)
-        ]
-    )
-    fanned = keys.select(
-        F.col(key_col), F.explode(cells).alias("c")
-    ).select(key_col, F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
+
+def _count_min_lookup(sketch: DataFrame, keys: DataFrame, cms: _Cms) -> DataFrame:
+    fanned = keys.select(cms.key, cms.fan).select(cms.key, *cms.cell)
     # sketch is depth*width rows, bounded by construction -> broadcast
     joined = fanned.join(F.broadcast(sketch), ["d", "bucket"], "left")
-    return (
-        joined.groupBy(key_col)
-        .agg(F.min(F.coalesce(F.col("n"), F.lit(0))).cast("long").alias("est"))
-    )
+    return joined.groupBy(cms.key).agg(cms.est)

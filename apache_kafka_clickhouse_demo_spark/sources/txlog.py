@@ -74,6 +74,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameReader
 from pyspark.sql.types import StructType
 
+from apache_kafka_clickhouse_demo_spark.functions.literals import string_seq
+
 _LOG_DIR = "_txlog"
 _VERSION_DIGITS = 11
 #: log listings one replay may take before giving up (see `_replay`)
@@ -744,9 +746,12 @@ class TransactionalTable:
         mtime, so a long write phase must not look idle).  Note vacuuming
         unreferenced pre-optimize files breaks pinned snapshot reads older
         than the optimize — the standard trade every log-based format makes.
-        Returns the deleted file/directory names."""
+        Returns the deleted file/directory names (none for a table that
+        was never created)."""
         import time
 
+        if not os.path.isdir(self.path):
+            return []
         referenced = {os.path.relpath(f, self.path) for f in self.data_files()}
         now = time.time()
         deleted: list[str] = []
@@ -812,7 +817,7 @@ class TransactionalTable:
         FileNotFoundError when nothing is committed — callers create
         tables by appending."""
         files, reader = self._reader(spark, version)
-        return reader.parquet(*(os.path.join(self.path, f) for f in files))
+        return self._scan(reader, files)
 
     def read_where(
         self,
@@ -849,8 +854,15 @@ class TransactionalTable:
             # schema-only empty frame: ONE committed file gives the
             # partition column's type — a reader over the whole list costs
             # O(table) for nothing
-            return reader.parquet(os.path.join(self.path, files[0])).limit(0)
-        return reader.parquet(*(os.path.join(self.path, f) for f in picked))
+            return self._scan(reader, files[:1]).limit(0)
+        return self._scan(reader, picked)
+
+    def _scan(self, reader: DataFrameReader, files: list[str]) -> DataFrame:
+        """`reader.parquet` over table-relative `files`, with the path
+        list passed to the JVM in a constant number of py4j calls
+        (`parquet(*paths)` makes one per path)."""
+        paths = [os.path.join(self.path, f) for f in files]
+        return reader._df(reader._jreader.parquet(string_seq(reader._spark._sc, paths)))
 
 
 #: Characters Hive/Spark escape in partition-directory names

@@ -127,6 +127,8 @@ def run_cascade(
             # a transform failing at execution time must not leak a
             # started query holding the checkpoint
             mv.stop()
+        # a stage that drained zero blocks never created its directory,
+        # and the next stage's file stream refuses a missing path
         os.makedirs(dest, exist_ok=True)
         table = TransactionalTable(dest)
         if st.post_compact is not None:

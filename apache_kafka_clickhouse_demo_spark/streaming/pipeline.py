@@ -330,13 +330,16 @@ def backfill_cutover(
     split is redundant — Spark's offsets already give exactly-once — but it
     is the reference's signature pattern, so it is a first-class API.)
 
-    `dest_path` is a `TransactionalTable`: the history half is one append
-    and each stream block one commit keyed by `checkpoint`, so a replayed
-    block adds no rows.  Read the result with
+    `dest_path` is a `TransactionalTable`: the history half is one commit
+    keyed `<checkpoint>:backfill` and each stream block one commit keyed
+    `<checkpoint>:<batch id>`, so re-running the cutover (a restart after
+    a crash) or replaying a block adds no rows.  Read the result with
     `TransactionalTable(dest_path).read(spark)`.
     """
     table = TransactionalTable(dest_path)
-    table.append(transform(history.filter(~cutover_predicate)))
+    table.append_once(
+        transform(history.filter(~cutover_predicate)), txn=f"{checkpoint}:backfill"
+    )
     return create_materialized_view(
         source,
         lambda block: transform(block.filter(cutover_predicate)),

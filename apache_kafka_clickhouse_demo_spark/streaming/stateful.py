@@ -22,6 +22,7 @@ import contextlib
 import functools
 import os
 import threading
+import types
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -31,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_kafka_clickhouse_demo_spark.functions import text as TX_FN
+from apache_kafka_clickhouse_demo_spark.functions.literals import isin_strings
 from apache_kafka_clickhouse_demo_spark.sources.txlog import (
     ConcurrentWriteError,
     TransactionalTable,
@@ -113,6 +115,10 @@ def running_totals(source: DataFrame) -> DataFrame:
     )
 
 
+#: off in a block's session (see `_DrainWriter`'s block-planning rule)
+_AQE = "spark.sql.adaptive.enabled"
+
+
 def _pay_type(sigs: DataFrame):
     """The payload column's Spark type (varies per writer: shingle set vs
     normalized vector) — used to type the NULL payload of band rows so the
@@ -189,6 +195,21 @@ class _DrainWriter:
       the pin rule resumes from; a resumed batch only appends out.
       Single-table writers commit once (`_publish_group` for the
       group-commit stores).
+    - **Block planning.** A block is small, so what it costs is fixed
+      per block: planning and Spark jobs, not rows.  Two rules keep that
+      cost small.  (1) Adaptive execution is off in the block's session
+      (`block.sparkSession`: the streaming query's own clone of the
+      caller's session), because on block-sized inputs it only turns
+      every query stage into a Spark job of its own; block exchanges run
+      `spark.sql.shuffle.partitions` tasks instead of coalescing.  The
+      block's reads and local frames use that session (`_session`);
+      `maintain()` and the reader methods keep `self.spark` and its
+      AQE.  The setting is restored when the block ends, so a block
+      handed to `process` directly in the caller's session leaves it
+      as it was.  (2) Static column expressions (projections, keys,
+      shard and hash columns, window specs) are built once per writer,
+      not per block, and literal lists cross py4j through
+      `functions.literals` in a constant number of calls.
     - **Maintenance.** `maintain()` runs after every `compact_every`-th
       batch (or on demand).  The default rewrites the state table (the
       first in commit order) to one file per `shard` directory — layout-
@@ -250,6 +271,7 @@ class _DrainWriter:
     def __init__(self, spark, writer_id: str):
         self.spark = spark
         self.writer_id = writer_id
+        self._session = spark
 
     def _tables(self) -> list[TransactionalTable]:
         return [getattr(self, name) for name in self._commit_order]
@@ -265,12 +287,19 @@ class _DrainWriter:
             self._resumed = True
         else:
             return  # fully committed replay
-        self._cached: list[DataFrame] = []
+        # a caller driving `_process` with frames of its own may pass no
+        # block: it plans in the writer's session
+        session = getattr(block, "sparkSession", self.spark)
+        aqe = session.conf.get(_AQE)
+        session.conf.set(_AQE, "false")
+        self._session, self._cached = session, []
         try:
             self._process(block, batch_id, txn)
         finally:
             for df in self._cached:
                 df.unpersist()
+            session.conf.set(_AQE, aqe)
+            self._session = self.spark
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             self.maintain()
 
@@ -344,7 +373,7 @@ class _DrainWriter:
         at an older one never does)."""
         snap_v = self.store.version() if version is None else version
         try:
-            stored = self.store.read(self.spark, version=snap_v)
+            stored = self.store.read(self._session, version=snap_v)
         except FileNotFoundError:  # nothing committed at/below snap_v
             return None, -1, snap_v
         gen = self._mem_gen
@@ -380,9 +409,9 @@ class _DrainWriter:
         error (corrupt or vanished committed files) fails the batch
         instead of deduping or counting against nothing."""
         try:
-            return self.store.read_where(self.spark, "shard", shards, version=pin)
+            return self.store.read_where(self._session, "shard", shards, version=pin)
         except FileNotFoundError:
-            return self.spark.createDataFrame([], schema).limit(0)
+            return self._session.createDataFrame([], schema).limit(0)
 
     def out_rows(self, version: int | None = None) -> DataFrame:
         """A group-commit store's published per-block rows (`_out_cols`)
@@ -1155,7 +1184,7 @@ class _TopKStreamWriter(_DrainWriter):
         # _latest() keeps serving the old run's summary and the new run's
         # counts silently vanish — the same restart hazard the writer_id
         # scoping of txn ids exists for
-        new_summary = self.spark.createDataFrame(
+        new_summary = self._session.createDataFrame(
             [(v, c, 0) for v, c in trimmed.items()]
             + [(None, 0, err + sub)],
             _SUMMARY_SCHEMA,
@@ -1999,68 +2028,92 @@ class _DomainCapStreamWriter(_DrainWriter):
         same store FLAT at 1.05x)."""
         self._compact(self.store, partition_by="shard", cluster_cols=["reg_domain"])
 
-    def _key(self):
-        return F.coalesce(F.col("reg_domain"), F.lit(self._NULL_KEY))
-
-    def _shard(self):
-        return self._shard_col("d", F.xxhash64(self._key()), self.domain_shards)
-
-    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
+    @functools.cached_property
+    def _exprs(self) -> types.SimpleNamespace:
+        """Every column `_process` uses, built once per writer.  The block
+        projection is the batch operators' `url_parts` columns (plus
+        `domain_token_cap`'s charge in token mode); the block-local rank
+        is a row_number per domain, or in token mode the running CHARGE
+        per domain — admission is prior + running <= budget, the batch
+        cumsum split at the block boundary."""
         from pyspark.sql import Window as W
 
-        from apache_kafka_clickhouse_demo_spark.operators.dedup import url_parts
+        from apache_kafka_clickhouse_demo_spark.operators.dedup import (
+            _token_charge,
+            _url_parts_cols,
+        )
 
-        pin = self._pin(txn)
-
+        e = types.SimpleNamespace()
+        e.cols = _url_parts_cols(self.url_col, self.id_col, self.suffixes)
+        key = F.coalesce(F.col("reg_domain"), F.lit(self._NULL_KEY))
+        window = W.partitionBy(key).orderBy("doc_id")
         if self.token_mode:
-            # inline url_parts + the batch operator's exact charge
-            # expression (url_parts drops text; one projection, still
-            # row-local whole-stage codegen)
-            u = F.col(self.url_col)
-            valid = u.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
-            t = F.trim(F.lower(F.col(self.text_col)))
-            charge = F.greatest(
-                F.size(F.split(t, r"\s+")), F.lit(1)
-            ).cast("long")
-            parts = block.select(
-                F.col(self.id_col).alias("doc_id"),
-                F.when(valid, TX_FN.url_normalize(u)).alias("url_norm"),
-                F.when(
-                    valid, TX_FN.registered_domain(TX_FN.url_host(u), self.suffixes)
-                ).alias("reg_domain"),
-                charge.alias("_charge"),
-            )
-            # running CHARGE within the block per domain — admission is
-            # prior + running <= budget, the batch cumsum split at the
-            # block boundary
-            rank_col = F.sum("_charge").over(
-                W.partitionBy(self._key())
-                .orderBy("doc_id")
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
+            e.cols.append(_token_charge(self.text_col).alias("_charge"))
+            e.rank = F.sum("_charge").over(
+                window.rowsBetween(W.unboundedPreceding, W.currentRow)
             )
         else:
-            parts = url_parts(block, self.url_col, self.id_col, self.suffixes)
-            rank_col = F.row_number().over(
-                W.partitionBy(self._key()).orderBy("doc_id")
-            ).cast("long")
+            e.rank = F.row_number().over(window).cast("long")
+        e.shard = self._shard_col("d", F.xxhash64(key), self.domain_shards)
+        e.domain = F.col("reg_domain")
+        e.shard_domain = [F.col("_shard"), e.domain]
+        e.null_domain = e.domain.isNull()
+        e.prior = F.sum("n").alias("_prior")
+        e.on = F.col("r.reg_domain").eqNullSafe(F.col("p.reg_domain"))
+        kept = ["doc_id", "url_norm", "reg_domain", "_r", "_shard"]
+        extra = ["_charge"] if self.token_mode else []
+        e.joined = [
+            *(F.col(f"r.{c}").alias(c) for c in kept),
+            F.coalesce(F.col("p._prior"), F.lit(0)).alias("_prior"),
+            *(F.col(f"r.{c}").alias(c) for c in extra),
+        ]
+        admitted = F.col("_prior") + F.col("_r")
+        e.admit = admitted <= self.cap
+        e.domain_rank = admitted.cast("long" if self.token_mode else "int")
+        if self.token_mode:
+            # EVERY seen row's charge accumulates (see the class
+            # docstring's batch-parity argument): the aggregate reads
+            # `ranked`, not the survivors
+            e.inc = F.sum("_charge").cast("long").alias("n")
+            e.out = [
+                F.col("doc_id"), e.domain, F.col("_charge").alias("doc_tokens"),
+                F.col("domain_rank").alias("cum_tokens"),
+            ]
+        else:
+            e.inc = F.count(F.lit(1)).cast("long").alias("n")
+            e.out = [F.col(c) for c in ("doc_id", "url_norm", "reg_domain", "domain_rank")]
+        e.store = [F.col("_shard").alias("shard"), e.domain, F.col("n")]
+        e.store_part = F.col("shard")
+        return e
+
+    def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
+        from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
+
+        pin = self._pin(txn)
+        e = self._exprs
+        # token mode projects the block as it arrives, doc mode spreads
+        # it first (`url_parts`)
+        parts = (block if self.token_mode else spread_small(block)).select(*e.cols)
         # cached: the domain probe, the survivor join and the increments
         # all consume `ranked` — uncached, the canonicalize+window chain
         # would re-run per consumer; block-bounded
         ranked = self._cache(
-            parts.withColumn("_r", rank_col).withColumn("_shard", self._shard())
+            parts.withColumns({"_r": e.rank, "_shard": e.shard})
         )
         # ONE bounded driver action: a CAPPED distinct (shard, domain)
         # probe — each domain maps to exactly one shard, so the pair
         # count equals the distinct-domain count, bounded by the MAX+1
-        # limit, never by block size (a 250k-literal isin was measured to
-        # hang analysis, so big blocks skip the pushdown instead of
+        # limit, never by block size (a 250k-literal IN list was measured
+        # to hang analysis, so big blocks skip the pushdown instead of
         # building one).  An over-cap block falls back to reading EVERY
         # counter shard — bounded by `domain_shards`, and harmless to the
         # merge: prior domains the block never mentions drop out of the
-        # left join.
+        # left join.  One partition: a limit's take over many partitions
+        # runs a job per partition batch it scans.
         pairs = (
-            ranked.select("_shard", "reg_domain")
+            ranked.select(*e.shard_domain)
             .distinct()
+            .coalesce(1)
             .limit(self.MAX_PUSHDOWN_DOMAINS + 1)
             .collect()
         )
@@ -2080,64 +2133,25 @@ class _DomainCapStreamWriter(_DrainWriter):
             # parquet row groups by min/max stats, so the read decodes
             # the BLOCK's domains, not every domain a shard holds (a
             # shard's row count grows with the TOTAL domain count; the
-            # block's does not)
-            prior = prior.filter(
-                F.col("reg_domain").isin(push) | F.col("reg_domain").isNull()
-            )
-        prior = prior.groupBy("reg_domain").agg(F.sum("n").alias("_prior"))
-
-        extra = ["_charge"] if self.token_mode else []
+            # block's does not); the list crosses py4j in O(1) calls
+            prior = prior.filter(isin_strings(e.domain, push) | e.null_domain)
+        prior = prior.groupBy(e.domain).agg(e.prior)
         joined = (
-            ranked.alias("r")
-            .join(
-                prior.alias("p"),
-                F.col("r.reg_domain").eqNullSafe(F.col("p.reg_domain")),
-                "left",
-            )
-            .select(
-                F.col("r.doc_id").alias("doc_id"),
-                F.col("r.url_norm").alias("url_norm"),
-                F.col("r.reg_domain").alias("reg_domain"),
-                F.col("r._r").alias("_r"),
-                F.col("r._shard").alias("_shard"),
-                F.coalesce(F.col("p._prior"), F.lit(0)).alias("_prior"),
-                *[F.col(f"r.{c}").alias(c) for c in extra],
-            )
+            ranked.alias("r").join(prior.alias("p"), e.on, "left").select(*e.joined)
         )
         # cached: the increment aggregate and the out append both read
         # the survivor set; block-bounded rows
         survivors = self._cache(
-            joined.filter(F.col("_prior") + F.col("_r") <= self.cap).withColumn(
-                "domain_rank",
-                (F.col("_prior") + F.col("_r")).cast(
-                    "long" if self.token_mode else "int"
-                ),
-            )
+            joined.filter(e.admit).withColumn("domain_rank", e.domain_rank)
         )
-        if self.token_mode:
-            # EVERY seen row's charge accumulates (see the class
-            # docstring's batch-parity argument) — the aggregate reads
-            # `ranked`, not the survivors
-            increments = ranked.groupBy("_shard", "reg_domain").agg(
-                F.sum("_charge").cast("long").alias("n")
-            )
-            out_df = survivors.select(
-                "doc_id",
-                "reg_domain",
-                F.col("_charge").alias("doc_tokens"),
-                F.col("domain_rank").alias("cum_tokens"),
-            )
-        else:
-            increments = survivors.groupBy("_shard", "reg_domain").agg(
-                F.count(F.lit(1)).cast("long").alias("n")
-            )
-            out_df = survivors.select("doc_id", "url_norm", "reg_domain", "domain_rank")
+        counted = ranked if self.token_mode else survivors
+        increments = counted.groupBy(*e.shard_domain).agg(e.inc)
+        out_df = survivors.select(*e.out)
         if self.out_files is not None:
             out_df = out_df.coalesce(self.out_files)
         self._publish_pair(
             txn,
-            increments.select(F.col("_shard").alias("shard"), "reg_domain", "n")
-            .repartition(F.col("shard")),
+            increments.select(*e.store).repartition(e.store_part),
             lambda: out_df,
         )
 
@@ -2236,8 +2250,9 @@ class _CountMinStreamWriter(_DrainWriter):
     summed per cell at read (merge-on-read; maintenance compacts files,
     never meaning).  Per block:
 
-    1. Build the BLOCK's sketch with the batch operator itself
-       (`count_min_build` — provably shared cells/hashes), <=
+    1. Build the BLOCK's sketch with the batch operator's own core and
+       columns (`_count_min_build` over `_cms`, built once per writer —
+       provably shared cells/hashes), <=
        depth*width increment rows however large the block, PERSISTED
        and materialized by ONE bounded shard-name collect.
     2. Pin the store, read ONLY the block's touched cell shards at the
@@ -2278,9 +2293,24 @@ class _CountMinStreamWriter(_DrainWriter):
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
         self._out_cols = ("batch_id", key_col, "est")
 
-    def _shard(self):
+    @functools.cached_property
+    def _exprs(self) -> types.SimpleNamespace:
+        """Every column `_process` uses, built once per writer; `cms` is
+        the batch operators' own (`sketches._cms`)."""
+        from apache_kafka_clickhouse_demo_spark.operators.sketches import _cms
+
+        e = types.SimpleNamespace()
+        e.cms = _cms(self.key_col, self.width, self.depth, self.salt)
         cell = F.col("d").cast("long") * self.width + F.col("bucket")
-        return self._shard_col("c", cell, self.cms_shards)
+        e.shard = self._shard_col("c", cell, self.cms_shards)
+        e.cell = [F.col("d"), F.col("bucket")]
+        e.counters = [*e.cell, F.col("n")]
+        e.merge = F.sum("n").cast("long").alias("n")
+        e.has_key = e.cms.key.isNotNull()
+        e.out_shard = F.lit(self.OUT_SHARD).alias("shard")
+        e.est = [e.cms.key, F.col("est")]
+        e.inc = [F.col("shard"), *e.counters]
+        return e
 
     def merged_sketch(self, version: int | None = None) -> DataFrame:
         """The store's merge-on-read sketch at a committed version:
@@ -2297,15 +2327,13 @@ class _CountMinStreamWriter(_DrainWriter):
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
-            count_min_build,
-            count_min_lookup,
+            _count_min_build,
+            _count_min_lookup,
         )
 
         pin = self._pin(txn)
-
-        inc = count_min_build(
-            block, self.key_col, width=self.width, depth=self.depth, salt=self.salt
-        ).withColumn("shard", self._shard())
+        e = self._exprs
+        inc = _count_min_build(block, e.cms).withColumn("shard", e.shard)
         # cached, then materialized by ONE bounded collect
         # (<= depth*width rows by construction): the collect is both
         # the empty-block probe and the shard-name list, and leaves the
@@ -2327,34 +2355,20 @@ class _CountMinStreamWriter(_DrainWriter):
         block_shards = sorted({r["shard"] for r in inc_rows})
         prior = self._read_prior(
             block_shards, pin, "d int, bucket int, n long"
-        ).select("d", "bucket", "n")
+        ).select(*e.counters)
         merged = (
-            prior.unionByName(inc.select("d", "bucket", "n"))
-            .groupBy("d", "bucket")
-            .agg(F.sum("n").cast("long").alias("n"))
+            prior.unionByName(inc.select(*e.counters)).groupBy(*e.cell).agg(e.merge)
         )
-        keys = (
-            block.select(self.key_col)
-            .filter(F.col(self.key_col).isNotNull())
-            .distinct()
-        )
-        est = count_min_lookup(
-            merged, keys, self.key_col,
-            width=self.width, depth=self.depth, salt=self.salt,
-        ).select(
-            F.lit(self.OUT_SHARD).alias("shard"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col(self.key_col),
-            F.col("est"),
+        keys = block.select(e.cms.key).filter(e.has_key).distinct()
+        est = _count_min_lookup(merged, keys, e.cms).select(
+            e.out_shard, F.lit(batch_id).cast("long").alias("batch_id"), *e.est
         )
         # CAS on the pinned version: the estimates above were
         # derived from the snapshot at `pin`, so a concurrent
         # appender landing between pin and publish fails this batch
         # loudly instead of publishing estimates that silently miss
         # its increments
-        self._publish_group(
-            txn, inc.select("shard", "d", "bucket", "n"), est, cas_version=pin
-        )
+        self._publish_group(txn, inc.select(*e.inc), est, cas_version=pin)
 
 
 def count_min_stream(
@@ -2525,7 +2539,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             # an empty store (pin -1) needs no read, and no collect job
             rows = [] if pin < 0 else (
                 self.store.read_where(
-                    self.spark,
+                    self._session,
                     "shard",
                     [f"y{i}" for i in range(self.cms_shards)],
                     version=pin,
@@ -2589,7 +2603,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
             depth=self.depth,
             salt=self.salt,
         )
-        est_df = self.spark.createDataFrame(
+        est_df = self._session.createDataFrame(
             [
                 (self.OUT_SHARD, int(batch_id), rid, lo, hi, e)
                 for rid, lo, hi, e in est
@@ -2613,7 +2627,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                 depth=self.depth,
                 salt=self.salt,
             )
-            q_df = self.spark.createDataFrame(
+            q_df = self._session.createDataFrame(
                 [
                     (self.QOUT_SHARD, int(batch_id), p, tr, qv)
                     for p, tr, qv in qrows
@@ -3041,7 +3055,7 @@ class _PackBinsStreamWriter(_DrainWriter):
             return  # every row dropped by the batch contract
         prev, prev_gen, _v = self._latest(pin)
         if prev is None:
-            prior = self.spark.createDataFrame(
+            prior = self._session.createDataFrame(
                 [], "bucket long, prior_bin long, prior_fill long"
             )
         else:

@@ -262,3 +262,28 @@ def test_live_cascade_three_stage_propagation_depth(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_backfill_cutover_rerun_adds_no_rows(spark, tmp_path):
+    """Re-running a cutover on the same `dest_path` and `checkpoint` (a
+    restart after a crash) commits the history half once: the history
+    append is keyed `<checkpoint>:backfill` like the stream blocks are
+    keyed by batch id."""
+    src_dir = str(tmp_path / "src")
+    spark.range(10).write.parquet(src_dir)
+    dest, ckpt = str(tmp_path / "dest"), str(tmp_path / "ckpt")
+    for _ in range(2):
+        mv = backfill_cutover(
+            spark,
+            history=spark.read.parquet(src_dir),
+            source=spark.readStream.schema("id long").parquet(src_dir),
+            transform=lambda df: df,
+            cutover_predicate=F.col("id") >= 5,
+            dest_path=dest,
+            checkpoint=ckpt,
+            available_now=True,
+        )
+        mv.process_available()
+        mv.stop()
+    got = sorted(r["id"] for r in TransactionalTable(dest).read(spark).collect())
+    assert got == list(range(10))

@@ -2435,3 +2435,169 @@ def test_token_cap_stream_matches_batch_on_id_ordered_feed(spark, tmp_path):
         for r in domain_token_cap(_tok_docs_df(spark, rows), budget=25).collect()
     }
     assert streamed == batch and streamed
+
+
+# -- block planning (`_DrainWriter`'s block-planning rule) ------------------
+
+_AQE = "spark.sql.adaptive.enabled"
+#: a domain-cap test feed: ids, URLs over 40 domains, short texts
+_CRAWL_SCHEMA = "doc_id long, url string, text string"
+
+
+def _crawl(lo: int, n: int) -> list[tuple]:
+    return [
+        (i, f"https://www.d{i % 40}.com/p{i}", "w " * (i % 7 + 1))
+        for i in range(lo, lo + n)
+    ]
+
+
+def _planning_case(spark, tmp_path, kind):
+    """(writer, block i) for the block-planning tests: every block is one
+    parquet file, as a file stream hands it over."""
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        _CountMinStreamWriter,
+        _DomainCapStreamWriter,
+    )
+
+    if kind == "count_min":
+        w = _CountMinStreamWriter(
+            spark, str(tmp_path / "cms"), key_col="k", width=256, writer_id=kind
+        )
+        schema, rows = "k long", lambda i: [((i * 37 + j) % 500,) for j in range(200)]
+    else:
+        w = _DomainCapStreamWriter(
+            spark, str(tmp_path / "out"), str(tmp_path / "store"),
+            cap=60 if kind == "token_cap" else 10, writer_id=kind,
+            token_mode=kind == "token_cap",
+        )
+        schema, rows = _CRAWL_SCHEMA, lambda i: _crawl(i * 200, 200)
+
+    def block(i: int):
+        path = str(tmp_path / f"block{i}")
+        spark.createDataFrame(rows(i), schema).write.parquet(path)
+        return spark.read.parquet(path)
+
+    return w, block
+
+
+def test_drain_blocks_plan_without_aqe_and_leave_the_caller_session_alone(
+    spark, tmp_path, monkeypatch
+):
+    """A streamed block runs in the query's own session with adaptive
+    execution off; the caller's session keeps it on.  A block handed to
+    `process` directly runs in the caller's session, which gets its
+    setting back when the block ends."""
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        _DomainCapStreamWriter,
+        domain_cap_stream,
+    )
+
+    seen = []
+    orig = _DomainCapStreamWriter._process
+
+    def spy(self, block, batch_id, txn):
+        seen.append(block.sparkSession.conf.get(_AQE))
+        return orig(self, block, batch_id, txn)
+
+    monkeypatch.setattr(_DomainCapStreamWriter, "_process", spy)
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame(_crawl(0, 100), _CRAWL_SCHEMA).write.parquet(feed)
+    q = domain_cap_stream(
+        spark, spark.readStream.schema(_CRAWL_SCHEMA).parquet(feed),
+        str(tmp_path / "out"), str(tmp_path / "store"), str(tmp_path / "ck"), cap=2,
+    )
+    q.awaitTermination()
+    assert q.exception() is None
+    assert spark.conf.get(_AQE) == "true"
+
+    w, block = _planning_case(spark, tmp_path / "direct", "domain_cap")
+    w.process(block(0), 0)
+    assert seen == ["false", "false"]
+    assert spark.conf.get(_AQE) == "true"
+    assert TransactionalTable(str(tmp_path / "out")).read(spark).count() == 40 * 2
+
+
+@pytest.mark.parametrize(
+    "kind,max_jobs", [("domain_cap", 3), ("token_cap", 3), ("count_min", 3)]
+)
+def test_steady_drain_block_spends_a_fixed_number_of_jobs(
+    spark, tmp_path, kind, max_jobs
+):
+    """A steady second block's Spark jobs, counted in the block thread's
+    job group (domain-cap's store staging runs on a side thread, outside
+    it).  With adaptive execution on, every query stage was a job of its
+    own: 8 for each of these three."""
+    w, block = _planning_case(spark, tmp_path, kind)
+    w.process(block(0), 0)
+    steady = block(1)
+    sc = spark.sparkContext
+    group = f"steady-block-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        w.process(steady, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= max_jobs, jobs
+
+
+@pytest.mark.parametrize("kind", ["domain_cap", "count_min"])
+def test_drain_block_commits_one_file_per_shard(spark, tmp_path, kind):
+    """Block exchanges no longer coalesce, but `repartition("shard")`
+    still puts each shard in one task: one file per shard per block."""
+    w, block = _planning_case(spark, tmp_path, kind)
+    for i in range(2):
+        w.process(block(i), i)
+        files = w.store.commit_files(w.store.version())
+        per_shard: dict = {}
+        for f in files:
+            per_shard[f.split("/")[0]] = per_shard.get(f.split("/")[0], 0) + 1
+        assert len(per_shard) > 1 and set(per_shard.values()) == {1}, per_shard
+
+
+def test_isin_strings_matches_isin_and_reaches_the_prior_scan(spark, tmp_path):
+    """`isin_strings` gives `Column.isin`'s rows for values the JVM-side
+    split must carry verbatim (quotes, backslashes, `%`, `=`, non-ASCII)
+    and a NULL domain, and domain-cap's pushed domain list still reaches
+    the prior read's parquet scan as an `In` filter."""
+    from apache_kafka_clickhouse_demo_spark.functions.literals import isin_strings
+
+    values = [
+        "o'brien.com", "back\\slash.org", "100%.net", "k=v.io",
+        "bücher.de", "日本.jp", "plain.com",
+    ]
+    df = spark.createDataFrame(
+        [(v,) for v in [*values, "other.com", None]], "reg_domain string"
+    )
+    dom = F.col("reg_domain")
+    for pred in (lambda c: c, lambda c: c | dom.isNull(), lambda c: ~c):
+        want = sorted(df.filter(pred(dom.isin(values))).collect(), key=str)
+        got = sorted(df.filter(pred(isin_strings(dom, values))).collect(), key=str)
+        assert got == want
+
+    w, _ = _planning_case(spark, tmp_path, "domain_cap")
+    rows = [(i, f"https://{values[i % 7]}/p{i}") for i in range(21)]
+    rows += [(100 + i, f"https://d{i}.com/x") for i in range(12)] + [(200, "no url")]
+    w.process(_urls_df(spark, rows), 0)
+    priors = []
+    read_prior = w._read_prior
+
+    class _Spy:  # records the filtered prior frame
+        def __init__(self, df):
+            self.df = df
+
+        def filter(self, cond):
+            priors.append(self.df.filter(cond))
+            return priors[-1]
+
+        def __getattr__(self, name):
+            return getattr(self.df, name)
+
+    w._read_prior = lambda *a: _Spy(read_prior(*a))
+    w.process(_urls_df(spark, [(300 + i, u) for i, u in rows]), 1)
+    pushed = priors[0]._jdf.queryExecution().executedPlan().toString()
+    pushed = pushed.split("PushedFilters: ")[1]
+    assert pushed.startswith("[Or(In(reg_domain, ["), pushed

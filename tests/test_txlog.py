@@ -765,6 +765,13 @@ def test_reads_survive_a_concurrent_checkpoint_and_prune(spark, tmp_path, monkey
     assert not reader.txn_committed("w:5")
 
 
+def test_vacuum_of_a_never_created_table_is_empty(tmp_path):
+    """`vacuum` agrees with `version()` and `data_files()`: a table whose
+    directory was never created is empty, not an error."""
+    t = TransactionalTable(str(tmp_path / "never"))
+    assert (t.version(), t.data_files(), t.vacuum()) == (-1, [], [])
+
+
 @pytest.fixture(scope="module")
 def _wide_table(spark, tmp_path_factory):
     """12 commits x 8 shards = 96 files: past Spark's 32-path threshold for
@@ -821,3 +828,32 @@ def test_reads_plan_with_zero_spark_jobs(spark, _wide_table, tmp_path, case):
     assert got.schema == want.schema
     assert got.schema["shard"].dataType.simpleString() == "int"
     assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_reads_pass_their_file_list_in_constant_py4j_calls(spark, _wide_table):
+    """A read hands its file list to the JVM in a constant number of py4j
+    round trips: naming 96 files costs no more calls than naming 12
+    (PySpark's `parquet(*paths)` makes one per path)."""
+    import py4j.clientserver as CS
+
+    t = _wide_table
+    calls = [0]
+    orig = CS.ClientServerConnection.send_command
+
+    def counting(self, *a, **k):
+        calls[0] += 1
+        return orig(self, *a, **k)
+
+    def cost(read) -> int:
+        read()  # warm the JVM-side class lookups
+        calls[0] = 0
+        CS.ClientServerConnection.send_command = counting
+        try:
+            read()
+        finally:
+            CS.ClientServerConnection.send_command = orig
+        return calls[0]
+
+    wide = cost(lambda: t.read(spark))
+    narrow = cost(lambda: t.read_where(spark, "shard", [1]))
+    assert 0 < wide <= narrow + 8 < 96, (wide, narrow)
