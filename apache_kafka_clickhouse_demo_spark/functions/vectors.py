@@ -79,14 +79,6 @@ def sql_norm2(a: str, dim: int) -> str:
     return f"sqrt({sql_dot(a, a, dim)})"
 
 
-def sql_cosine(a: str, b: str, dim: int) -> str:
-    return (
-        f"(CASE WHEN {sql_norm2(a, dim)} > 0 AND {sql_norm2(b, dim)} > 0 "
-        f"THEN {sql_dot(a, b, dim)} / ({sql_norm2(a, dim)} * {sql_norm2(b, dim)}) "
-        f"ELSE 0.0 END)"
-    )
-
-
 def sql_normalize(a: str, dim: int) -> str:
     """Mirror of `normalize` (same per-element division order)."""
     n = sql_norm2(a, dim)

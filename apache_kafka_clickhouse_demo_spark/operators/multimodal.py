@@ -65,11 +65,6 @@ def attach_media(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def decode_image(blob: bytes) -> object:
-    """STUB — real image decoding needs PIL/opencv, not in this container."""
-    raise NotImplementedError("image decode requires an imaging library (PIL/cv2)")
-
-
 def _fake_feature(blob: bytes) -> list[float]:
     """Deterministic fake 'decoded feature': strided byte sums / length.
     Stands in for a real decode->resize->embed step; numpy-vectorized over

@@ -321,7 +321,7 @@ def maintain_term_index(spark: SparkSession, table: TransactionalTable) -> int:
     are ordinary rows — compaction preserves them, it never merges them
     (merge stays at read, where it is exact).  Returns the published
     version."""
-    return table.optimize(spark, partition_by="shard")
+    return table.optimize(spark)
 
 
 def phrase_lookup(
@@ -645,7 +645,7 @@ def _maintain_ivf(
     generation over every stored vector and hands (snap, vecs, cents,
     assign, *creation-fixed meta) to the store's `frames` builder."""
     if not recluster:
-        return table.optimize(spark, partition_by="shard")
+        return table.optimize(spark)
 
     def _recluster(snap: DataFrame) -> DataFrame:
         n_vecs, *fixed = _ivf_meta(
@@ -659,7 +659,7 @@ def _maintain_ivf(
         )
         return frames(snap, vecs, cents, assign, *fixed)
 
-    return table.optimize(spark, partition_by="shard", transform=_recluster)
+    return table.optimize(spark, transform=_recluster)
 
 
 def build_ann_index(

@@ -373,24 +373,31 @@ def dyadic_cms_build(
     rehearsal before this restatement; the aggregate-first shape is
     near-flat).
     """
-    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
-    from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
-
     if width < 1 or depth < 1 or not 1 <= universe_bits <= 62:
         raise ValueError("need width, depth >= 1 and 1 <= universe_bits <= 62")
-    v = F.col(value_col).cast("long")
-    kept = spread_small(df).filter(
-        v.isNotNull() & (v >= 0) & (v < (1 << universe_bits))
+    return _dyadic_cms_build(
+        df, _dcms(value_col, universe_bits, width, depth, salt), weight_col
     )
-    if weight_col is None:
-        base = kept.groupBy(v.alias("_v")).agg(F.count(F.lit(1)).alias("_cnt"))
-    else:
-        w = F.col(weight_col).cast("long")
-        base = (
-            kept.filter(w.isNotNull() & (w > 0))
-            .groupBy(v.alias("_v"))
-            .agg(F.sum(w).alias("_cnt"))
-        )
+
+
+class _Dcms(NamedTuple):
+    """The columns `dyadic_cms_build` plans with, built once by a caller
+    that plans many blocks (`_dcms`)."""
+
+    value: Column  # the value as a long, aliased `_v`
+    kept: Column  # the value is in [0, 2^universe_bits)
+    count: Column  # a distinct value's row count, aliased `_cnt`
+    fan: Column  # a distinct value's (level, d, bucket) cells, exploded as `c`
+    cell: list  # c.level AS level, c.d AS d, c.bucket AS bucket
+    n: Column  # a cell's count mass
+
+
+def _dcms(
+    value_col: str, universe_bits: int, width: int, depth: int, salt: str
+) -> _Dcms:
+    from apache_kafka_clickhouse_demo_spark.functions import hashing as H
+
+    v = F.col(value_col).cast("long")
     cells = F.array(
         *[
             F.struct(
@@ -410,15 +417,36 @@ def dyadic_cms_build(
             for d in range(depth)
         ]
     )
-    return (
-        base.select("_cnt", F.explode(cells).alias("c"))
-        .groupBy(
+    return _Dcms(
+        value=v.alias("_v"),
+        kept=v.isNotNull() & (v >= 0) & (v < (1 << universe_bits)),
+        count=F.count(F.lit(1)).alias("_cnt"),
+        fan=F.explode(cells).alias("c"),
+        cell=[
             F.col("c.level").alias("level"),
             F.col("c.d").alias("d"),
             F.col("c.bucket").alias("bucket"),
-        )
-        .agg(F.sum("_cnt").alias("n"))
+        ],
+        n=F.sum("_cnt").alias("n"),
     )
+
+
+def _dyadic_cms_build(
+    df: DataFrame, dcms: _Dcms, weight_col: str | None = None
+) -> DataFrame:
+    from apache_kafka_clickhouse_demo_spark.sources.tables import spread_small
+
+    kept = spread_small(df).filter(dcms.kept)
+    if weight_col is None:
+        base = kept.groupBy(dcms.value).agg(dcms.count)
+    else:
+        w = F.col(weight_col).cast("long")
+        base = (
+            kept.filter(w.isNotNull() & (w > 0))
+            .groupBy(dcms.value)
+            .agg(F.sum(w).alias("_cnt"))
+        )
+    return base.select("_cnt", dcms.fan).groupBy(*dcms.cell).agg(dcms.n)
 
 
 def dyadic_cms_range_counts(

@@ -160,31 +160,16 @@ def _workdir(prefix: str) -> str:
     return path
 
 
-def _stamp_feed_block(feed: str, stamped: set, block_idx: int, base: float) -> None:
-    """Pin a feed block's arrival order for FileStreamSource (ADVICE r6):
-    the source orders files by modification time, and coarse filesystem
-    mtime granularity can TIE two blocks written back-to-back — breaking
-    any stream whose semantics depend on in-order delivery (running_funnel's
-    contract; the near-dup drains' keep-smallest-id decisions).  Stamping
-    each block's new parquet files with a strictly increasing mtime makes
-    delivery deterministic, with no sleep."""
-    for name in os.listdir(feed):
-        p = os.path.join(feed, name)
-        if name.endswith(".parquet") and p not in stamped:
-            os.utime(p, (base + block_idx * 10, base + block_idx * 10))
-            stamped.add(p)
-
-
 def _write_feed_blocks(df, work: str, blk_col, n: int = 4) -> str:
-    """Write an n-block file-stream feed in ONE Spark job (r8, VERDICT r7
-    #4): the per-block form ran n filtered coalesce(1) write jobs — pure
-    fixed cost billed to every streaming gate query.  `blk_col` is an int
-    column 0..n-1 assigning each row its arrival block (the caller states
-    the same boundaries the old filters used).  One partitioned write
-    lands each block as one file (repartition by blk -> one task holds a
-    given blk value); the files are then MOVED into the flat feed dir
-    with the strictly-increasing mtimes `_stamp_feed_block` documents, so
-    FileStreamSource delivery order is unchanged and deterministic."""
+    """Write an n-block file-stream feed in ONE Spark job.  `blk_col` is
+    an int column 0..n-1 assigning each row its arrival block.  One
+    partitioned write lands each block as one file (repartition by blk ->
+    one task holds a given blk value); the files are then MOVED into the
+    flat feed dir with strictly increasing mtimes.  FileStreamSource
+    orders files by mtime, and a coarse filesystem mtime can tie two
+    blocks written back to back, so the explicit stamps make delivery
+    order deterministic (running_funnel's contract; the near-dup drains'
+    keep-smallest-id decisions)."""
     import glob
     import shutil
     import time as _time
@@ -207,6 +192,46 @@ def _write_feed_blocks(df, work: str, blk_col, n: int = 4) -> str:
             os.utime(dest, (base + i * 10, base + i * 10))
     shutil.rmtree(tmp, ignore_errors=True)
     return feed
+
+
+def _block_feed(
+    spark: SparkSession, df: DataFrame, work: str, blk_col, n: int = 4
+) -> DataFrame:
+    """Land `df` as an n-block feed (`_write_feed_blocks`) and return the
+    file stream that delivers it one block per trigger, in block order.
+    With no `blk_col` the blocks are `df.repartition(n)`'s n files, in no
+    set order: for a sketch whose answer does not depend on the split."""
+    if blk_col is None:
+        feed = f"{work}/feed"
+        df.repartition(n).write.parquet(feed)
+    else:
+        feed = _write_feed_blocks(df, work, blk_col, n)
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+def _id_blocks(df: DataFrame, id_col: str, n: int = 4):
+    """Block column of an id-ordered feed: block k holds the ids up to
+    (max id * (k + 1)) // n, the last block everything above."""
+    hi = df.agg(F.max(id_col)).first()[0]
+    ids = F.col(id_col)
+    blk = F.when(ids <= hi // n, 0)
+    for k in range(1, n - 1):
+        blk = blk.when(ids <= (hi * (k + 1)) // n, k)
+    return blk.otherwise(n - 1)
+
+
+def _drain(query) -> None:
+    """Run a started streaming query until its input is drained, then
+    stop it, also when the drain raises: a failed query must not keep
+    running and holding its checkpoint."""
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
 
 
 def _dec2(c) -> "F.Column":
@@ -493,110 +518,67 @@ FROM walk WHERE lvl = 0 ORDER BY p_permille
 """
 
 
+def _dyadic_drain(spark, sf_dir, prefix: str, **params):
+    """Drain the events feed (value_cents precomputed, four blocks)
+    through `dyadic_cms_stream` and return a writer over its store, built
+    from the same parameters as the stream's."""
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        _DyadicCmsStreamWriter,
+        dyadic_cms_stream,
+    )
+
+    work = _workdir(prefix)
+    ev = _t(spark, sf_dir, "events").select(
+        F.round(F.col("value") * 100).cast("long").alias("cents")
+    )
+    blk = F.pmod(F.coalesce(F.col("cents"), F.lit(0)), F.lit(4)).cast("int")
+    params = dict(
+        value_col="cents",
+        ranges=DYADIC_RANGES,
+        universe_bits=DYADIC_BITS,
+        width=DYADIC_WIDTH,
+        depth=DYADIC_DEPTH,
+        **params,
+    )
+    _drain(
+        dyadic_cms_stream(
+            spark,
+            _block_feed(spark, ev, work, blk),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
+    )
+    return _DyadicCmsStreamWriter(
+        spark, f"{work}/store", writer_id=f"{work}/ck", **params
+    )
+
+
 def q_stream_range_counts(spark, sf_dir):
     """Streaming dyadic count-min (stateful.dyadic_cms_stream): the
     events feed — value_cents precomputed — drains as four blocks into
     a cell-sharded counter store — increments and the LIVE value-band
-    histogram in ONE atomic commit per block (r13); counters are LINEAR,
+    histogram in ONE atomic commit per block; counters are LINEAR,
     so the drained store's merge-on-read structure equals the batch
     dyadic_cms_build cell-for-cell and the final band estimates are
     dyadic_range_counts' verbatim — the oracle is the batch SQL
     unchanged."""
-    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
-        _DyadicCmsStreamWriter,
-        dyadic_cms_stream,
-    )
-
-    work = _workdir("stream_dcms_")
-    ev = _t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    blk = F.pmod(F.coalesce(F.col("cents"), F.lit(0)), F.lit(4)).cast("int")
-    _write_feed_blocks(ev, work, blk)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = dyadic_cms_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        value_col="cents",
-        ranges=DYADIC_RANGES,
-        universe_bits=DYADIC_BITS,
-        width=DYADIC_WIDTH,
-        depth=DYADIC_DEPTH,
-    )
-    q.processAllAvailable()
-    q.stop()
-    writer = _DyadicCmsStreamWriter(
-        spark,
-        f"{work}/store",
-        value_col="cents",
-        ranges=DYADIC_RANGES,
-        universe_bits=DYADIC_BITS,
-        width=DYADIC_WIDTH,
-        depth=DYADIC_DEPTH,
-        writer_id=f"{work}/ck",
-    )
-    return writer.range_counts()
+    return _dyadic_drain(spark, sf_dir, "stream_dcms_").range_counts()
 
 
 def q_stream_sketch_quantiles(spark, sf_dir):
-    """Live sketch quantiles at ingest (r14, VERDICT r13 #6): the
-    dyadic CMS drain of q_stream_range_counts with `ps` set — each
-    block publishes its increments, the running band histogram AND the
-    running quantiles (the r13 descent over the pre-append snapshot +
-    block cells) in ONE atomic commit.  Counters are linear, so the
-    drained store's descent equals the batch dyadic_quantiles over a
-    one-shot build of the full feed verbatim — the oracle is
-    sketch_quantiles' batch SQL unchanged; the per-block running rows
-    and the injected-failure replay are pinned in
-    tests/test_streaming_stateful.py."""
-    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
-        _DyadicCmsStreamWriter,
-        dyadic_cms_stream,
-    )
-
-    work = _workdir("stream_dq_")
-    ev = _t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    blk = F.pmod(F.coalesce(F.col("cents"), F.lit(0)), F.lit(4)).cast("int")
-    _write_feed_blocks(ev, work, blk)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = dyadic_cms_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        value_col="cents",
-        ranges=DYADIC_RANGES,
-        universe_bits=DYADIC_BITS,
-        width=DYADIC_WIDTH,
-        depth=DYADIC_DEPTH,
-        ps=DYADIC_QUANTILE_PS,
-    )
-    q.processAllAvailable()
-    q.stop()
-    writer = _DyadicCmsStreamWriter(
-        spark,
-        f"{work}/store",
-        value_col="cents",
-        ranges=DYADIC_RANGES,
-        universe_bits=DYADIC_BITS,
-        width=DYADIC_WIDTH,
-        depth=DYADIC_DEPTH,
-        writer_id=f"{work}/ck",
-        ps=DYADIC_QUANTILE_PS,
-    )
-    return writer.quantiles()
+    """Live sketch quantiles at ingest: the dyadic CMS drain of
+    q_stream_range_counts with `ps` set — each block publishes its
+    increments, the running band histogram AND the running quantiles
+    (the descent over the pre-append snapshot + block cells) in ONE
+    atomic commit.  Counters are linear, so the drained store's descent
+    equals the batch dyadic_quantiles over a one-shot build of the full
+    feed verbatim — the oracle is sketch_quantiles' batch SQL unchanged;
+    the per-block running rows and the injected-failure replay are
+    pinned in tests/test_streaming_stateful.py."""
+    return _dyadic_drain(
+        spark, sf_dir, "stream_dq_", ps=DYADIC_QUANTILE_PS
+    ).quantiles()
 
 
 def q_weighted_percentiles(spark, sf_dir):
@@ -924,7 +906,7 @@ def q_stream_dedup(spark, sf_dir):
         .parquet(f"{work}/doubled")
     )
     deduped = streaming_dedup(src, keys=["event_id"], watermark_col="ts", delay="3650 days")
-    q = (
+    _drain(
         deduped.writeStream.foreachBatch(
             lambda b, _i: b.write.mode("append").parquet(f"{work}/out")
         )
@@ -933,8 +915,6 @@ def q_stream_dedup(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
     return spark.read.parquet(f"{work}/out").orderBy("event_id")
 
 
@@ -953,38 +933,22 @@ def q_stream_near_dup(spark, sf_dir):
 
     work = _workdir("stream_neardup_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    # sequential id-ordered chunks, same quartile boundaries as the old
-    # per-block filters; one write job (see _write_feed_blocks)
-    blk = (
-        F.when(F.col("doc_id") <= (hi * 1) // 4, 0)
-        .when(F.col("doc_id") <= (hi * 2) // 4, 1)
-        .when(F.col("doc_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        minhash_dedup_stream(
+            spark,
+            _block_feed(spark, docs, work, _id_blocks(docs, "doc_id")),
+            out_dir=f"{work}/kept",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            num_perm=MINHASH_PERM,
+            bands=MINHASH_BANDS,
+            shingle_n=MINHASH_SHINGLE_N,
+            threshold=MINHASH_THRESHOLD,
+            # gate blocks are ~1.2k docs: 32 task-files per survivors
+            # commit is pure fsync overhead (stateful.py's out_files note)
+            out_files=4,
+        )
     )
-    feed = _write_feed_blocks(docs, work, blk)
-
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = minhash_dedup_stream(
-        spark,
-        src,
-        out_dir=f"{work}/kept",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        num_perm=MINHASH_PERM,
-        bands=MINHASH_BANDS,
-        shingle_n=MINHASH_SHINGLE_N,
-        threshold=MINHASH_THRESHOLD,
-        # gate blocks are ~1.2k docs: 32 task-files per survivors commit is
-        # pure fsync overhead (stateful.py's out_files note)
-        out_files=4,
-    )
-    q.processAllAvailable()
-    q.stop()
     return (
         TransactionalTable(f"{work}/kept").read(spark)
         .select("doc_id")
@@ -1005,37 +969,21 @@ def q_stream_embed_near_dup(spark, sf_dir):
 
     work = _workdir("stream_embdup_")
     emb = _t(spark, sf_dir, "embeddings")
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    # sequential id-ordered chunks, same quartile boundaries as the old
-    # per-block filters; one write job (see _write_feed_blocks)
-    blk = (
-        F.when(F.col("vec_id") <= (hi * 1) // 4, 0)
-        .when(F.col("vec_id") <= (hi * 2) // 4, 1)
-        .when(F.col("vec_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        embedding_dedup_stream(
+            spark,
+            _block_feed(spark, emb, work, _id_blocks(emb, "vec_id")),
+            out_dir=f"{work}/kept",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            threshold=NEAR_DUP_COS,
+            dim=EMBED_DIM,
+            num_tables=NEAR_DUP_TABLES,
+            planes_per_table=NEAR_DUP_PLANES,
+            seed=NEAR_DUP_SEED,
+            out_files=4,
+        )
     )
-    feed = _write_feed_blocks(emb, work, blk)
-
-    src = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = embedding_dedup_stream(
-        spark,
-        src,
-        out_dir=f"{work}/kept",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        threshold=NEAR_DUP_COS,
-        dim=EMBED_DIM,
-        num_tables=NEAR_DUP_TABLES,
-        planes_per_table=NEAR_DUP_PLANES,
-        seed=NEAR_DUP_SEED,
-        out_files=4,
-    )
-    q.processAllAvailable()
-    q.stop()
     return (
         TransactionalTable(f"{work}/kept").read(spark)
         .select("vec_id")
@@ -2277,32 +2225,18 @@ def q_stream_strat_sample(spark, sf_dir):
     work = _workdir("stream_strat_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     blk = F.pmod(F.col("doc_id"), F.lit(4)).cast("int")
-    feed = _write_feed_blocks(docs, work, blk)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    params = dict(id_col="doc_id", k=STRAT_N, salt=STRAT_SALT, group_col="source")
+    _drain(
+        reservoir_sample_stream(
+            spark,
+            _block_feed(spark, docs, work, blk),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
     )
-    q = reservoir_sample_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        id_col="doc_id",
-        k=STRAT_N,
-        salt=STRAT_SALT,
-        group_col="source",
-    )
-    q.processAllAvailable()
-    q.stop()
     w = reservoir_stream_writer(
-        spark,
-        f"{work}/store",
-        id_col="doc_id",
-        k=STRAT_N,
-        writer_id=f"{work}/ck",
-        salt=STRAT_SALT,
-        group_col="source",
+        spark, f"{work}/store", writer_id=f"{work}/ck", **params
     )
     return w.stratified().orderBy("source", "strat_rank")
 
@@ -3412,23 +3346,16 @@ def q_stream_funnel(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo) / 4
-    # ts-ordered blocks, same quartile boundaries as the old per-block
-    # filters; one write job (see _write_feed_blocks)
+    # ts-ordered blocks, quartiles of the ts span
     blk = (
         F.when(F.col("ts") <= F.lit(lo + span * 1), 0)
         .when(F.col("ts") <= F.lit(lo + span * 2), 1)
         .when(F.col("ts") <= F.lit(lo + span * 3), 2)
         .otherwise(3)
     )
-    feed = _write_feed_blocks(ev, work, blk)
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
+    src = _block_feed(spark, ev, work, blk)
     steps = [F.col("event_type") == s for s in FUNNEL_STEPS]
-    q = (
+    _drain(
         running_funnel(src, "user_id", "ts", steps, FUNNEL_WINDOW_S)
         .writeStream.foreachBatch(
             lambda b, i: b.withColumn("batch_id", F.lit(i))
@@ -3440,8 +3367,6 @@ def q_stream_funnel(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
     w = Window.partitionBy("k").orderBy(F.col("batch_id").desc())
     final = (
@@ -3468,37 +3393,24 @@ def q_stream_sample(spark, sf_dir):
 
     work = _workdir("stream_sample_")
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    hi = ev.agg(F.max("event_id")).first()[0]
-    # id-ordered blocks, same quartile boundaries as the old per-block
-    # filters; one write job (see _write_feed_blocks)
-    blk = (
-        F.when(F.col("event_id") <= (hi * 1) // 4, 0)
-        .when(F.col("event_id") <= (hi * 2) // 4, 1)
-        .when(F.col("event_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
-    )
-    feed = _write_feed_blocks(ev, work, blk)
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = reservoir_sample_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
+    params = dict(
         id_col="event_id",
         k=SAMPLE_K,
         payload_cols=["user_id", "event_type"],
         compact_every=2,
     )
-    q.processAllAvailable()
-    q.stop()
+    _drain(
+        reservoir_sample_stream(
+            spark,
+            _block_feed(spark, ev, work, _id_blocks(ev, "event_id")),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
+    )
     return (
         reservoir_stream_writer(
-            spark, f"{work}/store", "event_id", SAMPLE_K
+            spark, f"{work}/store", writer_id=f"{work}/ck", **params
         )
         .sample()
         .select("event_id", "user_id", "event_type")
@@ -3506,39 +3418,40 @@ def q_stream_sample(spark, sf_dir):
     )
 
 
-def q_stream_topk(spark, sf_dir):
-    """Streaming topK drain (streaming/stateful.heavy_hitters_stream): the
-    events feed folds into the generational Misra-Gries store block by
-    block; the stored summary's top-10 must equal the exact count top-10
-    (capacity >> distinct users: the sketch's exact regime)."""
+def _topk_drain(spark, ev: DataFrame, prefix: str, **params) -> DataFrame:
+    """Drain `ev` as four files in no set order through
+    `heavy_hitters_stream` on user_id (capacity >> distinct users, so the
+    summary is exact and the split does not matter) and return the
+    stored summary's top-k."""
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         heavy_hitters_stream,
         topk_stream_writer,
     )
 
-    work = _workdir("stream_topk_")
-    ev = _t(spark, sf_dir, "events").select("user_id")
-    ev.repartition(4).write.parquet(f"{work}/feed")
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
+    work = _workdir(prefix)
+    params = dict(col="user_id", capacity=TOPK_CAPACITY, compact_every=2, **params)
+    _drain(
+        heavy_hitters_stream(
+            spark,
+            _block_feed(spark, ev, work, None),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
     )
-    q = heavy_hitters_stream(
-        spark,
-        src,
-        f"{work}/store",
-        f"{work}/ck",
-        "user_id",
-        capacity=TOPK_CAPACITY,
-        compact_every=2,
-    )
-    q.processAllAvailable()
-    q.stop()
     writer = topk_stream_writer(
-        spark, f"{work}/store", "user_id", capacity=TOPK_CAPACITY, writer_id=f"{work}/ck"
+        spark, f"{work}/store", writer_id=f"{work}/ck", **params
     )
     return writer.topk(TOPK_K)
+
+
+def q_stream_topk(spark, sf_dir):
+    """Streaming topK drain (streaming/stateful.heavy_hitters_stream): the
+    events feed folds into the generational Misra-Gries store block by
+    block; the stored summary's top-10 must equal the exact count top-10
+    (capacity >> distinct users: the sketch's exact regime)."""
+    ev = _t(spark, sf_dir, "events").select("user_id")
+    return _topk_drain(spark, ev, "stream_topk_")
 
 
 def q_stream_top_spenders(spark, sf_dir):
@@ -3549,41 +3462,10 @@ def q_stream_top_spenders(spark, sf_dir):
     top-10 must equal the exact weighted top-10 (oracle =
     top_users_weighted's SQL verbatim — weighted summaries merge by the
     identical mergeable-summaries argument)."""
-    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
-        heavy_hitters_stream,
-        topk_stream_writer,
-    )
-
-    work = _workdir("stream_topkw_")
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.round(F.col("value") * 100).cast("long").alias("value_cents")
     )
-    ev.repartition(4).write.parquet(f"{work}/feed")
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = heavy_hitters_stream(
-        spark,
-        src,
-        f"{work}/store",
-        f"{work}/ck",
-        "user_id",
-        capacity=TOPK_CAPACITY,
-        compact_every=2,
-        weight_col="value_cents",
-    )
-    q.processAllAvailable()
-    q.stop()
-    writer = topk_stream_writer(
-        spark,
-        f"{work}/store",
-        "user_id",
-        capacity=TOPK_CAPACITY,
-        writer_id=f"{work}/ck",
-    )
-    return writer.topk(TOPK_K)
+    return _topk_drain(spark, ev, "stream_topkw_", weight_col="value_cents")
 
 
 def q_snapshot_changelog(spark, sf_dir):
@@ -4149,28 +4031,18 @@ def q_stream_uniq_users(spark, sf_dir):
     work = _workdir("stream_uniq_")
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
     blk = F.pmod(F.coalesce(F.col("user_id"), F.lit(0)), F.lit(4)).cast("int")
-    _write_feed_blocks(ev, work, blk)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
+    params = dict(group_col="event_type", key_col="user_id")
+    _drain(
+        uniq_stream(
+            spark,
+            _block_feed(spark, ev, work, blk),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
     )
-    q = uniq_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        group_col="event_type",
-        key_col="user_id",
-    )
-    q.processAllAvailable()
-    q.stop()
     writer = _UniqStreamWriter(
-        spark,
-        f"{work}/store",
-        group_col="event_type",
-        key_col="user_id",
-        writer_id=f"{work}/ck",
+        spark, f"{work}/store", writer_id=f"{work}/ck", **params
     )
     return (
         writer.merged_estimates()
@@ -4197,36 +4069,22 @@ def q_stream_cms_counts(spark, sf_dir):
     work = _workdir("stream_cms_")
     ev = _t(spark, sf_dir, "events").select("user_id")
     blk = F.pmod(F.coalesce(F.col("user_id"), F.lit(0)), F.lit(4)).cast("int")
-    _write_feed_blocks(ev, work, blk)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
+    params = dict(key_col="user_id", width=CMS_WIDTH, depth=CMS_DEPTH)
+    _drain(
+        count_min_stream(
+            spark,
+            _block_feed(spark, ev, work, blk),
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            **params,
+        )
     )
-    q = count_min_stream(
-        spark,
-        src,
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        key_col="user_id",
-        width=CMS_WIDTH,
-        depth=CMS_DEPTH,
-    )
-    q.processAllAvailable()
-    q.stop()
     writer = _CountMinStreamWriter(
-        spark,
-        f"{work}/store",
-        key_col="user_id",
-        width=CMS_WIDTH,
-        depth=CMS_DEPTH,
-        writer_id=f"{work}/ck",
+        spark, f"{work}/store", writer_id=f"{work}/ck", **params
     )
     sketch = writer.merged_sketch()
     keys = ev.select("user_id").filter(F.col("user_id").isNotNull()).distinct()
-    est = sketches.count_min_lookup(
-        sketch, keys, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH
-    )
+    est = sketches.count_min_lookup(sketch, keys, **params)
     exact = (
         ev.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
@@ -4558,24 +4416,15 @@ def q_stream_index_bm25(spark, sf_dir):
 
     work = _workdir("stream_index_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    blk = (
-        F.when(F.col("doc_id") <= (hi * 1) // 4, 0)
-        .when(F.col("doc_id") <= (hi * 2) // 4, 1)
-        .when(F.col("doc_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        term_index_stream(
+            spark,
+            _block_feed(spark, docs, work, _id_blocks(docs, "doc_id")),
+            index_dir=f"{work}/idx",
+            checkpoint=f"{work}/ck",
+            n_shards=64,
+        )
     )
-    _write_feed_blocks(docs, work, blk)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = term_index_stream(
-        spark, src, index_dir=f"{work}/idx", checkpoint=f"{work}/ck", n_shards=64
-    )
-    q.processAllAvailable()
-    q.stop()
     table = TransactionalTable(f"{work}/idx")
     return SI.bm25_lookup(spark, table, BM25_QUERIES, k=BM25_K).orderBy(
         "query_id", "rank"
@@ -4915,30 +4764,17 @@ def q_stream_domain_cap(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _synth_url().alias("url")
     )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    blk = (
-        F.when(F.col("doc_id") <= (hi * 1) // 4, 0)
-        .when(F.col("doc_id") <= (hi * 2) // 4, 1)
-        .when(F.col("doc_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        domain_cap_stream(
+            spark,
+            _block_feed(spark, docs, work, _id_blocks(docs, "doc_id")),
+            out_dir=f"{work}/kept",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            cap=DOMAIN_CAP_K,
+            out_files=4,
+        )
     )
-    _write_feed_blocks(docs, work, blk)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = domain_cap_stream(
-        spark,
-        src,
-        out_dir=f"{work}/kept",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        cap=DOMAIN_CAP_K,
-        out_files=4,
-    )
-    q.processAllAvailable()
-    q.stop()
     return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 
@@ -4960,30 +4796,17 @@ def q_stream_token_cap(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _synth_url().alias("url"), "text"
     )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    blk = (
-        F.when(F.col("doc_id") <= (hi * 1) // 4, 0)
-        .when(F.col("doc_id") <= (hi * 2) // 4, 1)
-        .when(F.col("doc_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        domain_token_cap_stream(
+            spark,
+            _block_feed(spark, docs, work, _id_blocks(docs, "doc_id")),
+            out_dir=f"{work}/kept",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            budget=DOMAIN_TOKEN_BUDGET,
+            out_files=4,
+        )
     )
-    _write_feed_blocks(docs, work, blk)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = domain_token_cap_stream(
-        spark,
-        src,
-        out_dir=f"{work}/kept",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        budget=DOMAIN_TOKEN_BUDGET,
-        out_files=4,
-    )
-    q.processAllAvailable()
-    q.stop()
     return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 
@@ -5003,29 +4826,16 @@ def q_stream_url_dedup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _synth_url().alias("url")
     )
-    hi = docs.agg(F.max("doc_id")).first()[0]
-    blk = (
-        F.when(F.col("doc_id") <= (hi * 1) // 4, 0)
-        .when(F.col("doc_id") <= (hi * 2) // 4, 1)
-        .when(F.col("doc_id") <= (hi * 3) // 4, 2)
-        .otherwise(3)
+    _drain(
+        url_dedup_stream(
+            spark,
+            _block_feed(spark, docs, work, _id_blocks(docs, "doc_id")),
+            out_dir=f"{work}/kept",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            out_files=4,
+        )
     )
-    _write_feed_blocks(docs, work, blk)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
-    )
-    q = url_dedup_stream(
-        spark,
-        src,
-        out_dir=f"{work}/kept",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        out_files=4,
-    )
-    q.processAllAvailable()
-    q.stop()
     return TransactionalTable(f"{work}/kept").read(spark).orderBy("doc_id")
 
 

@@ -170,12 +170,6 @@ def insert_into(df: DataFrame, path: str, partition_cols: list[str] | None = Non
     writer.parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """S5 scan side for engine-written tables (plain columnar scan; Catalyst
-    provides pushdown + partition pruning)."""
-    return spark.read.parquet(path)
-
-
 def _merge(spark: SparkSession, table: TransactionalTable, keys: list[str] | None, **kw) -> int:
     """Run one MergeTree merge as one `table.optimize` replace commit and
     return its version.  The merged snapshot keeps the table's recorded

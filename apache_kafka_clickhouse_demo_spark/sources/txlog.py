@@ -80,6 +80,12 @@ _LOG_DIR = "_txlog"
 _VERSION_DIGITS = 11
 #: log listings one replay may take before giving up (see `_replay`)
 _MAX_RELISTS = 8
+#: version numbers an append tries before giving up under contention
+_COMMIT_RETRIES = 50
+#: snapshots `optimize` recompacts from after losing its commit race
+_OPTIMIZE_RETRIES = 5
+#: bits per dimension of `optimize(cluster_cols=...)`'s Morton key
+_ZORDER_BITS = 8
 
 
 class _Staged(list):
@@ -459,7 +465,6 @@ class TransactionalTable:
     def append(
         self,
         df: DataFrame,
-        max_retries: int = 50,
         partition_by: str | None = None,
         txn: str | None = None,
         cas_version: int | None = None,
@@ -483,7 +488,6 @@ class TransactionalTable:
         """
         return self.commit_staged(
             self.stage_for_append(df, partition_by),
-            max_retries=max_retries,
             partition_by=partition_by,
             txn=txn,
             cas_version=cas_version,
@@ -518,7 +522,6 @@ class TransactionalTable:
     def commit_staged(
         self,
         staged: list[str],
-        max_retries: int = 50,
         partition_by: str | None = None,
         txn: str | None = None,
         cas_version: int | None = None,
@@ -561,7 +564,7 @@ class TransactionalTable:
                 f"table advanced past the caller's read at {cas_version}"
             )
         version = self.version() + 1
-        for _ in range(max_retries):
+        for _ in range(_COMMIT_RETRIES):
             commit_path = os.path.join(
                 self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json"
             )
@@ -569,7 +572,7 @@ class TransactionalTable:
                 return version
             version += 1  # lost the race for this version number
         # data files remain unpublished (invisible to readers) on failure
-        raise RuntimeError(f"could not commit after {max_retries} attempts")
+        raise RuntimeError(f"could not commit after {_COMMIT_RETRIES} attempts")
 
     def append_once(
         self,
@@ -597,10 +600,7 @@ class TransactionalTable:
         self,
         spark: SparkSession,
         target_files: int = 1,
-        max_retries: int = 5,
         cluster_cols: list[str] | None = None,
-        zorder_bits: int = 8,
-        partition_by: str | None = None,
         keep_where: Column | None = None,
         transform=None,
         partitions: list | None = None,
@@ -633,12 +633,11 @@ class TransactionalTable:
         `read_where`-pruned layout) the rewrite keeps the
         `<col>=<value>/` directory structure with one task per partition
         value (one file per value), so driver-side pruning survives
-        compaction.  The column DEFAULTS to the layout the appends
-        recorded (`partition_column()`), so a caller can no longer
-        forget it and silently flatten the layout — which would make
-        every later `read_where` prefix match nothing and return the
-        empty frame, i.e. a dedup store would dedupe against nothing.
-        This is the maintenance pass a
+        compaction.  The column is always the layout the appends
+        recorded (`partition_column()`): a rewrite that flattened it
+        would make every later `read_where` prefix match nothing and
+        return the empty frame, i.e. a dedup store would dedupe against
+        nothing.  This is the maintenance pass a
         continuously-appending store needs: per-partition file count
         drops from O(commits) back to 1.
 
@@ -654,13 +653,11 @@ class TransactionalTable:
             zorder_cluster_key,
         )
 
-        layout = self.partition_column()
-        if partition_by is None:
-            partition_by = layout
-        if partitions is not None and (layout is None or partition_by != layout):
+        partition_by = self.partition_column()
+        if partitions is not None and partition_by is None:
             raise ValueError(f"partitions= needs the partition column of {self.path}")
 
-        for _ in range(max_retries):
+        for _ in range(_OPTIMIZE_RETRIES):
             snapshot = self.version()
             if snapshot < 0:
                 raise FileNotFoundError(f"nothing to optimize in {self.path}")
@@ -694,7 +691,7 @@ class TransactionalTable:
                     zc = "_zcluster"
                     df = (
                         df.withColumn(
-                            zc, zorder_cluster_key(df, cluster_cols, bits=zorder_bits)
+                            zc, zorder_cluster_key(df, cluster_cols, bits=_ZORDER_BITS)
                         )
                         .sortWithinPartitions(partition_by, zc)
                         .drop(zc)
@@ -703,7 +700,7 @@ class TransactionalTable:
                 zc = "_zcluster"
                 df = (
                     df.withColumn(
-                        zc, zorder_cluster_key(df, cluster_cols, bits=zorder_bits)
+                        zc, zorder_cluster_key(df, cluster_cols, bits=_ZORDER_BITS)
                     )
                     .repartitionByRange(max(1, target_files), zc)
                     .sortWithinPartitions(zc)
@@ -728,7 +725,7 @@ class TransactionalTable:
             # lost the OCC race: a concurrent append advanced the table.
             # The staged files are unreferenced (vacuum reclaims them);
             # recompact from the new snapshot.
-        raise RuntimeError(f"optimize lost the commit race {max_retries} times")
+        raise RuntimeError(f"optimize lost the commit race {_OPTIMIZE_RETRIES} times")
 
     def vacuum(self, grace_seconds: float = 3600.0) -> list[str]:
         """Delete crash debris no commit references: unreferenced data

@@ -21,11 +21,11 @@ from __future__ import annotations
 import contextlib
 import functools
 import os
-import threading
 import types
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -329,7 +329,7 @@ class _DrainWriter:
     def maintain(self) -> None:
         store = self._tables()[0]
         if not self._generational:
-            self._compact(store, partition_by="shard")
+            self._compact(store)
         else:
             # one retention rewrite keeps only the newest generation, so
             # the store stays one summary's rows, not O(batches)
@@ -451,7 +451,10 @@ class _DrainWriter:
         then the store commits (a version-CAS when `cas_version` is
         given), then the out table.  Staged files are reader-invisible
         until a commit names them, so only commit order carries the
-        crash-window argument and the two staging jobs overlap."""
+        crash-window argument and the two staging jobs overlap.  The
+        side thread inherits this thread's local properties, so its
+        staging job runs in the block's job group (a stopped query
+        cancels it with the rest of the block)."""
         if self._resumed:
             self.out.append(out(), txn=txn)
             return
@@ -463,7 +466,7 @@ class _DrainWriter:
             except BaseException as e:  # re-raised after the join
                 side.append(e)
 
-        thread = threading.Thread(target=stage_store, daemon=True)
+        thread = InheritableThread(target=stage_store, daemon=True)
         thread.start()
         staged_out: list[str] = []
         try:
@@ -2026,7 +2029,7 @@ class _DomainCapStreamWriter(_DrainWriter):
         residual is file-open fan-out — O(min(block domains, shards))
         files — not store size, proven by 20-domain blocks probing the
         same store FLAT at 1.05x)."""
-        self._compact(self.store, partition_by="shard", cluster_cols=["reg_domain"])
+        self._compact(self.store, cluster_cols=["reg_domain"])
 
     @functools.cached_property
     def _exprs(self) -> types.SimpleNamespace:
@@ -2410,7 +2413,8 @@ class _DyadicCmsStreamWriter(_DrainWriter):
     carries over verbatim with (level, d, bucket) cells:
 
     1. Build the BLOCK's structure with the batch operator itself
-       (`dyadic_cms_build` — provably shared grid), bounded increment
+       (`_dyadic_cms_build` over the batch operator's columns, built
+       once per writer — provably shared grid), bounded increment
        rows however large the block, then ONE bounded collect
        (<= (bits+1)*depth*width rows by construction) that detects the
        empty block, materializes the persisted grid for the staged
@@ -2466,11 +2470,21 @@ class _DyadicCmsStreamWriter(_DrainWriter):
         self.ps = [int(p_) for p_ in ps] if ps else None
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
 
-    def _shard(self):
+    @functools.cached_property
+    def _exprs(self) -> types.SimpleNamespace:
+        """The columns `_process` plans with, built once per writer;
+        `dcms` is the batch operator's own (`sketches._dcms`)."""
+        from apache_kafka_clickhouse_demo_spark.operators.sketches import _dcms
+
+        e = types.SimpleNamespace()
+        e.dcms = _dcms(
+            self.value_col, self.universe_bits, self.width, self.depth, self.salt
+        )
         cell = (
             F.col("level").cast("long") * self.depth + F.col("d")
         ) * self.width + F.col("bucket")
-        return self._shard_col("y", cell, self.cms_shards)
+        e.shard = self._shard_col("y", cell, self.cms_shards)
+        return e
 
     def merged_sketch(self, version: int | None = None) -> DataFrame:
         """Merge-on-read structure at a committed version: (level, d,
@@ -2561,21 +2575,14 @@ class _DyadicCmsStreamWriter(_DrainWriter):
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
         from apache_kafka_clickhouse_demo_spark.operators.sketches import (
-            dyadic_cms_build,
+            _dyadic_cms_build,
             dyadic_quantiles_py,
             dyadic_range_counts_py,
         )
 
         pin = self._pin(txn)
-
-        inc = dyadic_cms_build(
-            block,
-            self.value_col,
-            universe_bits=self.universe_bits,
-            width=self.width,
-            depth=self.depth,
-            salt=self.salt,
-        ).withColumn("shard", self._shard())
+        e = self._exprs
+        inc = _dyadic_cms_build(block, e.dcms).withColumn("shard", e.shard)
         # cached, then materialized by ONE bounded collect
         # (<= (bits+1)*depth*width rows by construction): it detects
         # the empty block, hands the driver the block cells for the

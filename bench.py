@@ -97,14 +97,14 @@ def _bench_pack_bins_ffd(spark, sf_dir):
 
 
 def _bench_stream_pack_bins(spark, sf_dir):
-    """Checkpointed 4-block drain of the r13 streaming FFD twin —
+    """Checkpointed 4-block drain of the streaming FFD twin —
     ingest-time packing of the sf documents (capacity 512, whitespace
     token counts); returns the drained assignment rows."""
     from pyspark.sql import functions as F
 
     from apache_kafka_clickhouse_demo_spark.functions import text as TX
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
-        _PackBinsStreamWriter,
         pack_bins_stream,
     )
 
@@ -114,30 +114,17 @@ def _bench_stream_pack_bins(spark, sf_dir):
         "doc_id", F.size(TX.tokens("text")).cast("long").alias("n_tokens")
     )
     blk = F.pmod(F.col("doc_id"), F.lit(4)).cast("int")
-    Q._write_feed_blocks(items, work, blk)
-    src = (
-        spark.readStream.schema(items.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/feed")
+    Q._drain(
+        pack_bins_stream(
+            spark,
+            Q._block_feed(spark, items, work, blk),
+            out_dir=f"{work}/out",
+            store_dir=f"{work}/store",
+            checkpoint=f"{work}/ck",
+            capacity=512,
+        )
     )
-    q = pack_bins_stream(
-        spark,
-        src,
-        out_dir=f"{work}/out",
-        store_dir=f"{work}/store",
-        checkpoint=f"{work}/ck",
-        capacity=512,
-    )
-    q.processAllAvailable()
-    q.stop()
-    writer = _PackBinsStreamWriter(
-        spark,
-        f"{work}/out",
-        f"{work}/store",
-        capacity=512,
-        writer_id=f"{work}/ck",
-    )
-    return writer.out.read(spark)
+    return TransactionalTable(f"{work}/out").read(spark)
 
 
 BENCH_ONLY = {

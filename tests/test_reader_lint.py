@@ -10,7 +10,7 @@ with `ast` and fails if a function hands a path to the transaction log —
 as `out_dir=` of a `streaming.stateful` writer, as the path of a
 `TransactionalTable`, as `dest_path=` of `backfill_cutover`, or as the
 path `run_cascade` returns — and then also reads that same path with
-`spark.read.parquet` or `storage.read_table`.
+`spark.read.parquet`.
 """
 
 from __future__ import annotations
@@ -58,8 +58,7 @@ def _callee(call: ast.Call) -> tuple[str | None, str | None]:
 
 def _plain_parquet_paths(call: ast.Call) -> list[ast.expr]:
     """The path arguments of `<x>.read.parquet(...)` (a DataFrameReader
-    parquet scan) or of `read_table(spark, path)` (the same scan in
-    `sources.storage`); [] for any other call."""
+    parquet scan); [] for any other call."""
     fn = call.func
     if (
         isinstance(fn, ast.Attribute)
@@ -68,9 +67,6 @@ def _plain_parquet_paths(call: ast.Call) -> list[ast.expr]:
         and fn.value.attr == "read"
     ):
         return list(call.args)
-    base, attr = _callee(call)
-    if (attr or base) == "read_table":
-        return call.args[1:2]
     return []
 
 
@@ -124,7 +120,6 @@ _KNOWN = '''
 from apache_kafka_clickhouse_demo_spark.streaming.stateful import url_dedup_stream
 from apache_kafka_clickhouse_demo_spark.streaming import backfill_cutover
 from apache_kafka_clickhouse_demo_spark.streaming.cascade import run_cascade, run_cascade_live
-from apache_kafka_clickhouse_demo_spark.sources.storage import read_table
 from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 def q_a(spark, work):
@@ -137,7 +132,7 @@ def q_b(spark, work):
 
 def q_c(spark, work):
     out = run_cascade(spark, None, [], work)
-    return read_table(spark, out)
+    return spark.read.parquet(out)
 
 def q_d(spark, work, hist):
     backfill_cutover(spark, hist, None, None, None, dest_path=f"{work}/d", checkpoint="c")
@@ -149,7 +144,7 @@ def q_ok(spark, work):
 
 def q_ok_live(spark, work):
     out = run_cascade_live(spark, None, [], work)
-    return read_table(spark, out).union(spark.read.parquet(out))
+    return spark.read.parquet(out)
 '''
 
 

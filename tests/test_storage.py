@@ -15,7 +15,6 @@ from apache_kafka_clickhouse_demo_spark.plans.explain import formatted_plan
 from apache_kafka_clickhouse_demo_spark.sources.storage import (
     compact_summing,
     insert_into,
-    read_table,
     write_sorted,
 )
 from apache_kafka_clickhouse_demo_spark.sources.tables import load_table
@@ -31,7 +30,7 @@ def test_write_sorted_round_trip_and_partition_pruning(spark, sf_dir, tmp_path):
     path = str(tmp_path / "events_by_day")
     write_sorted(events, path, sort_cols=["ts"], partition_cols=["day"])
 
-    back = read_table(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == events.count()
 
     # files inside each day directory are internally sorted by ts
@@ -52,7 +51,7 @@ def test_insert_into_appends(spark, tmp_path):
     df = spark.range(10).withColumn("v", F.col("id") * 2)
     write_sorted(df, path, sort_cols=["id"])
     insert_into(df.filter(F.col("id") < 3), path)
-    assert read_table(spark, path).count() == 13
+    assert spark.read.parquet(path).count() == 13
 
 
 def test_compact_summing_preserves_read(spark, tmp_path):
@@ -332,8 +331,8 @@ def test_write_sorted_bloom_skip_index(spark, tmp_path):
     assert size(bloomed) > size(plain)  # the filter bytes are really there
 
     probe = df.first()["tag"]
-    got = read_table(spark, bloomed).filter(F.col("tag") == probe)
-    want = read_table(spark, plain).filter(F.col("tag") == probe)
+    got = spark.read.parquet(bloomed).filter(F.col("tag") == probe)
+    want = spark.read.parquet(plain).filter(F.col("tag") == probe)
     assert sorted(r["id"] for r in got.collect()) == sorted(
         r["id"] for r in want.collect()
     )

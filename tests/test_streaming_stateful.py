@@ -162,8 +162,6 @@ def test_minhash_dedup_stream_suppresses_across_blocks(spark, tmp_path):
     dropped against the store, and a DROPPED document's signature still
     suppresses further copies of its cluster (the store keeps every seen
     doc, not just survivors)."""
-    import time as _time
-
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         minhash_dedup_stream,
     )
@@ -174,22 +172,13 @@ def test_minhash_dedup_stream_suppresses_across_blocks(spark, tmp_path):
         [(3, base + " iota")],   # near-dup of 1 -> dropped
         [(4, base + " kappa")],  # near-dup of 1 AND of dropped 3 -> dropped
     ]
-    from apache_kafka_clickhouse_demo_spark.queries import _stamp_feed_block
+    from apache_kafka_clickhouse_demo_spark.queries import _block_feed
 
-    feed = str(tmp_path / "feed")
-    tbase = _time.time()
-    stamped: set = set()
-    for i, rows in enumerate(blocks):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-        _stamp_feed_block(feed, stamped, i, tbase)
-
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    docs = spark.createDataFrame(
+        [r for rows in blocks for r in rows], "doc_id long, text string"
     )
+    blk = F.when(F.col("doc_id") <= 2, 0).when(F.col("doc_id") == 3, 1).otherwise(2)
+    src = _block_feed(spark, docs, str(tmp_path), blk, n=len(blocks))
     q = minhash_dedup_stream(
         spark,
         src,
@@ -607,8 +596,6 @@ def test_running_funnel_final_depths_match_batch(spark, sf_dir, tmp_path):
     """Streaming windowFunnel: after draining a ts-ordered feed, each key's
     LAST emitted depth equals the batch fold's level (the in-order contract
     the operator documents)."""
-    import time as _time
-
     from pyspark.sql import Window as W
 
     from apache_kafka_clickhouse_demo_spark.operators import funnel as BF
@@ -617,28 +604,17 @@ def test_running_funnel_final_depths_match_batch(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo) / 4
-    from apache_kafka_clickhouse_demo_spark.queries import _stamp_feed_block
+    from apache_kafka_clickhouse_demo_spark.queries import _block_feed
 
-    feed = str(tmp_path / "feed")
-    prev = None
-    tbase = _time.time()
-    stamped: set = set()
-    for i in range(4):  # sequential ts-ordered blocks; stamped mtime = arrival order
-        upper = lo + span * (i + 1) if i < 3 else hi
-        blk = events.filter(
-            (F.col("ts") <= F.lit(upper))
-            & (F.col("ts") > F.lit(prev) if prev is not None else F.lit(True))
-        )
-        blk.coalesce(1).write.mode("append").parquet(feed)
-        _stamp_feed_block(feed, stamped, i, tbase)
-        prev = upper
-
-    steps = lambda: [F.col("event_type") == s for s in ("view", "click", "purchase")]  # noqa: E731
-    src = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    # sequential ts-ordered blocks, delivered in arrival order
+    blk = (
+        F.when(F.col("ts") <= F.lit(lo + span * 1), 0)
+        .when(F.col("ts") <= F.lit(lo + span * 2), 1)
+        .when(F.col("ts") <= F.lit(lo + span * 3), 2)
+        .otherwise(3)
     )
+    steps = lambda: [F.col("event_type") == s for s in ("view", "click", "purchase")]  # noqa: E731
+    src = _block_feed(spark, events, str(tmp_path), blk)
     dest = str(tmp_path / "out")
     q = (
         running_funnel(src, "user_id", "ts", steps(), 21600)
@@ -2464,6 +2440,9 @@ def _planning_case(spark, tmp_path, kind):
             spark, str(tmp_path / "cms"), key_col="k", width=256, writer_id=kind
         )
         schema, rows = "k long", lambda i: [((i * 37 + j) % 500,) for j in range(200)]
+    elif kind == "dyadic":
+        w = _dcms_writer(spark, tmp_path, tag=kind, width=256)
+        schema, rows = "v long", lambda i: [((i * 37 + j) % 256,) for j in range(200)]
     else:
         w = _DomainCapStreamWriter(
             spark, str(tmp_path / "out"), str(tmp_path / "store"),
@@ -2519,29 +2498,66 @@ def test_drain_blocks_plan_without_aqe_and_leave_the_caller_session_alone(
 
 
 @pytest.mark.parametrize(
-    "kind,max_jobs", [("domain_cap", 3), ("token_cap", 3), ("count_min", 3)]
+    "kind,max_jobs", [("domain_cap", 4), ("token_cap", 4), ("count_min", 3)]
 )
 def test_steady_drain_block_spends_a_fixed_number_of_jobs(
     spark, tmp_path, kind, max_jobs
 ):
-    """A steady second block's Spark jobs, counted in the block thread's
-    job group (domain-cap's store staging runs on a side thread, outside
-    it).  With adaptive execution on, every query stage was a job of its
-    own: 8 for each of these three."""
+    """Every Spark job a steady second block starts: the jobs between two
+    marker jobs, all of them in the block thread's job group (domain-cap's
+    store staging runs on a side thread that inherits it).  With adaptive
+    execution on, every query stage was a job of its own: 8 in the block
+    thread's group for each of these three."""
     w, block = _planning_case(spark, tmp_path, kind)
     w.process(block(0), 0)
     steady = block(1)
     sc = spark.sparkContext
     group = f"steady-block-{kind}"
-    sc.setJobGroup(group, group)
+
+    def marker(name: str) -> int:
+        sc.setJobGroup(name, name)
+        sc.parallelize([0], 1).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        (job,) = sc.statusTracker().getJobIdsForGroup(name)
+        return job
+
     try:
+        before = marker(f"{group}-before")
+        sc.setJobGroup(group, group)
         w.process(steady, 1)
+        after = marker(f"{group}-after")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= max_jobs, jobs
+    every = set(range(before + 1, after))
+    assert 0 < len(every) <= max_jobs, every
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == every
+
+
+def test_steady_dyadic_block_builds_no_hash_cells(spark, tmp_path):
+    """The dyadic writer builds its (universe_bits+1)*depth hash-cell
+    array once per writer, not once per block: a steady block's py4j
+    round trips stay far below the ~5,000 (universe_bits=8, depth=3)
+    that rebuilding the array cost."""
+    import py4j.clientserver as CS
+
+    w, block = _planning_case(spark, tmp_path, "dyadic")
+    w.process(block(0), 0)
+    steady = block(1)
+    calls = [0]
+    orig = CS.ClientServerConnection.send_command
+
+    def counting(self, *a, **k):
+        calls[0] += 1
+        return orig(self, *a, **k)
+
+    CS.ClientServerConnection.send_command = counting
+    try:
+        w.process(steady, 1)
+    finally:
+        CS.ClientServerConnection.send_command = orig
+    assert 0 < calls[0] <= 1000, calls[0]
+    assert w.merged_sketch().agg(F.sum("n")).first()[0] == 400 * 3 * 9
 
 
 @pytest.mark.parametrize("kind", ["domain_cap", "count_min"])

@@ -374,7 +374,7 @@ def test_optimize_partition_by_preserves_layout_and_pruning(spark, tmp_path):
     files_before = t.data_files()
     assert len(files_before) > 4
 
-    t.optimize(spark, partition_by="shard")
+    t.optimize(spark)
     # `shard` is left out of the recorded schema: still inferred as int
     assert t.read(spark).schema == schema_before
     assert t.read(spark).schema["shard"].dataType.simpleString() == "int"
@@ -474,9 +474,9 @@ def test_read_where_matches_spark_escaped_partition_values(spark, tmp_path):
 
 
 def test_optimize_defaults_to_recorded_partition_layout(spark, tmp_path):
-    """Appends record their partition column, so an optimize() WITHOUT
-    partition_by keeps the pruned layout instead of silently flattening
-    it (which would turn every later read_where into an empty frame)."""
+    """Appends record their partition column, so optimize() keeps the
+    pruned layout instead of silently flattening it (which would turn
+    every later read_where into an empty frame)."""
     t = TransactionalTable(str(tmp_path / "t"))
     df = spark.range(100).select(
         F.col("id"), F.pmod("id", F.lit(4)).cast("int").alias("shard")
@@ -485,7 +485,7 @@ def test_optimize_defaults_to_recorded_partition_layout(spark, tmp_path):
         t.append(df.filter(F.pmod("id", F.lit(2)) == i), partition_by="shard")
     assert t.partition_column() == "shard"
 
-    t.optimize(spark)  # note: no partition_by argument
+    t.optimize(spark)  # keeps the recorded layout
     files = t.data_files()
     assert len(files) == 4 and all("shard=" in f for f in files)
     got = sorted(r["id"] for r in t.read_where(spark, "shard", [1]).collect())
