@@ -104,47 +104,54 @@ def minhash_signatures(
     row-local expression form, so the oracle is unchanged.
     """
     return _minhash_signatures(
-        docs, text_col, id_col, num_perm, shingle_n,
+        docs,
+        _minhash_cols(text_col, id_col, num_perm, shingle_n),
         lambda df: df.persist(StorageLevel.MEMORY_AND_DISK),
     )
 
 
-def _minhash_signatures(docs, text_col, id_col, num_perm, shingle_n, cache):
-    """`minhash_signatures` with its shingle frame persisted by `cache`:
-    a stream writer passes its per-batch cache scope, which releases the
-    frame when the batch ends."""
+def _minhash_cols(text_col, id_col, num_perm, shingle_n) -> tuple[list[Column], ...]:
+    """The columns `_minhash_signatures` plans with: the shingle
+    projection, the explode and hash projections, the per-permutation
+    minima and the signature projection (a stream writer builds them
+    once)."""
     toks = TX.tokens(text_col)
     sh = F.array_distinct(TX.word_shingles(toks, shingle_n))
-    # the interpreted shingle construction is the dominant row-local cost —
-    # persist so the hash branch and the join branch both read it once
-    base = cache(
-        spread_small(docs).select(F.col(id_col).alias("doc_id"), sh.alias("shingles"))
-    )
-
     # explode_OUTER: a doc whose shingle array is NULL (NULL text — short
     # docs always yield at least one shingle) must still get a signature row
     # — the oracle computes one (all permutation minima NULL).
     # h48_mod_p(NULL) = NULL, so the min() aggregates below yield exactly
     # those NULLs, and the banding step turns all-NULL band slices into ''
     # keys on both engines.
-    hashed = base.select("doc_id", F.explode_outer("shingles").alias("s")).select(
-        "doc_id", H.h48_mod_p("s").alias("h")
-    )
+    doc_id = F.col("doc_id")
     params = H.minhash_params(num_perm)
-    mins = hashed.groupBy("doc_id").agg(
-        *[
+    sig = F.array(*[F.col(f"_m{k}") for k in range(num_perm)])
+    return (
+        [F.col(id_col).alias("doc_id"), sh.alias("shingles")],
+        [doc_id, F.explode_outer("shingles").alias("s")],
+        [doc_id, H.h48_mod_p("s").alias("h")],
+        [
             F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(H.MINHASH_PRIME)).alias(f"_m{k}")
             for k, (a, b) in enumerate(params)
-        ]
+        ],
+        [doc_id, F.col("shingles"), sig.alias("sig")],
     )
-    sig = F.array(*[F.col(f"_m{k}") for k in range(num_perm)])
+
+
+def _minhash_signatures(docs, cols, cache):
+    """`minhash_signatures` over `_minhash_cols` with its shingle frame
+    persisted by `cache`: a stream writer passes its per-batch cache
+    scope, which releases the frame when the batch ends."""
+    shingled, exploded, hashed, minima, signed = cols
+    # the interpreted shingle construction is the dominant row-local cost —
+    # persist so the hash branch and the join branch both read it once
+    base = cache(spread_small(docs).select(*shingled))
+    mins = base.select(*exploded).select(*hashed).groupBy("doc_id").agg(*minima)
     # pin_wide (r9): `mins` is one row per DOCUMENT — corpus-sized — and
     # its static estimate shrinks through the aggregate; on a wide source
     # pin the doc_id shuffle join instead of risking a driver-collect
     # broadcast (the failure the 100x rehearsal caught on substring_dedup)
-    return base.join(pin_wide(mins, is_wide_source(docs)), "doc_id").select(
-        "doc_id", "shingles", sig.alias("sig")
-    )
+    return base.join(pin_wide(mins, is_wide_source(docs)), "doc_id").select(*signed)
 
 
 def band_keys_array(num_perm: int, bands: int) -> Column:

@@ -48,6 +48,11 @@ def get_spark(
         # never list files in a Spark job: the txlog already names every
         # file a read takes, and stats on local files are cheap
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
+        # no Python call-site capture per column/DataFrame call: it costs
+        # ~10 py4j round trips per `F.col` while planning.  PySpark caches
+        # the flag at its first check in a process, which comes after
+        # getOrCreate, so the builder conf is enough
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,6 +1,21 @@
 """Structured-Streaming layer: materialized-view cascade (M1-M3), the
 backfill/stream cutover pattern (M4), and watermarked/custom-state
-operators.  See streaming.pipeline and streaming.stateful."""
+operators.  See streaming.pipeline and streaming.stateful.
+
+Each exactly-once stream writer in streaming.stateful is declared once,
+as a `_DrainWriter` subclass, and has one public entry: its `stream`
+classmethod, `entry(spark, source, checkpoint=..., **options)` with the
+writer constructor's options, which starts one `availableNow` query:
+
+- near-dup dedup: `minhash_dedup_stream`, `embedding_dedup_stream`
+- URL dedup: `url_dedup_stream`
+- per-domain quota: `domain_cap_stream` (`domain_token_cap_stream` is
+  its token-budget mode)
+- sketches: `heavy_hitters_stream` (top-k), `reservoir_sample_stream`,
+  `count_min_stream`, `dyadic_cms_stream`, `uniq_stream`
+- indexes: `term_index_stream`, `ann_index_stream`, `ivfpq_index_stream`
+- packing: `pack_bins_stream`
+"""
 
 from apache_kafka_clickhouse_demo_spark.streaming.cascade import (  # noqa: F401
     CascadeStage,

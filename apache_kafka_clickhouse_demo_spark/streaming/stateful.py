@@ -160,8 +160,8 @@ class _DrainWriter:
     ("block") under the same batch id, so batch-id-keyed idempotent
     commits make the sink exactly-once.  The block lifecycle:
 
-    - **Txn ids** are `<writer_id>:<batch_id>`, and the stream entry
-      points pass the checkpoint path as `writer_id`.  It is stable
+    - **Txn ids** are `<writer_id>:<batch_id>`, and `stream` passes the
+      checkpoint path as `writer_id`.  It is stable
       across restarts of the SAME stream, so a replayed batch finds its
       own commits, and distinct for a NEW stream, whose batch ids
       restart at 0 — a bare batch id would make a new run over an
@@ -250,7 +250,18 @@ class _DrainWriter:
     loses a race (`_cas_guard`) so the batch's retry re-reads the
     winner's commit, and is re-anchored after `maintain()`, whose
     rewrite keeps the content and only moves the version.  It is served
-    only for the version it is anchored at.
+    only for the version it is anchored at, and `maintain()` trusts it
+    only when it is anchored at the store's current version: after
+    another writer's commit (a handover) it is dropped, and the newest
+    generation is read from the store.
+
+    **The entry point.**  `Writer.stream(spark, source, checkpoint=...,
+    **options)` builds a writer from the constructor's `options` and
+    starts one `availableNow` query that drains `source` through it
+    (`start`).  Each public `*_stream` name is that classmethod of its
+    writer; the writer classes themselves (or their public aliases) are
+    what tests drive with `process(block, batch_id)` and what readers
+    build over a drained store.
     """
 
     #: attributes holding the tables a batch commits to, in commit order
@@ -328,6 +339,8 @@ class _DrainWriter:
 
     def maintain(self) -> None:
         store = self._tables()[0]
+        if self._mem_version != store.version():
+            self._mirror()  # stale: another writer has committed since
         if not self._generational:
             self._compact(store)
         else:
@@ -504,11 +517,33 @@ class _DrainWriter:
             .start()
         )
 
+    @classmethod
+    def stream(cls, spark, source: DataFrame, *, checkpoint: str, **options):
+        """Drain `source` through a new writer built from the constructor's
+        `options`, keyed by `checkpoint` (the class docstring's entry
+        point); returns the started query."""
+        return cls(spark, writer_id=checkpoint, **options).start(source, checkpoint)
+
 
 class _NearDupStreamWriter(_DrainWriter):
-    """foreachBatch body shared by `minhash_dedup_stream` and
-    `embedding_dedup_stream`: continuous near-duplicate filtering of an
-    unbounded feed against an accumulating, BUCKET-PRUNED signature store.
+    """foreachBatch body shared by the MinHash and embedding near-dup
+    streams: continuous near-duplicate filtering of an unbounded feed
+    against an accumulating, BUCKET-PRUNED signature store.  A subclass
+    builds its block projection `_payload` (id, payload, bkeys
+    array<string>) and its exact `_verify` predicate once per writer.
+
+    Semantics: a document survives iff NO earlier-id document anywhere
+    in the stream is a verified near-duplicate — "earlier" is the
+    document id, so feed blocks in id order for the cross-block
+    decisions to be final (the gate fixture does; out-of-order arrival
+    would need a compaction pass over `out_dir`, the same
+    reconciliation any streaming dedup with late data needs).
+    Survivors land in the transactional table at `out_dir`: read it
+    with `TransactionalTable(out_dir).read(spark)`, never as plain
+    parquet — the directory can also hold files no commit names (an
+    orphan of a failed stage, or files `optimize()` replaced that
+    `vacuum()` has not reclaimed yet), which only the commit log
+    filters out.
 
     Store layout: ONE transactional table `store/` written through
     `sources/txlog.py`, holding both row kinds under a namespaced shard
@@ -557,7 +592,12 @@ class _NearDupStreamWriter(_DrainWriter):
     that has already ingested 100 TB pays the same per block as one that
     ingested 1 GB.  Shard counts are constructor params; production
     would size B/P in the thousands (one partition dir each ~ a few GB
-    of store), tests use small values.  Both store reads go through
+    of store), tests use small values.  `expected_corpus_rows` sizes
+    both for the corpus the stream is expected to accumulate
+    (`shards_for_store`; the band side holds `band_rows` rows per
+    document, the payload side one), overriding `band_shards` and
+    `id_shards`: pass it in production (`tools/scale_rehearsal.py`
+    drives the >= 1k-shard regime it produces).  Both store reads go through
     `_read_prior`, so a corrupt store fails the batch.
     """
 
@@ -569,26 +609,29 @@ class _NearDupStreamWriter(_DrainWriter):
         out_dir: str,
         store_dir: str,
         id_col: str,
-        prepare,
-        verify,
+        band_rows: int,
         band_shards: int = 16,
         id_shards: int = 8,
         compact_every: int | None = None,
         writer_id: str = "",
         out_files: int | None = None,
+        expected_corpus_rows: int | None = None,
     ):
         super().__init__(spark, writer_id)
+        if expected_corpus_rows is not None:
+            band_shards = shards_for_store(expected_corpus_rows * band_rows)
+            id_shards = shards_for_store(expected_corpus_rows)
         self.id_col = id_col
-        # (block, cache) -> (id, payload, bkeys array<string>); `cache`
-        # persists an intermediate for the rest of the batch
-        self.prepare = prepare
-        self.verify = verify  # (payload_col_a, payload_col_b) -> bool Column
         self.band_shards = band_shards
         self.id_shards = id_shards
         self.compact_every = compact_every
         self.out_files = out_files
         self.out = TransactionalTable(out_dir)
         self.store = TransactionalTable(os.path.join(store_dir, "store"))
+
+    def _signatures(self, block: DataFrame) -> DataFrame:
+        """The frame `_payload` projects (the block itself by default)."""
+        return block
 
     def read_store_bands(self, version: int | None = None) -> DataFrame:
         """All band rows of the store snapshot (test/inspection helper)."""
@@ -603,7 +646,7 @@ class _NearDupStreamWriter(_DrainWriter):
         ).select("id", "payload")
 
     def _process(self, block: DataFrame, batch_id: int, txn: str) -> None:
-        sigs_b = self._cache(self.prepare(block, self._cache))
+        sigs_b = self._cache(self._signatures(block).select(*self._payload))
         banded_b = sigs_b.select(
             "id", F.explode("bkeys").alias("bkey")
         ).withColumn(
@@ -675,7 +718,7 @@ class _NearDupStreamWriter(_DrainWriter):
                     sigs_b.select("id", "payload").alias("pb"),
                     cand.id_b == F.col("pb.id"),
                 )
-                .filter(self.verify("pa.payload", "pb.payload"))
+                .filter(self._verify)
                 .select(F.col("id_b").alias(self.id_col))
                 .distinct()
             )
@@ -693,126 +736,112 @@ class _NearDupStreamWriter(_DrainWriter):
         self._publish_pair(txn, store_rows, survivors)
 
 
-def minhash_stream_writer(
-    spark,
-    out_dir: str,
-    store_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 12,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    band_shards: int = 16,
-    id_shards: int = 8,
-    compact_every: int | None = None,
-    writer_id: str = "",
-    out_files: int | None = None,
-    expected_corpus_rows: int | None = None,
-) -> _NearDupStreamWriter:
-    """The MinHash-LSH near-dup stream's foreachBatch writer — exposed so
-    tests can drive `writer.process(block, batch_id)` directly (retry
-    idempotence, pruning asserts) without a streaming query around it.
+class _MinHashStreamWriter(_NearDupStreamWriter):
+    """Streaming MinHash-LSH near-duplicate dedup — the streaming twin of
+    `dedup.minhash_lsh_pairs`, and the filter a continuously-ingesting
+    training-data pipeline actually runs (batch dedup of a 100 TB corpus
+    is a rebuild; this keeps the corpus clean as it grows).  Payload =
+    the shingle set, bkey = "band:minhash-slice"; the band keys are the
+    batch `band_keys_array`, so both bucket identically."""
 
-    `expected_corpus_rows` sizes the store's shard counts for the corpus
-    the stream is expected to accumulate (`shards_for_store`; band side
-    holds `bands` rows per doc, payload side one) — overriding the
-    test-scale `band_shards`/`id_shards` defaults.  Pass it in production;
-    the r9 rehearsal drives the >= 1k-shard regime it produces.
-    """
-    if expected_corpus_rows is not None:
-        band_shards = shards_for_store(expected_corpus_rows * bands)
-        id_shards = shards_for_store(expected_corpus_rows)
-    from apache_kafka_clickhouse_demo_spark.operators.dedup import (
-        band_keys_array,
-        jaccard_of,
-        _minhash_signatures,
-    )
+    def __init__(
+        self,
+        spark,
+        out_dir: str,
+        store_dir: str,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        num_perm: int = 12,
+        bands: int = 4,
+        shingle_n: int = 3,
+        threshold: float = 0.5,
+        **store,
+    ):
+        from apache_kafka_clickhouse_demo_spark.operators.dedup import (
+            _minhash_cols,
+            band_keys_array,
+            jaccard_of,
+        )
 
-    def prepare(block: DataFrame, cache) -> DataFrame:
-        sigs = _minhash_signatures(block, text_col, id_col, num_perm, shingle_n, cache)
+        super().__init__(spark, out_dir, store_dir, id_col, bands, **store)
+        self._sig_cols = _minhash_cols(text_col, id_col, num_perm, shingle_n)
         # "band:key" strings collide iff (band, band_key) pairs collide —
         # identical bucketing to the batch band_key_rows
         bkeys = F.transform(
             band_keys_array(num_perm, bands),
             lambda k, i: F.concat(i.cast("string"), F.lit(":"), k),
         )
-        return sigs.select(
+        self._payload = [
             F.col("doc_id").alias("id"),
             F.col("shingles").alias("payload"),
             bkeys.alias("bkeys"),
+        ]
+        self._verify = jaccard_of("pa.payload", "pb.payload") >= threshold
+
+    def _signatures(self, block: DataFrame) -> DataFrame:
+        from apache_kafka_clickhouse_demo_spark.operators.dedup import (
+            _minhash_signatures,
         )
 
-    return _NearDupStreamWriter(
+        return _minhash_signatures(block, self._sig_cols, self._cache)
+
+
+class _EmbeddingStreamWriter(_NearDupStreamWriter):
+    """Streaming embedding near-dup dedup — the cosine sibling of the
+    MinHash stream: each arriving block is multi-table RP-LSH bucketed
+    against an accumulating store of normalized vectors, bucket
+    collisions are verified with the exact cosine, and a vector with any
+    verified earlier-id partner is dropped.  Same LSH tables,
+    hyperplanes, and threshold as the batch
+    `dedup.embedding_near_dup_pairs`, so the stream makes exactly the
+    batch pair-finder's decisions (payload = the normalized vector,
+    computed ONCE at arrival; bkey = "table:rp-bucket")."""
+
+    def __init__(
+        self,
         spark,
-        out_dir,
-        store_dir,
-        id_col,
-        prepare,
-        lambda a, b: jaccard_of(a, b) >= threshold,
-        band_shards=band_shards,
-        id_shards=id_shards,
-        compact_every=compact_every,
-        writer_id=writer_id,
-        out_files=out_files,
-    )
+        out_dir: str,
+        store_dir: str,
+        vec_col: str = "embedding",
+        id_col: str = "vec_id",
+        threshold: float = 0.9,
+        dim: int = 64,
+        num_tables: int = 8,
+        planes_per_table: int = 4,
+        seed: int = 101,
+        **store,
+    ):
+        from apache_kafka_clickhouse_demo_spark.functions import vectors as V
+        from apache_kafka_clickhouse_demo_spark.operators.similarity import (
+            rp_bucket,
+            rp_hyperplanes,
+        )
+
+        super().__init__(spark, out_dir, store_dir, id_col, num_tables, **store)
+        buckets = F.array(
+            *[
+                rp_bucket(F.col(vec_col), rp_hyperplanes(planes_per_table, dim, seed + t))
+                for t in range(num_tables)
+            ]
+        )
+        bkeys = F.transform(
+            buckets,
+            lambda b, t: F.concat(t.cast("string"), F.lit(":"), b.cast("string")),
+        )
+        self._payload = [
+            F.col(id_col).alias("id"),
+            V.normalize(vec_col).alias("payload"),
+            bkeys.alias("bkeys"),
+        ]
+        self._verify = V.dot("pa.payload", "pb.payload") >= threshold
 
 
-def minhash_dedup_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 12,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    band_shards: int = 16,
-    id_shards: int = 8,
-    compact_every: int | None = None,
-    out_files: int | None = None,
-    expected_corpus_rows: int | None = None,
-):
-    """Streaming NEAR-duplicate dedup: continuous MinHash-LSH filtering of
-    an unbounded document feed against an accumulating signature store —
-    the streaming twin of `dedup.minhash_lsh_pairs`, and the filter a
-    continuously-ingesting training-data pipeline actually runs (batch
-    dedup of a 100 TB corpus is a rebuild; this keeps the corpus clean as
-    it grows).  Mechanics, store layout, pruning, and exactly-once
-    guarantees: see `_NearDupStreamWriter`.
-
-    Semantics: a document survives iff NO earlier-id document anywhere in
-    the stream is a verified near-duplicate — "earlier" is the document id,
-    so feed blocks in id order for the cross-block decisions to be final
-    (the gate fixture does; out-of-order arrival would need a compaction
-    pass over `out_dir`, the same reconciliation any streaming dedup with
-    late data needs).  Survivors land in the transactional table at
-    `out_dir`: read it with `TransactionalTable(out_dir).read(spark)`,
-    never as plain parquet — the directory can also hold files no commit
-    names (an orphan of a failed stage, or files `optimize()` replaced
-    that `vacuum()` has not reclaimed yet), which only the commit log
-    filters out.
-    """
-    return minhash_stream_writer(
-        spark,
-        out_dir,
-        store_dir,
-        text_col=text_col,
-        id_col=id_col,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        threshold=threshold,
-        band_shards=band_shards,
-        id_shards=id_shards,
-        expected_corpus_rows=expected_corpus_rows,
-        compact_every=compact_every,
-        writer_id=checkpoint,
-        out_files=out_files,
-    ).start(source, checkpoint)
+#: the writers, exposed for direct `process(block, batch_id)` testing
+#: (retry idempotence, pruning asserts) without a streaming query
+minhash_stream_writer = _MinHashStreamWriter
+embedding_stream_writer = _EmbeddingStreamWriter
+minhash_dedup_stream = _MinHashStreamWriter.stream
+embedding_dedup_stream = _EmbeddingStreamWriter.stream
 
 
 def streaming_sessions(
@@ -850,121 +879,6 @@ def streaming_sessions(
             "duration_ms",
         )
     )
-
-
-def embedding_stream_writer(
-    spark,
-    out_dir: str,
-    store_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    dim: int = 64,
-    num_tables: int = 8,
-    planes_per_table: int = 4,
-    seed: int = 101,
-    band_shards: int = 16,
-    id_shards: int = 8,
-    compact_every: int | None = None,
-    writer_id: str = "",
-    out_files: int | None = None,
-    expected_corpus_rows: int | None = None,
-) -> _NearDupStreamWriter:
-    """The embedding near-dup stream's foreachBatch writer — exposed for
-    direct `writer.process(block, batch_id)` testing, like
-    `minhash_stream_writer`.  `expected_corpus_rows` sizes the shard
-    counts for the expected corpus (band side holds `num_tables` rows per
-    vector) — see `shards_for_store`."""
-    if expected_corpus_rows is not None:
-        band_shards = shards_for_store(expected_corpus_rows * num_tables)
-        id_shards = shards_for_store(expected_corpus_rows)
-    from apache_kafka_clickhouse_demo_spark.functions import vectors as V
-    from apache_kafka_clickhouse_demo_spark.operators.similarity import (
-        rp_bucket,
-        rp_hyperplanes,
-    )
-
-    buckets_expr = F.array(
-        *[
-            rp_bucket(F.col(vec_col), rp_hyperplanes(planes_per_table, dim, seed + t))
-            for t in range(num_tables)
-        ]
-    )
-
-    def prepare(block: DataFrame, cache) -> DataFrame:
-        bkeys = F.transform(
-            buckets_expr,
-            lambda b, t: F.concat(t.cast("string"), F.lit(":"), b.cast("string")),
-        )
-        return block.select(
-            F.col(id_col).alias("id"),
-            V.normalize(vec_col).alias("payload"),
-            bkeys.alias("bkeys"),
-        )
-
-    return _NearDupStreamWriter(
-        spark,
-        out_dir,
-        store_dir,
-        id_col,
-        prepare,
-        lambda a, b: V.dot(a, b) >= threshold,
-        band_shards=band_shards,
-        id_shards=id_shards,
-        compact_every=compact_every,
-        writer_id=writer_id,
-        out_files=out_files,
-    )
-
-
-def embedding_dedup_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    dim: int = 64,
-    num_tables: int = 8,
-    planes_per_table: int = 4,
-    seed: int = 101,
-    band_shards: int = 16,
-    id_shards: int = 8,
-    compact_every: int | None = None,
-    out_files: int | None = None,
-    expected_corpus_rows: int | None = None,
-):
-    """Streaming embedding near-dup dedup — the cosine sibling of
-    `minhash_dedup_stream`: each arriving block is multi-table RP-LSH
-    bucketed against an accumulating store of normalized vectors, bucket
-    collisions are verified with the exact cosine, and a vector with any
-    verified earlier-id partner is dropped.  Same LSH tables, hyperplanes,
-    and threshold as the batch `dedup.embedding_near_dup_pairs`, so the
-    stream makes exactly the batch pair-finder's decisions.  Store layout,
-    bucket pruning, and exactly-once sinks: see `_NearDupStreamWriter`
-    (payload = the normalized vector, computed ONCE at arrival; bkey =
-    "table:rp-bucket").
-    """
-    return embedding_stream_writer(
-        spark,
-        out_dir,
-        store_dir,
-        vec_col=vec_col,
-        id_col=id_col,
-        threshold=threshold,
-        dim=dim,
-        num_tables=num_tables,
-        planes_per_table=planes_per_table,
-        seed=seed,
-        band_shards=band_shards,
-        id_shards=id_shards,
-        expected_corpus_rows=expected_corpus_rows,
-        compact_every=compact_every,
-        writer_id=checkpoint,
-        out_files=out_files,
-    ).start(source, checkpoint)
 
 
 def running_funnel(
@@ -1039,8 +953,12 @@ def running_funnel(
 
 
 class _TopKStreamWriter(_DrainWriter):
-    """foreachBatch body for `heavy_hitters_stream`: maintain ONE global
-    Misra-Gries summary of an unbounded feed in a transactional store.
+    """Streaming `topK`: ONE global Misra-Gries heavy-hitters summary of
+    an unbounded feed in a transactional store — the streaming twin of
+    `operators/sketches.heavy_hitters_topk`, with the same exactness
+    contract and error bound.  Pass `weight_col` (an integer column of
+    the feed) for the topKWeighted twin.  Read the current answer any
+    time with `topk_stream_writer(...).topk(k)`.
 
     Per block:
 
@@ -1212,44 +1130,21 @@ class _TopKStreamWriter(_DrainWriter):
         return finalize_topk(self._newest("summary"), k)
 
 
-def heavy_hitters_stream(
-    spark,
-    source: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    col: str,
-    capacity: int = 1 << 14,
-    compact_every: int | None = None,
-    weight_col: str | None = None,
-):
-    """Streaming `topK`: maintain a global Misra-Gries heavy-hitters
-    summary of an unbounded feed — the streaming twin of
-    `operators/sketches.heavy_hitters_topk`, with the same exactness
-    contract and error bound.  Pass `weight_col` (an integer column of
-    the feed) for the topKWeighted twin — the fold increments by the
-    weight, everything else is shared.  Mechanics, store layout, and
-    exactly-once guarantees: see `_TopKStreamWriter`; read the current
-    answer any time with `topk_stream_writer(...).topk(k)`."""
-    return topk_stream_writer(
-        spark,
-        store_dir,
-        col,
-        capacity=capacity,
-        compact_every=compact_every,
-        writer_id=checkpoint,
-        weight_col=weight_col,
-    ).start(source, checkpoint)
-
-
 #: the stream's writer object, exposed for direct `process(block, id)`
 #: testing (retry idempotence) and for `topk(k)` reads of the store
 topk_stream_writer = _TopKStreamWriter
+heavy_hitters_stream = _TopKStreamWriter.stream
 
 
 class _ReservoirStreamWriter(_DrainWriter):
-    """foreachBatch body for `reservoir_sample_stream`: maintain a
-    fixed-size UNIFORM sample of an unbounded feed as a bottom-k-by-hash
-    sketch in a generational transactional store.
+    """Streaming uniform k-sample of an unbounded feed — the streaming
+    twin of the hash-rank batch samplers (`train_test_split.in_sample` /
+    `hash_sample`), kept continuously current as the stream grows, as a
+    bottom-k-by-hash sketch in a generational transactional store.
+    With `group_col` (+ the batch salt) this is the STRATIFIED form:
+    `sampling.stratified_sample`'s per-group quota maintained at
+    ingest, state <= groups * k rows.  Read the current sample any time
+    with `reservoir_stream_writer(...).sample()` / `.stratified()`.
 
     Why bottom-k instead of a classic Vitter reservoir: hashing every
     row's id with the shared deterministic h48 and keeping the k SMALLEST
@@ -1372,39 +1267,7 @@ class _ReservoirStreamWriter(_DrainWriter):
 #: testing and `sample()`/`stratified()` reads of the store (pass
 #: `group_col` + the batch operator's salt for the stratified form)
 reservoir_stream_writer = _ReservoirStreamWriter
-
-
-def reservoir_sample_stream(
-    spark,
-    source: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    id_col: str,
-    k: int,
-    payload_cols: list[str] | None = None,
-    compact_every: int | None = None,
-    salt: str = "sample:",
-    group_col: str | None = None,
-):
-    """Streaming uniform k-sample of an unbounded feed — the streaming
-    twin of the hash-rank batch samplers (`train_test_split.in_sample` /
-    `hash_sample`), kept continuously current as the stream grows.
-    With `group_col` (+ the batch salt) this is the STRATIFIED form:
-    `sampling.stratified_sample`'s per-group quota maintained at
-    ingest, state <= groups * k rows.  Mechanics and guarantees: see
-    `_ReservoirStreamWriter`; read the current sample any time with
-    `reservoir_stream_writer(...).sample()` / `.stratified()`."""
-    return reservoir_stream_writer(
-        spark,
-        store_dir,
-        id_col,
-        k,
-        payload_cols=payload_cols,
-        compact_every=compact_every,
-        writer_id=checkpoint,
-        salt=salt,
-        group_col=group_col,
-    ).start(source, checkpoint)
+reservoir_sample_stream = _ReservoirStreamWriter.stream
 
 
 def stream_interval_join(
@@ -1458,10 +1321,15 @@ def stream_interval_join(
 
 
 class _UrlDedupStreamWriter(_DrainWriter):
-    """foreachBatch body of `url_dedup_stream`: continuous EXACT dedup of
-    a crawl feed by canonical URL, against ONE transactional key store
+    """Streaming URL-level dedup: continuous EXACT dedup of a crawl feed
+    by canonical URL — the streaming twin of `dedup.url_dedup`, and the
+    FIRST filter a continuously-crawling training-data pipeline runs
+    (cheaper than any content dedup — a re-crawled page drops before it
+    is ever shingled) — against ONE transactional key store
     (`shard=<hash(key) % key_shards>` layout; every read is shard-pruned,
     so a block pays O(its own keys) store files however big the store).
+    `expected_corpus_rows` sizes `key_shards` for the corpus the stream
+    will accumulate (`shards_for_store`; one key row per surviving URL).
 
     Per block:
 
@@ -1499,8 +1367,11 @@ class _UrlDedupStreamWriter(_DrainWriter):
         key_shards: int = 16,
         writer_id: str = "",
         out_files: int | None = None,
+        expected_corpus_rows: int | None = None,
     ):
         super().__init__(spark, writer_id)
+        if expected_corpus_rows is not None:
+            key_shards = shards_for_store(expected_corpus_rows)
         self.url_col = url_col
         self.id_col = id_col
         self.suffixes = suffixes
@@ -1560,49 +1431,21 @@ class _UrlDedupStreamWriter(_DrainWriter):
         )
 
 
-def url_dedup_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    suffixes: tuple[str, ...] = TX_FN.PUBLIC_SUFFIXES,
-    key_shards: int = 16,
-    out_files: int | None = None,
-    expected_corpus_rows: int | None = None,
-):
-    """Streaming URL-level dedup: the streaming twin of
-    `dedup.url_dedup`, and the FIRST filter a continuously-crawling
-    training-data pipeline runs (cheaper than any content dedup — a
-    re-crawled page drops before it is ever shingled).  Mechanics,
-    exactly-once guarantees, and the first-arrival semantics: see
-    `_UrlDedupStreamWriter`.  `expected_corpus_rows` sizes the store's
-    shard count for the corpus the stream will accumulate
-    (`shards_for_store`; one key row per surviving URL)."""
-    if expected_corpus_rows is not None:
-        key_shards = shards_for_store(expected_corpus_rows)
-    return _UrlDedupStreamWriter(
-        spark,
-        out_dir,
-        store_dir,
-        url_col=url_col,
-        id_col=id_col,
-        suffixes=suffixes,
-        key_shards=key_shards,
-        writer_id=checkpoint,
-        out_files=out_files,
-    ).start(source, checkpoint)
+url_dedup_stream = _UrlDedupStreamWriter.stream
 
 
 class _TermIndexStreamWriter(_DrainWriter):
-    """foreachBatch body for `term_index_stream`: every micro-batch
-    publishes one inverted-index SEGMENT — its postings plus its own
-    meta row (`search_index._segment_frames`) — under the batch txn
+    """Continuously indexed corpus: the streaming twin of
+    `search_index.build_term_index`/`extend_term_index`.  Every
+    micro-batch of (deduped) documents publishes one atomic inverted-
+    index SEGMENT — its postings plus its own meta row
+    (`search_index._segment_frames`) — under the batch txn
     (`_DrainWriter`), so a retried batch can never double-publish its
     meta row (doubled corpus stats are exactly the corruption the
-    segment model must prevent).
+    segment model must prevent), and `bm25_lookup` answers over the
+    index at any committed version with exact corpus stats.
+    `expected_corpus_rows` sizes `n_shards` for the corpus the stream
+    will accumulate (vocabulary-side rows; `shards_for_store`).
 
     Contracts: the feed carries each doc_id ONCE across the stream's
     lifetime (run the URL / exact dedup stages upstream — a re-ingested
@@ -1622,12 +1465,15 @@ class _TermIndexStreamWriter(_DrainWriter):
         self,
         spark,
         index_dir: str,
-        n_shards: int,
-        writer_id: str,
+        n_shards: int = 16,
+        writer_id: str = "",
         text_col: str = "text",
         id_col: str = "doc_id",
+        expected_corpus_rows: int | None = None,
     ):
         super().__init__(spark, writer_id)
+        if expected_corpus_rows is not None:
+            n_shards = shards_for_store(expected_corpus_rows)
         self.table = TransactionalTable(index_dir)
         self.text_col = text_col
         self.id_col = id_col
@@ -1666,38 +1512,17 @@ class _TermIndexStreamWriter(_DrainWriter):
         )
 
 
-def term_index_stream(
-    spark,
-    source: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    n_shards: int = 16,
-    expected_corpus_rows: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Continuously indexed corpus: the streaming twin of
-    `search_index.build_term_index`/`extend_term_index` — each
-    micro-batch of (deduped) documents becomes one atomic index segment,
-    and `bm25_lookup` answers over the index at any committed version
-    with exact corpus stats.  `expected_corpus_rows` sizes the shard
-    count for the corpus the stream will accumulate (vocabulary-side
-    rows; `shards_for_store`)."""
-    if expected_corpus_rows is not None:
-        n_shards = shards_for_store(expected_corpus_rows)
-    return _TermIndexStreamWriter(
-        spark,
-        index_dir,
-        n_shards=n_shards,
-        writer_id=checkpoint,
-        text_col=text_col,
-        id_col=id_col,
-    ).start(source, checkpoint)
+term_index_stream = _TermIndexStreamWriter.stream
 
 
 class _AnnIndexStreamWriter(_DrainWriter):
-    """foreachBatch body for `ann_index_stream`: a continuously indexed
-    EMBEDDING corpus — the ANN twin of `_TermIndexStreamWriter`.
+    """A continuously indexed EMBEDDING corpus — the streaming twin of
+    `search_index.build_ann_index`/`extend_ann_index`, and the ANN twin
+    of `_TermIndexStreamWriter`; `ann_index_lookup` answers at any
+    committed version.  `expected_corpus_rows` sizes the shard modulus
+    for the corpus the stream will accumulate (`shards_for_store`);
+    `target_centroids` sizes the centroid sample taken from the
+    FOUNDING block.
 
     The first non-empty batch CREATES the index (it is the founding
     segment: the IVF centroids are hash-sampled from it by the shared
@@ -1790,39 +1615,13 @@ class _AnnIndexStreamWriter(_DrainWriter):
         )
 
 
-def ann_index_stream(
-    spark,
-    source: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    target_centroids: int | None = None,
-    expected_corpus_rows: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    salt: str = "ivf:",
-):
-    """Continuously indexed embedding corpus: the streaming twin of
-    `search_index.build_ann_index`/`extend_ann_index` — the first block
-    founds the index (fixed centroids), every later block is one atomic
-    segment, and `ann_index_lookup` answers at any committed version.
-    `expected_corpus_rows` sizes the shard modulus for the corpus the
-    stream will accumulate (`shards_for_store`); `target_centroids`
-    sizes the centroid sample taken from the FOUNDING block."""
-    return _AnnIndexStreamWriter(
-        spark,
-        index_dir,
-        writer_id=checkpoint,
-        target_centroids=target_centroids,
-        expected_corpus_rows=expected_corpus_rows,
-        vec_col=vec_col,
-        id_col=id_col,
-        salt=salt,
-    ).start(source, checkpoint)
+ann_index_stream = _AnnIndexStreamWriter.stream
 
 
 class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
-    """foreachBatch body for `ivfpq_index_stream`: the IVFPQ twin
-    of `_AnnIndexStreamWriter`.  The first non-empty batch FOUNDS the
+    """A continuously indexed IVFPQ corpus — the IVFPQ twin of
+    `_AnnIndexStreamWriter`; `ivfpq_index_lookup` answers at any
+    committed version.  The first non-empty batch FOUNDS the
     index — IVF centroids AND PQ codebooks hash-sampled from it by the
     shared builders — and every later batch is one `extend_ivfpq_index`
     segment: assigned against the fixed centroids, encoded against the
@@ -1830,7 +1629,8 @@ class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
     Exactly-once, stored-modulus, and fixed-generation contracts are
     the ANN writer's verbatim; the PQ dimension/pq_m parameters only
     seed creation — an existing index's stored meta always wins.
-    `_params` is (n_shards, pq_m, dim, k)."""
+    `_params` is (n_shards, pq_m, dim, k); `ann` takes the ANN writer's
+    other options (its `salt` is `ivf_salt` here)."""
 
     def __init__(
         self,
@@ -1840,25 +1640,11 @@ class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
         dim: int,
         m: int = 8,
         target_codes: int = 64,
-        target_centroids: int | None = None,
-        n_shards: int | None = None,
-        expected_corpus_rows: int | None = None,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
         ivf_salt: str = "ivf:",
         pq_salt: str = "pq:",
+        **ann,
     ):
-        super().__init__(
-            spark,
-            index_dir,
-            writer_id,
-            target_centroids=target_centroids,
-            n_shards=n_shards,
-            expected_corpus_rows=expected_corpus_rows,
-            vec_col=vec_col,
-            id_col=id_col,
-            salt=ivf_salt,
-        )
+        super().__init__(spark, index_dir, writer_id, salt=ivf_salt, **ann)
         self.dim = dim
         self.m = m
         self.target_codes = target_codes
@@ -1890,48 +1676,20 @@ class _IvfPqIndexStreamWriter(_AnnIndexStreamWriter):
         )
 
 
-def ivfpq_index_stream(
-    spark,
-    source: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    dim: int,
-    m: int = 8,
-    target_codes: int = 64,
-    target_centroids: int | None = None,
-    expected_corpus_rows: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    ivf_salt: str = "ivf:",
-    pq_salt: str = "pq:",
-):
-    """Continuously indexed IVFPQ corpus: the first block founds
-    centroids + codebooks, every later block is one atomic encoded
-    segment, and `ivfpq_index_lookup` answers at any committed
-    version."""
-    return _IvfPqIndexStreamWriter(
-        spark,
-        index_dir,
-        writer_id=checkpoint,
-        dim=dim,
-        m=m,
-        target_codes=target_codes,
-        target_centroids=target_centroids,
-        expected_corpus_rows=expected_corpus_rows,
-        vec_col=vec_col,
-        id_col=id_col,
-        ivf_salt=ivf_salt,
-        pq_salt=pq_salt,
-    ).start(source, checkpoint)
+ivfpq_index_stream = _IvfPqIndexStreamWriter.stream
 
 
 class _DomainCapStreamWriter(_DrainWriter):
-    """foreachBatch body of `domain_cap_stream`: a continuous per-domain
-    QUOTA over a crawl feed — keep each registered domain's first `cap`
-    arrivals, drop everything after (the streaming twin of
-    `dedup.domain_cap`; CCNet-style host capping applied AT INGEST, so an
-    over-crawled domain stops costing downstream stages the moment its
-    quota fills).
+    """A continuous per-domain QUOTA over a crawl feed — keep each
+    registered domain's first `cap` arrivals, drop everything after (the
+    streaming twin of `dedup.domain_cap`; CCNet-style host capping
+    applied AT INGEST, so an over-crawled domain stops costing
+    downstream stages the moment its quota fills).  It is the stage a
+    continuously-crawling pipeline runs right after `url_dedup_stream`.
+    `expected_domain_rows` sizes `domain_shards` for the number of
+    DISTINCT domains the stream will accumulate (`shards_for_store`; one
+    increment row per (block, domain) between maintenances, one file per
+    touched shard per block).
 
     State is a COUNTER store, not a key store: one transactional table of
     (reg_domain, n) increment rows under `shard=d<hash(domain) %
@@ -1965,8 +1723,10 @@ class _DomainCapStreamWriter(_DrainWriter):
     under a sentinel for shard routing only; output keeps reg_domain
     NULL.
 
-    ``token_mode=True`` turns the quota into a TOKEN budget — the
-    streaming twin of `dedup.domain_token_cap`: each row charges
+    ``token_mode=True`` (`domain_token_cap_stream`, whose `budget` is
+    `cap`) turns the quota into a TOKEN budget — the streaming twin of
+    `dedup.domain_token_cap`, i.e. token-level mixture enforcement AT
+    INGEST: each row charges
     greatest(ws_tokens, 1) of `text_col`, the block-local window becomes
     a running charge SUM instead of a row_number, and admission is
     `prior_charge + running_charge <= cap`.  One accounting difference
@@ -2005,10 +1765,13 @@ class _DomainCapStreamWriter(_DrainWriter):
         out_files: int | None = None,
         token_mode: bool = False,
         text_col: str = "text",
+        expected_domain_rows: int | None = None,
     ):
         super().__init__(spark, writer_id)
         if cap < 1:
             raise ValueError("cap must be >= 1")
+        if expected_domain_rows is not None:
+            domain_shards = shards_for_store(expected_domain_rows)
         self.cap = cap
         self.url_col = url_col
         self.id_col = id_col
@@ -2159,94 +1922,23 @@ class _DomainCapStreamWriter(_DrainWriter):
         )
 
 
-def domain_cap_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    cap: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    suffixes: tuple[str, ...] = TX_FN.PUBLIC_SUFFIXES,
-    domain_shards: int = 16,
-    out_files: int | None = None,
-    expected_domain_rows: int | None = None,
-):
-    """Streaming per-domain quota: keep each registered domain's first
-    `cap` arrivals from an unbounded crawl feed — the streaming twin of
-    `dedup.domain_cap` and the stage a continuously-crawling pipeline
-    runs right after `url_dedup_stream`.  Mechanics, exactly-once
-    guarantees, and the retry-pin protocol: see `_DomainCapStreamWriter`.
-    `expected_domain_rows` sizes the counter store's shard count for the
-    number of DISTINCT domains the stream will accumulate
-    (`shards_for_store`; one increment row per (block, domain) between
-    maintenances, one file per touched shard per block)."""
-    if expected_domain_rows is not None:
-        domain_shards = shards_for_store(expected_domain_rows)
-    return _DomainCapStreamWriter(
-        spark,
-        out_dir,
-        store_dir,
-        cap=cap,
-        url_col=url_col,
-        id_col=id_col,
-        suffixes=suffixes,
-        domain_shards=domain_shards,
-        writer_id=checkpoint,
-        out_files=out_files,
-    ).start(source, checkpoint)
+domain_cap_stream = _DomainCapStreamWriter.stream
 
 
-def domain_token_cap_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    budget: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    suffixes: tuple[str, ...] = TX_FN.PUBLIC_SUFFIXES,
-    domain_shards: int = 16,
-    out_files: int | None = None,
-    expected_domain_rows: int | None = None,
-):
-    """Streaming per-domain TOKEN budget: admit each registered
-    domain's arrivals while the accumulated greatest(ws_tokens, 1)
-    charge stays within `budget` — the streaming twin of
-    `dedup.domain_token_cap`, i.e. token-level mixture enforcement AT
-    INGEST (an over-crawled domain stops costing downstream stages the
-    moment its token budget fills).  Mechanics, the exactly-once retry
-    pin, and the all-rows charge accounting that makes an id-ordered
-    feed equal the batch operator verbatim: `_DomainCapStreamWriter`
-    (token_mode=True)."""
-    if expected_domain_rows is not None:
-        domain_shards = shards_for_store(expected_domain_rows)
-    return _DomainCapStreamWriter(
-        spark,
-        out_dir,
-        store_dir,
-        cap=budget,
-        url_col=url_col,
-        id_col=id_col,
-        suffixes=suffixes,
-        domain_shards=domain_shards,
-        writer_id=checkpoint,
-        out_files=out_files,
-        token_mode=True,
-        text_col=text_col,
-    ).start(source, checkpoint)
+def domain_token_cap_stream(spark, source: DataFrame, *, budget: int, **options):
+    """`domain_cap_stream` in token mode: `budget` is the per-domain
+    token cap (`_DomainCapStreamWriter`)."""
+    return domain_cap_stream(spark, source, cap=budget, token_mode=True, **options)
 
 
 class _CountMinStreamWriter(_DrainWriter):
-    """foreachBatch body of `count_min_stream`: a continuously-maintained
-    count-min sketch over an unbounded feed — the streaming twin of
-    `sketches.count_min_build`.  CMS counters are
-    LINEAR and merge by per-cell sum, which is exactly the shape of the
-    `domain_cap_stream` counter store, so the same architecture carries
-    over verbatim:
+    """A continuously-maintained count-min sketch over an unbounded feed
+    — the streaming twin of `sketches.count_min_build`: per-block
+    increments and the running point estimates publish in ONE atomic
+    commit per block (estimates read back via `out_rows()`).  CMS
+    counters are LINEAR and merge by per-cell sum, which is exactly the
+    shape of the `domain_cap_stream` counter store, so the same
+    architecture carries over verbatim:
 
     State is a COUNTER store: one transactional table of (d, bucket, n)
     increment rows under `shard=c<(d*width + bucket) % cms_shards>`,
@@ -2374,41 +2066,18 @@ class _CountMinStreamWriter(_DrainWriter):
         self._publish_group(txn, inc.select(*e.inc), est, cas_version=pin)
 
 
-def count_min_stream(
-    spark,
-    source: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    key_col: str,
-    width: int = 1024,
-    depth: int = 4,
-    salt: str = "cms:",
-    cms_shards: int = 8,
-):
-    """Continuously-maintained count-min sketch: per-block increments
-    and the running point estimates published in ONE atomic commit per
-    block to a cell-sharded counter store (estimates under the
-    namespaced `o` shard; read back via the writer's `out_rows()`).
-    Mechanics, single-commit replay rule, and the drained-store ==
-    batch sketch equality: see `_CountMinStreamWriter`."""
-    return _CountMinStreamWriter(
-        spark,
-        store_dir,
-        key_col=key_col,
-        width=width,
-        depth=depth,
-        salt=salt,
-        cms_shards=cms_shards,
-        writer_id=checkpoint,
-    ).start(source, checkpoint)
+count_min_stream = _CountMinStreamWriter.stream
 
 
 class _DyadicCmsStreamWriter(_DrainWriter):
-    """foreachBatch body of `dyadic_cms_stream`: a continuously-
-    maintained dyadic count-min structure over an unbounded feed — the
-    streaming twin of `sketches.dyadic_cms_build`, emitting a LIVE
-    value-band histogram at ingest (per-block running range counts for
-    a fixed band list).  Dyadic CMS counters are linear and merge by
+    """A continuously-maintained dyadic count-min structure over an
+    unbounded feed — the streaming twin of `sketches.dyadic_cms_build`,
+    emitting a LIVE value-band histogram at ingest (per-block running
+    range counts for the fixed `ranges`, read back via `out_rows()`).
+    Pass `ps` (permille fractions) to ALSO publish running quantiles
+    per block — the dyadic descent over the same pre-append snapshot +
+    block cells, in the same single commit (shard `q`, read back via
+    `quantile_rows()`).  Dyadic CMS counters are linear and merge by
     per-cell sum — `_CountMinStreamWriter`'s counter-store architecture
     carries over verbatim with (level, d, bucket) cells:
 
@@ -2651,49 +2320,12 @@ class _DyadicCmsStreamWriter(_DrainWriter):
         self._mirror(pin + 1, content=merged)
 
 
-def dyadic_cms_stream(
-    spark,
-    source: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    value_col: str,
-    ranges: list[tuple[int, int, int]],
-    universe_bits: int = 16,
-    width: int = 2048,
-    depth: int = 3,
-    salt: str = "dcms:",
-    cms_shards: int = 8,
-    ps: list[int] | None = None,
-):
-    """Continuously-maintained dyadic count-min structure: per-block
-    increments and the live value-band histogram (running range counts
-    for the fixed `ranges`) published in ONE atomic commit per block to
-    a cell-sharded counter store (estimates under the namespaced `o`
-    shard; read them back via the writer's `out_rows()`).  Pass `ps`
-    (permille fractions) to ALSO publish running quantiles per block —
-    the dyadic descent over the same pre-append snapshot + block
-    cells, in the same single commit (namespaced shard `q`, read back
-    via `quantile_rows()`).  Mechanics,
-    single-commit replay rule, and the drained-store == batch-structure
-    equality: see `_DyadicCmsStreamWriter`."""
-    return _DyadicCmsStreamWriter(
-        spark,
-        store_dir,
-        value_col=value_col,
-        ranges=ranges,
-        universe_bits=universe_bits,
-        width=width,
-        depth=depth,
-        salt=salt,
-        cms_shards=cms_shards,
-        writer_id=checkpoint,
-        ps=ps,
-    ).start(source, checkpoint)
+dyadic_cms_stream = _DyadicCmsStreamWriter.stream
 
 
 class _UniqStreamWriter(_DrainWriter):
-    """foreachBatch body of `uniq_stream`: continuously-maintained
-    per-group approximate count-distinct — the streaming twin of the
+    """Continuously-maintained per-group approximate count-distinct
+    (estimates read back via `out_rows()`) — the streaming twin of the
     `uniqState`/`uniqMerge` pipeline, completing the sketch
     family's streaming trio (Misra-Gries `heavy_hitters_stream`,
     count-min `count_min_stream`, HLL here).  HLL sketch UNION is the
@@ -2812,39 +2444,14 @@ class _UniqStreamWriter(_DrainWriter):
         self._publish_group(txn, inc.select("shard", gc, "state"), est)
 
 
-def uniq_stream(
-    spark,
-    source: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    group_col: str,
-    key_col: str,
-    lg_k: int = 12,
-    uniq_shards: int = 8,
-):
-    """Continuously-maintained per-group HLL count-distinct: per-block
-    `uniqState` rows and the running estimates published in ONE atomic
-    commit per block to a group-sharded state store (estimates under
-    the namespaced `o` shard; read back via the writer's `out_rows()`).
-    Mechanics, single-commit replay rule, and the drained-store ==
-    batch sketch register-identity: see `_UniqStreamWriter`."""
-    return _UniqStreamWriter(
-        spark,
-        store_dir,
-        group_col=group_col,
-        key_col=key_col,
-        lg_k=lg_k,
-        uniq_shards=uniq_shards,
-        writer_id=checkpoint,
-    ).start(source, checkpoint)
+uniq_stream = _UniqStreamWriter.stream
 
 
 class _PackBinsStreamWriter(_DrainWriter):
-    """foreachBatch body of `pack_bins_stream`: streaming first-fit bin
-    packing at INGEST — the packing family's streaming twin.
-    Training-data pipelines pack while they ingest, not only
-    in batch: each arriving block's documents pack into their buckets'
-    OPEN bins the moment they land, so a downstream dataloader can
+    """Streaming first-fit bin packing at INGEST — the packing family's
+    streaming twin.  Training-data pipelines pack while they ingest,
+    not only in batch: each arriving block's documents pack into their
+    buckets' OPEN bins the moment they land, so a downstream dataloader can
     start reading full bins without waiting for the corpus to close.
 
     State is a GENERATIONAL open-bin snapshot (`_DrainWriter`'s
@@ -3130,36 +2737,4 @@ class _PackBinsStreamWriter(_DrainWriter):
         self._mirror(_v + 1, prev_gen + 1)
 
 
-def pack_bins_stream(
-    spark,
-    source: DataFrame,
-    out_dir: str,
-    store_dir: str,
-    checkpoint: str,
-    capacity: int,
-    buckets: int = 64,
-    salt: str = "ffd:",
-    id_col: str = "doc_id",
-    n_col: str = "n_tokens",
-    close_below: int | None = None,
-    max_open: int = 64,
-):
-    """Streaming first-fit bin packing: each block's documents pack
-    into their buckets' open bins at ingest; the bounded open-bin
-    snapshot commits as a new generation and the assignment rows go to
-    out exactly-once.  Mechanics, state bounds, the retry-pin
-    protocol, and the bucket-aligned batch-equality pin: see
-    `_PackBinsStreamWriter`."""
-    return _PackBinsStreamWriter(
-        spark,
-        out_dir,
-        store_dir,
-        capacity=capacity,
-        buckets=buckets,
-        salt=salt,
-        id_col=id_col,
-        n_col=n_col,
-        close_below=close_below,
-        max_open=max_open,
-        writer_id=checkpoint,
-    ).start(source, checkpoint)
+pack_bins_stream = _PackBinsStreamWriter.stream

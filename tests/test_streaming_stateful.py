@@ -663,7 +663,8 @@ def test_heavy_hitters_stream_matches_batch_and_replays_idempotently(
     store = str(tmp_path / "hh_store")
     ck = str(tmp_path / "hh_ck")
     q = heavy_hitters_stream(
-        spark, src, store, ck, "user_id", capacity=1 << 12, compact_every=2
+        spark, src, store_dir=store, checkpoint=ck, col="user_id",
+        capacity=1 << 12, compact_every=2,
     )
     q.processAllAvailable()
     q.stop()
@@ -724,8 +725,8 @@ def test_weighted_topk_stream_matches_batch_and_replays_idempotently(
     store = str(tmp_path / "hhw_store")
     ck = str(tmp_path / "hhw_ck")
     q = heavy_hitters_stream(
-        spark, src, store, ck, "user_id", capacity=1 << 12, compact_every=2,
-        weight_col="w",
+        spark, src, store_dir=store, checkpoint=ck, col="user_id",
+        capacity=1 << 12, compact_every=2, weight_col="w",
     )
     q.processAllAvailable()
     q.stop()
@@ -854,6 +855,27 @@ def test_generational_writer_race_rejected_not_double_counted(
     w2.process(block([6, 7, 8, 9]), 0)
     assert gens() == [0, 1, 2]
     assert _race_state(spark, kind, w2) == {i: 1 for i in range(1, 10)}
+
+
+@pytest.mark.parametrize("kind", ["topk", "reservoir"])
+def test_maintain_after_handover_keeps_the_newest_generation(
+    spark, tmp_path, kind
+):
+    """maintain() on a writer whose store another writer has advanced
+    since (the sequential handover the generational stores support) must
+    keep the store's newest generation, not the one its own stale mirror
+    names, and must not keep serving that mirror afterwards."""
+    a, block = _race_writer(spark, tmp_path, kind, "a")
+    a.process(block([1, 2, 3]), 0)
+    b, _ = _race_writer(spark, tmp_path, kind, "b")
+    b.process(block([4, 5]), 0)
+
+    a.maintain()
+    gens = {r["gen"] for r in a.store.read(spark).select("gen").collect()}
+    assert gens == {1}
+    want = {i: 1 for i in range(1, 6)}
+    assert _race_state(spark, kind, b) == want
+    assert _race_state(spark, kind, a) == want
 
 
 def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
@@ -2484,7 +2506,8 @@ def test_drain_blocks_plan_without_aqe_and_leave_the_caller_session_alone(
     spark.createDataFrame(_crawl(0, 100), _CRAWL_SCHEMA).write.parquet(feed)
     q = domain_cap_stream(
         spark, spark.readStream.schema(_CRAWL_SCHEMA).parquet(feed),
-        str(tmp_path / "out"), str(tmp_path / "store"), str(tmp_path / "ck"), cap=2,
+        out_dir=str(tmp_path / "out"), store_dir=str(tmp_path / "store"),
+        checkpoint=str(tmp_path / "ck"), cap=2,
     )
     q.awaitTermination()
     assert q.exception() is None

@@ -358,7 +358,9 @@ def test_optimize_retries_after_losing_commit_race(spark, tmp_path):
 def test_optimize_partition_by_preserves_layout_and_pruning(spark, tmp_path):
     """OPTIMIZE of a read_where-pruned (partition_by) table must keep the
     <col>=<value>/ layout — one file per value — so driver-side pruning
-    survives compaction instead of silently degrading to full scans."""
+    survives compaction instead of silently degrading to full scans.
+    Appends record their partition column, and optimize() rewrites to
+    that recorded layout."""
     t = TransactionalTable(str(tmp_path / "t"))
     df = spark.range(200).select(
         F.col("id"), F.pmod("id", F.lit(4)).cast("int").alias("shard")
@@ -369,6 +371,7 @@ def test_optimize_partition_by_preserves_layout_and_pruning(spark, tmp_path):
             df.filter(F.pmod("id", F.lit(3)) == i).repartition(4),
             partition_by="shard",
         )
+    assert t.partition_column() == "shard"
     before = sorted(r["id"] for r in t.read(spark).collect())
     schema_before = t.read(spark).schema
     files_before = t.data_files()
@@ -471,25 +474,6 @@ def test_read_where_matches_spark_escaped_partition_values(spark, tmp_path):
     assert got == {2, 3}
     got = {r["id"] for r in t.read_where(spark, "lang", [None]).collect()}
     assert got == {4}
-
-
-def test_optimize_defaults_to_recorded_partition_layout(spark, tmp_path):
-    """Appends record their partition column, so optimize() keeps the
-    pruned layout instead of silently flattening it (which would turn
-    every later read_where into an empty frame)."""
-    t = TransactionalTable(str(tmp_path / "t"))
-    df = spark.range(100).select(
-        F.col("id"), F.pmod("id", F.lit(4)).cast("int").alias("shard")
-    )
-    for i in range(2):
-        t.append(df.filter(F.pmod("id", F.lit(2)) == i), partition_by="shard")
-    assert t.partition_column() == "shard"
-
-    t.optimize(spark)  # keeps the recorded layout
-    files = t.data_files()
-    assert len(files) == 4 and all("shard=" in f for f in files)
-    got = sorted(r["id"] for r in t.read_where(spark, "shard", [1]).collect())
-    assert got == [i for i in range(100) if i % 4 == 1]
 
 
 def test_txn_watermark_compaction_bounds_ledger(spark, tmp_path):
