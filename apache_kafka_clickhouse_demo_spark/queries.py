@@ -2212,7 +2212,7 @@ def q_stream_strat_sample(spark, sf_dir):
     """Streaming stratified quota sample (r13,
     stateful.reservoir_sample_stream with group_col — the per-group
     generalization of the r7 uniform reservoir): the documents feed
-    drains as four blocks into the generational bottom-k-PER-GROUP
+    drains as four blocks into the one-state bottom-k-PER-GROUP
     store (state <= groups * N rows); per-group bottom-k is mergeable
     exactly like the uniform sketch, so the drained sample equals the
     batch `stratified_sample` statement over the whole feed VERBATIM —
@@ -3381,7 +3381,7 @@ def q_stream_funnel(spark, sf_dir):
 
 def q_stream_sample(spark, sf_dir):
     """Streaming uniform k-sample (stateful.reservoir_sample_stream): the
-    events feed folds block by block into a bottom-k-by-hash generational
+    events feed folds block by block into a bottom-k-by-hash one-state
     store; the drained sample must equal the batch statement of the same
     sketch — the k smallest h48('sample:' || event_id) ranks over the
     WHOLE feed (a fixed hash order is a uniform random order, so this IS
@@ -3447,7 +3447,7 @@ def _topk_drain(spark, ev: DataFrame, prefix: str, **params) -> DataFrame:
 
 def q_stream_topk(spark, sf_dir):
     """Streaming topK drain (streaming/stateful.heavy_hitters_stream): the
-    events feed folds into the generational Misra-Gries store block by
+    events feed folds into the one-state Misra-Gries store block by
     block; the stored summary's top-10 must equal the exact count top-10
     (capacity >> distinct users: the sketch's exact regime)."""
     ev = _t(spark, sf_dir, "events").select("user_id")
@@ -3457,7 +3457,7 @@ def q_stream_topk(spark, sf_dir):
 def q_stream_top_spenders(spark, sf_dir):
     """Streaming topKWeighted drain (heavy_hitters_stream with
     weight_col): the events feed — with exact value_cents weights
-    precomputed — folds into the SAME generational Misra-Gries store
+    precomputed — folds into the SAME one-state Misra-Gries store
     block by block; capacity >> distinct users, so the drained summary's
     top-10 must equal the exact weighted top-10 (oracle =
     top_users_weighted's SQL verbatim — weighted summaries merge by the
@@ -4889,7 +4889,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #    variant), ann_ivfpq_topk both PQ stages + the IVF composition
     #    (ann_pq_topk stays an extra — ADC is load-bearing inside the
     #    gated composition), stream_strat_sample the per-group bottom-k
-    #    generational store, media_phash_clusters the CC/representative
+    #    one-state store, media_phash_clusters the CC/representative
     #    composition, sequence_match_time the gap-constrained fold,
     #    stream_cms_counts / stream_uniq_users / stream_top_spenders
     #    the three remaining counter-store streaming twins, hybrid_rrf

@@ -58,6 +58,13 @@ exactly Delta's log-checkpoint mechanism.
   instead of appending duplicates (the Delta `txn`/`idempotent writes`
   mechanism reduced to its core).  Assumes retries of one txn are
   sequential (Spark never runs the same micro-batch concurrently).
+- **Replace commits** (`"replaces": v`): the commit's files are the whole
+  snapshot, and it is published at exactly v + 1, so it can never
+  swallow a concurrent append.  `optimize()` writes them to compact; a
+  writer that keeps one current state (`append(..., replaces=v)`) writes
+  one per block, and its commit carries the block's `txn` like any
+  append.  Older versions stay readable (`read(version=v)`) until
+  `prune_log`/`vacuum` reclaim them, so the log is the state's history.
 """
 
 from __future__ import annotations
@@ -258,9 +265,8 @@ class TransactionalTable:
         committed partitioned data recover WHICH partition dirs it touched
         without running a Spark job over the data (streaming/stateful.py
         derives a block's band shards this way)."""
-        path = os.path.join(self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json")
         try:
-            with open(path) as fh:
+            with open(self._commit_path(version)) as fh:
                 return list(json.load(fh)["files"])
         except (FileNotFoundError, KeyError):
             return None
@@ -468,6 +474,7 @@ class TransactionalTable:
         partition_by: str | None = None,
         txn: str | None = None,
         cas_version: int | None = None,
+        replaces: int | None = None,
     ) -> int:
         """Atomically append `df`; returns the committed version.
 
@@ -482,15 +489,18 @@ class TransactionalTable:
         the table version: the commit is attempted at EXACTLY
         cas_version + 1 and `ConcurrentWriteError` raised if that version
         is already taken — i.e. someone else committed after the caller's
-        read.  This is how a read-modify-write writer (the topK summary's
-        generation chain) rejects a concurrent sibling instead of both
-        publishing the same generation and double-counting on merge.
+        read.  This is how a read-modify-write writer (a count-min
+        block's increments) rejects a concurrent sibling instead of both
+        publishing against the same snapshot and double-counting.
+        `replaces=v` makes the commit a replace of snapshot v, with the
+        same CAS (see `commit_staged`).
         """
         return self.commit_staged(
             self.stage_for_append(df, partition_by),
             partition_by=partition_by,
             txn=txn,
             cas_version=cas_version,
+            replaces=replaces,
         )
 
     def stage_for_append(
@@ -525,54 +535,75 @@ class TransactionalTable:
         partition_by: str | None = None,
         txn: str | None = None,
         cas_version: int | None = None,
+        replaces: int | None = None,
     ) -> int:
         """Phase 2 of a two-phase append: publish a commit naming the
         files `stage_for_append` returned, and their schema.  Pure
         filesystem work — no Spark job.  Identical publish/CAS semantics
-        to `append` (which is stage + this)."""
-        moved = staged
-        commit: dict = {"files": sorted(moved), "schema": staged.schema}
+        to `append` (which is stage + this).
+
+        `replaces=v` publishes a REPLACE commit instead: the staged files
+        become the whole snapshot (the commit `optimize` writes), at
+        exactly v + 1 — the CAS of `cas_version=v`.  This is how a
+        one-state writer (top-k, reservoir, pack-bins) publishes the
+        current state it derived from snapshot v.  A rejected commit
+        (either form) removes the staged files before it raises: they are
+        known by name and referenced by no commit, so a writer losing
+        repeated races does not leave a block of orphans per attempt for
+        `vacuum()`'s grace window (a crash between the move and this
+        cleanup still does — vacuum remains the backstop)."""
+        try:
+            return self._commit(
+                staged, staged.schema, partition_by, txn, replaces, cas_version
+            )
+        except ConcurrentWriteError:
+            self.discard_staged(staged)
+            raise
+
+    def _commit(
+        self,
+        files: list[str],
+        schema: dict,
+        partition_by: str | None,
+        txn: str | None = None,
+        replaces: int | None = None,
+        cas_version: int | None = None,
+    ) -> int:
+        """Build and publish a commit (appends and replaces alike)
+        naming the table-relative `files` and their `schema`; returns its
+        version.  The partition column is recorded
+        so `optimize()` keeps the layout once older commits are pruned.
+        A replace (`replaces=v`, the files are the whole snapshot) or a
+        `cas_version=v` commit goes at exactly v + 1 and raises
+        `ConcurrentWriteError` when that version is taken — a replace at
+        any other version would swallow the commits after v.  Otherwise
+        the commit goes at the next free version."""
+        commit: dict = {"files": sorted(files), "schema": schema}
         if partition_by:
-            # recorded so optimize() can default to the table's layout
-            # instead of relying on the caller remembering it
             commit["partition_by"] = partition_by
         if txn is not None:
             commit["txn"] = txn
+        if replaces is not None:
+            commit["replaces"] = replaces
         payload = json.dumps(commit).encode()
-        if cas_version is not None:
-            version = cas_version + 1
-            commit_path = os.path.join(
-                self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json"
-            )
-            if self._publish(payload, commit_path):
-                return version
-            # Best-effort delete of the just-moved files: they
-            # are known by name and referenced by NO commit, so removing
-            # them reclaims disk immediately instead of leaving a full
-            # block of orphaned parquet per rejected batch for vacuum()'s
-            # grace window (a topK/reservoir stream losing repeated CAS
-            # races would otherwise accumulate them).  Crash-between-
-            # move-and-delete still leaves orphans — vacuum remains the
-            # backstop for those.
-            for rel in moved:
-                try:
-                    os.remove(os.path.join(self.path, rel))
-                except OSError:
-                    pass
+        at = cas_version if replaces is None else replaces
+        if at is not None:
+            if self._publish(payload, self._commit_path(at + 1)):
+                return at + 1
             raise ConcurrentWriteError(
-                f"{self.path}: version {version} already committed — "
-                f"table advanced past the caller's read at {cas_version}"
+                f"{self.path}: version {at + 1} already committed — "
+                f"table advanced past the caller's read at {at}"
             )
         version = self.version() + 1
         for _ in range(_COMMIT_RETRIES):
-            commit_path = os.path.join(
-                self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json"
-            )
-            if self._publish(payload, commit_path):
+            if self._publish(payload, self._commit_path(version)):
                 return version
             version += 1  # lost the race for this version number
         # data files remain unpublished (invisible to readers) on failure
         raise RuntimeError(f"could not commit after {_COMMIT_RETRIES} attempts")
+
+    def _commit_path(self, version: int) -> str:
+        return os.path.join(self.log_dir, f"{version:0{_VERSION_DIGITS}d}.json")
 
     def append_once(
         self,
@@ -671,10 +702,10 @@ class TransactionalTable:
                 df = self.read_where(spark, partition_by, partitions, snapshot)
             if keep_where is not None:
                 # retention rewrite (REPLACE WHERE): the compacted snapshot
-                # keeps only matching rows — how a generational store folds
-                # superseded generations away.  Applied inside the OCC loop,
-                # so rows from a concurrent append that wins the race are
-                # re-read and filtered on the retry like everything else.
+                # keeps only matching rows — how TTL drops expired rows.
+                # Applied inside the OCC loop, so rows from a concurrent
+                # append that wins the race are re-read and filtered on
+                # the retry like everything else.
                 df = df.filter(keep_where)
             if transform is not None:
                 # snapshot-to-snapshot rewrite hook: the staged
@@ -709,22 +740,15 @@ class TransactionalTable:
             else:
                 df = df.coalesce(max(1, target_files))
             moved = self._stage(df, partition_by)
-            replace: dict = {
-                "files": sorted(carried + moved),
-                "schema": moved.schema,
-                "replaces": snapshot,
-            }
-            if partition_by:
-                replace["partition_by"] = partition_by  # layout survives prune_log
-            payload = json.dumps(replace).encode()
-            commit_path = os.path.join(
-                self.log_dir, f"{snapshot + 1:0{_VERSION_DIGITS}d}.json"
-            )
-            if self._publish(payload, commit_path):
-                return snapshot + 1
-            # lost the OCC race: a concurrent append advanced the table.
-            # The staged files are unreferenced (vacuum reclaims them);
-            # recompact from the new snapshot.
+            try:
+                return self._commit(
+                    carried + moved, moved.schema, partition_by, replaces=snapshot
+                )
+            except ConcurrentWriteError:
+                # lost the OCC race: a concurrent append advanced the
+                # table.  Reclaim the staged files (never the carried
+                # ones) and recompact from the new snapshot.
+                self.discard_staged(moved)
         raise RuntimeError(f"optimize lost the commit race {_OPTIMIZE_RETRIES} times")
 
     def vacuum(self, grace_seconds: float = 3600.0) -> list[str]:

@@ -233,27 +233,29 @@ class _DrainWriter:
     - **Shard-pruned stores** (near-dup, url-dedup, domain-cap, count-min,
       uniq): rows under a namespaced `shard` partition (`_shard_col`); a
       block reads only its touched shards at its pin (`_read_prior`).
-    - **Generational snapshots** (top-k, reservoir, pack-bins): each block
-      publishes generation g+1 of a bounded summary under a version-CAS,
-      readers take only the newest generation (`_latest`), and
-      `maintain()` keeps only that generation.
+    - **One-state stores** (top-k, reservoir, pack-bins): the snapshot
+      IS the bounded current state.  A block derives the next state from
+      the one it read at version v and publishes it as ONE replace
+      commit at exactly v + 1 (`append(..., replaces=v)`) carrying the
+      block's txn, so a concurrent writer that committed after the read
+      is rejected, never merged.  The log is the generation chain:
+      `_latest(version)` is the store read at that version, older states
+      stay readable until `maintain()` folds the log, and `maintain()`
+      only compacts the one state's files like any other store.
     - **Group-commit stores** (count-min, dyadic, uniq): a block's state
       rows and its out rows (shard `OUT_SHARD`, read back by
       `out_rows()`) publish in ONE commit (`_publish_group`), so there is
       no half-committed retry.
 
-    **The driver mirror.**  Writers that keep the committed state on the
-    driver (the generational family, the dyadic cell grid) anchor it at
-    the table version it equals (`_mem_version`; `_mem_gen` is the newest
-    generation there, `_mem` any writer-specific content).  It advances
+    **The driver mirror.**  Writers that keep committed content on the
+    driver (top-k's counts, the dyadic cell grid) anchor it at the table
+    version it equals (`_mem_version`, content in `_mem`).  It advances
     only after a commit lands, is dropped when a version-CAS publish
     loses a race (`_cas_guard`) so the batch's retry re-reads the
     winner's commit, and is re-anchored after `maintain()`, whose
     rewrite keeps the content and only moves the version.  It is served
-    only for the version it is anchored at, and `maintain()` trusts it
-    only when it is anchored at the store's current version: after
-    another writer's commit (a handover) it is dropped, and the newest
-    generation is read from the store.
+    only for the version it is anchored at: after another writer's
+    commit (a handover) it is dropped and rebuilt from the store.
 
     **The entry point.**  `Writer.stream(spark, source, checkpoint=...,
     **options)` builds a writer from the constructor's `options` and
@@ -268,15 +270,12 @@ class _DrainWriter:
     _commit_order: tuple[str, ...] = ("store",)
     #: run `maintain()` after every `compact_every`-th batch (None: never)
     compact_every: int | None = None
-    #: a generational snapshot store (`maintain()` keeps the newest gen)
-    _generational = False
     #: a group-commit store's shard of published out rows, and the
     #: columns `out_rows()` returns
     OUT_SHARD = "o"
     _out_cols: tuple[str, ...] = ()
     #: the driver mirror (see the class docstring; None: no mirror)
     _mem_version: int | None = None
-    _mem_gen = -1
     _mem = None
 
     def __init__(self, spark, writer_id: str):
@@ -341,30 +340,27 @@ class _DrainWriter:
         store = self._tables()[0]
         if self._mem_version != store.version():
             self._mirror()  # stale: another writer has committed since
-        if not self._generational:
-            self._compact(store)
-        else:
-            # one retention rewrite keeps only the newest generation, so
-            # the store stays one summary's rows, not O(batches)
-            gen = self._mem_gen
-            if self._mem_version is None:
-                gen = store.read(self.spark).agg(F.max("gen")).first()[0]
-            if gen is None or gen < 0:
-                return  # nothing committed
-            self._compact(store, keep_where=F.col("gen") == int(gen))
+        self._compact(store)
         if self._mem_version is not None:
             self._mem_version = store.version()  # re-anchor the mirror
 
     def _compact(self, table: TransactionalTable, **optimize_kwargs) -> None:
-        table.optimize(self.spark, **optimize_kwargs)
+        """The maintenance tail; a no-op for a table with no commits.  A
+        table whose commits name no data file (a partitioned write of an
+        empty block leaves none) has nothing to rewrite, but its log is
+        still folded."""
+        if table.version() < 0:
+            return
+        if table.data_files():
+            table.optimize(self.spark, **optimize_kwargs)
         table.checkpoint(compact_txn_watermarks=True)
         table.prune_log()
         table.vacuum()
 
-    def _mirror(self, version: int | None = None, gen: int = -1, content=None) -> None:
+    def _mirror(self, version: int | None = None, content=None) -> None:
         """Anchor the driver mirror at a committed version (no version:
         drop it)."""
-        self._mem_version, self._mem_gen, self._mem = version, gen, content
+        self._mem_version, self._mem = version, content
 
     @contextlib.contextmanager
     def _cas_guard(self):
@@ -377,31 +373,17 @@ class _DrainWriter:
             self._mirror()
             raise
 
-    def _latest(self, version: int | None = None):
-        """(newest generation's rows without `gen`, or None; its gen, or
-        -1; the snapshot version) of the generational store at `version`
-        (the newest when None).  The gen comes from the mirror when it is
-        anchored at that version, else from one max(gen) read, which
-        anchors the mirror when it read the newest version (a retry pin
-        at an older one never does)."""
-        snap_v = self.store.version() if version is None else version
+    def _latest(self, version: int | None = None) -> DataFrame | None:
+        """A one-state store's state at `version` (the newest when None),
+        or None when nothing is committed at or below it."""
         try:
-            stored = self.store.read(self._session, version=snap_v)
-        except FileNotFoundError:  # nothing committed at/below snap_v
-            return None, -1, snap_v
-        gen = self._mem_gen
-        if snap_v != self._mem_version:
-            gen = stored.agg(F.max("gen")).first()[0]
-            if gen is None:
-                return None, -1, snap_v
-            gen = int(gen)
-            if version is None:
-                self._mirror(snap_v, gen)
-        return stored.filter(F.col("gen") == gen).drop("gen"), gen, snap_v
+            return self.store.read(self._session, version)
+        except FileNotFoundError:
+            return None
 
     def _newest(self, what: str) -> DataFrame:
-        """The newest generation's rows; raises when nothing is committed."""
-        latest = self._latest()[0]
+        """The newest state's rows; raises when nothing is committed."""
+        latest = self._latest()
         if latest is None:
             raise FileNotFoundError(f"no {what} committed yet in {self.store.path}")
         return latest
@@ -457,11 +439,11 @@ class _DrainWriter:
         store_df: DataFrame,
         out,
         partition_by: str | None = "shard",
-        cas_version: int | None = None,
+        replaces: int | None = None,
     ) -> None:
         """A two-table writer's publish: the store rows stage on a side
         thread while `out()` builds and stages the out rows on this one,
-        then the store commits (a version-CAS when `cas_version` is
+        then the store commits (a replace of snapshot `replaces` when
         given), then the out table.  Staged files are reader-invisible
         until a commit names them, so only commit order carries the
         crash-window argument and the two staging jobs overlap.  The
@@ -497,11 +479,9 @@ class _DrainWriter:
                 self.store.discard_staged(side[0])
             raise
         try:
-            with self._cas_guard():
-                self.store.commit_staged(
-                    side[0], txn=txn, partition_by=partition_by,
-                    cas_version=cas_version,
-                )
+            self.store.commit_staged(
+                side[0], txn=txn, partition_by=partition_by, replaces=replaces
+            )
         except BaseException:
             self.out.discard_staged(staged_out)
             raise
@@ -977,11 +957,11 @@ class _TopKStreamWriter(_DrainWriter):
          multiplicity factor while changing nothing (the
          driver merge sums per value anyway; the single trim still
          happens once, on the fully merged counts);
-      3. publish the new summary as the next GENERATION under the batch
-         txn (`_DrainWriter`) — readers take only the newest generation,
-         so the store read stays O(C) after any number of batches.
-         `maintain()` (or `compact_every`) folds superseded generations
-         away.
+      3. publish the new summary as ONE replace commit of the snapshot
+         the merge read, under the batch txn (`_DrainWriter`'s one-state
+         family) — the snapshot is only the current summary, so a read
+         stays O(C) after any number of batches.  `maintain()` (or
+         `compact_every`) folds the log and reclaims replaced files.
 
     Exactness contract matches the batch operator: while the stream's
     total distinct values fit in C no trim ever fires and the summary IS
@@ -989,13 +969,13 @@ class _TopKStreamWriter(_DrainWriter):
 
     Concurrency contract: ONE live writer per store (the foreachBatch
     model; retries of a batch are sequential) — and ENFORCED: each
-    publish is a compare-and-swap on the table version read by
-    `_latest()`, so of two concurrent writers racing the same parent
-    generation exactly one commits and the other fails its batch with
-    `ConcurrentWriteError` — never the silent double-count that merging
-    two same-generation summaries would produce.  Sequential writer
-    HANDOVER (a new stream run, fresh writer_id) is the supported restart
-    path and is pinned by test.
+    publish replaces exactly the version the merge read, so of two
+    concurrent writers racing from the same snapshot exactly one commits
+    and the other fails its batch with `ConcurrentWriteError` — never a
+    summary that silently drops the other's counts.  Sequential writer
+    HANDOVER (a new stream run, fresh writer_id, batch ids restarting at
+    0) is the supported restart path and is pinned by test: the new run
+    reads the store's current summary, whatever its batch ids.
     """
 
     #: above this many block tasks, the per-task MG summaries are
@@ -1009,8 +989,6 @@ class _TopKStreamWriter(_DrainWriter):
     #: would NOT be (different subtrahends), which is why the reduction
     #: is a sum, never a second MG fold.
     DRIVER_MERGE_MAX_TASKS = 32
-
-    _generational = True
 
     def __init__(
         self,
@@ -1034,17 +1012,18 @@ class _TopKStreamWriter(_DrainWriter):
         self.weight_col = weight_col
         self.store = TransactionalTable(store_dir)
 
-    def _latest_local(self) -> tuple[dict[str, int], int, int, int]:
-        """(counts {value: count_lb}, trim-error total, gen, snapshot
-        version) of the newest committed generation.  The counts are the
-        mirror's content (<= capacity+1 entries by the MG invariant),
-        rebuilt by ONE bounded collect of `_latest()` when missing."""
-        if self._mem is None or self._mem_version != self.store.version():
-            prev, gen, snap_v = self._latest()
+    def _latest_local(self) -> tuple[dict[str, int], int, int]:
+        """(counts {value: count_lb}, trim-error total, snapshot version)
+        of the committed summary.  The counts are the mirror's content
+        (<= capacity+1 entries by the MG invariant), rebuilt by ONE
+        bounded collect of the store when missing."""
+        snap_v = self.store.version()
+        if self._mem is None or self._mem_version != snap_v:
+            prev = self._latest(snap_v)
             counts: dict[str, int] = {}
             err = self._fold(counts, 0, [] if prev is None else prev.collect())
-            self._mirror(snap_v, gen, (counts, err))
-        return (*self._mem, self._mem_gen, self._mem_version)
+            self._mirror(snap_v, (counts, err))
+        return (*self._mem, snap_v)
 
     @staticmethod
     def _fold(counts: dict[str, int], err: int, rows) -> int:
@@ -1089,7 +1068,7 @@ class _TopKStreamWriter(_DrainWriter):
                 F.sum("trim_err").alias("trim_err"),
             )
         block_rows = block_sums.collect()
-        prev_counts, prev_err, prev_gen, snap_v = self._latest_local()
+        prev_counts, prev_err, snap_v = self._latest_local()
         counts = dict(prev_counts)
         err = self._fold(counts, prev_err, block_rows)
         # (C+1)-th largest merged count = the trim subtrahend (0 when
@@ -1099,26 +1078,19 @@ class _TopKStreamWriter(_DrainWriter):
         else:
             sub = 0
         trimmed = {v: c - sub for v, c in counts.items() if c - sub > 0}
-        # generation = stored max + 1, NOT the batch id: a NEW stream run
-        # (fresh checkpoint, batch ids restart at 0) over an existing
-        # durable store must write ABOVE the stored generations or
-        # _latest() keeps serving the old run's summary and the new run's
-        # counts silently vanish — the same restart hazard the writer_id
-        # scoping of txn ids exists for
         new_summary = self._session.createDataFrame(
             [(v, c, 0) for v, c in trimmed.items()]
             + [(None, 0, err + sub)],
             _SUMMARY_SCHEMA,
-        ).withColumn("gen", F.lit(prev_gen + 1).cast("long"))
-        # CAS on the snapshot version: the single-live-writer contract is
-        # ENFORCED, not just documented — a concurrent
-        # sibling that committed after our `_latest()` read makes this
+        )
+        # a replace of the snapshot the counts came from: the
+        # single-live-writer contract is ENFORCED, not just documented — a
+        # concurrent sibling that committed after our read makes this
         # publish raise ConcurrentWriteError (failing the batch loudly)
-        # instead of both writers publishing generation prev_gen+1 and
-        # `_latest()` merging their rows into double counts.
+        # instead of one summary silently dropping the other's counts
         with self._cas_guard():
-            self.store.append(new_summary, txn=txn, cas_version=snap_v)
-        self._mirror(snap_v + 1, prev_gen + 1, (trimmed, err + sub))
+            self.store.append(new_summary, txn=txn, replaces=snap_v)
+        self._mirror(snap_v + 1, (trimmed, err + sub))
 
     def topk(self, k: int) -> DataFrame:
         """Current top-k with bounds from the stored summary (same answer
@@ -1140,7 +1112,7 @@ class _ReservoirStreamWriter(_DrainWriter):
     """Streaming uniform k-sample of an unbounded feed — the streaming
     twin of the hash-rank batch samplers (`train_test_split.in_sample` /
     `hash_sample`), kept continuously current as the stream grows, as a
-    bottom-k-by-hash sketch in a generational transactional store.
+    bottom-k-by-hash sketch in a one-state transactional store.
     With `group_col` (+ the batch salt) this is the STRATIFIED form:
     `sampling.stratified_sample`'s per-group quota maintained at
     ingest, state <= groups * k rows.  Read the current sample any time
@@ -1157,15 +1129,12 @@ class _ReservoirStreamWriter(_DrainWriter):
     idempotent by construction — a re-seen id lands on the same rank.
 
     Per block: the block's own bottom-k (one TakeOrdered, O(block)),
-    merged with the stored generation's <= k rows, re-trimmed to k, and
-    published as generation+1 under the batch txn and a version-CAS
-    (the generational family of `_DrainWriter`: concurrent writers
-    rejected, never merged).  Store reads are
-    O(k) after any number of batches; `maintain()` folds superseded
-    generations away.
+    merged with the stored sample's <= k rows, re-trimmed to k, and
+    published as ONE replace commit of the snapshot it read, under the
+    batch txn (the one-state family of `_DrainWriter`: concurrent writers
+    rejected, never merged).  Store reads are O(k) after any number of
+    batches; `maintain()` folds the log and reclaims replaced files.
     """
-
-    _generational = True
 
     def __init__(
         self,
@@ -1206,7 +1175,7 @@ class _ReservoirStreamWriter(_DrainWriter):
             # TakeOrdered: k is a sketch size, never corpus-sized
             return df.orderBy("rank", self.id_col).limit(self.k)
         # per-group trim: the window runs over BLOCK-bounded candidates
-        # or the <= groups*k stored generation, never the feed (the
+        # or the <= groups*k stored sample, never the feed (the
         # block-local-window streaming norm domain_cap established)
         from pyspark.sql import Window as W
 
@@ -1230,17 +1199,14 @@ class _ReservoirStreamWriter(_DrainWriter):
                 [self.id_col]
             )
         )
-        prev, prev_gen, snap_v = self._latest()
+        snap_v = self.store.version()
+        prev = self._latest(snap_v)
         merged = cand if prev is None else prev.unionByName(cand)
         # a row can appear in both the store and a replayed/overlapping
         # feed under at-least-once sources: same id -> same rank, dedup
         # exactly
-        next_gen = self._bottom_k(
-            merged.dropDuplicates([self.id_col])
-        ).withColumn("gen", F.lit(prev_gen + 1).cast("long"))
-        with self._cas_guard():
-            self.store.append(next_gen, txn=txn, cas_version=snap_v)
-        self._mirror(snap_v + 1, prev_gen + 1)
+        sample = self._bottom_k(merged.dropDuplicates([self.id_col]))
+        self.store.append(sample, txn=txn, replaces=snap_v)
 
     def sample(self) -> DataFrame:
         """The current sample (id + payload columns, rank dropped)."""
@@ -1249,7 +1215,7 @@ class _ReservoirStreamWriter(_DrainWriter):
     def stratified(self) -> DataFrame:
         """The current per-group sample in the batch operator's exact
         shape: (group, id, strat_rank 1..k by (hash, id)).  The window
-        runs over the <= groups*k stored generation only."""
+        runs over the <= groups*k stored sample only."""
         from pyspark.sql import Window as W
 
         if self.group_col is None:
@@ -1314,7 +1280,7 @@ def stream_interval_join(
 
 
 # ---------------------------------------------------------------------------
-# Streaming URL-level dedup (r10): the crawl-pipeline twin of
+# Streaming URL-level dedup: the crawl-pipeline twin of
 # `dedup.url_dedup` — first-arrival-wins filtering of an unbounded feed
 # against an accumulating canonical-URL key store.
 # ---------------------------------------------------------------------------
@@ -2178,7 +2144,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
         ).select("batch_id", "p_permille", "target_rank", "q_value")
 
     def quantiles(self) -> DataFrame:
-        """Current quantile estimates from the drained store — the r13
+        """Current quantile estimates from the drained store — the
         descent over the merged structure; equals the batch
         `dyadic_quantiles` over a one-shot build of the full feed
         (linearity, blocks partition the feed)."""
@@ -2454,13 +2420,12 @@ class _PackBinsStreamWriter(_DrainWriter):
     buckets' OPEN bins the moment they land, so a downstream dataloader can
     start reading full bins without waiting for the corpus to close.
 
-    State is a GENERATIONAL open-bin snapshot (`_DrainWriter`'s
-    generational family), NOT an append-only counter store: bin fills
-    are read-modify-write and — decisively — the set of bins ever
-    created grows with the corpus, so any design whose per-block read
-    touches all historical bins is unbounded at 100 TB.  Each block
-    commits generation g+1 = the post-block OPEN bins only, bounded by
-    construction:
+    State is ONE open-bin snapshot (`_DrainWriter`'s one-state family),
+    NOT an append-only counter store: bin fills are read-modify-write
+    and — decisively — the set of bins ever created grows with the
+    corpus, so any design whose per-block read touches all historical
+    bins is unbounded at 100 TB.  Each block replaces the snapshot with
+    the post-block OPEN bins only, bounded by construction:
 
     - a bin CLOSES (leaves the snapshot forever; its rows already left
       through `out`) once its remaining capacity drops below
@@ -2477,11 +2442,12 @@ class _PackBinsStreamWriter(_DrainWriter):
     — n_tokens desc, doc_id asc — first-fit into open bins by bin_id
     asc, then new bins; oversized docs open their own bin, flagged
     `overflow`, and close immediately), then publish the new snapshot
-    generation (store, under a version-CAS — concurrent writers
+    (store: a replace commit of the pinned version — concurrent writers
     rejected) and the assignment rows (out) through `_publish_pair`.
     Assignments are a function of the PRE-block snapshot, so a
-    half-committed retry re-reads the generation at its pin (`_pin`)
-    and re-derives byte-identical out rows.
+    half-committed retry re-reads the snapshot at its pin (`_pin`: the
+    version the replace commit replaced, still in the log) and
+    re-derives byte-identical out rows.
 
     Batch equality (the pin): on a bucket-aligned feed — block
     boundaries never split a bucket — every bucket packs with no prior
@@ -2494,13 +2460,12 @@ class _PackBinsStreamWriter(_DrainWriter):
 
     Plan shape at 100 TB: per block, one block-bounded canonicalize +
     one shuffle on <= `buckets` keys + ONE read of the <= buckets *
-    (max_open + 1)-row latest generation; per-bucket fold cost is
+    (max_open + 1)-row snapshot; per-bucket fold cost is
     O(n_b log n_b + n_b * bins_touched).  Bucketing is the standard
     FFD parallelization — each bucket is one dataloader shard.
     """
 
     _commit_order = ("store", "out")
-    _generational = True
 
     def __init__(
         self,
@@ -2537,7 +2502,7 @@ class _PackBinsStreamWriter(_DrainWriter):
     def open_bins(self, version: int | None = None) -> DataFrame:
         """The current OPEN bins: (bucket, bin_id, fill) — the bounded
         snapshot, sentinels excluded."""
-        latest, _gen, _v = self._latest(version)
+        latest = self._latest(version)
         if latest is None:
             return self.spark.createDataFrame(
                 [], "bucket long, bin_id long, fill long"
@@ -2667,7 +2632,7 @@ class _PackBinsStreamWriter(_DrainWriter):
         # (a half-committed retry's first attempt already saw rows)
         if not self._resumed and src.isEmpty():
             return  # every row dropped by the batch contract
-        prev, prev_gen, _v = self._latest(pin)
+        prev = self._latest(pin)
         if prev is None:
             prior = self._session.createDataFrame(
                 [], "bucket long, prior_bin long, prior_fill long"
@@ -2675,7 +2640,7 @@ class _PackBinsStreamWriter(_DrainWriter):
         else:
             # the WHOLE snapshot rides into the pack: untouched
             # buckets' bins (and sentinels) must carry forward into
-            # generation g+1 — the frame is <= buckets *
+            # the next snapshot — the frame is <= buckets *
             # (max_open + 1) rows by construction
             prior = prev.select(
                 "bucket",
@@ -2714,7 +2679,6 @@ class _PackBinsStreamWriter(_DrainWriter):
             unioned.groupBy("bucket").applyInPandas(self._pack_fn(), out_schema)
         )
         snapshot = packed.filter(F.col("is_open")).select(
-            F.lit(prev_gen + 1).cast("long").alias("gen"),
             "bucket",
             "bin_id",
             F.col("bin_fill").alias("fill"),
@@ -2729,12 +2693,8 @@ class _PackBinsStreamWriter(_DrainWriter):
             "overflow",
         )
         self._publish_pair(
-            txn, snapshot, lambda: out_df, partition_by=None, cas_version=_v
+            txn, snapshot, lambda: out_df, partition_by=None, replaces=pin
         )
-        # both commits landed: generation prev_gen+1 is committed at
-        # version _v+1 whichever attempt published it (on a
-        # half-committed retry the pin rule guarantees the same pair)
-        self._mirror(_v + 1, prev_gen + 1)
 
 
 pack_bins_stream = _PackBinsStreamWriter.stream

@@ -100,7 +100,7 @@ def test_determinism_across_runs_and_bucket_locality(spark):
 
 
 # ---------------------------------------------------------------------------
-# Streaming twin (r13, VERDICT r12 #6): _PackBinsStreamWriter
+# Streaming twin: _PackBinsStreamWriter
 # ---------------------------------------------------------------------------
 
 
@@ -205,7 +205,7 @@ def test_pack_stream_half_committed_retry_rederives_assignments(
     w = _pack_writer(spark, tmp_path, capacity=100, buckets=1)
     w.process(_items_df(spark, [(1, 60)]), 0)  # bin 0 at fill 60
 
-    # r16: the writer stages both tables concurrently and publishes via
+    # the writer stages both tables concurrently and publishes via
     # commit_staged, so the between-the-commits crash is injected there
     orig = TXL.TransactionalTable.commit_staged
     calls = {"n": 0}

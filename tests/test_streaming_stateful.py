@@ -222,7 +222,7 @@ def _distinct_texts(n, tag):
 
 
 def test_per_block_store_scan_reads_only_colliding_shards(spark, tmp_path, monkeypatch):
-    """VERDICT r5 #1 — the files-read assert: a block's store read must
+    """The files-read assert: a block's store read must
     touch ONLY the band shards its own band keys hash into (and only the
     payload shards of candidate ids), not the whole store.  Verified by
     spying on `TransactionalTable.read_where` during a real
@@ -284,7 +284,7 @@ def test_per_block_store_scan_reads_only_colliding_shards(spark, tmp_path, monke
 
 
 def test_stream_writer_retry_is_idempotent(spark, tmp_path):
-    """VERDICT r5 #3 — foreachBatch is at-least-once: re-running a batch
+    """foreachBatch is at-least-once: re-running a batch
     (simulated retry after a crash) must leave output, band store, and
     payload store byte-identical, not duplicated."""
     from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
@@ -328,10 +328,9 @@ def test_stream_writer_retry_is_idempotent(spark, tmp_path):
 def test_corrupt_store_fails_batch_instead_of_deduping_against_nothing(
     spark, tmp_path
 ):
-    """VERDICT r5 'what's wrong': only a NEVER-COMMITTED store may be
-    treated as empty.  A committed store whose data file vanished mid-
-    stream must raise — the r5 form's `except Exception` silently admitted
-    duplicates here."""
+    """Only a NEVER-COMMITTED store may be treated as empty.  A committed
+    store whose data file vanished mid-stream must raise — an `except
+    Exception` around the read would silently admit duplicates here."""
     import os
 
     import pytest as _pytest
@@ -756,9 +755,9 @@ def test_weighted_topk_stream_matches_batch_and_replays_idempotently(
 
 def test_topk_stream_new_run_over_existing_store_not_lost(spark, tmp_path):
     """A NEW stream run (fresh writer id, batch ids restarting at 0) over an
-    existing summary store must land ABOVE the stored generations — batch-id
-    generation numbering would leave _latest() serving the old run and
-    silently drop the new run's counts (code-review mid-r6)."""
+    existing summary store must build on the stored summary — a state
+    keyed by batch id would leave readers serving the old run and
+    silently drop the new run's counts."""
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
         topk_stream_writer,
     )
@@ -811,6 +810,27 @@ def _race_state(spark, kind, w) -> dict[int, int]:
     return {r["doc_id"]: 1 for r in w.out.read(spark).collect()}
 
 
+def _race_rows(spark, kind, w, version) -> list[int]:
+    """The ids the state committed at `version` holds, with multiplicity,
+    as a sorted list (a set would hide a duplicated row).  For pack-bins
+    that is the assignments published up to the out table's `version`,
+    and the store's open-bin fills at `version` must add up to them."""
+    if kind == "topk":
+        rows = w.store.read(spark, version).collect()
+        return sorted(
+            int(r["value"])
+            for r in rows
+            if r["value"] is not None
+            for _ in range(r["count_lb"])
+        )
+    if kind == "reservoir":
+        return sorted(r["v"] for r in w.store.read(spark, version).collect())
+    ids = sorted(r["doc_id"] for r in w.out.read(spark, version).collect())
+    fills = [r["fill"] for r in w.open_bins(version).collect()]
+    assert sum(fills) == 10 * len(ids), fills
+    return ids
+
+
 @pytest.mark.parametrize("kind", ["topk", "reservoir", "pack_bins"])
 def test_generational_writer_race_rejected_not_double_counted(
     spark, tmp_path, kind
@@ -833,27 +853,29 @@ def test_generational_writer_race_rejected_not_double_counted(
     orig_latest = type(w2)._latest
 
     def stale_latest(self, version=None):
-        prev, gen, snap_v = orig_latest(self, version)
+        prev = orig_latest(self, version)
         # w1 commits AFTER our read but BEFORE our publish
         w1.process(block([4, 5]), 1)
-        return prev, gen, snap_v
+        return prev
 
     w2._latest = stale_latest.__get__(w2)
     with pytest.raises(ConcurrentWriteError):
         w2.process(block([6, 7, 8, 9]), 0)
 
-    def gens():
-        stored = w1.store.read(spark).select("gen").distinct()
-        return sorted(r["gen"] for r in stored.collect())
-
-    # w1's interleaved commit is the surviving generation; no merged
-    # double-generation rows, and no trace of w2's rejected snapshot
-    assert gens() == [0, 1]
+    # w1's interleaved commit is the surviving state: the log holds
+    # exactly w1's two commits, each state holds every id once, and there
+    # is no trace of w2's rejected snapshot
+    assert w1.store.version() == 1
+    assert [w1.store.txn_version(f"w1:{b}") for b in (0, 1)] == [0, 1]
+    assert _race_rows(spark, kind, w1, 0) == [1, 2, 3]
+    assert _race_rows(spark, kind, w1, 1) == [1, 2, 3, 4, 5]
     assert _race_state(spark, kind, w1) == {i: 1 for i in range(1, 6)}
 
     del w2._latest
     w2.process(block([6, 7, 8, 9]), 0)
-    assert gens() == [0, 1, 2]
+    assert (w1.store.version(), w1.store.txn_version("w2:0")) == (2, 2)
+    assert _race_rows(spark, kind, w1, 1) == [1, 2, 3, 4, 5]
+    assert _race_rows(spark, kind, w1, 2) == list(range(1, 10))
     assert _race_state(spark, kind, w2) == {i: 1 for i in range(1, 10)}
 
 
@@ -869,13 +891,91 @@ def test_maintain_after_handover_keeps_the_newest_generation(
     a.process(block([1, 2, 3]), 0)
     b, _ = _race_writer(spark, tmp_path, kind, "b")
     b.process(block([4, 5]), 0)
+    newest = _race_rows(spark, kind, a, 1)
+    assert a.store.txn_version("b:0") == 1 and newest == [1, 2, 3, 4, 5]
 
     a.maintain()
-    gens = {r["gen"] for r in a.store.read(spark).select("gen").collect()}
-    assert gens == {1}
+    # the compacted snapshot is b's state, row for row
+    assert a.store.version() == 2
+    assert _race_rows(spark, kind, a, None) == newest
     want = {i: 1 for i in range(1, 6)}
     assert _race_state(spark, kind, b) == want
     assert _race_state(spark, kind, a) == want
+
+
+def _planning_jobs(spark, plan) -> int:
+    """Spark jobs `plan()` starts, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"plan-{id(plan)}"
+    sc.setJobGroup(group, group)
+    try:
+        plan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("kind", ["topk", "reservoir", "pack_bins"])
+def test_one_state_store_snapshot_is_the_last_block(spark, tmp_path, kind):
+    """A top-k, reservoir or pack-bins store's snapshot is its one current
+    state: after 4 blocks it names only the last block's files (older
+    states live on in the log), a fresh reader plans its answer with zero
+    Spark jobs, and after an empty first block the writer and a fresh
+    reader both read an empty frame."""
+    import os
+
+    def reader(w):
+        if kind == "topk":
+            return w.topk(5)
+        return w.sample() if kind == "reservoir" else w.open_bins()
+
+    w, block = _race_writer(spark, tmp_path / "full", kind, "w")
+    for b in range(4):
+        w.process(block(range(10 * b + 1, 10 * b + 11)), b)
+    store = w.store
+    assert store.version() == 3
+    last = [os.path.join(store.path, f) for f in store.commit_files(3)]
+    assert sorted(store.data_files()) == sorted(last)
+    fresh, _ = _race_writer(spark, tmp_path / "full", kind, "reader")
+    assert _planning_jobs(spark, lambda: reader(fresh)) == 0
+
+    e, block = _race_writer(spark, tmp_path / "empty", kind, "e")
+    e.process(block([]), 0)
+    fresh, _ = _race_writer(spark, tmp_path / "empty", kind, "reader")
+    assert reader(e).collect() == [] == reader(fresh).collect()
+
+
+def test_maintain_skips_the_rewrite_of_a_store_without_data(spark, tmp_path):
+    """Compaction is a no-op on a store with no commits, and a store whose
+    commits name no data file (a partitioned write of an empty block
+    leaves none) skips the rewrite but still folds its log: with
+    compact_every=1 an empty first block neither fails its batch nor
+    loses its txn."""
+    from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
+        minhash_stream_writer,
+    )
+
+    def writer(tag):
+        return minhash_stream_writer(
+            spark, out_dir=str(tmp_path / tag / "kept"),
+            store_dir=str(tmp_path / tag / "store"), num_perm=12, bands=4,
+            shingle_n=3, threshold=0.5, compact_every=1, writer_id=tag,
+        )
+
+    fresh = writer("fresh")
+    fresh.maintain()
+    assert fresh.store.version() == -1
+
+    w = writer("w")
+    w.process(_docs_df(spark, []), 0)
+    assert w.store.version() == 0 and w.store.data_files() == []
+    assert w.store.commit_files(0) is None  # folded into the checkpoint
+    assert w.store.txn_committed("w:0")
+    w.process(_docs_df(spark, list(enumerate(_distinct_texts(4, "e")))), 1)
+    assert sorted(r["doc_id"] for r in w.out.read(spark).collect()) == [0, 1, 2, 3]
+    assert w.store.commit_files(1) is None and w.store.txn_committed("w:1")
 
 
 def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
@@ -1001,7 +1101,7 @@ def test_reservoir_stream_matches_batch_and_replays_idempotently(spark, tmp_path
 
 
 def test_stratified_reservoir_matches_batch_quota_per_group(spark, tmp_path):
-    """r13 stratified form: per-group bottom-k accumulates across blocks
+    """Stratified form: per-group bottom-k accumulates across blocks
     into the batch `stratified_sample` answer VERBATIM (same salt, same
     (hash, id) rank rule, strat_rank included), small groups keep all
     their rows, and replay is a no-op."""
@@ -1080,7 +1180,7 @@ def test_reservoir_new_run_handover_and_duplicate_ids(spark, tmp_path):
 
 
 def test_reservoir_in_block_duplicates_cannot_displace_new_ids(spark, tmp_path):
-    """Review r7: duplicate rows of ONE id inside a single micro-batch
+    """Duplicate rows of ONE id inside a single micro-batch
     (at-least-once overlap) must not each occupy a bottom-k slot.  Feed a
     block holding k copies of one id plus every other id once — the
     sample must equal the batch bottom-k over DISTINCT ids, even when the
@@ -1120,7 +1220,7 @@ def test_reservoir_in_block_duplicates_cannot_displace_new_ids(spark, tmp_path):
 
 
 def test_cas_loser_files_are_reclaimed_immediately(spark, tmp_path):
-    """Review r7: a ConcurrentWriteError must not leave the loser's staged
+    """A ConcurrentWriteError must not leave the loser's staged
     block on disk until vacuum's grace window — the moved-but-uncommitted
     files are deleted in the failure path itself."""
     import os as _os
@@ -1152,7 +1252,7 @@ def test_cas_loser_files_are_reclaimed_immediately(spark, tmp_path):
 
 
 def test_shards_for_store_sizing_rule():
-    """shards_for_store (VERDICT r8 #5): monotone in expected rows, power
+    """shards_for_store: monotone in expected rows, power
     of two, floored at the test default 16, capped at 2^20, and hits the
     documented 100 TB design point (4e11 band rows -> 131072 shards)."""
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
@@ -1284,7 +1384,7 @@ def test_candidate_chain_failure_joins_appender_and_retry_is_clean(
 def test_concurrent_writer_stale_pin_keeps_then_next_block_suppresses(
     spark, tmp_path, monkeypatch
 ):
-    """r9 pin semantics with TWO writers sharing one store: a block whose
+    """Pin semantics with TWO writers sharing one store: a block whose
     pin predates a concurrent writer's commit must still run cleanly —
     it simply cannot consult rows it never saw, so an unseen near-dup is
     KEPT (the fail-safe direction) — while the writer's NEXT block, whose
@@ -1375,7 +1475,7 @@ def test_term_index_stream_writer_replay_is_exactly_once(spark, tmp_path):
 
 def test_term_index_stream_writer_reconciles_stored_modulus(spark, tmp_path):
     """A writer pointed at an EXISTING index adopts the index's stored
-    shard modulus regardless of its constructor argument (ADVICE r10): a
+    shard modulus regardless of its constructor argument: a
     restarted stream with a different default would otherwise durably
     commit mis-routed segments, caught only by index_meta's min==max
     invariant after the corruption."""
@@ -1407,7 +1507,7 @@ def test_term_index_stream_writer_reconciles_stored_modulus(spark, tmp_path):
 
 
 def test_term_index_stream_writer_empty_batch_publishes_nothing(spark, tmp_path):
-    """An empty micro-batch is a no-op (ADVICE r10): no commit, no
+    """An empty micro-batch is a no-op: no commit, no
     (n_docs=0, tot_tokens NULL) meta row per idle trigger."""
     from apache_kafka_clickhouse_demo_spark.operators import search_index as SI
     from apache_kafka_clickhouse_demo_spark.streaming.stateful import (
@@ -1429,7 +1529,7 @@ def test_term_index_stream_writer_empty_batch_publishes_nothing(spark, tmp_path)
 
 def test_query_tokenization_matches_engine_whitespace_rule(spark, tmp_path):
     """Driver-side query tokenization uses the SAME ASCII-whitespace
-    class as the engine-side Java regex \\s+ (ADVICE r10): a query whose
+    class as the engine-side Java regex \\s+: a query whose
     words are separated by a non-breaking space must reach the index as
     ONE term — exactly what TX.tokens produced for the matching document
     — not be silently cut into unmatchable halves."""
@@ -1533,7 +1633,7 @@ def test_ann_index_stream_writer_founds_then_extends(spark, tmp_path):
 
 
 def test_ivfpq_index_stream_writer_founds_then_extends(spark, tmp_path):
-    """_IvfPqIndexStreamWriter (r14): block 0 founds centroids AND PQ
+    """_IvfPqIndexStreamWriter: block 0 founds centroids AND PQ
     codebooks, later blocks extend against both FIXED generations;
     replays/empty blocks publish nothing; a second writer over an
     existing index extends instead of re-founding; the accumulated
@@ -1723,7 +1823,7 @@ def test_domain_cap_stream_half_committed_retry_rederives_survivors(
     out commits must re-derive the exact survivors its first attempt
     published increments for — re-reading at the current version would
     count the block against itself and wrongly drop kept rows.  Forced
-    by failing the out COMMIT on the first attempt (r16: the writer
+    by failing the out COMMIT on the first attempt (the writer
     stages both tables concurrently and publishes via commit_staged, so
     the crash window between the two commits is injected there)."""
     from apache_kafka_clickhouse_demo_spark.sources import txlog as TXL
@@ -1900,7 +2000,7 @@ def test_count_min_stream_running_estimates_accumulate(spark, tmp_path):
 def test_count_min_stream_atomic_commit_failure_replays_clean(
     spark, tmp_path, monkeypatch
 ):
-    """r13 single-commit protocol on the CMS store: increments and
+    """Single-commit protocol on the CMS store: increments and
     estimates land in ONE txn record, so a crash anywhere before the
     publish leaves NOTHING visible, and the retry recomputes the
     identical block against the pre-block snapshot — estimates exact,
@@ -2017,7 +2117,7 @@ def test_dyadic_stream_running_band_counts_accumulate(spark, tmp_path):
 def test_dyadic_stream_sparse_block_estimate_reads_unread_band_mass(
     spark, tmp_path
 ):
-    """ADVICE r12 (high): the published running band estimates address
+    """The published running band estimates address
     the FIXED ranges' dyadic piece cells, which are independent of the
     block — a sparse block whose touched shards miss a shard holding
     PRIOR band mass must still publish the full running count (the
@@ -2062,7 +2162,7 @@ def test_dyadic_stream_sparse_block_estimate_reads_unread_band_mass(
 
 
 def test_dyadic_stream_running_quantiles_accumulate(spark, tmp_path):
-    """r14 (VERDICT r13 #6): a writer constructed with `ps` publishes
+    """A writer constructed with `ps` publishes
     running quantiles per block in the SAME atomic commit — exact in
     the wide-grid (no-collision) regime, where the descent equals the
     integer-rule quantile; the drained store's descent equals the batch
@@ -2153,7 +2253,7 @@ def test_dyadic_stream_quantile_commit_failure_replays_clean(
 def test_dyadic_stream_atomic_commit_failure_replays_clean(
     spark, tmp_path, monkeypatch
 ):
-    """r13 single-commit protocol: increments and estimates land in ONE
+    """Single-commit protocol: increments and estimates land in ONE
     txn record, so a crash ANYWHERE before the commit publishes leaves
     NOTHING visible — no half-committed state exists by construction —
     and the retry recomputes the identical block against the pre-block
@@ -2280,7 +2380,7 @@ def test_uniq_stream_running_estimates_accumulate(spark, tmp_path):
 def test_uniq_stream_atomic_commit_failure_replays_clean(
     spark, tmp_path, monkeypatch
 ):
-    """r13 single-commit protocol on the HLL state store: state rows
+    """Single-commit protocol on the HLL state store: state rows
     and estimates land in ONE txn record — a crash anywhere before the
     publish leaves nothing visible, and the retry recomputes the block
     against the pre-block snapshot (out rows exact, states never
@@ -2372,7 +2472,7 @@ def _tok_docs_df(spark, rows):
 
 
 def test_token_cap_stream_budget_accumulates_across_blocks(spark, tmp_path):
-    """r15: the per-domain TOKEN counter suppresses across blocks —
+    """The per-domain TOKEN counter suppresses across blocks —
     with budget=10, a domain that charged 8 in block 0 admits one more
     3-token doc NEVER (8+3 > 10) but a 2-token doc fits; cum_tokens
     carries the GLOBAL running charge, and an empty text charges 1."""

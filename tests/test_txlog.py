@@ -62,7 +62,7 @@ def test_uncommitted_files_are_invisible(spark, tmp_path):
 
 
 def test_commit_publication_is_atomic_for_readers(spark, tmp_path):
-    """ADVICE r3: a writer crashing mid-commit (payload written, link not
+    """A writer crashing mid-commit (payload written, link not
     yet made — or any interleaving) must never leave a truncated commit a
     reader would choke on.  With link-based publication the only possible
     debris is an invisible `.tmp-*` file in _txlog."""
@@ -231,7 +231,7 @@ def test_mv_with_transactional_sink(spark, sf_dir, tmp_path):
     assert merged == want
 
 
-# -- optimize (small-file compaction, VERDICT r4 #6) ------------------------
+# -- optimize (small-file compaction) ---------------------------------------
 
 
 def test_optimize_preserves_reads_and_drops_file_count(spark, tmp_path):
@@ -274,7 +274,7 @@ def test_optimize_then_checkpoint_and_snapshot_reads(spark, tmp_path):
 def test_vacuum_reclaims_optimize_debris_and_tmp_commit_files(spark, tmp_path):
     """After optimize, the superseded small files are unreferenced ->
     vacuum deletes them (grace 0); orphaned `.tmp-*` commit payloads in the
-    log dir (crash between write and link — ADVICE r4) go too; committed
+    log dir (crash between write and link) go too; committed
     data and log files survive."""
     t = TransactionalTable(str(tmp_path / "t"))
     t.append(_df(spark, 0, 10).repartition(4))
@@ -295,7 +295,7 @@ def test_vacuum_reclaims_optimize_debris_and_tmp_commit_files(spark, tmp_path):
 
 
 def test_vacuum_staging_age_uses_newest_mtime_in_tree(spark, tmp_path):
-    """ADVICE r4: a staging dir whose nested `_temporary/` files are FRESH
+    """A staging dir whose nested `_temporary/` files are FRESH
     must survive vacuum even when the top-level dir's mtime looks old —
     an in-flight long write is not debris."""
     t = TransactionalTable(str(tmp_path / "t"))
@@ -591,7 +591,7 @@ def test_txn_version_locates_commit(spark, tmp_path):
 
 
 def test_two_phase_append_staged_invisible_until_commit(spark, tmp_path):
-    """r16 two-phase append: staged files are reader-invisible until
+    """Two-phase append: staged files are reader-invisible until
     commit_staged names them; discard_staged reclaims an abandoned
     staging immediately."""
     t = TransactionalTable(str(tmp_path / "t"))
@@ -619,12 +619,23 @@ def test_two_phase_append_staged_invisible_until_commit(spark, tmp_path):
 
 def test_two_phase_append_cas_rejection_reclaims_staging(spark, tmp_path):
     """commit_staged with cas_version keeps append's CAS semantics: a
-    rejected commit removes the staged files and raises."""
+    rejected commit removes the staged files and raises.  A replace
+    commit (`replaces=v`) is the same CAS at v + 1: it lands only while v
+    is current, a lost one removes its staged files, its txn answers
+    `txn_committed` for good (after later commits, a checkpoint that
+    folds txns to watermarks and a pruned log), and the snapshot it
+    replaced stays readable at v until the log is pruned."""
     import pytest
 
     from apache_kafka_clickhouse_demo_spark.sources.txlog import (
         ConcurrentWriteError,
     )
+
+    def ids(version=None):
+        return sorted(r["id"] for r in t.read(spark, version).collect())
+
+    def on_disk(staged):
+        return [rel for rel in staged if os.path.exists(os.path.join(t.path, rel))]
 
     t = TransactionalTable(str(tmp_path / "t"))
     t.append(_df(spark, 0, 5))  # version 0
@@ -636,6 +647,27 @@ def test_two_phase_append_cas_rejection_reclaims_staging(spark, tmp_path):
         os.path.exists(os.path.join(t.path, rel)) for rel in staged
     )
     assert t.read(spark).count() == 10  # 0-5 and 10-15 only
+
+    # a replace of version 1 loses to a sibling that takes version 2
+    staged = t.stage_for_append(_df(spark, 100, 103))
+    t.append(_df(spark, 20, 22))
+    with pytest.raises(ConcurrentWriteError):
+        t.commit_staged(staged, txn="r:0", replaces=1)
+    assert on_disk(staged) == [] and not t.txn_committed("r:0")
+    before = ids()
+    assert before == [*range(5), *range(10, 15), 20, 21]
+
+    # a replace of the current version lands at exactly v + 1
+    staged = t.stage_for_append(_df(spark, 100, 103))
+    assert t.commit_staged(staged, txn="r:0", replaces=2) == 3
+    assert ids() == [100, 101, 102] and ids(2) == before
+    t.append(_df(spark, 200, 201), txn="other:0")
+    assert ids() == [100, 101, 102, 200] and ids(2) == before
+    assert t.txn_version("r:0") == 3 and t.txn_committed("r:0")
+    t.checkpoint(compact_txn_watermarks=True)
+    t.prune_log()
+    assert t.txn_version("r:0") is None and t.txn_committed("r:0")
+    assert ids() == [100, 101, 102, 200]
 
 
 def test_publish_pair_orders_and_recovers(spark, tmp_path):
