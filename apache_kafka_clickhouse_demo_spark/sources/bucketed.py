@@ -72,11 +72,11 @@ def compact_bucketed(
     the repartition hash agrees with the bucketing hash), the rewrite
     lands in a staging table, and a catalog DROP + RENAME swaps it in.
 
-    Concurrency contract: the DROP->RENAME swap is the catalog analogue
-    of the two-rename directory swap `ProjectedTable.optimize` uses — a
-    reader between the two statements sees no table.  Single writer,
+    Concurrency contract: the DROP->RENAME swap is two catalog
+    statements, and a reader between them sees no table.  Single writer,
     maintenance window; concurrent-reader compaction belongs to
-    `txlog.TransactionalTable.optimize`.
+    `txlog.TransactionalTable.optimize` (one replace commit, which is how
+    `ProjectedTable.optimize` rewrites its copies).
 
     Crash recovery: a crash between the DROP and the RENAME
     leaves the fully-written staging table as the ONLY copy — a rerun

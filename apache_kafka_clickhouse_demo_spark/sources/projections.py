@@ -3,10 +3,11 @@
 ClickHouse `PROJECTION`s store the same rows redundantly under a second
 sort key so queries filtering on non-primary columns still prune granules;
 the optimizer picks the copy whose ORDER BY matches the predicate.  The
-Spark-first analogue keeps one parquet directory per sort order (each
-written through `storage.write_sorted`, so row-group min/max stats are
-tight on ITS key) and a tiny router that picks the copy whose sort key
-prefixes the queried columns.
+Spark-first analogue keeps one transactional table per sort order
+(`txlog.TransactionalTable` at `<path>/<name>`), each laid out so every
+file owns a narrow, disjoint slice of ITS key and is sorted on it (tight
+row-group min/max stats), and a tiny router that picks the copy whose
+sort key prefixes the queried columns.
 
 Why this matters at 100 TB: a range predicate on the 5th-of-5 sort column
 reads every row group of a 100 TB table; the same predicate against a
@@ -16,6 +17,14 @@ cost drops by orders of magnitude.  Writes fan out once per projection
 (each its own independent sorted write — parallel, no cross-copy shuffle
 dependency), which is the same write amplification ClickHouse pays at
 part-build time.
+
+Every write is a log commit, so a reader sees each copy at a committed
+version and never a copy mid-rewrite: `write` publishes one replace
+commit per copy, `insert` one append per copy, and `optimize` one
+`TransactionalTable.optimize` replace commit per copy (the background
+merge that swaps a MergeTree part in one step).  Copies commit one after
+another, so between two copies' commits the copies can answer at
+different versions.
 
 Routing is intentionally explicit and tiny: `read_for(cols)` scores each
 copy by how long a prefix of its sort key is covered by the queried
@@ -27,50 +36,12 @@ pushdown does the pruning from there.
 
 from __future__ import annotations
 
+import functools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from apache_kafka_clickhouse_demo_spark.sources.storage import write_sorted
-
-
-def _atomic_swap(path: str, write_fn) -> None:
-    """Directory swap for `ProjectedTable.optimize`: write the new copy
-    via `write_fn(tmp)`, then path -> _old, tmp -> path, drop _old.
-
-    Failure handling:
-    - a stale `<path>_old` left by an earlier failed/interrupted swap is
-      cleared first, instead of making every later compaction die with
-      ENOTEMPTY at the first rename;
-    - if the second rename fails after the first succeeded, the ORIGINAL
-      copy is restored from `_old` before re-raising, so the table never
-      ends up with no copy at all;
-    - a failed cleanup of `_old` is non-fatal (the next swap clears it).
-
-    The swap is TWO renames: a reader listing the directory between them
-    sees no copy, so it needs a single writer and no concurrent readers.
-    The transactional table's `optimize()` is the one-commit alternative;
-    it does not write the per-column bloom filters or the range layout a
-    projection copy carries."""
-    p = path.rstrip("/")
-    old = p + "_old"
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(p) or ".", prefix="_compact_")
-    try:
-        write_fn(tmp)
-        shutil.rmtree(old, ignore_errors=True)  # stale debris from a crash
-        os.rename(p, old)
-        try:
-            os.rename(tmp, p)
-        except BaseException:
-            os.rename(old, p)  # restore the live table before surfacing
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 
 class ProjectedTable:
@@ -78,66 +49,53 @@ class ProjectedTable:
 
     `orders` maps projection name -> sort columns; the reserved name
     "primary" is the base order.  All copies hold identical rows — a
-    result read through any copy is the same table.
+    result read through any copy is the same table.  `copies` maps each
+    name to its `TransactionalTable`.
     """
 
-    def __init__(
-        self,
-        path: str,
-        orders: dict[str, list[str]],
-        bloom_cols: list[str] | None = None,
-    ):
+    def __init__(self, path: str, orders: dict[str, list[str]]):
         if "primary" not in orders:
             raise ValueError("orders must include the 'primary' sort key")
         self.path = path.rstrip("/")
         self.orders = {k: list(v) for k, v in orders.items()}
-        #: on the TABLE, not per-write: appended files must carry the same
-        #: blooms as the base files or point-predicate skipping silently
-        #: degrades with every insert
-        self.bloom_cols = list(bloom_cols or [])
+        self.copies = {
+            name: TransactionalTable(os.path.join(self.path, name))
+            for name in self.orders
+        }
 
-    def _dir(self, name: str) -> str:
-        return os.path.join(self.path, name)
+    @staticmethod
+    def _slices(spark: SparkSession, files: int | None) -> int:
+        """The slice count: explicit (default: the session's parallelism).
+        An un-sized range shuffle is fair game for AQE partition
+        coalescing, which at small scale folds a copy into one full-range
+        file and silently deletes the property this class exists for."""
+        return files or spark.sparkContext.defaultParallelism
 
-    def _write_one(
-        self,
-        df: DataFrame,
-        path: str,
-        sort_cols: list[str],
-        mode: str,
-        files: int | None = None,
-    ) -> None:
-        """One copy = RANGE-partitioned on its sort key, then handed to
-        `storage.write_sorted` (ONE sorted-parquet writer in the engine —
-        a local copy of its option plumbing would drift): every FILE owns
-        a narrow, disjoint slice of the key space
-        (the MergeTree part shape), so min/max pruning works at file
-        granularity — a hash-random task layout would leave every file
-        spanning the whole key range however well its rows are sorted
-        internally.  The slice count is EXPLICIT (default: the session's
-        parallelism): an un-sized range shuffle is fair game for AQE
-        partition coalescing, which at small scale folds the whole copy
-        into one full-range file and silently deletes the property this
-        class exists for."""
-        n = files or df.sparkSession.sparkContext.defaultParallelism
-        out = df.repartitionByRange(n, *[F.col(c) for c in sort_cols])
-        # write_sorted's sortWithinPartitions preserves the range layout
-        write_sorted(out, path, sort_cols, mode=mode, bloom_cols=self.bloom_cols)
+    def _lay_out(self, name: str, df: DataFrame, n: int) -> DataFrame:
+        """Copy `name`'s layout, shared by all three writes: RANGE-
+        partitioned on its sort key into `n` slices, each sorted — the
+        MergeTree part shape, so min/max pruning works at file granularity
+        (a hash-random task layout would leave every file spanning the
+        whole key range however well its rows are sorted internally)."""
+        cols = self.orders[name]
+        return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
 
     def write(self, df: DataFrame, files: int | None = None) -> None:
-        """Materialize every projection (overwrite).  Each copy is an
-        independent range-partitioned sorted write — at scale these are N
-        parallel jobs over the same source, not a chained shuffle."""
-        for name, sort_cols in self.orders.items():
-            self._write_one(df, self._dir(name), sort_cols, "overwrite", files)
+        """Materialize every projection as one replace commit per copy
+        (version 0 on a fresh copy).  Each copy is an independent
+        range-partitioned sorted write — at scale these are N parallel
+        jobs over the same source, not a chained shuffle."""
+        n = self._slices(df.sparkSession, files)
+        for name, copy in self.copies.items():
+            copy.append(self._lay_out(name, df, n), replaces=copy.version())
 
     def insert(self, df: DataFrame, files: int | None = None) -> None:
-        """Append a block into every projection, keeping each copy's
-        per-file range+sort property AND its bloom skip-indexes (the table
-        stays a union of sorted range-sliced files, the MergeTree part
-        model)."""
-        for name, sort_cols in self.orders.items():
-            self._write_one(df, self._dir(name), sort_cols, "append", files)
+        """Append a block into every projection, one append per copy,
+        keeping each copy's per-file range+sort property (the table stays
+        a union of sorted range-sliced files, the MergeTree part model)."""
+        n = self._slices(df.sparkSession, files)
+        for name, copy in self.copies.items():
+            copy.append(self._lay_out(name, df, n))
 
     def choose(self, filter_cols: list[str]) -> str:
         """The routing rule: the copy whose sort key has the LONGEST
@@ -161,27 +119,24 @@ class ProjectedTable:
         return ranked[0][0]
 
     def read_for(self, spark: SparkSession, filter_cols: list[str]) -> DataFrame:
-        """Scan routed to the best projection for a query filtering on
-        `filter_cols`.  The rows are the same whichever copy serves them —
-        only the row-group pruning differs."""
-        return spark.read.parquet(self._dir(self.choose(filter_cols)))
+        """Log read of the best projection for a query filtering on
+        `filter_cols`, planned with zero Spark jobs.  The rows are the
+        same whichever copy serves them — only the row-group pruning
+        differs."""
+        return self.copies[self.choose(filter_cols)].read(spark)
 
     def optimize(self, spark: SparkSession, files: int | None = None) -> None:
         """Per-copy compaction: every insert appends its own range-sliced
         file set, so after many inserts each projection holds N_inserts
         overlapping slice families and a routed scan pays one footer + one
-        task per tiny file — small-file decay, once per copy.  This
-        rewrites each copy back to a single range-partitioned sorted file
-        family through `_write_one` — the SAME writer inserts use, so the
-        per-file disjoint-slice property, in-file sort, AND the table's
-        bloom skip-indexes all survive (a plain parquet rewrite knows
-        nothing of the blooms).  Each copy is swapped in by `_atomic_swap`:
-        single writer, no concurrent readers."""
-        for name, sort_cols in self.orders.items():
-            path = self._dir(name)
-            df = spark.read.parquet(path)
-
-            def _write(tmp: str, _df=df, _cols=sort_cols) -> None:
-                self._write_one(_df, tmp, _cols, "overwrite", files)
-
-            _atomic_swap(path, _write)
+        task per tiny file — small-file decay, once per copy.  Each copy
+        is rewritten back to one range-sliced sorted file family by ONE
+        `TransactionalTable.optimize` replace commit with the copy's
+        layout as its transform: readers keep the old snapshot until the
+        commit lands, and an insert that commits first makes the rewrite
+        retry from the new snapshot, so its rows are kept."""
+        n = self._slices(spark, files)
+        for name, copy in self.copies.items():
+            copy.optimize(
+                spark, target_files=n, transform=functools.partial(self._lay_out, name, n=n)
+            )

@@ -261,10 +261,10 @@ class TransactionalTable:
     def commit_files(self, version: int) -> list[str] | None:
         """TABLE-RELATIVE file names of exactly one commit, or None when
         that commit's JSON is gone (folded into a checkpoint + pruned).
-        Bounded driver work: one small JSON read — lets a writer that just
-        committed partitioned data recover WHICH partition dirs it touched
-        without running a Spark job over the data (streaming/stateful.py
-        derives a block's band shards this way)."""
+        Bounded driver work: one small JSON read — lets a caller recover
+        WHICH files (and partition dirs) one commit wrote without running
+        a Spark job over the data (the perfbench sampler and
+        `tools/profile_drain.py` read a drain block's commit this way)."""
         try:
             with open(self._commit_path(version)) as fh:
                 return list(json.load(fh)["files"])

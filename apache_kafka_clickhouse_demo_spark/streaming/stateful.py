@@ -18,7 +18,6 @@ custom per-key state:
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import os
 import types
@@ -33,10 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_kafka_clickhouse_demo_spark.functions import text as TX_FN
 from apache_kafka_clickhouse_demo_spark.functions.literals import isin_strings
-from apache_kafka_clickhouse_demo_spark.sources.txlog import (
-    ConcurrentWriteError,
-    TransactionalTable,
-)
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 
 def streaming_dedup(
@@ -245,17 +241,19 @@ class _DrainWriter:
     - **Group-commit stores** (count-min, dyadic, uniq): a block's state
       rows and its out rows (shard `OUT_SHARD`, read back by
       `out_rows()`) publish in ONE commit (`_publish_group`), so there is
-      no half-committed retry.
+      no half-committed retry.  That commit is a CAS on the block's pin
+      (`append(..., cas_version=pin)`): a writer that committed after the
+      pin is rejected, never missed by the published estimates.
 
     **The driver mirror.**  Writers that keep committed content on the
     driver (top-k's counts, the dyadic cell grid) anchor it at the table
     version it equals (`_mem_version`, content in `_mem`).  It advances
-    only after a commit lands, is dropped when a version-CAS publish
-    loses a race (`_cas_guard`) so the batch's retry re-reads the
-    winner's commit, and is re-anchored after `maintain()`, whose
-    rewrite keeps the content and only moves the version.  It is served
-    only for the version it is anchored at: after another writer's
-    commit (a handover) it is dropped and rebuilt from the store.
+    only after a commit lands and is re-anchored after `maintain()`,
+    whose rewrite keeps the content and only moves the version.  It is
+    served only for the version it is anchored at: after another
+    writer's commit (a handover, or the winner of a race this writer's
+    CAS publish lost) the store has moved past that version, so the
+    mirror is rebuilt from the store before it is read again.
 
     **The entry point.**  `Writer.stream(spark, source, checkpoint=...,
     **options)` builds a writer from the constructor's `options` and
@@ -362,17 +360,6 @@ class _DrainWriter:
         drop it)."""
         self._mem_version, self._mem = version, content
 
-    @contextlib.contextmanager
-    def _cas_guard(self):
-        """Wraps a version-CAS publish: a lost race drops the mirror, so
-        a retry of the batch re-reads the winner's commit instead of
-        failing forever against a stale snapshot, and re-raises."""
-        try:
-            yield
-        except ConcurrentWriteError:
-            self._mirror()
-            raise
-
     def _latest(self, version: int | None = None) -> DataFrame | None:
         """A one-state store's state at `version` (the newest when None),
         or None when nothing is committed at or below it."""
@@ -415,23 +402,24 @@ class _DrainWriter:
             self.spark, "shard", [self.OUT_SHARD], version=version
         ).select(*self._out_cols)
 
-    def _publish_group(
-        self, txn: str, *parts: DataFrame, cas_version: int | None = None
-    ) -> None:
+    def _publish_group(self, txn: str, pin: int, *parts: DataFrame) -> None:
         """A group-commit store's publish: the block's state rows and out
         rows union into ONE staged write and ONE commit record.  Every
         file carries the unified column set (the other rows' columns
-        NULL), so no read ever needs schema merging."""
+        NULL), so no read ever needs schema merging.  The commit is a CAS
+        on the block's pin: its out rows were derived from the snapshot
+        at `pin`, so a commit from another writer that lands between the
+        pin and the publish fails the batch with `ConcurrentWriteError`
+        instead of publishing estimates that silently miss that commit."""
         unified = functools.reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
-        with self._cas_guard():
-            self.store.append(
-                unified.repartition(F.col("shard")),
-                txn=txn,
-                partition_by="shard",
-                cas_version=cas_version,
-            )
+        self.store.append(
+            unified.repartition(F.col("shard")),
+            txn=txn,
+            partition_by="shard",
+            cas_version=pin,
+        )
 
     def _publish_pair(
         self,
@@ -1088,8 +1076,7 @@ class _TopKStreamWriter(_DrainWriter):
         # concurrent sibling that committed after our read makes this
         # publish raise ConcurrentWriteError (failing the batch loudly)
         # instead of one summary silently dropping the other's counts
-        with self._cas_guard():
-            self.store.append(new_summary, txn=txn, replaces=snap_v)
+        self.store.append(new_summary, txn=txn, replaces=snap_v)
         self._mirror(snap_v + 1, (trimmed, err + sub))
 
     def topk(self, k: int) -> DataFrame:
@@ -2024,12 +2011,7 @@ class _CountMinStreamWriter(_DrainWriter):
         est = _count_min_lookup(merged, keys, e.cms).select(
             e.out_shard, F.lit(batch_id).cast("long").alias("batch_id"), *e.est
         )
-        # CAS on the pinned version: the estimates above were
-        # derived from the snapshot at `pin`, so a concurrent
-        # appender landing between pin and publish fails this batch
-        # loudly instead of publishing estimates that silently miss
-        # its increments
-        self._publish_group(txn, inc.select(*e.inc), est, cas_version=pin)
+        self._publish_group(txn, pin, inc.select(*e.inc), est)
 
 
 count_min_stream = _CountMinStreamWriter.stream
@@ -2278,11 +2260,7 @@ class _DyadicCmsStreamWriter(_DrainWriter):
                 "target_rank long, q_value long",
             )
             parts.append(q_df)
-        # CAS on the pinned version: a concurrent appender advancing
-        # the store between our pin and this publish fails the batch
-        # loudly instead of the mirror silently diverging from the
-        # sibling's committed cells
-        self._publish_group(txn, *parts, cas_version=pin)
+        self._publish_group(txn, pin, *parts)
         self._mirror(pin + 1, content=merged)
 
 
@@ -2407,7 +2385,7 @@ class _UniqStreamWriter(_DrainWriter):
                 F.col("approx_uniq"),
             )
         )
-        self._publish_group(txn, inc.select("shard", gc, "state"), est)
+        self._publish_group(txn, pin, inc.select("shard", gc, "state"), est)
 
 
 uniq_stream = _UniqStreamWriter.stream

@@ -1,18 +1,18 @@
 """ProjectedTable — ClickHouse PROJECTION analogue (sources/projections.py):
 routing picks the copy sorted for the predicate, every copy answers
-identically, and the routed copy actually prunes row groups the primary
-cannot."""
+identically, the routed copy actually prunes row groups the primary
+cannot, and every write is a log commit per copy.  Files a replace commit
+retired stay on disk until `vacuum()`, so file-level checks look at each
+copy's committed files (`data_files()`), never at its directory."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from apache_kafka_clickhouse_demo_spark.sources.projections import ProjectedTable
+from apache_kafka_clickhouse_demo_spark.sources.txlog import TransactionalTable
 
 
 @pytest.fixture()
@@ -33,6 +33,11 @@ def table(spark, tmp_path):
     )
     t.write(df)
     return t, df
+
+
+def _values(path: str, col: str) -> list:
+    """One committed file's `col` values, in file order."""
+    return pq.read_table(path, columns=[col]).column(col).to_pylist()
 
 
 def test_routing_rule(table):
@@ -58,12 +63,12 @@ def test_all_copies_answer_identically(spark, table):
 def test_projection_prunes_where_primary_cannot(spark, table):
     t, _df = table
 
-    def span(dirname: str, col: str) -> float:
+    def span(name: str, col: str) -> float:
         """Mean per-FILE (max - min) of `col`, normalized by the full
         range — tight file spans are what min/max pruning feeds on (each
         projection file owns a narrow range slice of ITS sort key)."""
         spans, lo_all, hi_all = [], None, None
-        for f in glob.glob(os.path.join(t.path, dirname, "*.parquet")):
+        for f in t.copies[name].data_files():
             md = pq.ParquetFile(f).metadata
             idx = md.schema.names.index(col)
             los = [md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups)]
@@ -85,9 +90,9 @@ def test_insert_keeps_per_file_sort(spark, table):
     t.insert(df.filter(F.col("event_id") < 100))
     back = t.read_for(spark, ["user_id"])
     assert back.count() == 20_100
-    # every file in the by_user copy is internally sorted on user_id
-    for f in glob.glob(os.path.join(t.path, "by_user", "*.parquet")):
-        vals = [r["user_id"] for r in spark.read.parquet(f).select("user_id").collect()]
+    # every committed file in the by_user copy is internally sorted on user_id
+    for f in t.copies["by_user"].data_files():
+        vals = _values(f, "user_id")
         assert vals == sorted(vals)
 
 
@@ -97,24 +102,27 @@ def test_primary_required():
 
 
 def test_optimize_restores_slice_layout_and_routing(spark, table):
-    """VERDICT r6 #7: after inserts fragment each copy, optimize() must
-    collapse it back to one range-sliced sorted file family — per-file
-    disjoint slices, in-file sort, identical rows, routing intact."""
+    """After inserts fragment each copy into overlapping slice families,
+    optimize() must collapse it back to one range-sliced sorted file
+    family — per-file disjoint slices, in-file sort, identical rows,
+    routing intact — or routed scans pay one footer and one task per
+    tiny file."""
     t, df = table
     for k in range(3):
         t.insert(df.filter(F.col("event_id").between(k * 100, k * 100 + 99)))
-    files_before = len(glob.glob(os.path.join(t.path, "by_user", "*.parquet")))
+    by_user = t.copies["by_user"]
+    files_before = len(by_user.data_files())
     rows_before = t.read_for(spark, ["user_id"]).count()
 
     t.optimize(spark, files=4)
 
-    files_after = glob.glob(os.path.join(t.path, "by_user", "*.parquet"))
+    files_after = by_user.data_files()
     assert len(files_after) == 4 < files_before
     assert t.read_for(spark, ["user_id"]).count() == rows_before
     # per-file disjoint user_id slices (the range layout) + in-file sort
     spans = []
     for f in files_after:
-        vals = [r["user_id"] for r in spark.read.parquet(f).select("user_id").collect()]
+        vals = _values(f, "user_id")
         assert vals == sorted(vals)
         spans.append((vals[0], vals[-1]))
     spans.sort()
@@ -122,9 +130,70 @@ def test_optimize_restores_slice_layout_and_routing(spark, table):
         assert hi <= lo
     # routing still serves the same rows through the rewritten copy
     routed = t.read_for(spark, ["user_id"]).filter(F.col("user_id") == 7)
-    plain = spark.read.parquet(os.path.join(t.path, "primary")).filter(
-        F.col("user_id") == 7
-    )
+    plain = t.copies["primary"].read(spark).filter(F.col("user_id") == 7)
     assert sorted(r["event_id"] for r in routed.collect()) == sorted(
         r["event_id"] for r in plain.collect()
     )
+
+
+def test_optimize_is_one_log_commit_per_copy(spark, tmp_path, monkeypatch):
+    """Projection compaction commits through each copy's log: a failure
+    injected into the commit publish leaves every copy at its old version
+    with every row readable; an insert that commits between optimize's
+    snapshot read and its commit is kept (the rewrite retries from the
+    new snapshot); a read pinned at the pre-optimize version still
+    returns the same rows afterwards."""
+    t = ProjectedTable(str(tmp_path / "t"), {"primary": ["id"], "by_m": ["m", "id"]})
+    t.write(spark.range(100).selectExpr("id", "id % 7 as m").repartition(8), files=8)
+    before = {name: copy.version() for name, copy in t.copies.items()}
+    rows = sorted(r["id"] for r in t.read_for(spark, ["id"]).collect())
+    assert rows == list(range(100))
+
+    def fail(self, payload, dest_path):
+        raise OSError("injected publish failure")
+
+    monkeypatch.setattr(TransactionalTable, "_publish", fail)
+    with pytest.raises(OSError, match="injected"):
+        t.optimize(spark, files=2)
+    monkeypatch.undo()
+    assert {name: copy.version() for name, copy in t.copies.items()} == before
+    assert t.read_for(spark, ["id"]).count() == 100
+
+    real_optimize = TransactionalTable.optimize
+    raced = []
+
+    def racing_optimize(self, spark, transform=None, **kwargs):
+        def insert_then_transform(df):
+            if not raced:  # once: into every copy, before the first commit
+                raced.append(self.path)
+                t.insert(spark.range(100, 110).selectExpr("id", "id % 7 as m"))
+            return transform(df)
+
+        return real_optimize(self, spark, transform=insert_then_transform, **kwargs)
+
+    monkeypatch.setattr(TransactionalTable, "optimize", racing_optimize)
+    t.optimize(spark, files=2)
+    monkeypatch.undo()
+    assert raced
+    for name, copy in t.copies.items():
+        # write 0, the racing insert 1, optimize's replace commit 2
+        assert copy.version() == before[name] + 2
+        assert len(copy.data_files()) == 2
+        assert sorted(r["id"] for r in copy.read(spark).collect()) == list(range(110))
+        assert sorted(r["id"] for r in copy.read(spark, before[name]).collect()) == rows
+
+
+def test_read_for_plans_with_zero_spark_jobs(spark, table):
+    """The routed read plans off the copy's log (files and schema), so
+    planning it starts no Spark job — no listing, no footer inference."""
+    t, _df = table
+    sc = spark.sparkContext
+    group = "plan-read-for"
+    sc.setJobGroup(group, group)
+    try:
+        t.read_for(spark, ["user_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

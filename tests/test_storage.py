@@ -265,48 +265,6 @@ def test_zorder_cluster_key_on_empty_table(spark):
     assert empty.withColumn("z", z).count() == 0
 
 
-def test_atomic_swap_tolerates_stale_old_and_restores_on_failure(
-    spark, tmp_path, monkeypatch
-):
-    """Crash-recovery contract of the projection compaction swap: a stale
-    <copy>_old from an interrupted run must not fail the next compaction,
-    and a failure of the second rename must RESTORE the original copy
-    instead of leaving no copy at all."""
-    import os as _os
-
-    from apache_kafka_clickhouse_demo_spark.sources.projections import ProjectedTable
-
-    t = ProjectedTable(str(tmp_path / "t"), {"primary": ["id"]})
-    t.write(spark.range(100).repartition(8), files=8)
-    path = _os.path.join(t.path, "primary")
-    _os.makedirs(path + "_old")  # stale debris from an interrupted swap
-    with open(path + "_old/junk", "w") as fh:
-        fh.write("x")
-    t.optimize(spark, files=1)
-    n = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
-    assert n == 1 and spark.read.parquet(path).count() == 100
-    assert not _os.path.exists(path + "_old")
-
-    # inject a failure into the SECOND rename (tmp -> path)
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def flaky(srcp, dstp):
-        if dstp.rstrip("/") == path and calls["n"] == 0:
-            calls["n"] += 1
-            raise OSError("injected failure on tmp -> path")
-        return real_rename(srcp, dstp)
-
-    monkeypatch.setattr(_os, "rename", flaky)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="injected"):
-        t.optimize(spark, files=2)
-    monkeypatch.undo()
-    # the ORIGINAL table was restored — readers still see every row
-    assert spark.read.parquet(path).count() == 100
-
-
 def test_write_sorted_bloom_skip_index(spark, tmp_path):
     """bloom_cols (the `INDEX ... TYPE bloom_filter` skip-index analogue)
     plumbs per-column bloom options into the parquet writer: the bloomed

@@ -840,7 +840,8 @@ def test_generational_writer_race_rejected_not_double_counted(
     exactly one commits; the loser raises ConcurrentWriteError and the
     store never holds two same-generation snapshots to double-count.
     The loser's retry of the same batch then succeeds on top of the
-    winner's commit, so the lost race dropped its stale mirror."""
+    winner's commit: its mirror is anchored at the version it read, which
+    the winner's commit has moved past, so the retry re-reads the store."""
     from apache_kafka_clickhouse_demo_spark.sources.txlog import (
         ConcurrentWriteError,
     )
@@ -2426,6 +2427,79 @@ def test_uniq_stream_atomic_commit_failure_replays_clean(
         for r in w.out_rows().collect()
     }
     assert rows2[(2, "a")] == 3
+
+
+def _group_race_writer(spark, tmp_path, kind, writer_id):
+    """A group-commit writer of `kind` over the one shared store, its
+    two racing blocks (w1's, then w2's), the out columns naming one
+    estimate, and w2's estimates once they count both blocks (every
+    sketch is exact at these sizes)."""
+    if kind == "count_min":
+        w = _cms_writer(spark, tmp_path, "race")
+        blocks = (_keys_df(spark, ["a", "a", "b"]), _keys_df(spark, ["a", "c"]))
+        cols, want = ("k", "est"), {"a": 3, "c": 1}
+    elif kind == "dyadic":
+        w = _dcms_writer(spark, tmp_path, "race", width=1 << 12)
+        blocks = (_vals_df(spark, [3, 5, 20]), _vals_df(spark, [7, 200]))
+        cols, want = ("range_id", "est"), {1: 3, 2: 2}
+    else:
+        w = _uniq_writer(spark, tmp_path, "race")
+        blocks = (
+            _gk_df(spark, [("a", "u1"), ("a", "u2")]),
+            _gk_df(spark, [("a", "u2"), ("a", "u3"), ("b", "u1")]),
+        )
+        cols, want = ("g", "approx_uniq"), {"a": 3, "b": 1}
+    w.writer_id = writer_id
+    return w, blocks, cols, want
+
+
+@pytest.mark.parametrize("kind", ["count_min", "dyadic", "uniq"])
+def test_group_commit_race_rejected_then_retried_on_top(spark, tmp_path, kind):
+    """A group-commit block publishes as a CAS on its pin.  w1 commits a
+    block after w2 took its pin and before w2 publishes: w2 raises
+    ConcurrentWriteError and leaves none of its staged files in the
+    store.  w2's retry of the same batch then commits on top of w1's
+    block, with estimates that count both blocks.  The dyadic retry runs
+    with the first attempt's mirror still anchored at the stale pin, so
+    it shows that mirror is never served past its version."""
+    import os
+
+    from apache_kafka_clickhouse_demo_spark.sources.txlog import (
+        ConcurrentWriteError,
+    )
+
+    w1, (b1, b2), (key, est), want = _group_race_writer(spark, tmp_path, kind, "w1")
+    w2, *_ = _group_race_writer(spark, tmp_path, kind, "w2")
+    store = w1.store
+    pin = w2._pin
+
+    def pin_then_rival_commit(txn):
+        v = pin(txn)
+        w1.process(b1, 0)
+        return v
+
+    w2._pin = pin_then_rival_commit
+    with pytest.raises(ConcurrentWriteError):
+        w2.process(b2, 1)
+    assert (store.version(), store.txn_version("w1:0")) == (0, 0)
+    on_disk = {
+        os.path.join(dp, f)
+        for dp, _dn, fn in os.walk(store.path)
+        for f in fn
+        if f.endswith(".parquet")
+    }
+    assert on_disk == set(store.data_files())
+    if kind == "dyadic":
+        assert w2._mem_version == -1  # the empty store w2 pinned
+
+    del w2._pin
+    w2.process(b2, 1)
+    assert store.txn_version("w2:1") == 1
+    got = {
+        r[key]: r[est]
+        for r in w2.out_rows().filter(F.col("batch_id") == 1).collect()
+    }
+    assert got == want
 
 
 def test_dyadic_stream_unified_files_carry_full_schema(spark, tmp_path):
