@@ -529,6 +529,29 @@ class TransactionalTable:
             except OSError:
                 pass
 
+    def _commit_or_reclaim(self, staged: _Staged, carried=(), **commit) -> int:
+        """`_commit` of the `staged` files (after any `carried` ones),
+        with one rule for a commit that did not land: it reclaims its
+        staged files.  A lost CAS race never landed.  Any other failure
+        leaves the log to decide: `_publish` can raise after its link has
+        already published the commit (its temp-file cleanup failing), so
+        only the staged files that no commit and no checkpoint names are
+        removed.  The success path does no extra filesystem work."""
+        try:
+            return self._commit([*carried, *staged], staged.schema, **commit)
+        except ConcurrentWriteError:
+            self.discard_staged(staged)
+            raise
+        except Exception:
+            try:
+                named = set(self._replay().files)
+                for v, _path in self._log_entries()[1]:
+                    named.update(self.commit_files(v) or ())
+            except Exception:  # unreadable log: keep them all for vacuum
+                named = set(staged)
+            self.discard_staged([f for f in staged if f not in named])
+            raise
+
     def commit_staged(
         self,
         staged: list[str],
@@ -546,19 +569,19 @@ class TransactionalTable:
         become the whole snapshot (the commit `optimize` writes), at
         exactly v + 1 — the CAS of `cas_version=v`.  This is how a
         one-state writer (top-k, reservoir, pack-bins) publishes the
-        current state it derived from snapshot v.  A rejected commit
-        (either form) removes the staged files before it raises: they are
-        known by name and referenced by no commit, so a writer losing
-        repeated races does not leave a block of orphans per attempt for
+        current state it derived from snapshot v.  A commit that did not
+        land (either form, any failure) removes its staged files before
+        it raises (`_commit_or_reclaim`), so a writer losing repeated
+        races does not leave a block of orphans per attempt for
         `vacuum()`'s grace window (a crash between the move and this
         cleanup still does — vacuum remains the backstop)."""
-        try:
-            return self._commit(
-                staged, staged.schema, partition_by, txn, replaces, cas_version
-            )
-        except ConcurrentWriteError:
-            self.discard_staged(staged)
-            raise
+        return self._commit_or_reclaim(
+            staged,
+            partition_by=partition_by,
+            txn=txn,
+            replaces=replaces,
+            cas_version=cas_version,
+        )
 
     def _commit(
         self,
@@ -741,14 +764,14 @@ class TransactionalTable:
                 df = df.coalesce(max(1, target_files))
             moved = self._stage(df, partition_by)
             try:
-                return self._commit(
-                    carried + moved, moved.schema, partition_by, replaces=snapshot
+                return self._commit_or_reclaim(
+                    moved, carried, partition_by=partition_by, replaces=snapshot
                 )
             except ConcurrentWriteError:
                 # lost the OCC race: a concurrent append advanced the
-                # table.  Reclaim the staged files (never the carried
-                # ones) and recompact from the new snapshot.
-                self.discard_staged(moved)
+                # table.  The staged files are reclaimed (never the
+                # carried ones); recompact from the new snapshot.
+                continue
         raise RuntimeError(f"optimize lost the commit race {_OPTIMIZE_RETRIES} times")
 
     def vacuum(self, grace_seconds: float = 3600.0) -> list[str]:

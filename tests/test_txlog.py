@@ -617,6 +617,52 @@ def test_two_phase_append_staged_invisible_until_commit(spark, tmp_path):
     assert t.read(spark).count() == 15
 
 
+def test_a_commit_that_did_not_land_reclaims_its_staged_files(
+    spark, tmp_path, monkeypatch
+):
+    """An append or optimize whose publish fails with an OSError before
+    its commit lands removes the files it staged: the parquet files on
+    disk are exactly the committed ones.  A publish that raises after its
+    link already landed the commit (its temp-file cleanup failing) keeps
+    them: the log, not the exception, says what landed."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.append(_df(spark, 0, 10))
+    t.append(_df(spark, 10, 20))
+    real_publish = TransactionalTable._publish
+
+    def on_disk() -> list[str]:
+        return sorted(
+            os.path.join(d, f)
+            for d, _, files in os.walk(t.path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    def before_link(self, payload, dest_path):
+        raise OSError("injected publish failure")
+
+    def after_link(self, payload, dest_path):
+        real_publish(self, payload, dest_path)
+        raise OSError("injected cleanup failure")
+
+    def fails(publish, op) -> None:
+        monkeypatch.setattr(TransactionalTable, "_publish", publish)
+        with pytest.raises(OSError, match="injected"):
+            op()
+        monkeypatch.undo()
+
+    for op in (lambda: t.append(_df(spark, 20, 30)), lambda: t.optimize(spark)):
+        fails(before_link, op)
+        assert t.version() == 1
+        assert on_disk() == sorted(t.data_files())
+
+    fails(after_link, lambda: t.append(_df(spark, 20, 30)))
+    assert t.version() == 2 and on_disk() == sorted(t.data_files())
+    fails(after_link, lambda: t.optimize(spark))
+    assert t.version() == 3 and set(t.data_files()) <= set(on_disk())
+    assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(30))
+
+
 def test_two_phase_append_cas_rejection_reclaims_staging(spark, tmp_path):
     """commit_staged with cas_version keeps append's CAS semantics: a
     rejected commit removes the staged files and raises.  A replace
@@ -849,15 +895,19 @@ def test_reads_plan_with_zero_spark_jobs(spark, _wide_table, tmp_path, case):
 def test_reads_pass_their_file_list_in_constant_py4j_calls(spark, _wide_table):
     """A read hands its file list to the JVM in a constant number of py4j
     round trips: naming 96 files costs no more calls than naming 12
-    (PySpark's `parquet(*paths)` makes one per path)."""
+    (PySpark's `parquet(*paths)` makes one per path).  Only the reading
+    thread's calls count: py4j's finalizer thread sends its deletes of
+    garbage-collected proxies through the same method."""
     import py4j.clientserver as CS
 
     t = _wide_table
     calls = [0]
     orig = CS.ClientServerConnection.send_command
+    reader = threading.get_ident()
 
     def counting(self, *a, **k):
-        calls[0] += 1
+        if threading.get_ident() == reader:
+            calls[0] += 1
         return orig(self, *a, **k)
 
     def cost(read) -> int:

@@ -37,6 +37,13 @@ PIPELINE = {
     "stream_dedup": "streaming/stateful.py streaming_dedup (dropDuplicatesWithinWatermark drain)",
     "stream_near_dup": "streaming/stateful.py minhash_dedup_stream (4-block drain vs bucket-pruned store)",
     "stream_embed_near_dup": "streaming/stateful.py embedding_dedup_stream (4-block drain vs bucket-pruned store)",
+    "stream_domain_cap": "streaming/stateful.py domain_cap_stream (4-block drain vs shard-pruned per-domain counter store)",
+    "stream_cms_counts": "streaming/stateful.py count_min_stream (4-block drain, one group commit per block); final read = merged sketch lookup",
+    "stream_uniq_users": "streaming/stateful.py uniq_stream (4-block drain of per-group HLL states); final read = merged estimates",
+    "stream_sketch_quantiles": "streaming/stateful.py dyadic_cms_stream (4-block drain, one group commit per block); final read = dyadic quantile descent",
+    "stream_strat_sample": "streaming/stateful.py reservoir_sample_stream (4-block drain into a one-state per-group bottom-k store)",
+    "stream_top_spenders": "streaming/stateful.py heavy_hitters_stream (4-file drain into a one-state weighted Misra-Gries store)",
+    "stream_funnel": "streaming/stateful.py running_funnel (4-block ts-ordered drain); final read = last depth per key + cumulative report",
     "dedup_clusters": "operators/dedup.py connected_components (pointer-jumping fixpoint; per-round plans)",
     "replacing_latest": "sources/txlog.py append + sources/storage.py compact_replacing (one optimize commit); final read = read_replacing_final (one max_by hash aggregate)",
 }
